@@ -20,10 +20,21 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
   *
   * Layout:
   * {{{
-  * <path>/_meta.properties            # schema DDL, pk / partition / precombine cols
-  * <path>/_commits/v<000000000N>.txt  # manifest: one live data file per line
+  * <path>/_meta.properties            # schema DDL, pk / partition / precombine cols, numBuckets
+  * <path>/_commits/v<000000000N>.txt  # root manifest of version N
+  * <path>/_commits/_segments/seg-<sha1>.txt  # one partition's live files + sizes
   * <path>/data/<part>=<value>/b<bbb>-c-<uuid>-<n>.parquet
   * }}}
+  *
+  * One root format is readable. Every root starts with `#ts=<publish
+  * millis>`, `#touched=<cells>` and `#segments=1` (the format stamp),
+  * may carry `#pages=`/`#op=`/`#dvs=`/`#rli=` headers, and then lists
+  * one `@<partdir>|<segment>|<files>|<bytes>|<envelopes>` line per
+  * partition — or, above [[AcidTable.RootPageThreshold]] partitions,
+  * `@@<page>|<lines>|<bucket>|<files>|<bytes>` page references. A root
+  * in any other shape is refused by `checkRootFormat` with an
+  * `IllegalStateException` naming the manifest, and [[fsck]] reports it
+  * as `unsupported_root_format`.
   *
   * Data files are hash-bucketed WITHIN each partition (`b<bbb>-` name
   * prefix, bucket = Murmur3(pk) % numBuckets) — the file-group layout that
@@ -199,27 +210,14 @@ final class AcidTable private (
     // archival prunes a PREFIX of the timeline — the search floor is the
     // oldest manifest still on disk
     val oldest = oldestRetainedVersion(latest)
-    // legacy tables (written before the #ts= header) are attributed from
-    // file mtimes, which carry NO monotonicity guarantee (copies/restores
-    // rewrite them arbitrarily) — binary search would be unsound there,
-    // so probe the OLDEST manifest first: header-less history starts at
-    // the retention floor, and any header-less manifest met during the
-    // search (e.g. a hand-corrupted one) also demotes to the linear scan
-    commitTime(oldest)
-    var sawHeaderless = AcidTable.headerlessManifests.contains((path, oldest))
     var lo = oldest
     var hi = latest
     var ans = -1L
-    while (!sawHeaderless && lo <= hi) {
+    while (lo <= hi) {
       val mid = (lo + hi) >>> 1
-      val ts = commitTime(mid)
-      if (AcidTable.headerlessManifests.contains((path, mid))) sawHeaderless = true
-      else if (ts <= epochMillis) { ans = mid; lo = mid + 1 }
+      if (commitTime(mid) <= epochMillis) { ans = mid; lo = mid + 1 }
       else hi = mid - 1
     }
-    if (sawHeaderless)
-      ans = (oldest to latest).foldLeft(-1L)((acc, v) =>
-        if (commitTime(v) <= epochMillis) math.max(acc, v) else acc)
     if (ans < 0 && oldest > 0)
       // the requested time falls below the archival horizon: the table
       // HAD committed state then, but its manifest is gone — resolving to
@@ -249,23 +247,15 @@ final class AcidTable private (
     lo
   }
 
-  /** Publish-time of version `v`: the manifest's `#ts=` header, or the
-    * manifest file's mtime when the header is absent (pre-header builds)
-    * or unparseable (hand-edited/corrupted — degrade, don't throw).
-    * Cached process-wide: manifests are immutable once published, so a
-    * header is read at most once per (table, version).
+  /** Publish-time of version `v`: the manifest's `#ts=` header (present
+    * and parseable in every root [[rawRootLines]] accepts). Cached
+    * process-wide: manifests are immutable once published, so a header
+    * is read at most once per (table, version).
     */
   private def commitTime(v: Long): Long =
     AcidTable.commitTimeCache.computeIfAbsent((path, v), _ => {
       AcidTable.manifestHeaderReads.incrementAndGet()
-      val header = scala.util.Try(
-        rawRootLines(v).find(_.startsWith("#ts=")).map(_.stripPrefix("#ts=").toLong))
-        .toOption.flatten
-      val ts = header.getOrElse {
-        AcidTable.headerlessManifests.add((path, v))
-        manifestPath(v).toFile.lastModified()
-      }
-      java.lang.Long.valueOf(ts)
+      java.lang.Long.valueOf(tsOf(rawRootLines(v)))
     }).longValue()
 
   /** Snapshot of the given (default latest) committed version. The file
@@ -289,19 +279,15 @@ final class AcidTable private (
   def snapshot(version: Long = -1L): DataFrame = explicitVersionRead(version) {
     val v = if (version >= 0) version else latestVersion()
     if (v < 0) snapshotFromFiles(Nil)
-    else segRefs(v) match {
-      case Some(refs) =>
-        // segment entries carry (file, size) directly — do NOT go through
-        // the resolved-manifest form, whose URL-encoded `#sizes=` header
-        // is O(live files) string work to build AND to re-parse on every
-        // snapshot (round 15: ~1 s of the 500 k-file planning cost).
-        // Expansion is cache-hit concatenation, 8-way on wide roots.
-        val entries = expandRefEntries(refs)
-        applyDvs(snapshotFromFiles(
-          entries.map(_._1), entries.filter(_._2 >= 0).toMap), readDvs(v))
-      case None =>
-        val lines = manifestLines(v)
-        applyDvs(snapshotFromFiles(dataLinesOf(lines), sizesOf(lines)), dvsOf(lines))
+    else {
+      // segment entries carry (file, size) directly — do NOT go through
+      // the resolved-manifest form, whose URL-encoded `#sizes=` header
+      // is O(live files) string work to build AND to re-parse on every
+      // snapshot (round 15: ~1 s of the 500 k-file planning cost).
+      // Expansion is cache-hit concatenation, 8-way on wide roots.
+      val entries = expandRefEntries(segRefs(v))
+      applyDvs(snapshotFromFiles(
+        entries.map(_._1), entries.filter(_._2 >= 0).toMap), readDvs(v))
     }
   }
 
@@ -442,25 +428,25 @@ final class AcidTable private (
         // below. Some(Nil) is a proven-empty probe (key nowhere).
         case Some(cells) =>
           bloomPruneFiles(cellPrune(filesForPartitions(v, cells)), keys)
-        case None => segRefs(v) match {
-        case Some(refs) if refs.size > 64 =>
-          // CHUNKED submission: one task per ref at 20 k partitions is
-          // ~20 k pool round-trips of microsecond work — the overhead
-          // dominated the probe. 64-ref chunks keep 8 threads busy with
-          // ~tens of tasks instead.
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-          try refs.grouped(64).toSeq.map { chunk =>
-            pool.submit(new java.util.concurrent.Callable[Seq[String]] {
-              override def call(): Seq[String] = chunk.flatMap(r =>
-                bloomPruneFiles(cellPrune(readSegment(r.name).entries.map(_._1)), keys))
-            })
-          }.flatMap(_.get())
-          finally { pool.shutdown(); () }
-        case Some(refs) =>
-          refs.flatMap(r => bloomPruneFiles(
-            cellPrune(readSegment(r.name).entries.map(_._1)), keys))
-        case None => bloomPruneFiles(cellPrune(readManifest(v)), keys)
-        }
+        case None =>
+          val refs = segRefs(v)
+          if (refs.size <= 64)
+            refs.flatMap(r => bloomPruneFiles(
+              cellPrune(readSegment(r.name).entries.map(_._1)), keys))
+          else {
+            // CHUNKED submission: one task per ref at 20 k partitions is
+            // ~20 k pool round-trips of microsecond work — the overhead
+            // dominated the probe. 64-ref chunks keep 8 threads busy with
+            // ~tens of tasks instead.
+            val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+            try refs.grouped(64).toSeq.map { chunk =>
+              pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+                override def call(): Seq[String] = chunk.flatMap(r =>
+                  bloomPruneFiles(cellPrune(readSegment(r.name).entries.map(_._1)), keys))
+              })
+            }.flatMap(_.get())
+            finally { pool.shutdown(); () }
+          }
       }
     }
   }
@@ -1440,7 +1426,10 @@ final class AcidTable private (
       org.apache.spark.sql.graft.PlanShim.analyzed(empty.filter(condition)) match {
         case LFilter(cond, rel: LocalRelation)
             if cond.deterministic && !SubqueryExpression.hasSubquery(cond) =>
-          val pred = Predicate.create(cond, rel.output)
+          // the ANALYZED tree still carries RuntimeReplaceable nodes
+          // (BETWEEN): interpreted eval asserts on those
+          val pred = Predicate.create(
+            org.apache.spark.sql.graft.PlanShim.evaluable(cond), rel.output)
           pred.initialize(0)
           Some((r: org.apache.spark.sql.catalyst.InternalRow) => pred.eval(r))
         case _ => None
@@ -1477,9 +1466,9 @@ final class AcidTable private (
               exprs.zip(schema.fields).forall { case (e, f) =>
                 org.apache.spark.sql.graft.PlanShim.sameType(e.dataType, f.dataType)
               } =>
-          val pred = Predicate.create(cond, rel.output)
+          val pred = Predicate.create(shim.evaluable(cond), rel.output)
           pred.initialize(0)
-          val proj = SafeProjection.create(exprs, rel.output)
+          val proj = SafeProjection.create(exprs.map(shim.evaluable), rel.output)
           Some((
             (r: org.apache.spark.sql.catalyst.InternalRow) => pred.eval(r),
             // safe projections reuse their output buffer — copy so cached
@@ -1750,20 +1739,12 @@ final class AcidTable private (
   }
 
   /** Publish a DV-only commit on top of `base`: no data file changes, so
-    * on a segmented base EVERY root line carries verbatim — the commit is
-    * O(matched keys) metadata however large the table (round 14). Flat
-    * bases regroup as before. */
+    * EVERY root line carries verbatim — the commit is O(matched keys)
+    * metadata however large the table (round 14). */
   private def publishDvOnly(base: Long, touched: Seq[FileCell], dvs: Seq[DvEntry]): Unit =
-    segRefs(base) match {
-      case Some(_) =>
-        publish(base + 1, Nil, touched, Map.empty, "DELETE_DV", dvs,
-          reuseRootLines = rootLines(base).filter(_.startsWith("@")),
-          rli = AcidTable.RliInherit) // removal-only: refs AND completeness carry
-      case None =>
-        val baseLines = manifestLines(base)
-        publish(base + 1, dataLinesOf(baseLines), touched, sizesOf(baseLines),
-          "DELETE_DV", dvs, rli = AcidTable.RliInherit)
-    }
+    publish(base + 1, Nil, touched, Map.empty, "DELETE_DV", dvs,
+      reuseRootLines = rootLines(base).filter(_.startsWith("@")),
+      rli = AcidTable.RliInherit) // removal-only: refs AND completeness carry
 
   /** Predicate-driven deletion-vector commit: the merge-on-read route of
     * [[deleteWhere]]. Unlike the key-pinned [[deleteVectored]] (whose
@@ -2159,14 +2140,10 @@ final class AcidTable private (
   private[graft] def partitionValues(version: Long = -1L): Seq[String] = {
     val v = if (version >= 0) version else latestVersion()
     if (v < 0) return Nil
-    // segmented root: the partition inventory IS the root's reference
-    // list — O(partitions) read, no segment resolution at all
-    val dirs = segRefs(v) match {
-      case Some(refs) => refs.map(_.partDir)
-      case None => readManifest(v).map(_.takeWhile(_ != '/'))
-    }
-    dirs.map(d => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(d.stripPrefix(s"$partitionCol=")))
+    // the partition inventory IS the root's reference list —
+    // O(partitions) read, no segment resolution at all
+    segRefs(v).map(r => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(r.partDir.stripPrefix(s"$partitionCol=")))
       .distinct.sorted
   }
 
@@ -2182,64 +2159,39 @@ final class AcidTable private (
     val v = if (version >= 0) version else latestVersion()
     if (v < 0) return spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], invSchema)
-    // segmented root: count and bytes ride the reference line — the whole
-    // inventory costs ONE root read, zero segment resolutions
-    val rows = segRefs(v) match {
-      case Some(refs) => refs
-        .map(r => (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(r.partDir.stripPrefix(s"$partitionCol=")), r.count, r.bytes))
-        .sortBy(_._1)
-        .map { case (p, n, b) => Row(p, n, b) }
-      case None =>
-        val lines = manifestLines(v)
-        val sizes = sizesOf(lines)
-        dataLinesOf(lines)
-          .groupBy(f => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(f.takeWhile(_ != '/').stripPrefix(s"$partitionCol=")))
-          .toSeq.sortBy(_._1)
-          .map { case (p, fs) =>
-            Row(p, fs.size.toLong, fs.map(f => sizes.getOrElse(f, 0L)).sum)
-          }
-    }
+    // count and bytes ride the reference line — the whole inventory
+    // costs ONE root read, zero segment resolutions
+    val rows = segRefs(v)
+      .map(r => (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(r.partDir.stripPrefix(s"$partitionCol=")), r.count, r.bytes))
+      .sortBy(_._1)
+      .map { case (p, n, b) => Row(p, n, b) }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), invSchema)
+  }
+
+  /** (nFiles, bytes, nParts) summed from a PAGED root's `@@` aggregate
+    * fields alone (`@@<page>|<lines>|<bucket>|<files>|<bytes>`, checked
+    * by [[checkRootFormat]]) — None when the root is not paged. O(pages)
+    * work, no expansion. */
+  private def pageAggregates(raw: Seq[String]): Option[(Long, Long, Long)] = {
+    val refs = raw.filter(_.startsWith("@@")).map(_.substring(2).split("\\|", -1))
+    if (refs.isEmpty) None
+    else Some((refs.map(_(3).toLong).sum, refs.map(_(4).toLong).sum, refs.map(_(1).toLong).sum))
   }
 
   /** One-row table summary (the Delta `DESCRIBE DETAIL` analog): layout,
     * size, and structural metadata — all from the latest manifest and
     * `_meta.properties`, zero filesystem listing or data reads. */
-  /** (nFiles, bytes, nParts) summed from a PAGED root's `@@` aggregate
-    * fields alone — None when any ref predates the aggregates (round 15)
-    * or the root is not paged. O(pages) work, no expansion. */
-  private def pageAggregates(raw: Seq[String]): Option[(Long, Long, Long)] = {
-    val refs = raw.filter(_.startsWith("@@"))
-    if (refs.isEmpty) return None
-    var files = 0L; var bytes = 0L; var parts = 0L
-    refs.foreach { l =>
-      val p = l.substring(2).split("\\|", -1)
-      if (p.length < 5) return None
-      parts += scala.util.Try(p(1).toLong).getOrElse(return None)
-      files += scala.util.Try(p(3).toLong).getOrElse(return None)
-      bytes += scala.util.Try(p(4).toLong).getOrElse(return None)
-    }
-    Some((files, bytes, parts))
-  }
-
   def detail(): DataFrame = {
     val detailSchema = AcidTable.DetailSchema
     val v = latestVersion()
     val (nFiles, bytes, nParts) =
       if (v < 0) (0L, 0L, 0L)
-      else pageAggregates(scala.util.Try(rawRootLines(v)).getOrElse(Nil))
-        .getOrElse(segRefs(v) match {
-          // segmented root: the one-row summary costs ONE root read
-          case Some(refs) =>
-            (refs.map(_.count).sum, refs.map(_.bytes).sum, refs.size.toLong)
-          case None =>
-            val lines = manifestLines(v)
-            val files = dataLinesOf(lines)
-            (files.size.toLong, sizesOf(lines).values.sum,
-              files.map(_.takeWhile(_ != '/')).distinct.size.toLong)
-        })
+      else pageAggregates(rawRootLines(v)).getOrElse {
+        // the one-row summary costs ONE root read
+        val refs = segRefs(v)
+        (refs.map(_.count).sum, refs.map(_.bytes).sum, refs.size.toLong)
+      }
     // '; ' separator: property VALUES may contain commas (bloomColumns)
     val props = tableProperties.toSeq.sortBy(_._1)
       .map { case (k, pv) => s"$k=$pv" }.mkString("; ")
@@ -2267,6 +2219,10 @@ final class AcidTable private (
     *    correctness (the index is consulted only when its completeness
     *    flag is set AND every ref resolves); heal: [[fsckRepair]] or
     *    [[rebuildRecordIndex]].
+    *  - `unsupported_root_format` — a retained root fails the one format
+    *    check every read applies (see [[rawRootLines]]): no readable
+    *    version of this build can use it. Not repairable; heal:
+    *    [[restore]] to an intact version.
     *  - `stale_quarantine` — a `.gc-*` quarantine file older than
     *    `graceMs` (a GC crashed between quarantine and its delete/restore
     *    decision). Safe to delete once no root references its content;
@@ -2311,7 +2267,14 @@ final class AcidTable private (
           }
         }
       (oldestRetainedVersion(latest) to latest).foreach { v =>
-        val raw = scala.util.Try(rawRootLines(v)).toOption.toSeq.flatten
+        val raw =
+          try rawRootLines(v)
+          catch {
+            case e: IllegalStateException =>
+              out += (("unsupported_root_format", v, manifestFileName(v), e.getMessage))
+              Nil
+            case scala.util.control.NonFatal(_) => Nil
+          }
         // page refs checked on the RAW root (a missing page must be
         // REPORTED, not abort the walk via a failed expansion); only
         // pages NOT seen under an earlier version are expanded — the
@@ -2445,7 +2408,7 @@ final class AcidTable private (
 
   /** Commit timeline (the `DESCRIBE HISTORY` / Hudi-timeline surface):
     * one row per RETAINED version — version, operation label (the `#op=`
-    * audit header; "WRITE" for manifests predating it), publish
+    * audit header; "WRITE" for a publish that named no operation), publish
     * timestamp, live file count, touched-cell count, and total data
     * bytes. Metadata-only: O(retained versions) manifest reads on the
     * driver, bounded by vacuum's timeline archival — never a data scan.
@@ -2465,12 +2428,10 @@ final class AcidTable private (
           .map(l => java.net.URLDecoder.decode(l.stripPrefix("#op="), "UTF-8"))
           .getOrElse("WRITE")
         val (nFiles, bytes) = pageAggregates(raw).map(a => (a._1, a._2))
-          .getOrElse(segRefs(v) match {
-            case Some(refs) => (refs.map(_.count).sum, refs.map(_.bytes).sum)
-            case None =>
-              val root = rootLines(v)
-              (dataLinesOf(root).size.toLong, sizesOf(root).values.sum)
-          })
+          .getOrElse {
+            val refs = segRefs(v)
+            (refs.map(_.count).sum, refs.map(_.bytes).sum)
+          }
         (v, op, commitTime(v), nFiles,
           readTouched(v).map(_.size.toLong).getOrElse(-1L), bytes)
       }
@@ -2478,11 +2439,11 @@ final class AcidTable private (
       "total_bytes")
   }
 
-  /** Bytes the given manifest files occupy, from the manifest's `#sizes=`
-    * header alone (one stat fallback per pre-header file, counted like the
-    * write-sizing fallback). The planner-statistics surface: scan size
-    * estimates come from commit metadata, never from listing or footer-
-    * probing a 100 TB table's object store.
+  /** Bytes the given manifest files occupy, from the sizes their segments
+    * recorded (one stat fallback per file published without a size,
+    * counted like the write-sizing fallback). The planner-statistics
+    * surface: scan size estimates come from commit metadata, never from
+    * listing or footer-probing a 100 TB table's object store.
     */
   private[lake] def filesBytes(files: Seq[String], version: Long): Long = {
     val sizes = if (version >= 0) sizesForFiles(version, files) else Map.empty[String, Long]
@@ -2552,44 +2513,36 @@ final class AcidTable private (
   }
 
   /** The diff-relevant file lists (+ recorded sizes, + DV entries) of two
-    * versions. On segmented roots (round 14) a partition whose SEGMENT REF
-    * and applicable DV entries are identical in both versions contributes
-    * identical visible-row multisets to both sides — it is dropped from
-    * the diff WITHOUT resolving its segment, so a trickle diff's metadata
+    * versions. A partition whose SEGMENT REF and applicable DV entries are
+    * identical in both versions contributes identical visible-row
+    * multisets to both sides — it is dropped from the diff WITHOUT
+    * resolving its segment, so a trickle diff's metadata
     * cost is O(changed partitions), not O(live files). A MOR delete
     * changes a file's visible rows without changing its name, which is
     * why a partition's DV entries participate in the stability check (a
     * partition kept for a DV change still gets the caller's file-granular
-    * pruning). Flat (pre-segment) manifests keep the full expansion. */
+    * pruning). */
   private def diffScope(fromVersion: Long, toVersion: Long)
       : (Seq[String], Seq[String], Map[String, Long], Map[String, Long],
          Seq[DvEntry], Seq[DvEntry]) = {
-    val fromRefs = if (fromVersion < 0) Some(Nil) else segRefs(fromVersion)
-    val toRefs = if (toVersion < 0) Some(Nil) else segRefs(toVersion)
-    (fromRefs, toRefs) match {
-      case (Some(fr), Some(tr)) =>
-        val fromDvs = readDvs(fromVersion)
-        val toDvs = readDvs(toVersion)
-        def byPd(dvs: Seq[DvEntry]): Map[String, Set[DvEntry]] =
-          dvs.groupBy(e => partDir(e.part)).view.mapValues(_.toSet).toMap
-        val fDv = byPd(fromDvs); val tDv = byPd(toDvs)
-        val fByPd = fr.map(r => r.partDir -> r).toMap
-        val tByPd = tr.map(r => r.partDir -> r).toMap
-        val changed = (fByPd.keySet ++ tByPd.keySet).filter { pd =>
-          fByPd.get(pd).map(_.name) != tByPd.get(pd).map(_.name) ||
-            fDv.getOrElse(pd, Set.empty) != tDv.getOrElse(pd, Set.empty)
-        }
-        def scoped(refs: Seq[AcidTable.SegRef]): Seq[(String, Long)] =
-          refs.filter(r => changed(r.partDir)).flatMap(r => readSegment(r.name).entries)
-        val fe = scoped(fr); val te = scoped(tr)
-        (fe.map(_._1), te.map(_._1),
-          fe.filter(_._2 >= 0).toMap, te.filter(_._2 >= 0).toMap, fromDvs, toDvs)
-      case _ => // at least one flat manifest: full expansion (compat)
-        val fromLines = if (fromVersion < 0) Nil else manifestLines(fromVersion)
-        val toLines = if (toVersion < 0) Nil else manifestLines(toVersion)
-        (dataLinesOf(fromLines), dataLinesOf(toLines),
-          sizesOf(fromLines), sizesOf(toLines), dvsOf(fromLines), dvsOf(toLines))
+    val fr = if (fromVersion < 0) Nil else segRefs(fromVersion)
+    val tr = if (toVersion < 0) Nil else segRefs(toVersion)
+    val fromDvs = readDvs(fromVersion)
+    val toDvs = readDvs(toVersion)
+    def byPd(dvs: Seq[DvEntry]): Map[String, Set[DvEntry]] =
+      dvs.groupBy(e => partDir(e.part)).view.mapValues(_.toSet).toMap
+    val fDv = byPd(fromDvs); val tDv = byPd(toDvs)
+    val fByPd = fr.map(r => r.partDir -> r).toMap
+    val tByPd = tr.map(r => r.partDir -> r).toMap
+    val changed = (fByPd.keySet ++ tByPd.keySet).filter { pd =>
+      fByPd.get(pd).map(_.name) != tByPd.get(pd).map(_.name) ||
+        fDv.getOrElse(pd, Set.empty) != tDv.getOrElse(pd, Set.empty)
     }
+    def scoped(refs: Seq[AcidTable.SegRef]): Seq[(String, Long)] =
+      refs.filter(r => changed(r.partDir)).flatMap(r => readSegment(r.name).entries)
+    val fe = scoped(fr); val te = scoped(tr)
+    (fe.map(_._1), te.map(_._1),
+      fe.filter(_._2 >= 0).toMap, te.filter(_._2 >= 0).toMap, fromDvs, toDvs)
   }
 
   /** Driver image of [[changesBetween]] for trickle-scale diffs (round-11
@@ -2817,20 +2770,14 @@ final class AcidTable private (
     val in = Files.newInputStream(clusterStatsPath)
     try props.load(in) finally in.close()
     import scala.jdk.CollectionConverters._
-    // format version: v1 sidecars (no marker) were written by an encoder
-    // whose TIMESTAMP ranges are wrong for pre-1970 fractional-second
-    // values (truncating division; fixed to floorDiv) — DROP their
-    // timestamp ranges rather than prune wrongly. Unprunable is safe;
-    // the next merge rewrites the sidecar at v2 without them, and a
-    // stats rebuild (recordStatsForFiles via compact/optimize or new
-    // commits) regenerates correct entries.
-    val ver = scala.util.Try(
-      props.getProperty(AcidTable.StatsVerKey, "1").toInt).getOrElse(1)
-    val tsCols: Set[String] =
-      if (ver >= 2) Set.empty
-      else schema.fields.iterator
-        .filter(_.dataType == org.apache.spark.sql.types.TimestampType)
-        .map(_.name).toSet
+    // the one readable sidecar format is `statsver=2` (TIMESTAMP ranges
+    // encoded with floorDiv, exact for pre-1970 fractional seconds);
+    // anything else would prune on ranges this build cannot trust
+    val ver = props.getProperty(AcidTable.StatsVerKey)
+    if (ver != "2")
+      throw new IllegalStateException(
+        s"unsupported stats sidecar format in $clusterStatsPath: " +
+          s"${AcidTable.StatsVerKey}=${Option(ver).getOrElse("<absent>")}, expected 2")
     val parsed = props.stringPropertyNames().asScala
       .filter(_ != AcidTable.StatsVerKey).map { k =>
       val rel = java.net.URLDecoder.decode(k, "UTF-8")
@@ -2840,7 +2787,7 @@ final class AcidTable private (
             java.net.URLDecoder.decode(c, "UTF-8") -> (lo.toLong, hi.toLong)).toOption
           case _ => None
         }
-      }.filterNot { case (c, _) => tsCols.contains(c) }.toMap
+      }.toMap
       rel -> cols
     }.toMap
     AcidTable.cacheClusterStats(path, mtime, len, parsed)
@@ -3004,7 +2951,7 @@ final class AcidTable private (
   // table property makes every commit stamp a Bloom filter of each listed
   // column's values onto its new files, consolidated as ONE immutable
   // offset-indexed segment per commit (`_blooms/seg-*.bloomseg`, round
-  // 14; pre-round-14 per-file `_blooms/<rel>.bloom` sidecars still read).
+  // 14).
   // Point lookups then prune candidate files the filter EXCLUDES — the
   // pruning min/max ranges cannot do on an unclustered table, where every
   // file's PK range spans the keyspace. At 100 TB the shape is:
@@ -3026,7 +2973,6 @@ final class AcidTable private (
   // a pre-property file, or a clone all degrade to "no skip", not error.
 
   private def bloomRoot: Path = Paths.get(path, AcidTable.BloomDir)
-  private def bloomPath(rel: String): Path = bloomRoot.resolve(rel + ".bloom")
 
   /** Columns per-file bloom filters are maintained for (the `bloomColumns`
     * table property). Misconfiguration FAILS LOUDLY, same standard as
@@ -3134,7 +3080,8 @@ final class AcidTable private (
   /** Segment-index resolution of one data file's filters: refresh the
     * per-table directory index from unseen `.bloomseg` files on a miss,
     * then ranged-read just the file's payload slice. None = the file has
-    * no segment entry (pre-segment table, or the stamp has not landed). */
+    * no segment entry (written before `bloomColumns` was set, or the
+    * stamp has not landed). */
   private def bloomSegLookup(rel: String)
       : Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
     val idx = AcidTable.bloomSegIndex(path)
@@ -3191,9 +3138,8 @@ final class AcidTable private (
     }
   }
 
-  /** The shared payload parse: column count, then (name, length, filter
-    * bytes) per column — the body of a per-file sidecar and of each
-    * segment slice. */
+  /** The payload parse of one segment slice: column count, then (name,
+    * length, filter bytes) per column. */
   private def parseBloomBody(in: java.io.DataInputStream)
       : Map[String, org.apache.spark.util.sketch.BloomFilter] =
     (0 until in.readInt()).map { _ =>
@@ -3204,30 +3150,12 @@ final class AcidTable private (
         .readFrom(new java.io.ByteArrayInputStream(bytes))
     }.toMap
 
-  /** Parsed bloom filters of one data file (empty when absent or
-    * unreadable — unprunable, never an error). Resolution order: the
-    * legacy per-file sidecar (pre-round-14 tables), then the commit
-    * segment index. Cached process-wide: sidecars and segments are
+  /** Parsed bloom filters of one data file from the commit segment
+    * index (empty when absent or unreadable — unprunable, never an
+    * error). Cached process-wide by segment slice: segments are
     * immutable once written. */
-  private[graft] def readBlooms(rel: String): Map[String, org.apache.spark.util.sketch.BloomFilter] = {
-    val p = bloomPath(rel)
-    AcidTable.bloomCache.get(p.toString).getOrElse {
-      if (!Files.exists(p)) // not cached on total miss: the stamp lands AFTER publish
-        bloomSegLookup(rel).getOrElse(Map.empty)
-      else {
-        val parsed = scala.util.Try {
-          val in = new java.io.DataInputStream(
-            new java.io.BufferedInputStream(Files.newInputStream(p)))
-          try {
-            require(in.readInt() == AcidTable.BloomMagic, s"bad bloom magic in $p")
-            parseBloomBody(in)
-          } finally in.close()
-        }.getOrElse(Map.empty[String, org.apache.spark.util.sketch.BloomFilter])
-        AcidTable.bloomCache.put(p.toString, parsed)
-        parsed
-      }
-    }
-  }
+  private[graft] def readBlooms(rel: String): Map[String, org.apache.spark.util.sketch.BloomFilter] =
+    bloomSegLookup(rel).getOrElse(Map.empty)
 
   /** Zero-job bloom stamping for driver fast-path commits. When every new
     * file names a (partition, bucket) cell and the PK is hash-safe, each
@@ -3793,20 +3721,16 @@ final class AcidTable private (
     val v = if (version >= 0) version else latestVersion()
     if (v < 0) return Nil
     if (bounds.isEmpty) return readManifest(v)
-    // partition-level envelopes first (segmented roots): a partition whose
+    // partition-level envelopes first: a partition whose
     // recorded [min,max] misses a bound drops WHOLE — its segment never
     // resolves and its files' sidecar entries are never consulted. When
     // the root alone refutes every partition, the per-file sidecar is not
     // even loaded (spec-pinned via clusterStatsLoads).
-    val candidates = segRefs(v) match {
-      case Some(refs) =>
-        val keep = refs.filter(r => bounds.forall { case (c, (lo, hi)) =>
-          r.pstats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-        })
-        if (keep.isEmpty) return Nil
-        keep.flatMap(r => readSegment(r.name).entries.map(_._1))
-      case None => readManifest(v)
-    }
+    val keep = segRefs(v).filter(r => bounds.forall { case (c, (lo, hi)) =>
+      r.pstats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
+    })
+    if (keep.isEmpty) return Nil
+    val candidates = keep.flatMap(r => readSegment(r.name).entries.map(_._1))
     val stats = readClusterStats()
     candidates.filter { f =>
       stats.get(f).forall(cols => bounds.forall { case (c, (lo, hi)) =>
@@ -3833,8 +3757,7 @@ final class AcidTable private (
     * `[liveFrom, latest]`, derived from DISTINCT segment refs
     * (content-addressed: same name ⇒ same entries) —
     * O(versions × root lines + distinct segments), never
-    * O(versions × live files); flat pre-segment roots contribute their
-    * resolved lists directly. Failures stay LOUD: an unreadable root or
+    * O(versions × live files). Failures stay LOUD: an unreadable root or
     * segment must abort the caller's sweep, not read as "references
     * nothing". Shared by [[vacuum]] (the deleting sweep) and
     * [[vacuumPreview]] (the read-only DRY RUN face) so the two can never
@@ -3844,15 +3767,11 @@ final class AcidTable private (
     val files = scala.collection.mutable.Set.empty[String]
     val seenSegs = scala.collection.mutable.Set.empty[String]
     (liveFrom to latest).foreach { v =>
-      val root = rootLines(v)
-      val segNames = root.iterator
+      rootLines(v).iterator
         .filter(l => l.startsWith("@") && !l.startsWith("@@"))
         .flatMap(l => l.substring(1).split("\\|", -1).lift(1))
-        .filter(_.nonEmpty).toSeq
-      if (segNames.isEmpty) files ++= readManifest(v) // flat root
-      else segNames.foreach { n =>
-        if (seenSegs.add(n)) readSegment(n).entries.foreach(files += _._1)
-      }
+        .filter(n => n.nonEmpty && seenSegs.add(n))
+        .foreach(n => readSegment(n).entries.foreach(files += _._1))
     }
     files.toSet
   }
@@ -3977,19 +3896,9 @@ final class AcidTable private (
     sweepDirs(Option(dataRoot.toFile.listFiles()).getOrElse(Array.empty)) { f =>
       val rel = s"${f.getParentFile.getName}/${f.getName}"
       if (f.getName.endsWith(".parquet") && !live.contains(rel)
-          && f.lastModified() < cutoff) {
-        if (f.delete()) { removedCount.incrementAndGet(); () }
-        Files.deleteIfExists(bloomPath(rel)) // sidecar dies with its file
+          && f.lastModified() < cutoff && f.delete()) {
+        removedCount.incrementAndGet()
         ()
-      }
-    }
-    // orphaned bloom sidecars (crash between data-file delete and sidecar
-    // delete, or files removed by other means): same age guard as data
-    sweepDirs(Option(bloomRoot.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory)) { f =>
-      if (f.getName.endsWith(".bloom") && f.lastModified() < cutoff) {
-        val dataRel = s"${f.getParentFile.getName}/${f.getName.stripSuffix(".bloom")}"
-        if (!Files.exists(dataRoot.resolve(dataRel))) { f.delete(); () }
       }
     }
     val removed = removedCount.get()
@@ -4252,32 +4161,27 @@ final class AcidTable private (
     }
     // bloom filters travel by VERBATIM CARRY of the bloom root (clone
     // loses only pruning, never correctness, if skipped): segments are
-    // directories of (data-file rel → payload) and legacy sidecars are
-    // path-addressed by rel, and the clone shares every rel, so the
-    // immutable bytes carry unchanged — hard-linked like the data files.
-    // O(bloom bytes), not O(files × deserialize × re-serialize): the
-    // round-18c MetaScale branch leg measured the per-file re-stamp this
-    // replaces at ~11 s of a 12.7 s fork at 100 k files. Entries for
-    // files outside the pinned snapshot ride along as bounded dead
-    // weight; the clone's own vacuum sweeps them with the usual liveness
-    // rules.
+    // directories of (data-file rel → payload), and the clone shares
+    // every rel, so the immutable bytes carry unchanged — hard-linked
+    // like the data files. O(bloom bytes), not O(files × deserialize ×
+    // re-serialize): the round-18c MetaScale branch leg measured the
+    // per-file re-stamp this replaces at ~11 s of a 12.7 s fork at 100 k
+    // files. Entries for files outside the pinned snapshot ride along as
+    // bounded dead weight; the clone's own vacuum sweeps them with the
+    // usual liveness rules.
     if (Files.exists(bloomRoot)) {
       val destBloomRoot = Paths.get(destPath, AcidTable.BloomDir)
-      val walk = Files.walk(bloomRoot)
-      try walk.forEach { p =>
-        val rel = bloomRoot.relativize(p)
-        val dst = destBloomRoot.resolve(rel)
-        if (Files.isDirectory(p)) { Files.createDirectories(dst); () }
-        else if (!p.getFileName.toString.startsWith(".tmp-")) {
-          Files.createDirectories(dst.getParent)
-          try Files.createLink(dst, p)
+      Files.createDirectories(destBloomRoot)
+      Option(bloomRoot.toFile.listFiles()).getOrElse(Array.empty)
+        .filter(f => f.isFile && !f.getName.startsWith(".tmp-")).foreach { f =>
+          val dst = destBloomRoot.resolve(f.getName)
+          try Files.createLink(dst, f.toPath)
           catch {
             case _: FileAlreadyExistsException => () // FAE ⊂ FSException: first
             case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-              Files.copy(p, dst); ()
+              Files.copy(f.toPath, dst); ()
           }
         }
-      } finally walk.close()
     }
     if (Files.exists(clusterStatsPath))
       Files.copy(clusterStatsPath, Paths.get(destPath, ClusterStatsFile))
@@ -4448,35 +4352,22 @@ final class AcidTable private (
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(d.stripPrefix(s"$partitionCol="))
     val bRaw = br.rawRootLines(headB)
-    // delta vs the fork: with segmented roots on both sides, a partition
-    // whose `@` line is byte-identical (same content-addressed segment,
-    // same counts/stats) is untouched and carries verbatim; everything
-    // else resolves through the branch's segments. Flat roots (small
-    // tables) regroup everything — publish handles both shapes.
+    // delta vs the fork: a partition whose `@` line is byte-identical
+    // (same content-addressed segment, same counts/stats) is untouched and
+    // carries verbatim; everything else resolves through the branch's
+    // segments.
     val bLines = br.rootLines(headB).filter(_.startsWith("@"))
-    val mLines =
-      if (fork < 0) Nil
-      else scala.util.Try(rootLines(fork).filter(_.startsWith("@"))).getOrElse(Nil)
-    val segmented = bLines.nonEmpty || (headB >= 0 && br.segRefs(headB).isDefined)
-    val (files, sizes, reuse, touchedDirs) =
-      if (segmented && (fork < 0 || mLines.nonEmpty || readManifest(fork).isEmpty)) {
-        val mByDir = mLines.map(l => AcidTable.rootLineDir(l) -> l).toMap
-        val bByDir = bLines.map(l => AcidTable.rootLineDir(l) -> l).toMap
-        val carried = bLines.filter(l => mByDir.get(AcidTable.rootLineDir(l)).contains(l))
-        val carriedDirs = carried.map(AcidTable.rootLineDir).toSet
-        val changedDirs =
-          ((bByDir.keySet ++ mByDir.keySet) -- carriedDirs).toSeq.sorted
-        val refsByDir = br.segRefs(headB).getOrElse(Nil).groupBy(_.partDir)
-        val entries = changedDirs.flatMap(d => refsByDir.getOrElse(d, Nil))
-          .flatMap(r => br.readSegment(r.name).entries)
-        (entries.map(_._1), entries.filter(_._2 >= 0).toMap, carried, changedDirs)
-      } else {
-        val bAll = br.manifestLines(headB)
-        val bFiles = dataLinesOf(bAll)
-        val mFiles = if (fork < 0) Nil else readManifest(fork)
-        val dirs = (bFiles ++ mFiles).map(_.takeWhile(_ != '/')).distinct.sorted
-        (bFiles, sizesOf(bAll), Nil, dirs)
-      }
+    val mLines = if (fork < 0) Nil else rootLines(fork).filter(_.startsWith("@"))
+    val mByDir = mLines.map(l => AcidTable.rootLineDir(l) -> l).toMap
+    val bByDir = bLines.map(l => AcidTable.rootLineDir(l) -> l).toMap
+    val reuse = bLines.filter(l => mByDir.get(AcidTable.rootLineDir(l)).contains(l))
+    val touchedDirs =
+      ((bByDir.keySet ++ mByDir.keySet) -- reuse.map(AcidTable.rootLineDir)).toSeq.sorted
+    val refsByDir = br.segRefs(headB).groupBy(_.partDir)
+    val entries = touchedDirs.flatMap(d => refsByDir.getOrElse(d, Nil))
+      .flatMap(r => br.readSegment(r.name).entries)
+    val files = entries.map(_._1)
+    val sizes = entries.filter(_._2 >= 0).toMap
     // DV-only branch deletes are metadata commits: the partition's segment
     // line stays byte-identical (carried verbatim) while the root's #dvs=
     // header changes — the touched set must still cover those partitions,
@@ -4910,11 +4801,10 @@ final class AcidTable private (
         if (base != p) throw new CommitConflictException(
           s"CAS commit expected base v$p but table is at v$base ($path)")
       }
-      // LAZY full-manifest expansion (round 14): a cell-scoped commit on a
-      // segmented base never needs the table's complete file list — the
-      // O(live-files) assembly below is forced only by discovery closures
-      // that genuinely scan the table (predicate discovery, overwrite,
-      // compaction selection) or by a pre-segment (flat) base
+      // LAZY full-manifest expansion (round 14): a cell-scoped commit never
+      // needs the table's complete file list — the O(live-files) assembly
+      // below is forced only by discovery closures that genuinely scan the
+      // table (predicate discovery, overwrite, compaction selection)
       lazy val baseLines = if (base < 0) Nil else manifestLines(base)
       lazy val files = dataLinesOf(baseLines)
       // parsed from the SAME read as `files`; consumed by both the scan
@@ -4929,15 +4819,14 @@ final class AcidTable private (
       val baseDvs = readDvs(base)
       val rawCells = touchedOf(
         () => applyDvs(snapshotFromFiles(files, baseSizes), baseDvs), () => files)
-      // cell-scoped metadata (round 14): on a segmented base, resolve ONLY
-      // the touched partitions' segments for everything downstream — the
+      // cell-scoped metadata (round 14): resolve ONLY the touched
+      // partitions' segments for everything downstream — the
       // legacy-expansion probe, the carry filter, input sizing, and the
       // fast-path pre-image. Commit metadata cost is then O(touched), not
-      // O(live files); a flat base keeps the full lists (compat).
+      // O(live files).
       val rawParts = rawCells.map(_.part).distinct
-      val segScoped = base >= 0 && segRefs(base).isDefined
-      val scopedFiles = if (segScoped) filesForPartitions(base, rawParts) else files
-      val scopedSizes = if (segScoped) sizesForPartitions(base, rawParts) else baseSizes
+      val scopedFiles = filesForPartitions(base, rawParts)
+      val scopedSizes = sizesForPartitions(base, rawParts)
       // Dense distributed batches defeat the point of fine-grained cells:
       // a commit touching most of a partition's buckets conflicts with any
       // concurrent writer in that partition regardless of scope, yet pays
@@ -5078,39 +4967,29 @@ final class AcidTable private (
               case other => other // RliAuto: unrenderable rows stay unindexed
             }
           }
-          if (publishBase >= 0 && segRefs(publishBase).isDefined) {
-            // segmented base: untouched partitions' root lines carry
-            // VERBATIM (their segments are pinned byte-identical), so the
-            // publish touches only its partitions' segments — commit
-            // metadata work is O(touched partitions), not O(live files)
-            val tParts = touched.map(_.part).distinct
-            val tPds = tParts
-              .map(p => java.net.URLEncoder.encode(partDir(p), "UTF-8")).toSet
-            val reuse = rootLines(publishBase).filter(l => l.startsWith("@") && {
+          // untouched partitions' root lines carry VERBATIM (their
+          // segments are pinned byte-identical), so the publish touches
+          // only its partitions' segments — commit metadata work is
+          // O(touched partitions), not O(live files). Carried files keep
+          // the sizes their segments recorded; new files' sizes were
+          // captured at the staging move — the next reader's commit
+          // sizing needs no filesystem stats at all
+          val tParts = touched.map(_.part).distinct
+          val tPds = tParts
+            .map(p => java.net.URLEncoder.encode(partDir(p), "UTF-8")).toSet
+          val reuse =
+            if (publishBase < 0) Nil
+            else rootLines(publishBase).filter(l => l.startsWith("@") && {
               val i = l.indexOf('|'); i > 1 && !tPds.contains(l.substring(1, i))
             })
-            val tFiles = filesForPartitions(publishBase, tParts)
-            val carried = tFiles.filterNot(f => touched.exists(c => fileInCell(f, c)))
-            val carriedSet = carried.toSet
-            val carriedSizes = sizesForPartitions(publishBase, tParts)
-              .view.filterKeys(carriedSet.contains).toMap
-            publish(publishBase + 1, carried ++ newFiles.map(_._1), touched,
-              carriedSizes ++ newFiles, opName, carriedDvs, pendingStats, reuse,
-              rli = pendingRli)
-          } else {
-            // flat (pre-segment) base: full carry, segmented output
-            val publishLines = if (publishBase < 0) Nil else manifestLines(publishBase)
-            val carried = dataLinesOf(publishLines)
-              .filterNot(f => touched.exists(c => fileInCell(f, c)))
-            // carried files keep the sizes their manifest recorded; new
-            // files' sizes were captured at the staging move — the next
-            // reader's commit sizing needs no filesystem stats at all
-            val carriedSet = carried.toSet
-            val carriedSizes = sizesOf(publishLines).view.filterKeys(carriedSet.contains).toMap
-            publish(publishBase + 1, carried ++ newFiles.map(_._1), touched,
-              carriedSizes ++ newFiles, opName, carriedDvs, pendingStats,
-              rli = pendingRli)
-          }
+          val carried = filesForPartitions(publishBase, tParts)
+            .filterNot(f => touched.exists(c => fileInCell(f, c)))
+          val carriedSet = carried.toSet
+          val carriedSizes = sizesForPartitions(publishBase, tParts)
+            .view.filterKeys(carriedSet.contains).toMap
+          publish(publishBase + 1, carried ++ newFiles.map(_._1), touched,
+            carriedSizes ++ newFiles, opName, carriedDvs, pendingStats, reuse,
+            rli = pendingRli)
           if (fullRedoSince > 0)
             AcidTable.conflictRedoNanos.addAndGet(System.nanoTime() - fullRedoSince)
           // the sidecar merge and the bloom stamping stay post-publish —
@@ -5313,8 +5192,9 @@ final class AcidTable private (
   private def bucketPrefix(b: Int): String = f"b$b%03d-"
   private val BucketedFileName = """b(\d{3})-.*""".r
 
-  /** The bucket a data file holds, read off its name; `None` for a legacy
-    * (pre-bucketing) file, which may hold rows of EVERY bucket.
+  /** The bucket a data file holds, read off its name; `None` for a
+    * bucketless file (bulk loads, coarse partitions, clustered
+    * compaction), which may hold rows of EVERY bucket.
     */
   private def fileBucketOf(relPath: String): Option[Int] =
     relPath.substring(relPath.lastIndexOf('/') + 1) match {
@@ -5323,8 +5203,7 @@ final class AcidTable private (
     }
 
   /** Whether manifest-relative file `f` can hold rows of `cell`. Bucketless
-    * files belong to every cell of their partition (conservative — they
-    * predate bucketing or were written by an older build).
+    * files belong to every cell of their partition.
     */
   private def fileInCell(f: String, cell: FileCell): Boolean =
     f.startsWith(partDir(cell.part) + "/") &&
@@ -5833,38 +5712,74 @@ final class AcidTable private (
     }
   }
 
-  /** Physical lines of version `v`'s ROOT manifest file: headers plus
-    * either data-file lines (pre-segment layout) or `@` segment-reference
-    * lines. O(partitions) for segmented manifests — every header-only
-    * reader (commit time, touched cells, DVs) stays at root cost. */
   /** Version `v`'s root manifest with `@@` page references EXPANDED (the
-    * paged-root form, round 15): every caller sees the flat header +
+    * paged-root form, round 15): every caller sees the header +
     * `@…`-per-partition shape regardless of whether the root inlines its
     * partition lines or pages them. Use [[rawRootLines]] only where the
     * page references THEMSELVES matter (vacuum's page GC, fsck). */
   private[lake] def rootLines(v: Long): Seq[String] = expandPages(rawRootLines(v))
 
-  private[lake] def rawRootLines(v: Long): Seq[String] = try {
-    val lines = Files.readAllLines(commitsDir.resolve(manifestFileName(v)), StandardCharsets.UTF_8)
-    lines.toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
-  } catch {
-    case e: java.nio.file.NoSuchFileException =>
-      // archived-base race (found by the cross-process harness): vacuum's
-      // timeline archival removes a PREFIX of manifests, and an operation
-      // in another process may still hold an archived version as its OCC
-      // base or read snapshot. That operation is provably stale — newer
-      // commits exist — so surface the TYPED, retriable conflict signal
-      // (callers' retry wrappers re-apply against the fresh snapshot)
-      // instead of a raw missing-file crash. A manifest missing INSIDE
-      // the retained window is real corruption: rethrow loudly.
-      val latest = latestVersion()
-      if (latest > v && v < oldestRetainedVersion(latest))
-        throw new CommitConflictException(
-          s"version $v was archived by vacuum while in use (retained " +
-            s"horizon ${oldestRetainedVersion(latest)}..$latest); " +
-            s"retry against the current snapshot ($path)")
-      throw e
+  /** Physical lines of version `v`'s ROOT manifest file: headers plus `@`
+    * segment-reference (or `@@` page-reference) lines. O(partitions), so
+    * every header-only reader (commit time, touched cells, DVs) stays at
+    * root cost. Every root read passes [[checkRootFormat]]. */
+  private[lake] def rawRootLines(v: Long): Seq[String] = {
+    val lines = try {
+      Files.readAllLines(manifestPath(v), StandardCharsets.UTF_8)
+        .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
+    } catch {
+      case e: java.nio.file.NoSuchFileException =>
+        // archived-base race (found by the cross-process harness): vacuum's
+        // timeline archival removes a PREFIX of manifests, and an operation
+        // in another process may still hold an archived version as its OCC
+        // base or read snapshot. That operation is provably stale — newer
+        // commits exist — so surface the TYPED, retriable conflict signal
+        // (callers' retry wrappers re-apply against the fresh snapshot)
+        // instead of a raw missing-file crash. A manifest missing INSIDE
+        // the retained window is real corruption: rethrow loudly.
+        val latest = latestVersion()
+        if (latest > v && v < oldestRetainedVersion(latest))
+          throw new CommitConflictException(
+            s"version $v was archived by vacuum while in use (retained " +
+              s"horizon ${oldestRetainedVersion(latest)}..$latest); " +
+              s"retry against the current snapshot ($path)")
+        throw e
+    }
+    checkRootFormat(v, lines)
+    lines
   }
+
+  /** The one readable root format: a `#segments=1` header (the format
+    * stamp every publish writes), a parseable `#ts=` commit time, a
+    * `#touched=` cell list, and — on a paged root — `@@` page refs that
+    * carry their (lines, bucket, files, bytes) aggregates. Anything else
+    * (a hand edit, a foreign or older writer) fails loudly here instead
+    * of being half-read by the parsers downstream; [[fsck]] reports it as
+    * `unsupported_root_format`. */
+  private def checkRootFormat(v: Long, lines: Seq[String]): Unit = {
+    val headers = lines.takeWhile(_.startsWith("#"))
+    if (!headers.contains("#segments=1")) unsupportedRoot(v, "no #segments=1 header")
+    if (!headers.exists(_.startsWith("#touched="))) unsupportedRoot(v, "no #touched= header")
+    headers.find(_.startsWith("#ts=")) match {
+      case None => unsupportedRoot(v, "no #ts= header")
+      case Some(l) if l.stripPrefix("#ts=").toLongOption.isEmpty =>
+        unsupportedRoot(v, s"unparseable $l")
+      case _ => ()
+    }
+    lines.iterator.filter(_.startsWith("@@")).foreach { l =>
+      val p = l.substring(2).split("\\|", -1)
+      if (p.length != 5 || !p.iterator.drop(1).forall(_.toLongOption.isDefined))
+        unsupportedRoot(v, s"page ref without aggregates: $l")
+    }
+  }
+
+  private def unsupportedRoot(v: Long, why: String): Nothing =
+    throw new IllegalStateException(
+      s"unsupported root format in manifest ${manifestFileName(v)} (version $v) of $path: $why")
+
+  /** The `#ts=` commit time of a root that passed [[checkRootFormat]]. */
+  private def tsOf(raw: Seq[String]): Long =
+    raw.find(_.startsWith("#ts=")).get.stripPrefix("#ts=").toLong
 
   private def expandPages(lines: Seq[String]): Seq[String] =
     if (!lines.exists(_.startsWith("@@"))) lines
@@ -5900,16 +5815,14 @@ final class AcidTable private (
     }
   }
 
-  /** Version `v`'s manifest in the RESOLVED (flat) representation every
-    * caller parses: headers, a `#sizes=` entry, one line per live data
-    * file. Pre-segment manifests already are this shape; segmented roots
-    * expand their `@` references through the immutable-segment cache, and
+  /** Version `v`'s manifest in the RESOLVED representation some callers
+    * parse: headers, a `#sizes=` entry, one line per live data file.
+    * Segment references expand through the immutable-segment cache, and
     * the expansion itself is LRU-cached per version (manifests are
     * immutable; a vacuumed version still fails loudly because the root
     * read happens first). */
   private def manifestLines(v: Long): Seq[String] = {
     val raw = rootLines(v)
-    if (!raw.exists(_.startsWith("@"))) return raw
     AcidTable.cachedResolved(path, v).getOrElse {
       val headers = raw.filter(l => l.startsWith("#") && !l.startsWith("#segments="))
       val entries = parseSegRefs(raw).flatMap(r => readSegment(r.name).entries)
@@ -5922,17 +5835,12 @@ final class AcidTable private (
     }
   }
 
-  /** Segment references of version `v`'s root manifest; None for a
-    * pre-segment (flat) manifest. */
-  private[graft] def segRefs(v: Long): Option[Seq[AcidTable.SegRef]] = {
-    val rf = commitsDir.resolve(manifestFileName(v)).toFile
+  /** Segment references of version `v`'s root manifest. */
+  private[graft] def segRefs(v: Long): Seq[AcidTable.SegRef] = {
+    val rf = manifestPath(v).toFile
     val (mtime, len) = (rf.lastModified(), rf.length())
     AcidTable.cachedSegRefs(path, v, mtime, len).getOrElse {
-      val raw = rootLines(v)
-      val refs =
-        if (raw.contains("#segments=1") || raw.exists(_.startsWith("@")))
-          Some(parseSegRefs(raw))
-        else None
+      val refs = parseSegRefs(rootLines(v))
       AcidTable.cacheSegRefs(path, v, mtime, len, refs)
       refs
     }
@@ -6507,15 +6415,11 @@ final class AcidTable private (
             "record index unsupported: table holds NULL pk or partition values"))
         }
       try {
-        if (base >= 0 && segRefs(base).isDefined)
+        if (base >= 0)
           publish(base + 1, Nil, Nil, Map.empty, "RLI_REBUILD", readDvs(base),
             reuseRootLines = rootLines(base).filter(_.startsWith("@")),
             rli = AcidTable.RliSet(refs, done = true))
-        else if (base >= 0) {
-          val baseLines = manifestLines(base)
-          publish(base + 1, dataLinesOf(baseLines), Nil, sizesOf(baseLines),
-            "RLI_REBUILD", readDvs(base), rli = AcidTable.RliSet(refs, done = true))
-        } else
+        else
           publish(0L, Nil, Nil, Map.empty, "RLI_REBUILD",
             rli = AcidTable.RliSet(Nil, done = true))
         return latestVersion()
@@ -6531,59 +6435,32 @@ final class AcidTable private (
     -1L // unreachable
   }
 
-  /** The live files of `parts` (partition VALUES) at version `v` — on a
-    * segmented manifest this resolves ONLY those partitions' segments, the
-    * O(#cells) metadata read that keeps a hinted point lookup flat in
-    * table size. */
-  private[graft] def filesForPartitions(v: Long, parts: Seq[String]): Seq[String] = {
-    val dirs = parts.map(partDir).toSet
-    segRefs(v) match {
-      case Some(refs) => refs.filter(r => dirs.contains(r.partDir))
-        .flatMap(r => readSegment(r.name).entries.map(_._1))
-      case None =>
-        val pfx = dirs.map(_ + "/")
-        readManifest(v).filter(f => pfx.exists(f.startsWith))
-    }
-  }
+  /** The (file, recorded size) entries of the partition dirs `dirs` at
+    * version `v` — resolves ONLY those partitions' segments, the
+    * O(#cells) metadata read that keeps a hinted point lookup and a
+    * cell-scoped commit flat in table size. Empty for an empty table. */
+  private def entriesForDirs(v: Long, dirs: Set[String]): Seq[(String, Long)] =
+    if (v < 0 || dirs.isEmpty) Nil
+    else segRefs(v).filter(r => dirs.contains(r.partDir))
+      .flatMap(r => readSegment(r.name).entries)
 
-  /** Recorded byte sizes of `parts`' live files at version `v` — the
-    * segment-scoped companion of [[filesForPartitions]] (sizes ride the
-    * segment entries). Flat manifests fall back to the full `#sizes=`
-    * header. */
-  private def sizesForPartitions(v: Long, parts: Seq[String]): Map[String, Long] = {
-    if (v < 0) return Map.empty
-    val dirs = parts.map(partDir).toSet
-    segRefs(v) match {
-      case Some(refs) => refs.filter(r => dirs.contains(r.partDir))
-        .flatMap(r => readSegment(r.name).entries.filter(_._2 >= 0)).toMap
-      case None => sizesOf(manifestLines(v))
-    }
-  }
+  /** The live files of `parts` (partition VALUES) at version `v`. */
+  private[graft] def filesForPartitions(v: Long, parts: Seq[String]): Seq[String] =
+    entriesForDirs(v, parts.map(partDir).toSet).map(_._1)
+
+  /** Recorded byte sizes of `parts`' live files at version `v`. */
+  private def sizesForPartitions(v: Long, parts: Seq[String]): Map[String, Long] =
+    entriesForDirs(v, parts.map(partDir).toSet).filter(_._2 >= 0).toMap
 
   /** Recorded byte sizes for exactly `files` at version `v`, resolving
     * only the segments of the partitions those files live in. */
-  private def sizesForFiles(v: Long, files: Seq[String]): Map[String, Long] = {
-    if (v < 0 || files.isEmpty) return Map.empty
-    segRefs(v) match {
-      case Some(refs) =>
-        val dirs = files.map(f => f.takeWhile(_ != '/')).toSet
-        refs.filter(r => dirs.contains(r.partDir))
-          .flatMap(r => readSegment(r.name).entries).filter(_._2 >= 0).toMap
-      case None => readSizes(v)
-    }
-  }
+  private def sizesForFiles(v: Long, files: Seq[String]): Map[String, Long] =
+    entriesForDirs(v, files.map(_.takeWhile(_ != '/')).toSet).filter(_._2 >= 0).toMap
 
   private def readManifest(v: Long): Seq[String] = dataLinesOf(manifestLines(v))
 
   private def dataLinesOf(lines: Seq[String]): Seq[String] =
     lines.filterNot(_.startsWith("#"))
-
-  /** Per-file byte sizes the commit recorded at publish (`#sizes=`
-    * header). Empty for manifests written before the header existed —
-    * callers fall back to a stat per missing file.
-    */
-  private def readSizes(v: Long): Map[String, Long] =
-    scala.util.Try(manifestLines(v)).map(sizesOf).getOrElse(Map.empty)
 
   private def sizesOf(lines: Seq[String]): Map[String, Long] =
     lines.find(_.startsWith("#sizes=")) match {
@@ -6628,34 +6505,29 @@ final class AcidTable private (
   /** Partition values the commit that produced version `v` rewrote
     * (recorded as a `#touched=` header). Values are URL-encoded in the
     * header so arbitrary partition values survive the comma separator.
-    * `None` for a manifest WITHOUT the header (pre-header builds): the
-    * conflict fast paths must treat an unknown touched set as
-    * potentially-overlapping, not as empty — reading it as "touched
-    * nothing" would let the re-merge path carry a stale partition.
+    * `None` when the manifest was archived by a concurrent vacuum between
+    * our conflict and this read: the conflict fast paths must treat an
+    * unknown touched set as potentially-overlapping, not as empty —
+    * reading it as "touched nothing" would let the re-merge path carry a
+    * stale partition.
     */
   private def readTouched(v: Long): Option[Set[FileCell]] =
-    scala.util.Try(rawRootLines(v).find(_.startsWith("#touched="))) match {
-      case scala.util.Success(Some(line)) =>
-        val csv = line.stripPrefix("#touched=")
-        Some(
-          if (csv.isEmpty) Set.empty[FileCell]
-          else csv.split(',').toSet.map { (s: String) =>
-            // `<url-encoded part>|<bucket>`: the encoding maps '|' to %7C,
-            // so a literal '|' is always OUR separator; an entry without
-            // one is partition scope (this build's global ops, and every
-            // manifest written before cell scope existed)
-            val i = s.lastIndexOf('|')
-            val bucket =
-              if (i < 0) -1
-              else scala.util.Try(s.substring(i + 1).toInt).getOrElse(-1)
-            val head = if (i < 0 || bucket < 0) s else s.substring(0, i)
-            FileCell(java.net.URLDecoder.decode(head, "UTF-8"), bucket)
-          })
-      // header absent, or the manifest was archived by a concurrent
-      // vacuum between our conflict and this read — unknown either way,
-      // and unknown must mean "potentially overlapping"
-      case _ => None
-    }
+    try {
+      val csv = rawRootLines(v).find(_.startsWith("#touched=")).get.stripPrefix("#touched=")
+      Some(
+        if (csv.isEmpty) Set.empty[FileCell]
+        else csv.split(',').toSet.map { (s: String) =>
+          // `<url-encoded part>|<bucket>`: the encoding maps '|' to %7C,
+          // so a literal '|' is always OUR separator; an entry without
+          // one is partition scope (global ops, coarse partitions)
+          val i = s.lastIndexOf('|')
+          val bucket =
+            if (i < 0) -1
+            else scala.util.Try(s.substring(i + 1).toInt).getOrElse(-1)
+          val head = if (i < 0 || bucket < 0) s else s.substring(0, i)
+          FileCell(java.net.URLDecoder.decode(head, "UTF-8"), bucket)
+        })
+    } catch { case _: CommitConflictException => None }
 
   /** Wall-clock source for the `#ts=` commit stamp — injectable so the
     * monotonicity spec can reproduce a racing publisher whose clock runs
@@ -6689,7 +6561,7 @@ final class AcidTable private (
     * stay byte-identical and are neither resolved nor re-hashed, which is
     * what keeps commit metadata work O(touched partitions). `files` then
     * lists ONLY the touched partitions' final contents. Empty = regroup
-    * everything (bulk loads, flat-base compat). */
+    * everything (bulk loads, restore, clone). */
   private def publishImpl(
       v: Long, files: Seq[String], touched: Seq[FileCell], sizes: Map[String, Long],
       op: String, dvs: Seq[DvEntry],
@@ -7096,8 +6968,7 @@ object AcidTable {
   // same name, so its segment is literally the same immutable file across
   // commits — nothing to rewrite, byte identity by construction — and
   // restore/clone/DV-only commits reuse every segment they re-reference.
-  // Segments are immutable once written, so both caches below are sound;
-  // pre-segment manifests (data-file lines + `#sizes=`) stay readable.
+  // Segments are immutable once written, so both caches below are sound.
 
   /** Segment directory under `_commits`. */
   private[lake] val SegmentsDir = "_segments"
@@ -7357,30 +7228,30 @@ object AcidTable {
     * partitions) tax: at 20 k partitions segRefs() is consulted several
     * times per commit (round 15). (mtime, length)-validated against the
     * root file (published roots are immutable, but recreation and
-    * hand-edited legacy-layout fixtures must not serve stale parses);
+    * hand edits must not serve stale parses);
     * purged with the resolved cache on table re-creation. */
   private object segRefsCache {
     private val MaxEntries = 8
     private val m = new java.util.LinkedHashMap[
-        (String, Long), (Long, Long, Option[Seq[SegRef]])](16, 0.75f, true) {
+        (String, Long), (Long, Long, Seq[SegRef])](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), (Long, Long, Option[Seq[SegRef]])])
+          e: java.util.Map.Entry[(String, Long), (Long, Long, Seq[SegRef])])
           : Boolean = size() > MaxEntries
     }
-    def get(k: (String, Long), mtime: Long, len: Long): Option[Option[Seq[SegRef]]] =
+    def get(k: (String, Long), mtime: Long, len: Long): Option[Seq[SegRef]] =
       m.synchronized(Option(m.get(k)).collect {
         case (mt, l, refs) if mt == mtime && l == len => refs
       })
     def put(k: (String, Long), mtime: Long, len: Long,
-        v: Option[Seq[SegRef]]): Unit =
+        v: Seq[SegRef]): Unit =
       m.synchronized { m.put(k, (mtime, len, v)); () }
     def purgePath(p: String): Unit = m.synchronized { m.keySet.removeIf(_._1 == p); () }
   }
   private[lake] def cachedSegRefs(path: String, v: Long, mtime: Long, len: Long)
-      : Option[Option[Seq[SegRef]]] =
+      : Option[Seq[SegRef]] =
     segRefsCache.get((path, v), mtime, len)
   private[lake] def cacheSegRefs(path: String, v: Long, mtime: Long, len: Long,
-      refs: Option[Seq[SegRef]]): Unit =
+      refs: Seq[SegRef]): Unit =
     segRefsCache.put((path, v), mtime, len, refs)
 
   /** (mtime, length)-validated cache of the per-file stats sidecar: the
@@ -7639,14 +7510,6 @@ object AcidTable {
   private[lake] val commitTimeCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
 
-  /** (table path, version) of manifests that had NO parseable `#ts=`
-    * header (pre-header builds, hand edits): their mtime-attributed times
-    * are not monotone, so [[AcidTable.versionAt]] demotes to a linear
-    * scan when it meets one.
-    */
-  private[lake] val headerlessManifests =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Long)]()
-
   private val CommitsDir = "_commits"
   private val DataDir = "data"
   private val MetaFile = "_meta.properties"
@@ -7668,7 +7531,6 @@ object AcidTable {
     StructField("properties", StringType)))
 
   private[lake] val BloomDir = "_blooms"
-  private[lake] val BloomMagic = 0x424c4d31 // "BLM1"
   private[lake] val BloomSegMagic = 0x424c4d53 // "BLMS" — commit bloom segment
   private[lake] val BloomFpp = 0.01
 
@@ -7791,7 +7653,6 @@ object AcidTable {
     // have been deleted externally, in which case root.exists() was
     // already false here but the cache still holds the dead table)
     commitTimeCache.keySet.removeIf(_._1 == path)
-    headerlessManifests.removeIf(_._1 == path)
     // the resolved-manifest LRU is keyed (path, version) and versions
     // RESTART at a recreated path — a stale hit would resolve the NEW
     // table's v1 against the OLD table's file list. The stats-sidecar
@@ -7815,7 +7676,7 @@ object AcidTable {
       partitionCol: String,
       precombineCol: Option[String],
       stablePartitions: Boolean,
-      numBuckets: Int = 16,
+      numBuckets: Int,
       droppedCols: Seq[String] = Nil,
       constraints: Seq[(String, String)] = Nil,
       renamedCols: Map[String, Seq[String]] = Map.empty,
@@ -7878,11 +7739,16 @@ object AcidTable {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Open an existing table from its `_meta.properties`. */
+  /** Open an existing table from its `_meta.properties`. Metadata
+    * without a `numBuckets` key fails loudly: the bucket count fixes
+    * every data file's cell, so no default can be guessed. */
   def open(spark: SparkSession, path: String): AcidTable = {
     val props = new java.util.Properties()
     val in = Files.newInputStream(Paths.get(path, MetaFile))
     try props.load(in) finally in.close()
+    val numBuckets = Option(props.getProperty("numBuckets")).getOrElse(
+      throw new IllegalStateException(
+        s"unsupported table metadata in ${Paths.get(path, MetaFile)}: no numBuckets key"))
     new AcidTable(
       spark, path,
       StructType.fromDDL(props.getProperty("schemaDdl")),
@@ -7890,7 +7756,7 @@ object AcidTable {
       props.getProperty("partitionCol"),
       Option(props.getProperty("precombineCol")),
       "true" == props.getProperty("stablePartitions"),
-      Option(props.getProperty("numBuckets")).map(_.toInt).getOrElse(16),
+      numBuckets.toInt,
       Option(props.getProperty("droppedCols")).map(_.split(',').toSeq
         .filter(_.nonEmpty).map(java.net.URLDecoder.decode(_, "UTF-8"))).getOrElse(Nil),
       parseConstraints(props),

@@ -335,14 +335,9 @@ final class MatView private (
         case Project(exprs, rel: LocalRelation)
             if exprs.forall(e => e.deterministic && !SubqueryExpression.hasSubquery(e)) =>
           // the ANALYZED tree still carries RuntimeReplaceable nodes
-          // (url_encode): interpreted eval asserts on those — apply the
-          // optimizer's replacement rewrite before compiling
-          val replaced: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-            exprs.map(_.transformUp {
-              case rr: org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable =>
-                rr.replacement
-            })
-          val proj = SafeProjection.create(replaced, rel.output)
+          // (url_encode): interpreted eval asserts on those
+          val proj = SafeProjection.create(
+            exprs.map(org.apache.spark.sql.graft.PlanShim.evaluable), rel.output)
           Some((r: org.apache.spark.sql.catalyst.InternalRow) => {
             val o = proj(r)
             if (o.isNullAt(0) || o.isNullAt(1)) null

@@ -88,7 +88,6 @@ object RliScale {
         sys.error("distributed index write rejected the frame"))
     }
     val base = t.latestVersion()
-    require(t.segRefs(base).isDefined, "seed commit must produce a segmented root")
     t.publish(base + 1, Nil, Nil, Map.empty, "RLI_REBUILD", t.readDvs(base),
       reuseRootLines = t.rootLines(base).filter(_.startsWith("@")),
       rli = AcidTable.RliSet(refs, done = true))

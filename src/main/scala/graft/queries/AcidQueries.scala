@@ -2179,8 +2179,8 @@ object AcidQueries {
         // the SCAN INSTANCE, recovered off this frame's own executed plan
         // (round-14 verdict #4) — a concurrent AcidBatchScan elsewhere in
         // the JVM cannot clobber the observation, unlike the process-wide
-        // slot (and unlike lastPlannedFiles, which `BatchScanExec`
-        // overwrites on its post-filter re-plan — round-13 verdict #1).
+        // lastPlannedFiles, which `BatchScanExec` overwrites on its
+        // post-filter re-plan (round-13 verdict #1).
         val driven = s.sql(q)
         driven.collect() // drive one execution to observe the runtime prune
         val pairs = org.apache.spark.sql.graft.AcidBatchScan.filterPrunesOf(driven)

@@ -259,26 +259,19 @@ final class AcidBatchScan(
       case _ => () // pruning-only contract: an unhandled shape skips nothing
     }
     files = cur
-    lastRuntimePrunedTo.set(cur.size)
-    // One atomic (pre, post) pair from THIS filter() call. The two legacy
-    // counters above are each overwritten by unrelated plannings —
-    // `BatchScanExec` re-plans input partitions AFTER filtering, so
-    // `lastPlannedFiles` records the post-prune count and `pruned <
-    // planned` fails exactly when DPP works (round-13 verdict #1).
-    // The INSTANCE pair is the authoritative observation (round-14 verdict
-    // #4): gates read it back off the executed plan via [[AcidBatchScan
-    // .filterPrunesOf]], so a concurrent scan in the same JVM cannot
-    // clobber it between execution and the gate read. The process-wide
-    // slot stays for legacy spec assertions only.
+    // One atomic (pre, post) pair from THIS filter() call, kept on the
+    // instance: the process-wide `lastPlannedFiles` is overwritten by
+    // unrelated plannings — `BatchScanExec` re-plans input partitions
+    // AFTER filtering, so it records the post-prune count (round-13
+    // verdict #1). Gates read the pair back off the executed plan via
+    // [[AcidBatchScan.filterPrunesOf]], so a concurrent scan in the same
+    // JVM cannot clobber it between execution and the gate read.
     instanceFilterPrune = (pre.toLong, cur.size.toLong)
-    lastFilterPrune.set((pre.toLong, cur.size.toLong))
   }
 
   /** (pre, post) file counts of the most recent runtime `filter()` on THIS
-    * scan instance; null until a runtime filter fires. Unlike the
-    * process-wide [[AcidBatchScan.lastFilterPrune]], this cannot be
-    * clobbered by a concurrent scan — read it back through
-    * [[AcidBatchScan.filterPrunesOf]]. */
+    * scan instance; null until a runtime filter fires. Read it back
+    * through [[AcidBatchScan.filterPrunesOf]]. */
   @volatile var instanceFilterPrune: (Long, Long) = _
 
   /** Pruned-size statistics — same role as the V1 route's
@@ -478,15 +471,6 @@ object AcidBatchScan {
   // diagnostics for plan-assertion specs (process-wide, best-effort)
   val runtimeFilterCalls = new AtomicLong(0)
   val lastPlannedFiles = new AtomicLong(-1)
-  val lastRuntimePrunedTo = new AtomicLong(-1)
-  /** (file count BEFORE the runtime filter narrowed the list, count after)
-    * from the most recent `filter()` call — written atomically as one pair
-    * so a gate's `post < pre` comparison cannot be split across unrelated
-    * plannings. `null` until a runtime filter fires (reset by gates).
-    * LEGACY: prefer [[filterPrunesOf]], which reads the pair off the
-    * executed plan's own scan instances and cannot be clobbered by a
-    * concurrent scan in the same JVM. */
-  val lastFilterPrune = new java.util.concurrent.atomic.AtomicReference[(Long, Long)](null)
 
   /** All [[AcidBatchScan]] instances reachable from a dataframe's EXECUTED
     * plan (descending through adaptive plans, query stages, and reused

@@ -89,6 +89,29 @@ object PlanShim {
   def sameType(a: org.apache.spark.sql.types.DataType,
                b: org.apache.spark.sql.types.DataType): Boolean = a.sameType(b)
 
+  /** `e` as the optimizer hands it to execution: every
+    * `RuntimeReplaceable` node (BETWEEN, NVL, url_encode, …) swapped for
+    * its `replacement`, and every `With` common-expression block its
+    * replacement may introduce inlined. An ANALYZED tree still carries
+    * both, and an interpreted Predicate or Projection cannot evaluate
+    * either. Inlining repeats a common expression's evaluation, which is
+    * sound for the deterministic expressions the driver kernels accept.
+    */
+  def evaluable(
+      e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : org.apache.spark.sql.catalyst.expressions.Expression = {
+    import org.apache.spark.sql.catalyst.expressions.{CommonExpressionRef, RuntimeReplaceable, With}
+    e match {
+      case r: RuntimeReplaceable => evaluable(r.replacement)
+      case w: With =>
+        val defs = w.defs.map(d => d.id -> evaluable(d.child)).toMap
+        evaluable(w.child.transform {
+          case ref: CommonExpressionRef if defs.contains(ref.id) => defs(ref.id)
+        })
+      case other => other.mapChildren(evaluable)
+    }
+  }
+
   /** A null-first total ordering over Catalyst-internal values of `dt`,
     * or None when the type is not orderable (maps). Null sorting matches
     * `desc` = NULLS LAST when the caller takes a MAX under this ordering.

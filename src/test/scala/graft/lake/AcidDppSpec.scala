@@ -52,7 +52,6 @@ class AcidDppSpec extends AnyFunSuite {
     assert(totalFiles > 0, "batch scan route must be taken for a clean snapshot")
 
     AcidBatchScan.runtimeFilterCalls.set(0)
-    AcidBatchScan.lastFilterPrune.set(null)
     // the filter is on a NON-join dim column: the matching partitions are
     // only discoverable at runtime by evaluating the dim side — the shape
     // static pushdown cannot serve and DPP exists for
@@ -68,9 +67,10 @@ class AcidDppSpec extends AnyFunSuite {
     // the atomic (pre, post) pair from filter() itself is the contract —
     // lastPlannedFiles is overwritten by BatchScanExec's post-filter
     // re-plan and must not be compared against (round-13 verdict #1)
-    val pair = AcidBatchScan.lastFilterPrune.get()
-    assert(pair != null && pair._2 < pair._1,
-      s"runtime prune must shrink the file list ($pair)")
+    val pairs = AcidBatchScan.filterPrunesOf(joined)
+    assert(pairs.size == 1, s"one runtime-filtered ACID scan expected ($pairs)")
+    val pair = pairs.head
+    assert(pair._2 < pair._1, s"runtime prune must shrink the file list ($pair)")
     assert(pair._1 == totalFiles,
       s"pre-filter count must match the unfiltered plan ($pair vs $totalFiles)")
   }
@@ -93,7 +93,6 @@ class AcidDppSpec extends AnyFunSuite {
       AcidBatchScan.lastPlannedFiles.get()
     }
     AcidBatchScan.runtimeFilterCalls.set(0)
-    AcidBatchScan.lastFilterPrune.set(null)
     val joined = spark.sql(
       """SELECT f.pk, f.v, d.w FROM graft.dpp2.fact f
         |JOIN dpp2_probe d ON f.pk = d.pk WHERE d.w = 1""".stripMargin)
@@ -101,9 +100,10 @@ class AcidDppSpec extends AnyFunSuite {
     assert(rows.toSeq == Seq("k7" -> 7.0, "k9" -> 9.0))
     assert(AcidBatchScan.runtimeFilterCalls.get() > 0,
       "runtime pk filter never reached the scan")
-    val pair = AcidBatchScan.lastFilterPrune.get()
-    assert(pair != null && pair._2 < pair._1,
-      s"pk runtime filter must bucket-prune the file list ($pair)")
+    val pairs = AcidBatchScan.filterPrunesOf(joined)
+    assert(pairs.size == 1, s"one runtime-filtered ACID scan expected ($pairs)")
+    val pair = pairs.head
+    assert(pair._2 < pair._1, s"pk runtime filter must bucket-prune the file list ($pair)")
     assert(pair._1 == totalFiles,
       s"pre-filter count must match the unfiltered plan ($pair vs $totalFiles)")
   }
@@ -155,19 +155,19 @@ class AcidDppSpec extends AnyFunSuite {
     spark.read.parquet(s"$wh/dpp4_dim").createOrReplaceTempView("dpp4_dim")
 
     AcidBatchScan.runtimeFilterCalls.set(0)
-    AcidBatchScan.lastFilterPrune.set(null)
-    val rows = spark.sql(
+    val joined = spark.sql(
       """SELECT f.pk FROM graft.dpp4.fact f
         |JOIN dpp4_dim d ON f.part = d.part
-        |WHERE d.region = 'region0'""".stripMargin).collect().map(_.getString(0))
+        |WHERE d.region = 'region0'""".stripMargin)
+    val rows = joined.collect().map(_.getString(0))
     assert(rows.length == 126, s"126 live rows expected in region0, got ${rows.length}")
     assert(!rows.contains("k8") && !rows.contains("k16"),
       "DV-hidden rows must not resurface through the DPP-pruned read")
     assert(AcidBatchScan.runtimeFilterCalls.get() > 0,
       "runtime filter must reach the DV-carrying batch scan")
-    val pair = AcidBatchScan.lastFilterPrune.get()
-    assert(pair != null && pair._2 < pair._1,
-      s"DV-carrying scan must still runtime-prune its file list ($pair)")
+    val pairs = AcidBatchScan.filterPrunesOf(joined)
+    assert(pairs.size == 1 && pairs.head._2 < pairs.head._1,
+      s"DV-carrying scan must still runtime-prune its file list ($pairs)")
   }
 
   /** BatchScanExec nodes over [[AcidBatchScan]] in a frame's EXECUTED plan

@@ -331,4 +331,30 @@ class AcidSqlSpec extends AnyFunSuite {
     assert(sess.table("acid.records").snapshot().count() == 2)
     assertThrows[IllegalArgumentException] { sess.table("records_branch_scrap") }
   }
+
+  private def idTable(): (AcidTable, Map[String, AcidTable]) = {
+    val t = AcidTable.create(spark,
+      Files.createTempDirectory("acid-sql-id-").resolve("t").toString,
+      StructType(Seq(
+        StructField("id", LongType),
+        StructField("part", StringType),
+        StructField("v", StringType))),
+      "id", "part")
+    t.upsert((1L to 10L).map(i => (i, s"P${i % 2}", s"v$i")).toDF("id", "part", "v"))
+    (t, Map("acid.r" -> t))
+  }
+
+  test("DELETE … WHERE id BETWEEN a AND b deletes the closed key range") {
+    val (t, reg) = idTable()
+    AcidSql.execute(spark, reg, "DELETE FROM acid.r WHERE id BETWEEN 3 AND 6")
+    assert(t.snapshot().select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 7L, 8L, 9L, 10L))
+  }
+
+  test("UPDATE … WHERE id BETWEEN a AND b updates the closed key range") {
+    val (t, reg) = idTable()
+    AcidSql.execute(spark, reg, "UPDATE acid.r SET v = 'x' WHERE id BETWEEN 3 AND 6")
+    val byId = t.snapshot().collect().map(r => r.getLong(0) -> r.getString(2)).toMap
+    assert(byId == (1L to 10L).map(i => i -> (if (i >= 3 && i <= 6) "x" else s"v$i")).toMap)
+  }
 }

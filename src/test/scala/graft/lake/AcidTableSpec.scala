@@ -201,32 +201,6 @@ class AcidTableSpec extends AnyFunSuite {
     assert(t.snapshot().as[Record].head().dataValue == "v2") // ours published last
   }
 
-  test("intervening manifest without #touched header is treated as overlapping, not empty") {
-    // a pre-header manifest has an UNKNOWN touched set; reading it as
-    // "touched nothing" would let the re-merge fast path carry a stale
-    // partition — it must demote to a (partial) redo instead
-    val t = AcidTable.create(spark, tmp(), schema, "primaryKeyValue", "partitionKeyValue",
-      stablePartitions = true)
-    t.upsert(df(Record("RA", "P0", "a0"), Record("RB", "P1", "b0")))
-    AcidTable.resetConflictCount()
-    t.beforePublishHook = () => {
-      t.beforePublishHook = () => ()
-      val session = spark.newSession()
-      val t2 = AcidTable.open(session, t.path)
-      t2.upsert(session.createDataset(Seq(Record("RB", "P1", "b1"))).toDF())
-      // strip the intervening manifest's #touched header (pre-header shape)
-      val m = java.nio.file.Paths.get(t.path, "_commits", f"v${1L}%012d.txt")
-      val body = new String(Files.readAllBytes(m), "UTF-8")
-        .linesIterator.filterNot(_.startsWith("#touched=")).mkString("\n")
-      Files.write(m, body.getBytes("UTF-8"))
-    }
-    t.upsert(df(Record("RA", "P0", "a1"))) // disjoint in truth — but unknowable
-    assert(AcidTable.conflictRedoCount == 1,
-      s"unknown touched set must force a redo, got remerge=${AcidTable.conflictRemergeCount}")
-    val byPk = t.snapshot().as[Record].collect().map(r => r.primaryKeyValue -> r.dataValue).toMap
-    assert(byPk == Map("RA" -> "a1", "RB" -> "b1"))
-  }
-
   test("overwrite vs concurrent new-partition commit: full replace wins, nothing carried") {
     // overwrite's touched set derives from the GLOBAL file list, so the
     // partition-local conflict fast paths must not apply: an intervening

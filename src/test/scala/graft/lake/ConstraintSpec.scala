@@ -173,4 +173,18 @@ class ConstraintSpec extends AnyFunSuite {
     assert(spark.sql("SELECT * FROM graft.ck.t").count() == 2)
     spark.sql("DROP TABLE graft.ck.t")
   }
+
+  test("a CHECK (v BETWEEN lo AND hi) constraint guards a fast-path upsert") {
+    var t = mkTable()
+    t.upsert(Seq(("a", "p0", 1.0)).toDF("pk", "part", "v"))
+    t = t.addConstraint("v_range", "v BETWEEN 0.0 AND 10.0")
+    val vBefore = t.latestVersion()
+    val e = intercept[Exception] {
+      t.upsert(Seq(("b", "p0", 11.0)).toDF("pk", "part", "v"))
+    }
+    assert(e.getMessage.contains("v_range"), e.getMessage)
+    assert(t.latestVersion() == vBefore, "violating commit must not publish")
+    t.upsert(Seq(("b", "p0", 10.0)).toDF("pk", "part", "v"))
+    assert(t.snapshot().count() == 2)
+  }
 }

@@ -21,8 +21,7 @@ import graft.TestSpark
   *  4. the root carries each partition's min/max envelope for the
   *     statsColumns, so a range probe the root refutes skips whole
   *     partitions with ZERO per-file stat reads and ZERO segment reads;
-  *  5. pre-segment (flat) manifests stay readable;
-  *  6. vacuum garbage-collects segments no retained manifest references.
+  *  5. vacuum garbage-collects segments no retained manifest references.
   */
 class ManifestSegmentSpec extends AnyFunSuite {
 
@@ -55,7 +54,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     val t = newTable()
     t.upsert(batch(("a1", "P0", 1L), ("a2", "P0", 2L), ("b1", "P1", 10L)))
     val v1 = t.latestVersion()
-    val refs1 = t.segRefs(v1).get.map(r => r.partDir -> r).toMap
+    val refs1 = t.segRefs(v1).map(r => r.partDir -> r).toMap
     val p0Seg1 = refs1("part=P0")
     val p0Bytes1 = segBytes(t, p0Seg1.name)
 
@@ -63,7 +62,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     AcidTable.resetMetaIoCounters()
     t.upsert(batch(("b2", "P1", 11L)))
     val v2 = t.latestVersion()
-    val refs2 = t.segRefs(v2).get.map(r => r.partDir -> r).toMap
+    val refs2 = t.segRefs(v2).map(r => r.partDir -> r).toMap
     // untouched partition: same segment NAME (content-addressed) and the
     // bytes on disk are the identical file
     assert(refs2("part=P0").name == p0Seg1.name)
@@ -134,7 +133,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     t.upsert(batch(("b1", "P1", 100L), ("b2", "P1", 190L)))
     t.upsert(batch(("c1", "P2", 1000L), ("c2", "P2", 1900L)))
     val v = t.latestVersion()
-    val refs = t.segRefs(v).get.map(r => r.partDir -> r).toMap
+    val refs = t.segRefs(v).map(r => r.partDir -> r).toMap
     assert(refs("part=P0").pstats("x") == (1L, 9L))
     assert(refs("part=P1").pstats("x") == (100L, 190L))
     assert(refs("part=P2").pstats("x") == (1000L, 1900L))
@@ -175,7 +174,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     // P0: y all null; P1: y populated
     t.upsert(mk(Seq(("a1", "P0", 1L, null), ("a2", "P0", 5L, null))))
     t.upsert(mk(Seq(("b1", "P1", 100L, 7L), ("b2", "P1", 190L, 9L))))
-    val refs = t.segRefs(t.latestVersion()).get.map(r => r.partDir -> r).toMap
+    val refs = t.segRefs(t.latestVersion()).map(r => r.partDir -> r).toMap
     // all-null partition: empty envelope (MaxValue, MinValue) — prunes
     // against any real range, which is sound (NULL never matches a range)
     assert(refs("part=P0").pstats("y") == (Long.MaxValue, Long.MinValue))
@@ -185,7 +184,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
 
     // rewrite P0 with real y values: envelope follows the rewrite
     t.upsert(mk(Seq(("a1", "P0", 2L, 500L))))
-    val refs2 = t.segRefs(t.latestVersion()).get.map(r => r.partDir -> r).toMap
+    val refs2 = t.segRefs(t.latestVersion()).map(r => r.partDir -> r).toMap
     val (ylo, yhi) = refs2("part=P0").pstats("y")
     assert(ylo <= 500L && yhi >= 500L, s"envelope ($ylo, $yhi) must cover the upserted 500")
     // correctness: pruned read == plain filtered read
@@ -193,34 +192,6 @@ class ManifestSegmentSpec extends AnyFunSuite {
     val viaStats = t.snapshotRange(Map("y" -> (400L, 600L)))
       .filter(col("y").between(400L, 600L)).collect().map(_.getString(0)).toSet
     assert(viaStats == Set("a1"))
-  }
-
-  test("pre-segment (flat) manifests stay readable next to segmented ones") {
-    val t = newTable()
-    t.upsert(batch(("a1", "P0", 1L), ("b1", "P1", 10L)))
-    val v1 = t.latestVersion()
-    // rewrite v1's root in the PRE-SEGMENT layout (data-file lines +
-    // #sizes=), exactly what an existing table's history holds
-    val lines = Files.readAllLines(
-      Paths.get(t.path, "_commits", f"v$v1%012d.txt")).toArray(Array.empty[String]).toSeq
-    val refs = t.segRefs(v1).get
-    val files = t.filesForPartitions(v1, Seq("P0", "P1"))
-    val sizeHeader = "#sizes=" + refs.flatMap(r =>
-      files.filter(_.startsWith(r.partDir + "/")).map(f =>
-        s"${java.net.URLEncoder.encode(f, "UTF-8")}:100")).mkString(",")
-    val flat = lines.filter(l => l.startsWith("#ts=") || l.startsWith("#touched=")) ++
-      Seq(sizeHeader) ++ files
-    val p = Paths.get(t.path, "_commits", f"v$v1%012d.txt")
-    Files.delete(p)
-    Files.write(p, flat.mkString("\n").getBytes("UTF-8"))
-
-    val t2 = AcidTable.open(spark, t.path)
-    assert(t2.segRefs(v1).isEmpty) // recognized as flat
-    assert(t2.snapshot(v1).collect().map(_.getString(0)).toSet == Set("a1", "b1"))
-    // a NEW commit on top of the flat manifest segments cleanly
-    t2.upsert(batch(("c1", "P2", 20L)))
-    assert(t2.segRefs(t2.latestVersion()).isDefined)
-    assert(t2.snapshot().count() == 3)
   }
 
   test("vacuum GCs segments no retained manifest references; restore reuses by content") {
@@ -244,7 +215,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     // the segments only they referenced
     t.vacuum(keepVersions = 2, graceMillis = 0L)
     val liveRefs = (t.latestVersion() - 1 to t.latestVersion())
-      .flatMap(v => t.segRefs(v).get.map(_.name)).toSet
+      .flatMap(v => t.segRefs(v).map(_.name)).toSet
     val after = Option(segDir(t).toFile.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("seg-")).map(_.getName).toSet
     assert(after == liveRefs,
@@ -275,7 +246,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
       (nSynth + 1 + AcidTable.RootPageSize - 1) / AcidTable.RootPageSize) * 2 - 1)
     assert(pageRefs.size == expectedN, s"${pageRefs.size} pages, expected $expectedN")
     // readers see the flat shape: every partition's seg ref resolvable
-    assert(t.segRefs(v1).get.size == nSynth + 1)
+    assert(t.segRefs(v1).size == nSynth + 1)
     assert(t.detail().collect()(0).getLong(5) == nSynth + 1) // partition count
     // trickle commit on the real partition: pages REUSE (content-addressed
     // chunks of the sorted line list — only P0's chunk changes)
@@ -306,6 +277,6 @@ class ManifestSegmentSpec extends AnyFunSuite {
         .map(_.substring(2).takeWhile(_ != '|'))).toSet
     assert(pagesOnDisk == livePageRefs,
       s"pages on disk $pagesOnDisk != retained roots' page refs $livePageRefs")
-    assert(t.segRefs(t.latestVersion()).get.size == nSynth + 1)
+    assert(t.segRefs(t.latestVersion()).size == nSynth + 1)
   }
 }

@@ -13,10 +13,7 @@ import graft.TestSpark
   *  1. drop/recreate at the SAME path must not serve the old table's
   *     cached manifest expansion (resolvedManifestCache is keyed
   *     (path, version) and versions restart at a recreated path);
-  *  2. the stats sidecar is format-versioned: v1 (pre-floorDiv-fix)
-  *     TIMESTAMP ranges are untrusted and dropped on read — unprunable
-  *     is safe, wrong pruning is not — and the next write stamps v2;
-  *  3. (superseded in round 14) untouched partitions' segments now carry
+  *  2. (superseded in round 14) untouched partitions' segments now carry
   *     by VERBATIM root-line reuse — a foreign commit neither resolves
   *     nor touches them, and vacuum keeps them because any reused
   *     segment is, by construction, referenced by the predecessor root
@@ -56,60 +53,12 @@ class StaleCacheSpec extends AnyFunSuite {
     assert(rows == Set(("z", 99L)))
   }
 
-  test("v1 (unversioned) sidecar TIMESTAMP ranges are dropped on read; next write stamps v2") {
-    val tsSchema = StructType(Seq(
-      StructField("pk", StringType),
-      StructField("part", StringType),
-      StructField("ts", TimestampType),
-      StructField("x", LongType)))
-    val path = Files.createTempDirectory("statsver-").resolve("t").toString
-    val t = AcidTable.create(spark, path, tsSchema, "pk", "part", stablePartitions = true)
-    t.setTableProperty("statsColumns", Some("ts,x"))
-
-    // hand-write a PRE-VERSIONING sidecar: a ts range (untrusted under
-    // v1 — the old encoder mis-signed pre-1970 fractional seconds), an x
-    // range, and ts null counts (counts never used the broken encoder)
-    val props = new java.util.Properties()
-    props.setProperty(
-      java.net.URLEncoder.encode("part=P0/fake.parquet", "UTF-8"),
-      "ts:100:200;x:1:5;" + java.net.URLEncoder.encode("ts#n", "UTF-8") + ":0:3")
-    val out = Files.newOutputStream(Paths.get(path, AcidTable.ClusterStatsFile))
-    try props.store(out, "legacy v1 sidecar") finally out.close()
-
-    val read = t.readClusterStats()
-    val cols = read("part=P0/fake.parquet")
-    assert(!cols.contains("ts"), "untrusted v1 timestamp range must be dropped")
-    assert(cols("x") == (1L, 5L), "non-timestamp ranges stay")
-    assert(cols("ts#n") == (0L, 3L), "null counts are encoding-independent and stay")
-
-    // a real commit merges + rewrites the sidecar: now stamped v2, the
-    // legacy ts range gone from disk, and the NEW file's ts range present
-    // (written by the fixed encoder, trusted under v2)
-    val df = spark.createDataFrame(java.util.Arrays.asList(
-      Row("a", "P1", java.sql.Timestamp.valueOf("1969-12-31 23:59:59.5"), 7L)), tsSchema)
-    t.upsert(df)
-    val onDisk = new java.util.Properties()
-    val in = Files.newInputStream(Paths.get(path, AcidTable.ClusterStatsFile))
-    try onDisk.load(in) finally in.close()
-    assert(onDisk.getProperty(AcidTable.StatsVerKey) == "2")
-    val legacyVal = onDisk.getProperty(
-      java.net.URLEncoder.encode("part=P0/fake.parquet", "UTF-8"))
-    assert(legacyVal != null && !legacyVal.matches(".*(^|;)ts:.*"),
-      s"legacy ts range must not survive the rewrite: $legacyVal")
-    val reread = t.readClusterStats()
-    val newEntry = reread.collect { case (f, m) if f.startsWith("part=P1/") => m }
-    assert(newEntry.nonEmpty && newEntry.head.contains("ts"),
-      "fresh v2 timestamp ranges ARE trusted")
-    // and the fixed encoder's pre-1970 fractional value: -0.5 s = -500000 us
-    assert(newEntry.head("ts") == (-500000L, -500000L))
-  }
-
   test("foreign commits carry untouched segments by reference; vacuum keeps them on liveness, not mtime") {
     val path = Files.createTempDirectory("touch-").resolve("t").toString
     val t = AcidTable.create(spark, path, schema, "pk", "part", stablePartitions = true)
     t.upsert(batch(("a", "P0", 1L)))
     val segs = Paths.get(path, "_commits", AcidTable.SegmentsDir)
-    val p0Seg = t.segRefs(t.latestVersion()).get.find(_.partDir == "part=P0").get.name
+    val p0Seg = t.segRefs(t.latestVersion()).find(_.partDir == "part=P0").get.name
     // simulate an ANCIENT segment (mtime far below any grace cutoff)
     assert(segs.resolve(p0Seg).toFile.setLastModified(1000L))
     t.upsert(batch(("b", "P1", 2L))) // P0 untouched — its root line carries VERBATIM
@@ -117,7 +66,7 @@ class StaleCacheSpec extends AnyFunSuite {
     // segment (commit metadata work is O(touched partitions)) …
     assert(segs.resolve(p0Seg).toFile.lastModified() == 1000L,
       "untouched segment must carry by reference, not be re-written or touched")
-    assert(t.segRefs(t.latestVersion()).get.exists(_.name == p0Seg),
+    assert(t.segRefs(t.latestVersion()).exists(_.name == p0Seg),
       "latest root must still reference the carried segment")
     // … and vacuum must keep it DESPITE the ancient mtime: a carried
     // segment is referenced by a retained root, so liveness — not the

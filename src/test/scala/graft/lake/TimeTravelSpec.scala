@@ -171,34 +171,4 @@ class TimeTravelSpec extends AnyFunSuite {
     assert(t.versionAt(1499L) == 1L)
     assert(t.versionAt(1500L) == 2L)
   }
-
-  test("a corrupted #ts= header degrades to mtime, not an exception") {
-    val path = Files.createTempDirectory("tt-corrupt-").resolve("t")
-    val t = AcidTable.create(spark, path.toString, schema, "primaryKeyValue", "partitionKeyValue")
-    t.upsert(df(Record("R1", "P0", "v0")))
-    val manifest = path.resolve("_commits/v000000000000.txt")
-    val body = new String(Files.readAllBytes(manifest), "UTF-8")
-      .replaceAll("#ts=\\d+", "#ts=not-a-number")
-    Files.write(manifest, body.getBytes("UTF-8"))
-    val mtime = 1700000000000L
-    Files.setLastModifiedTime(manifest, FileTime.fromMillis(mtime))
-    assert(t.versionAt(mtime) == 0L)    // fell back to mtime, no throw
-    assert(t.versionAt(mtime - 1) == -1L)
-  }
-
-  test("pre-header manifests (no #ts=) fall back to file mtime") {
-    val path = Files.createTempDirectory("tt-legacy-").resolve("t")
-    val t = AcidTable.create(spark, path.toString, schema, "primaryKeyValue", "partitionKeyValue")
-    t.upsert(df(Record("R1", "P0", "v0")))              // version 0
-    // rewrite the manifest the way a pre-header build wrote it: strip #ts=
-    val commits = path.resolve("_commits")
-    val manifest = Files.list(commits).filter(_.getFileName.toString.startsWith("v")).findFirst().get()
-    val body = new String(Files.readAllBytes(manifest), "UTF-8")
-      .linesIterator.filterNot(_.startsWith("#ts=")).mkString("\n")
-    Files.write(manifest, body.getBytes("UTF-8"))
-    val mtime = 1700000000000L
-    Files.setLastModifiedTime(manifest, FileTime.fromMillis(mtime))
-    assert(t.versionAt(mtime - 1) == -1L)
-    assert(t.versionAt(mtime) == 0L)
-  }
 }
