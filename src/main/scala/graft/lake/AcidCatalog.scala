@@ -139,7 +139,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       s"exactly one identity partition column expected, got ${partitions.mkString(",")}")
     val t = AcidTable.create(spark, tablePath(ident), schema, pk, partCols.head,
       props.get("preCombinedField"),
-      numBuckets = props.get("numBuckets").map(_.toInt).getOrElse(32))
+      numBuckets = props.get("numBuckets").map(_.toInt).getOrElse(AcidTable.DefaultBuckets))
     // every non-structural TBLPROPERTY persists as a free-form table
     // property (e.g. morDeletes — the merge-on-read delete mode)
     val structural = Set("primaryKey", "preCombinedField", "numBuckets",
@@ -665,7 +665,7 @@ final class AcidScanBuilder(acid: AcidTable, version: Option[Long] = None)
     override def readSchema(): StructType = required
 
     /** Manifest-driven size estimate for Catalyst's join planning: the
-      * PRUNED file list's bytes from the `#sizes=` commit header — so a
+      * PRUNED file list's bytes as the commit's segments record them — so a
       * dimension-sized ACID table (or a point-lookup/range-pruned slice of
       * a huge one) auto-broadcasts in SQL joins with no hint, while an
       * unpruned 100 TB scan reports its true size and never does. Without

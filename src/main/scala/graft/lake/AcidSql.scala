@@ -503,7 +503,7 @@ final class AcidSqlSession(spark: SparkSession, warehouseDir: String) {
       val t = AcidTable.create(spark,
         (warehouseDir +: nameParts).mkString("/"),
         StructType(cols), pk, partCols.head, precombine,
-        numBuckets = props.get("numBuckets").map(_.toInt).getOrElse(32))
+        numBuckets = props.get("numBuckets").map(_.toInt).getOrElse(AcidTable.DefaultBuckets))
       // non-structural TBLPROPERTIES persist as free-form table
       // properties (morDeletes et al.)
       val structural = Set("primaryKey", "preCombinedField", "numBuckets")

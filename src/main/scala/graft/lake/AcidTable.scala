@@ -27,13 +27,14 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
   * }}}
   *
   * One root format is readable. Every root starts with `#ts=<publish
-  * millis>`, `#touched=<cells>` and `#segments=1` (the format stamp),
-  * may carry `#pages=`/`#op=`/`#dvs=`/`#rli=` headers, and then lists
-  * one `@<partdir>|<segment>|<files>|<bytes>|<envelopes>` line per
-  * partition — or, above [[AcidTable.RootPageThreshold]] partitions,
-  * `@@<page>|<lines>|<bucket>|<files>|<bytes>` page references. A root
-  * in any other shape is refused by `checkRootFormat` with an
-  * `IllegalStateException` naming the manifest, and [[fsck]] reports it
+  * millis>`, `#touched=<cells>`, `#segments=1` (the format stamp) and
+  * `#op=<operation>`, may carry `#pages=`/`#dvs=`/`#rli=` headers, and
+  * then lists one `@<partdir>|<segment>|<files>|<bytes>|<envelopes>`
+  * line per partition — or, above [[AcidTable.RootPageThreshold]]
+  * partitions, `@@<page>|<lines>|<bucket>|<files>|<bytes>` page
+  * references. [[RootView]] owns the format: [[rootView]] is the one
+  * reader of a root file, and a root in any other shape is refused with
+  * an `IllegalStateException` naming the manifest; [[fsck]] reports it
   * as `unsupported_root_format`.
   *
   * Data files are hash-bucketed WITHIN each partition (`b<bbb>-` name
@@ -201,8 +202,8 @@ final class AcidTable private (
     * discarded with its unpublished temp manifest, never visible.
     * Millisecond ties break toward the higher version. That
     * monotonicity is what lets this resolve by BINARY SEARCH over
-    * version numbers — O(log n) header reads (cached: manifests are
-    * immutable once published) instead of opening every manifest.
+    * version numbers — O(log n) root reads (views are cached: manifests
+    * are immutable once published) instead of opening every manifest.
     */
   def versionAt(epochMillis: Long): Long = {
     val latest = latestVersion()
@@ -215,7 +216,7 @@ final class AcidTable private (
     var ans = -1L
     while (lo <= hi) {
       val mid = (lo + hi) >>> 1
-      if (commitTime(mid) <= epochMillis) { ans = mid; lo = mid + 1 }
+      if (rootView(mid).ts <= epochMillis) { ans = mid; lo = mid + 1 }
       else hi = mid - 1
     }
     if (ans < 0 && oldest > 0)
@@ -247,17 +248,6 @@ final class AcidTable private (
     lo
   }
 
-  /** Publish-time of version `v`: the manifest's `#ts=` header (present
-    * and parseable in every root [[rawRootLines]] accepts). Cached
-    * process-wide: manifests are immutable once published, so a header
-    * is read at most once per (table, version).
-    */
-  private def commitTime(v: Long): Long =
-    AcidTable.commitTimeCache.computeIfAbsent((path, v), _ => {
-      AcidTable.manifestHeaderReads.incrementAndGet()
-      java.lang.Long.valueOf(tsOf(rawRootLines(v)))
-    }).longValue()
-
   /** Snapshot of the given (default latest) committed version. The file
     * list is pinned before the scan → snapshot isolation for the whole read.
     */
@@ -277,34 +267,11 @@ final class AcidTable private (
     }
 
   def snapshot(version: Long = -1L): DataFrame = explicitVersionRead(version) {
-    val v = if (version >= 0) version else latestVersion()
-    if (v < 0) snapshotFromFiles(Nil)
-    else {
-      // segment entries carry (file, size) directly — do NOT go through
-      // the resolved-manifest form, whose URL-encoded `#sizes=` header
-      // is O(live files) string work to build AND to re-parse on every
-      // snapshot (round 15: ~1 s of the 500 k-file planning cost).
-      // Expansion is cache-hit concatenation, 8-way on wide roots.
-      val entries = expandRefEntries(segRefs(v))
-      applyDvs(snapshotFromFiles(
-        entries.map(_._1), entries.filter(_._2 >= 0).toMap), readDvs(v))
-    }
+    // one view: the file list, the sizes and the deletion vectors all
+    // come from the same root read
+    val view = rootView(if (version >= 0) version else latestVersion())
+    applyDvs(snapshotFromFiles(view.files, view.sizes), view.dvs)
   }
-
-  /** All (file, size) entries of `refs`, in ref order — concurrent
-    * segment resolution above 64 refs (cache-hit after the first touch;
-    * the pool pays off on the cold object-store-shaped read). */
-  private def expandRefEntries(refs: Seq[AcidTable.SegRef]): Seq[(String, Long)] =
-    if (refs.size <= 64) refs.flatMap(r => readSegment(r.name).entries)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      try refs.map { r =>
-        pool.submit(new java.util.concurrent.Callable[Seq[(String, Long)]] {
-          override def call(): Seq[(String, Long)] = readSegment(r.name).entries
-        })
-      }.flatMap(_.get())
-      finally { pool.shutdown(); () }
-    }
 
   /** Point-lookup read: the pinned (default latest) snapshot restricted to
     * `keys`, scanning ONLY the data files that can hold them. Because the
@@ -329,27 +296,26 @@ final class AcidTable private (
       partitionsHint: Option[Seq[String]] = None,
       version: Long = -1L): DataFrame = explicitVersionRead(version) {
     AcidTable.lookupScans.incrementAndGet()
-    // resolve the version ONCE so the file list and the size map come from
-    // the same manifest even if a commit lands mid-call. DV entries are a
-    // root header and sizes resolve from the pruned files' own segments —
-    // a hinted point lookup never expands the full manifest.
-    val v = if (version >= 0) version else latestVersion()
-    val dvs = readDvs(v)
+    // ONE view of the version: the file list, the size map and the DV
+    // entries come from the same root even if a commit lands mid-call.
+    // Sizes resolve from the pruned files' own segments — a hinted point
+    // lookup never expands the full manifest.
+    val view = rootView(if (version >= 0) version else latestVersion())
     if (!keyCastSupported) {
       // PK type outside castKeyTo's set (DATE/TIMESTAMP/DECIMAL/…): the
       // string keys can't be rendered as typed literals, so skip bucket
       // pruning and filter the (partition-pruned) snapshot by the PK's
       // string rendering — never return empty for a type we can't parse
-      val files = lookupFiles(keys, partitionsHint, v)
-      return applyDvs(snapshotFromFiles(files, sizesForFiles(v, files)), dvs)
+      val files = lookupFilesIn(view, keys, partitionsHint)
+      return applyDvs(snapshotFromFiles(files, sizesForFiles(view, files)), view.dvs)
         .filter(col(pkCol).cast(StringType).isInCollection(keys))
     }
     val typed = typedKeys(keys)
     if (typed.isEmpty) return snapshotFromFiles(Nil)
-    val files = lookupFiles(keys, partitionsHint, v)
+    val files = lookupFilesIn(view, keys, partitionsHint)
     // keys cast to the PK's type (not the column to string) so the In set
     // test stays on the bare scan column and pushes into the parquet read
-    applyDvs(snapshotFromFiles(files, sizesForFiles(v, files)), dvs)
+    applyDvs(snapshotFromFiles(files, sizesForFiles(view, files)), view.dvs)
       .filter(col(pkCol).isInCollection(typed))
   }
 
@@ -378,9 +344,12 @@ final class AcidTable private (
   private[graft] def lookupFiles(
       keys: Seq[String],
       partitionsHint: Option[Seq[String]] = None,
-      version: Long = -1L): Seq[String] = {
-    val v = if (version >= 0) version else latestVersion()
-    if (v < 0 || keys.isEmpty) return Nil
+      version: Long = -1L): Seq[String] =
+    lookupFilesIn(rootView(if (version >= 0) version else latestVersion()), keys, partitionsHint)
+
+  private def lookupFilesIn(
+      view: RootView, keys: Seq[String], partitionsHint: Option[Seq[String]]): Seq[String] = {
+    if (keys.isEmpty) return Nil
     // hidden partitioning on the PK itself (e.g. bucket(n, pk)): the
     // keys DETERMINE their partitions, so an explicit hint is redundant —
     // derive it through the same transform evaluation the writer used
@@ -414,22 +383,21 @@ final class AcidTable private (
     // an 8-way pool — the object-store parallel-ranged-GET shape, same
     // as bulk publish's concurrent PUTs — with content-addressed
     // segments hitting the process-wide cache across versions (a trickle
-    // commit changes one). NOT manifestLines, whose resolved form
-    // rebuilds a URL-encoded `#sizes=` header over every live file per
-    // new version (round-14 verdict #3). The tail of every route:
+    // commit changes one) — never the whole table's entries at once
+    // (round-14 verdict #3). The tail of every route:
     // per-file blooms (when bloomColumns covers the PK) drop candidates
     // that cannot hold any probe key.
     hint match {
-      case Some(ps) => bloomPruneFiles(cellPrune(filesForPartitions(v, ps)), keys)
-      case None => rliLookup(v, keys) match {
+      case Some(ps) => bloomPruneFiles(cellPrune(filesForPartitions(view, ps)), keys)
+      case None => rliLookup(view, keys) match {
         // record index (round 16): a COMPLETE pk→partition index turns
         // the unhinted probe into a hint-shaped one — O(#known cells)
         // segment reads instead of the O(live partitions) per-ref sweep
         // below. Some(Nil) is a proven-empty probe (key nowhere).
         case Some(cells) =>
-          bloomPruneFiles(cellPrune(filesForPartitions(v, cells)), keys)
+          bloomPruneFiles(cellPrune(filesForPartitions(view, cells)), keys)
         case None =>
-          val refs = segRefs(v)
+          val refs = view.segRefs
           if (refs.size <= 64)
             refs.flatMap(r => bloomPruneFiles(
               cellPrune(readSegment(r.name).entries.map(_._1)), keys))
@@ -468,7 +436,7 @@ final class AcidTable private (
     * any partition-subset of one). Planned ENTIRELY from manifest metadata
     * ([[org.apache.spark.sql.graft.ManifestScan]]): partition values are
     * parsed off the directory names and per-file sizes come from the
-    * manifest's `#sizes=` header, so building the scan costs no filesystem
+    * manifest's segments, so building the scan costs no filesystem
     * listing or stat calls — a snapshot's planning cost is O(files) string
     * work, the property that keeps reads cheap while file-group commits
     * accumulate files (and, at 100 TB, the property that lets scan
@@ -502,8 +470,8 @@ final class AcidTable private (
         val pv = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .unescapePathName(f.takeWhile(_ != '/').stripPrefix(s"$partitionCol="))
         val size = sizes.getOrElse(f, {
-          // pre-`#sizes` manifest — one stat, counted like the write-sizing
-          // fallback
+          // a file published without a size — one stat, counted like the
+          // write-sizing fallback
           AcidTable.sizeStatFallbacks.incrementAndGet()
           dataRoot.resolve(f).toFile.length()
         })
@@ -656,14 +624,14 @@ final class AcidTable private (
     val latest = latestVersion()
     if (latest < 0) return -1L
     val prefix = s"STREAM:${java.net.URLEncoder.encode(streamId, "UTF-8")}:"
+    // header-only: no page expands, no segment resolves. Archival removes
+    // a PREFIX of the timeline, so a version archived mid-walk ends it —
+    // every older one is gone too
     (latest to oldestRetainedVersion(latest) by -1).iterator
-      .flatMap { v =>
-        scala.util.Try(manifestLines(v)).toOption.toSeq.flatMap(
-          _.find(_.startsWith("#op=")).toSeq
-            .map(l => java.net.URLDecoder.decode(l.stripPrefix("#op="), "UTF-8"))
-            .filter(_.startsWith(prefix))
-            .flatMap(op => scala.util.Try(op.stripPrefix(prefix).toLong).toOption))
-      }
+      .map(v => try Some(rootView(v).op) catch { case _: CommitConflictException => None })
+      .takeWhile(_.isDefined).flatten
+      .filter(_.startsWith(prefix))
+      .flatMap(op => op.stripPrefix(prefix).toLongOption)
       .nextOption().getOrElse(-1L)
   }
 
@@ -1694,7 +1662,7 @@ final class AcidTable private (
     while (true) {
       val base = latestVersion()
       if (base < 0) return base // empty table: nothing to delete
-      val baseDvs = readDvs(base)
+      val baseView = rootView(base)
       // resolve the keys' LIVE cells against the DV-applied base snapshot:
       // a bucket-pruned scan (lookupFiles) whose result is ≤ |keys| rows.
       // Only keys that currently match a live row become entries. Driver
@@ -1702,13 +1670,13 @@ final class AcidTable private (
       // a point delete are metadata-scale, so the probe runs on the same
       // driver row kernels DML uses — a MOR delete is then zero Spark
       // jobs end-to-end; outside the gate the distributed probe runs.
-      val pairs = localLookupRows(keyStrings, base, hint).map { rows =>
+      val pairs = localLookupRowsIn(baseView, keyStrings, hint).map { rows =>
         rows.map(r => (rowPart(r),
           String.valueOf(r.get(pkFieldIdx, schema(pkFieldIdx).dataType)))).distinct
       }.getOrElse {
-        val probeFiles = lookupFiles(keyStrings, hint, base)
+        val probeFiles = lookupFilesIn(baseView, keyStrings, hint)
         applyDvs(
-          snapshotFromFiles(probeFiles, sizesForFiles(base, probeFiles)), baseDvs)
+          snapshotFromFiles(probeFiles, sizesForFiles(baseView, probeFiles)), baseView.dvs)
           .filter(col(pkCol).cast(StringType).isInCollection(keyStrings))
           .select(col(partitionCol).cast(StringType), col(pkCol).cast(StringType))
           .collect().map(r => (r.getString(0), r.getString(1))).toSeq.distinct
@@ -1723,7 +1691,7 @@ final class AcidTable private (
         // nothing, so prior entries (even of our own cells) stay live.
         // Segmented base: EVERY root line reuses verbatim (round 14) —
         // a DV commit is O(matched keys) metadata however large the table
-        publishDvOnly(base, touched, (baseDvs ++ entries).distinct)
+        publishDvOnly(base, baseView, touched, (baseView.dvs ++ entries).distinct)
         return base + 1
       } catch {
         case _: FileAlreadyExistsException =>
@@ -1741,9 +1709,10 @@ final class AcidTable private (
   /** Publish a DV-only commit on top of `base`: no data file changes, so
     * EVERY root line carries verbatim — the commit is O(matched keys)
     * metadata however large the table (round 14). */
-  private def publishDvOnly(base: Long, touched: Seq[FileCell], dvs: Seq[DvEntry]): Unit =
+  private def publishDvOnly(
+      base: Long, baseView: RootView, touched: Seq[FileCell], dvs: Seq[DvEntry]): Unit =
     publish(base + 1, Nil, touched, Map.empty, "DELETE_DV", dvs,
-      reuseRootLines = rootLines(base).filter(_.startsWith("@")),
+      reuseRootLines = baseView.refLines,
       rli = AcidTable.RliInherit) // removal-only: refs AND completeness carry
 
   /** Predicate-driven deletion-vector commit: the merge-on-read route of
@@ -1765,12 +1734,11 @@ final class AcidTable private (
     while (true) {
       val base = latestVersion()
       if (base < 0) return Some(base) // empty table: nothing to delete
-      val baseLines = manifestLines(base)
-      val baseDvs = dvsOf(baseLines)
+      val baseView = rootView(base)
       // matched rows ARE live rows of the current snapshot (DV-applied),
       // so one filtered scan yields the (partition, pk) pairs directly
       val matched = applyDvs(
-        snapshotFromFiles(dataLinesOf(baseLines), sizesOf(baseLines)), baseDvs)
+        snapshotFromFiles(baseView.files, baseView.sizes), baseView.dvs)
         .filter(condition)
         .select(col(partitionCol).cast(StringType), col(pkCol).cast(StringType))
         .distinct().limit(AcidTable.MorMaxKeys + 1).collect()
@@ -1783,7 +1751,7 @@ final class AcidTable private (
       }.toSeq.distinct
       val touched = entries.map(e => FileCell(e.part, e.bucket)).distinct
       try {
-        publishDvOnly(base, touched, (baseDvs ++ entries).distinct)
+        publishDvOnly(base, baseView, touched, (baseView.dvs ++ entries).distinct)
         return Some(base + 1)
       } catch {
         case _: FileAlreadyExistsException =>
@@ -2142,14 +2110,14 @@ final class AcidTable private (
     if (v < 0) return Nil
     // the partition inventory IS the root's reference list —
     // O(partitions) read, no segment resolution at all
-    segRefs(v).map(r => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    rootView(v).segRefs.map(r => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(r.partDir.stripPrefix(s"$partitionCol=")))
       .distinct.sorted
   }
 
   /** The `SHOW PARTITIONS` surface: one row per live partition value with
-    * its live file count and manifest-recorded bytes — all from manifest
-    * strings and the `#sizes=` header, so the inventory of a 100 TB
+    * its live file count and manifest-recorded bytes — all from the
+    * root's partition lines, so the inventory of a 100 TB
     * table costs one manifest read, never a listing or footer pass. */
   def partitionsInventory(version: Long = -1L): DataFrame = {
     val invSchema = StructType(Seq(
@@ -2161,22 +2129,12 @@ final class AcidTable private (
       spark.sparkContext.emptyRDD[Row], invSchema)
     // count and bytes ride the reference line — the whole inventory
     // costs ONE root read, zero segment resolutions
-    val rows = segRefs(v)
+    val rows = rootView(v).segRefs
       .map(r => (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(r.partDir.stripPrefix(s"$partitionCol=")), r.count, r.bytes))
       .sortBy(_._1)
       .map { case (p, n, b) => Row(p, n, b) }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), invSchema)
-  }
-
-  /** (nFiles, bytes, nParts) summed from a PAGED root's `@@` aggregate
-    * fields alone (`@@<page>|<lines>|<bucket>|<files>|<bytes>`, checked
-    * by [[checkRootFormat]]) — None when the root is not paged. O(pages)
-    * work, no expansion. */
-  private def pageAggregates(raw: Seq[String]): Option[(Long, Long, Long)] = {
-    val refs = raw.filter(_.startsWith("@@")).map(_.substring(2).split("\\|", -1))
-    if (refs.isEmpty) None
-    else Some((refs.map(_(3).toLong).sum, refs.map(_(4).toLong).sum, refs.map(_(1).toLong).sum))
   }
 
   /** One-row table summary (the Delta `DESCRIBE DETAIL` analog): layout,
@@ -2185,13 +2143,8 @@ final class AcidTable private (
   def detail(): DataFrame = {
     val detailSchema = AcidTable.DetailSchema
     val v = latestVersion()
-    val (nFiles, bytes, nParts) =
-      if (v < 0) (0L, 0L, 0L)
-      else pageAggregates(rawRootLines(v)).getOrElse {
-        // the one-row summary costs ONE root read
-        val refs = segRefs(v)
-        (refs.map(_.count).sum, refs.map(_.bytes).sum, refs.size.toLong)
-      }
+    // the one-row summary costs ONE root read (no page expansion)
+    val (nFiles, bytes, nParts) = rootView(v).totals
     // '; ' separator: property VALUES may contain commas (bloomColumns)
     val props = tableProperties.toSeq.sortBy(_._1)
       .map { case (k, pv) => s"$k=$pv" }.mkString("; ")
@@ -2220,7 +2173,7 @@ final class AcidTable private (
     *    flag is set AND every ref resolves); heal: [[fsckRepair]] or
     *    [[rebuildRecordIndex]].
     *  - `unsupported_root_format` — a retained root fails the one format
-    *    check every read applies (see [[rawRootLines]]): no readable
+    *    check every read applies (see [[rootView]]): no readable
     *    version of this build can use it. Not repairable; heal:
     *    [[restore]] to an intact version.
     *  - `stale_quarantine` — a `.gc-*` quarantine file older than
@@ -2266,22 +2219,25 @@ final class AcidTable private (
                 java.net.URLDecoder.decode(p(0), "UTF-8")))
           }
         }
+      // a version archived by a concurrent vacuum mid-walk has left the
+      // retained window: nothing to check
       (oldestRetainedVersion(latest) to latest).foreach { v =>
-        val raw =
-          try rawRootLines(v)
+        val view =
+          try rootView(v)
           catch {
             case e: IllegalStateException =>
               out += (("unsupported_root_format", v, manifestFileName(v), e.getMessage))
-              Nil
-            case scala.util.control.NonFatal(_) => Nil
+              RootView.Empty
+            case _: CommitConflictException => RootView.Empty
           }
+        val raw = view.rawRefLines
         // page refs checked on the RAW root (a missing page must be
         // REPORTED, not abort the walk via a failed expansion); only
         // pages NOT seen under an earlier version are expanded — the
         // short-circuit that keeps fsck O(distinct pages), not
         // O(versions × files), on a paged timeline
         raw.filter(_.startsWith("@@")).foreach { l =>
-          val n = l.substring(2).takeWhile(_ != '|')
+          val n = RootView.pageName(l)
           if (n.nonEmpty && seenPages.add(n)) {
             if (!Files.exists(segmentsDir.resolve(n)))
               out += (("dangling_page_ref", v, n,
@@ -2298,7 +2254,7 @@ final class AcidTable private (
         // entirely for a side file this walk just proved absent, so a
         // damaged table never pays the GC-race retry ladder per version
         var genMissingHere = false
-        rliGenFileOf(raw).foreach { case (n, _) =>
+        view.rli.gen.foreach { case (n, _) =>
           if (!Files.exists(segmentsDir.resolve(n))) {
             genMissingHere = true
             if (seenRli.add(n))
@@ -2307,8 +2263,8 @@ final class AcidTable private (
           }
         }
         val refsToCheck =
-          if (genMissingHere) rliInlineRefsOf(raw)
-          else scala.util.Try(rliRefsOf(raw)).getOrElse(rliInlineRefsOf(raw))
+          if (genMissingHere) view.rli.inline
+          else scala.util.Try(rliRefsOf(view.rli)).getOrElse(view.rli.inline)
         refsToCheck.foreach { ref =>
           if (seenRli.add(ref.name) && !Files.exists(segmentsDir.resolve(ref.name)))
             out += (("dangling_rli_ref", v, ref.name,
@@ -2408,8 +2364,7 @@ final class AcidTable private (
 
   /** Commit timeline (the `DESCRIBE HISTORY` / Hudi-timeline surface):
     * one row per RETAINED version — version, operation label (the `#op=`
-    * audit header; "WRITE" for a publish that named no operation), publish
-    * timestamp, live file count, touched-cell count, and total data
+    * audit header every publish writes), publish timestamp, live file count, touched-cell count, and total data
     * bytes. Metadata-only: O(retained versions) manifest reads on the
     * driver, bounded by vacuum's timeline archival — never a data scan.
     */
@@ -2423,17 +2378,9 @@ final class AcidTable private (
         // timeline costs O(retained versions) ROOT reads, no segments —
         // and on PAGED roots no page expansion either (the `@@` refs
         // carry (files, bytes) aggregates, round 15)
-        val raw = rawRootLines(v)
-        val op = raw.find(_.startsWith("#op="))
-          .map(l => java.net.URLDecoder.decode(l.stripPrefix("#op="), "UTF-8"))
-          .getOrElse("WRITE")
-        val (nFiles, bytes) = pageAggregates(raw).map(a => (a._1, a._2))
-          .getOrElse {
-            val refs = segRefs(v)
-            (refs.map(_.count).sum, refs.map(_.bytes).sum)
-          }
-        (v, op, commitTime(v), nFiles,
-          readTouched(v).map(_.size.toLong).getOrElse(-1L), bytes)
+        val view = rootView(v)
+        val (nFiles, bytes, _) = view.totals
+        (v, view.op, view.ts, nFiles, view.touched.size.toLong, bytes)
       }
     rows.toDF("version", "operation", "timestamp_ms", "n_files", "n_touched_cells",
       "total_bytes")
@@ -2445,8 +2392,11 @@ final class AcidTable private (
     * surface: scan size estimates come from commit metadata, never from
     * listing or footer-probing a 100 TB table's object store.
     */
-  private[lake] def filesBytes(files: Seq[String], version: Long): Long = {
-    val sizes = if (version >= 0) sizesForFiles(version, files) else Map.empty[String, Long]
+  private[lake] def filesBytes(files: Seq[String], version: Long): Long =
+    filesBytesIn(rootView(version), files)
+
+  private def filesBytesIn(view: RootView, files: Seq[String]): Long = {
+    val sizes = sizesForFiles(view, files)
     files.iterator.map(f => sizes.getOrElse(f, {
       AcidTable.sizeStatFallbacks.incrementAndGet()
       dataRoot.resolve(f).toFile.length()
@@ -2457,7 +2407,8 @@ final class AcidTable private (
     * manifest metadata alone. */
   def liveBytes(version: Long = -1L): Long = {
     val v = if (version >= 0) version else latestVersion()
-    if (v < 0) 0L else filesBytes(readManifest(v), v)
+    val view = rootView(v)
+    filesBytesIn(view, view.files)
   }
 
   /** CDC-style diff between two committed versions: every row added and
@@ -2525,10 +2476,10 @@ final class AcidTable private (
   private def diffScope(fromVersion: Long, toVersion: Long)
       : (Seq[String], Seq[String], Map[String, Long], Map[String, Long],
          Seq[DvEntry], Seq[DvEntry]) = {
-    val fr = if (fromVersion < 0) Nil else segRefs(fromVersion)
-    val tr = if (toVersion < 0) Nil else segRefs(toVersion)
-    val fromDvs = readDvs(fromVersion)
-    val toDvs = readDvs(toVersion)
+    val fromView = rootView(fromVersion)
+    val toView = rootView(toVersion)
+    val (fr, tr) = (fromView.segRefs, toView.segRefs)
+    val (fromDvs, toDvs) = (fromView.dvs, toView.dvs)
     def byPd(dvs: Seq[DvEntry]): Map[String, Set[DvEntry]] =
       dvs.groupBy(e => partDir(e.part)).view.mapValues(_.toSet).toMap
     val fDv = byPd(fromDvs); val tDv = byPd(toDvs)
@@ -2608,18 +2559,20 @@ final class AcidTable private (
   private[lake] def localLookupRows(
       keys: Seq[String], version: Long = -1L,
       partitionsHint: Option[Seq[String]] = None)
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+    localLookupRowsIn(rootView(if (version >= 0) version else latestVersion()),
+      keys, partitionsHint)
+
+  private def localLookupRowsIn(
+      view: RootView, keys: Seq[String], partitionsHint: Option[Seq[String]])
       : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
     if (!fastSchemaOk || !AcidTable.localCommitEnabled) return None
-    val v = if (version >= 0) version else latestVersion()
-    if (v < 0) return Some(Nil)
-    val files = lookupFiles(keys, partitionsHint, v)
+    val files = lookupFilesIn(view, keys, partitionsHint)
     if (!driverScaleFiles(files)) return None
-    // root-header read: the `#dvs=` header lives on the root, so a
-    // segmented base must NOT expand every partition's segment
-    // (O(live files) metadata) just to list DVs — readDvs stays O(1)
-    val dvs = readDvs(v)
+    // the `#dvs=` entries are a header of the same view: listing them
+    // never expands every partition's segment
     val ks = keys.toSet
-    Some(readRowsLocal(files).filter(dvRowFilter(dvs)).filter(r =>
+    Some(readRowsLocal(files).filter(dvRowFilter(view.dvs)).filter(r =>
       ks.contains(String.valueOf(r.get(pkFieldIdx, schema(pkFieldIdx).dataType)))))
   }
 
@@ -2671,7 +2624,7 @@ final class AcidTable private (
     // materializer for deletion vectors (read once before the loop — a
     // concurrent MOR delete landing mid-compaction keeps its entries,
     // correctly, via the carried-DV rule)
-    val dvParts = readDvs(latestVersion()).map(e => partDir(e.part)).toSet
+    val dvParts = rootView(latestVersion()).dvs.map(e => partDir(e.part)).toSet
     val v = commitLoop(
       touchedOf = (_, files) => {
         val byPartition = files().groupBy(f => f.takeWhile(_ != '/'))
@@ -2718,7 +2671,7 @@ final class AcidTable private (
       case Some(ps) => // scoped rewrite records stats for ONLY its partitions
         val dirs = ps.map(partDir).toSet
         recordStatsForFiles(
-          readManifest(v).filter(f => dirs.contains(f.takeWhile(_ != '/'))), clusterBy)
+          rootView(v).files.filter(f => dirs.contains(f.takeWhile(_ != '/'))), clusterBy)
     }
     v
   }
@@ -2821,7 +2774,7 @@ final class AcidTable private (
     * — conservative, and a range predicate can't match their rows anyway.
     */
   private def recordClusterStats(version: Long, clusterBy: Seq[String]): Unit =
-    recordStatsForFiles(readManifest(version), clusterBy)
+    recordStatsForFiles(rootView(version).files, clusterBy)
 
   /** One distributed pass over `files` recording per-file min/max of
     * `cols` — the clustered-compaction stats pass, generalized to any
@@ -3436,10 +3389,17 @@ final class AcidTable private (
       equals: Seq[(String, Seq[Any])],
       version: Long = -1L,
       partitions: Option[Seq[String]] = None,
-      nullChecks: Seq[(String, Boolean)] = Nil): Seq[String] = {
-    val v = if (version >= 0) version else latestVersion()
-    if (v < 0) return Nil
-    val base = rangePrunedFiles(bounds, v)
+      nullChecks: Seq[(String, Boolean)] = Nil): Seq[String] =
+    prunedFilesIn(rootView(if (version >= 0) version else latestVersion()),
+      bounds, equals, partitions, nullChecks)
+
+  private def prunedFilesIn(
+      view: RootView,
+      bounds: Map[String, (Long, Long)],
+      equals: Seq[(String, Seq[Any])],
+      partitions: Option[Seq[String]],
+      nullChecks: Seq[(String, Boolean)]): Seq[String] = {
+    val base = rangePrunedIn(view, bounds)
     val byPart = partitions match {
       case Some(ps) =>
         val dirs = ps.map(p => partDir(p) + "/")
@@ -3479,19 +3439,15 @@ final class AcidTable private (
       nullChecks: Seq[(String, Boolean)],
       version: Long): Option[org.apache.spark.sql.graft.AcidBatchScanPlan] = {
     if (renamedCols.nonEmpty) return None
-    val v = if (version >= 0) version else latestVersion()
-    val dvs = if (v < 0) Nil else readDvs(v)
+    val view = rootView(if (version >= 0) version else latestVersion())
+    val dvs = view.dvs
     if (dvs.nonEmpty && (!keyCastSupported || pkCol == partitionCol)) return None
-    val rels: Seq[String] =
-      if (v < 0) Nil
-      else {
-        pkKeys match {
-          case Some(ks) =>
-            AcidTable.lookupScans.incrementAndGet() // the point-lookup route
-            lookupFiles(ks, partitions, v)
-          case None => prunedFiles(bounds, bloomEqs, v, partitions, nullChecks)
-        }
-      }
+    val rels: Seq[String] = pkKeys match {
+      case Some(ks) =>
+        AcidTable.lookupScans.incrementAndGet() // the point-lookup route
+        lookupFilesIn(view, ks, partitions)
+      case None => prunedFilesIn(view, bounds, bloomEqs, partitions, nullChecks)
+    }
     // per-file applicable DV keys, as CATALYST-INTERNAL pk values: an
     // entry applies to every file of its cell ([[fileInCell]] — bucketless
     // files belong to every bucket of their partition, the standing
@@ -3505,7 +3461,7 @@ final class AcidTable private (
           .flatMap(e => scala.util.Try(castKeyTo(e.key)).toOption)
           .map(toInternal(_)).toArray
       }
-    val sizes = sizesForFiles(v, rels)
+    val sizes = sizesForFiles(view, rels)
     val files = rels.map { f =>
       val pv = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(f.takeWhile(_ != '/').stripPrefix(s"$partitionCol="))
@@ -3542,13 +3498,12 @@ final class AcidTable private (
       version: Long = -1L,
       partitions: Option[Seq[String]] = None,
       nullChecks: Seq[(String, Boolean)] = Nil): DataFrame = explicitVersionRead(version) {
-    val v = if (version >= 0) version else latestVersion()
-    if (v < 0) return snapshotFromFiles(Nil)
+    val view = rootView(if (version >= 0) version else latestVersion())
     // sizes scoped to the PRUNED list (segment-resolved per partition) —
-    // the full `#sizes=` header parse would be O(live files) for a read
-    // whose point is to touch a handful of them
-    val files = prunedFiles(bounds, equals, v, partitions, nullChecks)
-    applyDvs(snapshotFromFiles(files, sizesForFiles(v, files)), readDvs(v))
+    // every live file's size would be O(live files) for a read whose
+    // point is to touch a handful of them
+    val files = prunedFilesIn(view, bounds, equals, partitions, nullChecks)
+    applyDvs(snapshotFromFiles(files, sizesForFiles(view, files)), view.dvs)
   }
 
   // -------------------------------------- hidden-partition transposition --
@@ -3717,16 +3672,17 @@ final class AcidTable private (
     * (the LookupSpec technique).
     */
   private[graft] def rangePrunedFiles(
-      bounds: Map[String, (Long, Long)], version: Long = -1L): Seq[String] = {
-    val v = if (version >= 0) version else latestVersion()
-    if (v < 0) return Nil
-    if (bounds.isEmpty) return readManifest(v)
+      bounds: Map[String, (Long, Long)], version: Long = -1L): Seq[String] =
+    rangePrunedIn(rootView(if (version >= 0) version else latestVersion()), bounds)
+
+  private def rangePrunedIn(view: RootView, bounds: Map[String, (Long, Long)]): Seq[String] = {
+    if (bounds.isEmpty) return view.files
     // partition-level envelopes first: a partition whose
     // recorded [min,max] misses a bound drops WHOLE — its segment never
     // resolves and its files' sidecar entries are never consulted. When
     // the root alone refutes every partition, the per-file sidecar is not
     // even loaded (spec-pinned via clusterStatsLoads).
-    val keep = segRefs(v).filter(r => bounds.forall { case (c, (lo, hi)) =>
+    val keep = view.segRefs.filter(r => bounds.forall { case (c, (lo, hi)) =>
       r.pstats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
     })
     if (keep.isEmpty) return Nil
@@ -3747,10 +3703,9 @@ final class AcidTable private (
     */
   def snapshotRange(bounds: Map[String, (Long, Long)], version: Long = -1L): DataFrame =
       explicitVersionRead(version) {
-    val v = if (version >= 0) version else latestVersion()
-    if (v < 0) return snapshotFromFiles(Nil)
-    val lines = manifestLines(v)
-    applyDvs(snapshotFromFiles(rangePrunedFiles(bounds, v), sizesOf(lines)), dvsOf(lines))
+    val view = rootView(if (version >= 0) version else latestVersion())
+    val files = rangePrunedIn(view, bounds)
+    applyDvs(snapshotFromFiles(files, sizesForFiles(view, files)), view.dvs)
   }
 
   /** Union of live data files over every on-disk manifest in
@@ -3767,9 +3722,7 @@ final class AcidTable private (
     val files = scala.collection.mutable.Set.empty[String]
     val seenSegs = scala.collection.mutable.Set.empty[String]
     (liveFrom to latest).foreach { v =>
-      rootLines(v).iterator
-        .filter(l => l.startsWith("@") && !l.startsWith("@@"))
-        .flatMap(l => l.substring(1).split("\\|", -1).lift(1))
+      rootView(v).segRefs.iterator.map(_.name)
         .filter(n => n.nonEmpty && seenSegs.add(n))
         .foreach(n => readSegment(n).entries.foreach(files += _._1))
     }
@@ -3794,7 +3747,7 @@ final class AcidTable private (
     val cutoff = System.currentTimeMillis() - graceMillis
     val pinned = taggedVersions()
     val archivable = (oldestRetainedVersion(latest) until keepFrom)
-      .takeWhile(v => commitTime(v + 1) < cutoff && !pinned.contains(v))
+      .takeWhile(v => rootView(v + 1).ts < cutoff && !pinned.contains(v))
     // liveness anchored where the REAL run would anchor it: the oldest
     // manifest that would remain on disk after the archival above
     val liveFromAfter = oldestRetainedVersion(latest) + archivable.size
@@ -3829,7 +3782,7 @@ final class AcidTable private (
     // analog): manifests below the version-count window are pruned to keep
     // `_commits` bounded, and everything after this point treats "still on
     // disk" as the ONE definition of retained. The age guard is the
-    // SUPERSESSION time — `commitTime(v + 1)`, the instant v stopped being
+    // SUPERSESSION time — `v + 1`'s commit time, the instant v stopped being
     // latest — not v's own stamp: a version created long ago but
     // superseded a moment ago may still be some process's resolved
     // snapshot and must stay readable for the grace window (found by the
@@ -3845,7 +3798,7 @@ final class AcidTable private (
     // tagged snapshot stays readable by name regardless of keepVersions
     val pinned = taggedVersions()
     (oldestRetainedVersion(latest) until keepFrom)
-      .takeWhile(v => commitTime(v + 1) < cutoff && !pinned.contains(v))
+      .takeWhile(v => rootView(v + 1).ts < cutoff && !pinned.contains(v))
       .foreach { v =>
         Files.deleteIfExists(manifestPath(v))
         ()
@@ -3944,10 +3897,10 @@ final class AcidTable private (
         val pgs = scala.collection.mutable.Set.empty[String]
         var ok = true
         vs.foreach { v =>
-          scala.util.Try(rawRootLines(v)) match {
-            case scala.util.Success(raw) =>
-              raw.foreach { l =>
-                if (l.startsWith("@@")) pgs += l.substring(2).takeWhile(_ != '|')
+          scala.util.Try(rootView(v)) match {
+            case scala.util.Success(view) =>
+              view.rawRefLines.foreach { l =>
+                if (l.startsWith("@@")) pgs += RootView.pageName(l)
               }
               // record-index runs share the segment GC (rli-/rlg-
               // prefixes, tracked in the PAGE set: all are
@@ -3959,23 +3912,21 @@ final class AcidTable private (
               // failures are memoized per NAME for this pass — many
               // retained versions reference one generation, and a
               // missing file must not pay the retry ladder per version
-              rliGenFileOf(raw) match {
-                case None => rliInlineRefsOf(raw).foreach(r => pgs += r.name)
+              view.rli.gen match {
+                case None => view.rli.inline.foreach(r => pgs += r.name)
                 case Some((n, _)) =>
                   pgs += n
                   genMemo.getOrElseUpdate(n,
                     scala.util.Try(readRliGen(n)).toOption) match {
                     case Some(members) =>
-                      (members ++ rliInlineRefsOf(raw)).foreach(r => pgs += r.name)
+                      (members ++ view.rli.inline).foreach(r => pgs += r.name)
                     case None =>
                       ok = false
-                      rliInlineRefsOf(raw).foreach(r => pgs += r.name)
+                      view.rli.inline.foreach(r => pgs += r.name)
                   }
               }
-              scala.util.Try(expandPages(raw)) match {
-                case scala.util.Success(exp) =>
-                  exp.filter(l => l.startsWith("@") && !l.startsWith("@@"))
-                    .foreach(l => l.substring(1).split("\\|", -1).lift(1).foreach(segs += _))
+              scala.util.Try(view.segRefs) match {
+                case scala.util.Success(refs) => refs.foreach(r => segs += r.name)
                 case scala.util.Failure(_) => ok = false
               }
             case scala.util.Failure(_) => ok = false
@@ -4069,8 +4020,8 @@ final class AcidTable private (
     * gutted manifest would publish a corrupt table.
     */
   def restore(toVersion: Long): Long = {
-    val lines =
-      try manifestLines(toVersion)
+    val target =
+      try rootView(toVersion)
       catch {
         // the read layer types a below-horizon manifest as a retriable
         // conflict (the archived-BASE race) — but restore names its
@@ -4080,8 +4031,7 @@ final class AcidTable private (
           throw new IllegalArgumentException(
             s"cannot restore to v$toVersion: manifest missing (never existed or archived by vacuum)")
       }
-    val files = dataLinesOf(lines)
-    val sizes = sizesOf(lines)
+    val files = target.files
     val missing = files.filterNot(f => Files.exists(dataRoot.resolve(f)))
     require(missing.isEmpty,
       s"cannot restore to v$toVersion: ${missing.size} data files vacuumed" +
@@ -4092,7 +4042,7 @@ final class AcidTable private (
     while (true) {
       val base = latestVersion()
       require(toVersion <= base, s"restore target v$toVersion does not exist (latest: v$base)")
-      val baseFiles = dataLinesOf(manifestLines(base))
+      val baseFiles = rootView(base).files
       val touched = (files ++ baseFiles).map(partOf).distinct.map(FileCell(_, -1))
       try {
         // the restored state includes the target version's outstanding MOR
@@ -4100,9 +4050,8 @@ final class AcidTable private (
         // The record index follows the manifest: the TARGET version's refs
         // and completeness describe exactly the restored content (its runs
         // are live — the target is retained, so vacuum kept them)
-        val targetRaw = scala.util.Try(rawRootLines(toVersion)).getOrElse(Nil)
-        publish(base + 1, files, touched, sizes, "RESTORE", dvsOf(lines),
-          rli = AcidTable.RliSet(rliRefsOf(targetRaw), rliDoneOf(targetRaw)))
+        publish(base + 1, files, touched, target.sizes, "RESTORE", target.dvs,
+          rli = AcidTable.RliSet(rliRefsOf(target.rli), target.rli.done))
         return base + 1
       } catch {
         case _: FileAlreadyExistsException =>
@@ -4131,8 +4080,8 @@ final class AcidTable private (
     * count — the storage layer's reference count). The dropped-column
     * ledger and cluster statistics travel with the clone: the purge
     * obligation follows the bytes, and file-skipping keeps working on the
-    * cloned layout. The `#sizes=` header is carried over verbatim, so the
-    * clone's scans and commit sizing stat nothing.
+    * cloned layout. The recorded file sizes carry over, so the clone's
+    * scans and commit sizing stat nothing.
     */
   def cloneTo(destPath: String, version: Long = -1L): AcidTable = {
     val v = if (version >= 0) version else latestVersion()
@@ -4145,8 +4094,8 @@ final class AcidTable private (
         columnDefaults)
     val dest = AcidTable.open(spark, destPath)
     if (v < 0) return dest // empty source → empty clone
-    val lines = manifestLines(v)
-    val files = dataLinesOf(lines)
+    val srcView = rootView(v)
+    val files = srcView.files
     val destData = Paths.get(destPath, DataDir)
     files.foreach { f =>
       val src = dataRoot.resolve(f)
@@ -4198,8 +4147,7 @@ final class AcidTable private (
     // the record index travels with the pinned snapshot: its runs are
     // content-addressed files — copy the bytes, carry the refs + the
     // completeness flag of the CLONED version (round 16)
-    val srcRaw = scala.util.Try(rawRootLines(v)).getOrElse(Nil)
-    val srcRli = rliRefsOf(srcRaw)
+    val srcRli = rliRefsOf(srcView.rli)
     srcRli.foreach { r =>
       val from = segmentsDir.resolve(r.name)
       if (Files.exists(from))
@@ -4210,8 +4158,8 @@ final class AcidTable private (
     }
     // outstanding MOR deletes travel with the pinned snapshot (inline
     // entries: nothing extra to link)
-    dest.publish(0L, files, touched, sizesOf(lines), "CLONE", dvsOf(lines),
-      rli = AcidTable.RliSet(srcRli, rliDoneOf(srcRaw)))
+    dest.publish(0L, files, touched, srcView.sizes, "CLONE", srcView.dvs,
+      rli = AcidTable.RliSet(srcRli, srcView.rli.done))
     dest
   }
 
@@ -4351,21 +4299,19 @@ final class AcidTable private (
     def valueOfDir(d: String): String =
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(d.stripPrefix(s"$partitionCol="))
-    val bRaw = br.rawRootLines(headB)
+    val head = br.rootView(headB)
+    val forkView = rootView(fork)
     // delta vs the fork: a partition whose `@` line is byte-identical
     // (same content-addressed segment, same counts/stats) is untouched and
     // carries verbatim; everything else resolves through the branch's
     // segments.
-    val bLines = br.rootLines(headB).filter(_.startsWith("@"))
-    val mLines = if (fork < 0) Nil else rootLines(fork).filter(_.startsWith("@"))
-    val mByDir = mLines.map(l => AcidTable.rootLineDir(l) -> l).toMap
-    val bByDir = bLines.map(l => AcidTable.rootLineDir(l) -> l).toMap
-    val reuse = bLines.filter(l => mByDir.get(AcidTable.rootLineDir(l)).contains(l))
+    val bLines = head.refLines
+    val mByDir = forkView.refLines.map(l => RootView.refLineDir(l) -> l).toMap
+    val bByDir = bLines.map(l => RootView.refLineDir(l) -> l).toMap
+    val reuse = bLines.filter(l => mByDir.get(RootView.refLineDir(l)).contains(l))
     val touchedDirs =
-      ((bByDir.keySet ++ mByDir.keySet) -- reuse.map(AcidTable.rootLineDir)).toSeq.sorted
-    val refsByDir = br.segRefs(headB).groupBy(_.partDir)
-    val entries = touchedDirs.flatMap(d => refsByDir.getOrElse(d, Nil))
-      .flatMap(r => br.readSegment(r.name).entries)
+      ((bByDir.keySet ++ mByDir.keySet) -- reuse.map(RootView.refLineDir)).toSeq.sorted
+    val entries = head.entriesFor(touchedDirs.toSet)
     val files = entries.map(_._1)
     val sizes = entries.filter(_._2 >= 0).toMap
     // DV-only branch deletes are metadata commits: the partition's segment
@@ -4373,8 +4319,8 @@ final class AcidTable private (
     // header changes — the touched set must still cover those partitions,
     // or a commit that loses the publish race could re-merge a rewrite of
     // them from the fork pre-image and resurrect the branch's deletes
-    val forkDvs = (if (fork < 0) Nil else readDvs(fork)).toSet
-    val headDvs = dvsOf(bRaw).toSet
+    val forkDvs = forkView.dvs.toSet
+    val headDvs = head.dvs.toSet
     val dvTouched = ((headDvs diff forkDvs) ++ (forkDvs diff headDvs))
       .map(e => FileCell(e.part, -1)).toSeq
     val touched = (touchedDirs.map(d => FileCell(valueOfDir(d), -1)) ++ dvTouched).distinct
@@ -4394,7 +4340,7 @@ final class AcidTable private (
     }
     // carried side state, all content-addressed / idempotent: record-index
     // runs, bloom filters for the published files, cluster statistics
-    val bRli = br.rliRefsOf(bRaw)
+    val bRli = br.rliRefsOf(head.rli)
     bRli.foreach { r =>
       val from = br.segmentsDir.resolve(r.name)
       if (Files.exists(from) && !Files.exists(segmentsDir.resolve(r.name)))
@@ -4418,8 +4364,8 @@ final class AcidTable private (
         bStats
       }
     try publish(fork + 1, files, touched, sizes, s"PUBLISH $name",
-      dvsOf(bRaw), newStats = bNewStats, reuseRootLines = reuse,
-      rli = AcidTable.RliSet(bRli, rliDoneOf(bRaw)))
+      head.dvs, newStats = bNewStats, reuseRootLines = reuse,
+      rli = AcidTable.RliSet(bRli, head.rli.done))
     catch {
       case _: FileAlreadyExistsException =>
         throw new CommitConflictException(
@@ -4801,32 +4747,30 @@ final class AcidTable private (
         if (base != p) throw new CommitConflictException(
           s"CAS commit expected base v$p but table is at v$base ($path)")
       }
-      // LAZY full-manifest expansion (round 14): a cell-scoped commit never
-      // needs the table's complete file list — the O(live-files) assembly
-      // below is forced only by discovery closures that genuinely scan the
-      // table (predicate discovery, overwrite, compaction selection)
-      lazy val baseLines = if (base < 0) Nil else manifestLines(base)
-      lazy val files = dataLinesOf(baseLines)
-      // parsed from the SAME read as `files`; consumed by both the scan
-      // planner (stat-free manifest scans) and the write-sizing heuristic
-      lazy val baseSizes = sizesOf(baseLines)
+      // ONE view of the base for every read below. Its full file list is
+      // LAZY (round 14): a cell-scoped commit never needs the table's
+      // complete file list — the O(live-files) resolution is forced only
+      // by discovery closures that genuinely scan the table (predicate
+      // discovery, overwrite, compaction selection)
+      val baseView = rootView(base)
       // outstanding MOR deletes: every pre-image this commit reads — the
       // discovery snapshot, the distributed rewrite input, the driver
       // fast-path rows — must be DV-applied, or a rewrite of a DV'd cell
       // would resurrect its deleted rows. Publishing then DROPS the
       // touched cells' entries (the rewrite materialized them). DV entries
       // are a root header — never a reason to expand the manifest.
-      val baseDvs = readDvs(base)
+      val baseDvs = baseView.dvs
       val rawCells = touchedOf(
-        () => applyDvs(snapshotFromFiles(files, baseSizes), baseDvs), () => files)
+        () => applyDvs(snapshotFromFiles(baseView.files, baseView.sizes), baseDvs),
+        () => baseView.files)
       // cell-scoped metadata (round 14): resolve ONLY the touched
       // partitions' segments for everything downstream — the
       // legacy-expansion probe, the carry filter, input sizing, and the
       // fast-path pre-image. Commit metadata cost is then O(touched), not
       // O(live files).
       val rawParts = rawCells.map(_.part).distinct
-      val scopedFiles = filesForPartitions(base, rawParts)
-      val scopedSizes = sizesForPartitions(base, rawParts)
+      val scopedFiles = filesForPartitions(baseView, rawParts)
+      val scopedSizes = sizesForPartitions(baseView, rawParts)
       // Dense distributed batches defeat the point of fine-grained cells:
       // a commit touching most of a partition's buckets conflicts with any
       // concurrent writer in that partition regardless of scope, yet pays
@@ -4948,7 +4892,8 @@ final class AcidTable private (
           // cells carry forward — including any a concurrent MOR delete
           // added since our base (its cells are disjoint, or we'd have
           // taken the conflict path)
-          val carriedDvs = readDvs(publishBase).filterNot(e =>
+          val pubView = rootView(publishBase)
+          val carriedDvs = pubView.dvs.filterNot(e =>
             touched.exists(c => c.part == e.part && (c.bucket < 0 || c.bucket == e.bucket)))
           // write-time file statistics (opt-in via the statsColumns table
           // property): computed BEFORE publish so the manifest's partition
@@ -4977,15 +4922,11 @@ final class AcidTable private (
           val tParts = touched.map(_.part).distinct
           val tPds = tParts
             .map(p => java.net.URLEncoder.encode(partDir(p), "UTF-8")).toSet
-          val reuse =
-            if (publishBase < 0) Nil
-            else rootLines(publishBase).filter(l => l.startsWith("@") && {
-              val i = l.indexOf('|'); i > 1 && !tPds.contains(l.substring(1, i))
-            })
-          val carried = filesForPartitions(publishBase, tParts)
+          val reuse = pubView.refLines.filterNot(l => tPds.contains(RootView.encodedDir(l)))
+          val carried = filesForPartitions(pubView, tParts)
             .filterNot(f => touched.exists(c => fileInCell(f, c)))
           val carriedSet = carried.toSet
-          val carriedSizes = sizesForPartitions(publishBase, tParts)
+          val carriedSizes = sizesForPartitions(pubView, tParts)
             .view.filterKeys(carriedSet.contains).toMap
           publish(publishBase + 1, carried ++ newFiles.map(_._1), touched,
             carriedSizes ++ newFiles, opName, carriedDvs, pendingStats, reuse,
@@ -5078,8 +5019,8 @@ final class AcidTable private (
                 // snapshot; staged files of non-overlapping touched cells
                 // remain valid and are carried into the next publish
                 // attempt
-                val newBaseLines = manifestLines(newBase)
-                val newSnapAll = dataLinesOf(newBaseLines)
+                val newBaseView = rootView(newBase)
+                val newSnapAll = newBaseView.files
                 // an intervening commit may have introduced bucketless
                 // files (older build) into an overlap partition — the
                 // redo of that partition must then take whole-partition
@@ -5095,14 +5036,14 @@ final class AcidTable private (
                 // restrict to the overlap cells; the non-overlap rows are
                 // already covered by keptFiles
                 val redoInB =
-                  if (outputBounded) inputBytes(newSnapFiles, sizesOf(newBaseLines))
+                  if (outputBounded) inputBytes(newSnapFiles, newBaseView.sizes)
                   else Long.MaxValue
                 val redoCoarse =
                   (coarseParts ++ overlapLegacy).intersect(overlap.map(_.part).toSet)
                 // the new base may carry DV entries (an intervening MOR
                 // delete on our cells is exactly an overlap) — the redo's
                 // pre-image applies them like the outer loop's does
-                val redoDvs = dvsOf(newBaseLines)
+                val redoDvs = newBaseView.dvs
                 val redoneFiles =
                   if (fastEligible(redoInB))
                     fastWriteTouched(
@@ -5112,7 +5053,7 @@ final class AcidTable private (
                       overlap, redoCoarse)
                   else writeTouched(
                     resultOf(applyDvs(
-                      snapshotFromFiles(newSnapFiles, sizesOf(newBaseLines)), redoDvs))
+                      snapshotFromFiles(newSnapFiles, newBaseView.sizes), redoDvs))
                       .filter(cellFilter(overlap)),
                     overlap, redoInB, redoCoarse, sortCols)
                 newFiles = keptFiles ++ redoneFiles
@@ -5263,9 +5204,9 @@ final class AcidTable private (
     * violation into a loud failure instead of silent row loss.
     */
   /** Sum of sizes of manifest-relative files — the scan volume a commit's
-    * rewrite will read. Sizes come from the manifest's `#sizes=` header
-    * (recorded at publish); a stat is only the fallback for files from
-    * manifests written before the header existed — steady state costs
+    * rewrite will read. Sizes come from the manifest's segments (recorded
+    * at publish); a stat is only the fallback for a file published
+    * without a size — steady state costs
     * ZERO filesystem calls, which is what makes commit sizing free on an
     * object store.
     */
@@ -5712,21 +5653,29 @@ final class AcidTable private (
     }
   }
 
-  /** Version `v`'s root manifest with `@@` page references EXPANDED (the
-    * paged-root form, round 15): every caller sees the header +
-    * `@…`-per-partition shape regardless of whether the root inlines its
-    * partition lines or pages them. Use [[rawRootLines]] only where the
-    * page references THEMSELVES matter (vacuum's page GC, fsck). */
-  private[lake] def rootLines(v: Long): Seq[String] = expandPages(rawRootLines(v))
-
-  /** Physical lines of version `v`'s ROOT manifest file: headers plus `@`
-    * segment-reference (or `@@` page-reference) lines. O(partitions), so
-    * every header-only reader (commit time, touched cells, DVs) stays at
-    * root cost. Every root read passes [[checkRootFormat]]. */
-  private[lake] def rawRootLines(v: Long): Seq[String] = {
-    val lines = try {
-      Files.readAllLines(manifestPath(v), StandardCharsets.UTF_8)
-        .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
+  /** Version `v`'s root, parsed once ([[RootView]]): the ONE place a root
+    * file is read. Views are cached (a few recent versions, checked
+    * against the file's mtime and size), so repeated reads of a version
+    * cost one stat. A root that cannot be read never reads as empty:
+    *  - archived by vacuum below the retained horizon → the retriable
+    *    [[CommitConflictException]];
+    *  - missing INSIDE the retained window → the raw
+    *    `NoSuchFileException` (corruption);
+    *  - malformed → `IllegalStateException` "unsupported root format".
+    * `v < 0` is the empty table. */
+  private[lake] def rootView(v: Long): RootView = {
+    if (v < 0) return RootView.Empty
+    val file = manifestPath(v)
+    try {
+      val attrs = Files.readAttributes(file, classOf[java.nio.file.attribute.BasicFileAttributes])
+      RootView.cached(path, v, attrs.lastModifiedTime, attrs.size).getOrElse {
+        AcidTable.manifestHeaderReads.incrementAndGet()
+        val lines = Files.readAllLines(file, StandardCharsets.UTF_8)
+          .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
+        val view = RootView.parse(lines, unsupportedRoot(v, _), readPage, readSegment)
+        RootView.remember(path, v, attrs.lastModifiedTime, attrs.size, view)
+        view
+      }
     } catch {
       case e: java.nio.file.NoSuchFileException =>
         // archived-base race (found by the cross-process harness): vacuum's
@@ -5745,48 +5694,11 @@ final class AcidTable private (
               s"retry against the current snapshot ($path)")
         throw e
     }
-    checkRootFormat(v, lines)
-    lines
-  }
-
-  /** The one readable root format: a `#segments=1` header (the format
-    * stamp every publish writes), a parseable `#ts=` commit time, a
-    * `#touched=` cell list, and — on a paged root — `@@` page refs that
-    * carry their (lines, bucket, files, bytes) aggregates. Anything else
-    * (a hand edit, a foreign or older writer) fails loudly here instead
-    * of being half-read by the parsers downstream; [[fsck]] reports it as
-    * `unsupported_root_format`. */
-  private def checkRootFormat(v: Long, lines: Seq[String]): Unit = {
-    val headers = lines.takeWhile(_.startsWith("#"))
-    if (!headers.contains("#segments=1")) unsupportedRoot(v, "no #segments=1 header")
-    if (!headers.exists(_.startsWith("#touched="))) unsupportedRoot(v, "no #touched= header")
-    headers.find(_.startsWith("#ts=")) match {
-      case None => unsupportedRoot(v, "no #ts= header")
-      case Some(l) if l.stripPrefix("#ts=").toLongOption.isEmpty =>
-        unsupportedRoot(v, s"unparseable $l")
-      case _ => ()
-    }
-    lines.iterator.filter(_.startsWith("@@")).foreach { l =>
-      val p = l.substring(2).split("\\|", -1)
-      if (p.length != 5 || !p.iterator.drop(1).forall(_.toLongOption.isDefined))
-        unsupportedRoot(v, s"page ref without aggregates: $l")
-    }
   }
 
   private def unsupportedRoot(v: Long, why: String): Nothing =
     throw new IllegalStateException(
       s"unsupported root format in manifest ${manifestFileName(v)} (version $v) of $path: $why")
-
-  /** The `#ts=` commit time of a root that passed [[checkRootFormat]]. */
-  private def tsOf(raw: Seq[String]): Long =
-    raw.find(_.startsWith("#ts=")).get.stripPrefix("#ts=").toLong
-
-  private def expandPages(lines: Seq[String]): Seq[String] =
-    if (!lines.exists(_.startsWith("@@"))) lines
-    else lines.flatMap { l =>
-      if (l.startsWith("@@")) readPage(l.substring(2).takeWhile(_ != '|'))
-      else Seq(l)
-    }
 
   /** One immutable root page (content-addressed, so cacheable forever —
     * the LRU only bounds memory). A missing file is retried briefly, the
@@ -5814,53 +5726,6 @@ final class AcidTable private (
       lines
     }
   }
-
-  /** Version `v`'s manifest in the RESOLVED representation some callers
-    * parse: headers, a `#sizes=` entry, one line per live data file.
-    * Segment references expand through the immutable-segment cache, and
-    * the expansion itself is LRU-cached per version (manifests are
-    * immutable; a vacuumed version still fails loudly because the root
-    * read happens first). */
-  private def manifestLines(v: Long): Seq[String] = {
-    val raw = rootLines(v)
-    AcidTable.cachedResolved(path, v).getOrElse {
-      val headers = raw.filter(l => l.startsWith("#") && !l.startsWith("#segments="))
-      val entries = parseSegRefs(raw).flatMap(r => readSegment(r.name).entries)
-      val sizeHeader = "#sizes=" + entries.iterator.collect { case (f, b) if b >= 0 =>
-        s"${java.net.URLEncoder.encode(f, "UTF-8")}:$b"
-      }.mkString(",")
-      val resolved = (headers :+ sizeHeader) ++ entries.map(_._1)
-      AcidTable.cacheResolved(path, v, resolved)
-      resolved
-    }
-  }
-
-  /** Segment references of version `v`'s root manifest. */
-  private[graft] def segRefs(v: Long): Seq[AcidTable.SegRef] = {
-    val rf = manifestPath(v).toFile
-    val (mtime, len) = (rf.lastModified(), rf.length())
-    AcidTable.cachedSegRefs(path, v, mtime, len).getOrElse {
-      val refs = parseSegRefs(rootLines(v))
-      AcidTable.cacheSegRefs(path, v, mtime, len, refs)
-      refs
-    }
-  }
-
-  private def parseSegRefs(raw: Seq[String]): Seq[AcidTable.SegRef] =
-    raw.filter(_.startsWith("@")).map { l =>
-      val p = l.substring(1).split("\\|", -1)
-      val pstats =
-        if (p.length < 5 || p(4).isEmpty) Map.empty[String, (Long, Long)]
-        else p(4).split(';').iterator.flatMap { e =>
-          e.split(':') match {
-            case Array(c, lo, hi) => scala.util.Try(
-              java.net.URLDecoder.decode(c, "UTF-8") -> (lo.toLong, hi.toLong)).toOption
-            case _ => None
-          }
-        }.toMap
-      AcidTable.SegRef(java.net.URLDecoder.decode(p(0), "UTF-8"),
-        p(1), p(2).toLong, p(3).toLong, pstats)
-    }
 
   private def segmentsDir: Path = commitsDir.resolve(AcidTable.SegmentsDir)
 
@@ -5966,35 +5831,6 @@ final class AcidTable private (
   private[lake] def rliEnabled: Boolean =
     tableProperty("recordIndex").contains("true") && keyCastSupported
 
-  /** The INLINE refs of the `#rli=` header only — never reads disk. */
-  private[lake] def rliInlineRefsOf(raw: Seq[String]): Seq[AcidTable.RliRef] =
-    raw.find(_.startsWith("#rli=")).toSeq.flatMap(
-      _.stripPrefix("#rli=").split(',').iterator.filter(_.nonEmpty).flatMap { s =>
-        s.split('|') match {
-          case Array(n, sh, ns, c) => scala.util.Try(
-            AcidTable.RliRef(n, sh.toInt, ns.toInt, c.toLong)).toOption
-          case _ => None
-        }
-      })
-
-  /** The `#rligen=` indirection header: (side-file name, member count).
-    * Round 17: a wide merged generation (15 k shard refs at 10⁹ keys)
-    * rendered inline would put ~800 KB of ref text into EVERY root — the
-    * same O(live …) per-commit cliff the paged root removed for
-    * partition lines. Above [[AcidTable.RliGenInlineMax]] refs the
-    * GENERATION list lives in a content-addressed `rlg-` side file
-    * (same bytes per member line), referenced by ONE header line; the
-    * delta tail stays inline. Between folds the generation is unchanged,
-    * so trickle commits re-reference the same side file byte-identically
-    * — no write, just the carried-ref mtime re-assert. */
-  private[lake] def rliGenFileOf(raw: Seq[String]): Option[(String, Long)] =
-    raw.find(_.startsWith("#rligen=")).flatMap { l =>
-      l.stripPrefix("#rligen=").split('|') match {
-        case Array(n, c) => scala.util.Try((n, c.toLong)).toOption
-        case _ => None
-      }
-    }
-
   /** Resolve a generation side file to its member refs (cache-first,
     * GC-race retry like [[readRli]]). THROWS when unreadable after
     * retries — callers on the commit path must abort (a commit that
@@ -6013,13 +5849,7 @@ final class AcidTable private (
             readBody(attempt + 1)
         }
       val body = readBody(0)
-      val refs = body.linesIterator.filter(_.nonEmpty).flatMap { s =>
-        s.split('|') match {
-          case Array(n, sh, ns, c) => scala.util.Try(
-            AcidTable.RliRef(n, sh.toInt, ns.toInt, c.toLong)).toOption
-          case _ => None
-        }
-      }.toSeq
+      val refs = body.linesIterator.filter(_.nonEmpty).flatMap(RootView.parseRliRef).toSeq
       AcidTable.rliGenCache.put((path, name), (refs, body))
       refs
     }
@@ -6027,34 +5857,25 @@ final class AcidTable private (
   /** ALL index refs of a root: the generation side file's members (when
     * present) followed by the inline delta tail. May read (and therefore
     * throw on) the side file — see [[readRliGen]]. */
-  private[lake] def rliRefsOf(raw: Seq[String]): Seq[AcidTable.RliRef] =
-    rliGenFileOf(raw) match {
-      case None => rliInlineRefsOf(raw)
-      case Some((f, _)) => readRliGen(f) ++ rliInlineRefsOf(raw)
-    }
-
-  private def rliDoneOf(raw: Seq[String]): Boolean = raw.contains("#rlidone=1")
-
-  private def renderRliRef(r: AcidTable.RliRef): String =
-    s"${r.name}|${r.shard}|${r.nShards}|${r.count}"
+  private[lake] def rliRefsOf(rli: RootView.Rli): Seq[AcidTable.RliRef] =
+    rli.gen.toSeq.flatMap(g => readRliGen(g._1)) ++ rli.inline
 
   private def rliHeaderLinesFor(
       refs: Seq[AcidTable.RliRef], done: Boolean): Seq[String] = {
-    val doneLines = if (done) Seq("#rlidone=1") else Nil
+    val doneLines = if (done) Seq(RootView.RliDoneLine) else Nil
     if (refs.isEmpty) doneLines
     else {
       val gl = AcidTable.rliGenPrefixLen(refs)
       if (refs.size <= AcidTable.RliGenInlineMax || gl <= AcidTable.RliGenInlineMax)
-        Seq("#rli=" + refs.map(renderRliRef).mkString(",")) ++ doneLines
+        Seq(RootView.rliInlineLine(refs)) ++ doneLines
       else {
         val (gen, tail) = refs.splitAt(gl)
-        val body = gen.map(renderRliRef).mkString("\n")
+        val body = gen.map(RootView.renderRliRef).mkString("\n")
         val name = "rlg-" + AcidTable.sha1Hex(body) + ".txt"
         ensureSegment(name, body, touch = true)
         AcidTable.rliGenCache.put((path, name), (gen, body))
-        Seq(s"#rligen=$name|${gen.size}") ++
-          (if (tail.isEmpty) Nil
-           else Seq("#rli=" + tail.map(renderRliRef).mkString(","))) ++ doneLines
+        Seq(RootView.rliGenLine(name, gen.size)) ++
+          (if (tail.isEmpty) Nil else Seq(RootView.rliInlineLine(tail))) ++ doneLines
       }
     }
   }
@@ -6157,19 +5978,17 @@ final class AcidTable private (
     }
 
   /** The candidate partition VALUES the index knows for `keys` at
-    * version `v` — Some ONLY when the index is complete (`#rlidone=1`)
+    * root `view` — Some ONLY when the index is complete (`#rlidone=1`)
     * and every consulted run resolves, i.e. when "key absent from the
     * index" soundly means "key absent from the table". Some(Nil) is a
     * proven-empty probe. None = no routing (lookups fall back to the
     * full per-partition sweep — pruning lost, correctness kept). */
-  private[lake] def rliLookup(v: Long, keys: Seq[String]): Option[Seq[String]] = {
-    if (!keyCastSupported) return None
-    val raw = scala.util.Try(rawRootLines(v)).getOrElse(return None)
-    if (!rliDoneOf(raw)) return None
+  private[lake] def rliLookup(view: RootView, keys: Seq[String]): Option[Seq[String]] = {
+    if (!keyCastSupported || !view.rli.done) return None
     AcidTable.rliProbes.incrementAndGet()
     // an unreadable generation side file voids ROUTING, never correctness
     // (same contract as a dangling run below)
-    val refs = scala.util.Try(rliRefsOf(raw)).getOrElse(return None)
+    val refs = scala.util.Try(rliRefsOf(view.rli)).getOrElse(return None)
     val encKeys = keys.flatMap(k => scala.util.Try(castKeyTo(k)).toOption)
       .map(x => java.net.URLEncoder.encode(String.valueOf(x), "UTF-8")).distinct
     val cells = scala.collection.mutable.Set.empty[String]
@@ -6404,10 +6223,11 @@ final class AcidTable private (
     var attempt = 0
     while (true) {
       val base = latestVersion()
+      val baseView = rootView(base)
       val refs =
         if (base < 0) Nil
         else {
-          val kp = applyDvs(snapshot(base), readDvs(base))
+          val kp = applyDvs(snapshotFromFiles(baseView.files, baseView.sizes), baseView.dvs)
             .select(col(pkCol).cast(StringType).as("__rk"),
               col(partitionCol).cast(StringType).as("__rp"))
             .distinct()
@@ -6416,9 +6236,8 @@ final class AcidTable private (
         }
       try {
         if (base >= 0)
-          publish(base + 1, Nil, Nil, Map.empty, "RLI_REBUILD", readDvs(base),
-            reuseRootLines = rootLines(base).filter(_.startsWith("@")),
-            rli = AcidTable.RliSet(refs, done = true))
+          publish(base + 1, Nil, Nil, Map.empty, "RLI_REBUILD", baseView.dvs,
+            reuseRootLines = baseView.refLines, rli = AcidTable.RliSet(refs, done = true))
         else
           publish(0L, Nil, Nil, Map.empty, "RLI_REBUILD",
             rli = AcidTable.RliSet(Nil, done = true))
@@ -6435,99 +6254,31 @@ final class AcidTable private (
     -1L // unreachable
   }
 
-  /** The (file, recorded size) entries of the partition dirs `dirs` at
-    * version `v` — resolves ONLY those partitions' segments, the
-    * O(#cells) metadata read that keeps a hinted point lookup and a
-    * cell-scoped commit flat in table size. Empty for an empty table. */
-  private def entriesForDirs(v: Long, dirs: Set[String]): Seq[(String, Long)] =
-    if (v < 0 || dirs.isEmpty) Nil
-    else segRefs(v).filter(r => dirs.contains(r.partDir))
-      .flatMap(r => readSegment(r.name).entries)
-
   /** The live files of `parts` (partition VALUES) at version `v`. */
   private[graft] def filesForPartitions(v: Long, parts: Seq[String]): Seq[String] =
-    entriesForDirs(v, parts.map(partDir).toSet).map(_._1)
+    filesForPartitions(rootView(v), parts)
 
-  /** Recorded byte sizes of `parts`' live files at version `v`. */
-  private def sizesForPartitions(v: Long, parts: Seq[String]): Map[String, Long] =
-    entriesForDirs(v, parts.map(partDir).toSet).filter(_._2 >= 0).toMap
+  private def filesForPartitions(view: RootView, parts: Seq[String]): Seq[String] =
+    view.entriesFor(parts.map(partDir).toSet).map(_._1)
 
-  /** Recorded byte sizes for exactly `files` at version `v`, resolving
-    * only the segments of the partitions those files live in. */
-  private def sizesForFiles(v: Long, files: Seq[String]): Map[String, Long] =
-    entriesForDirs(v, files.map(_.takeWhile(_ != '/')).toSet).filter(_._2 >= 0).toMap
+  /** Recorded byte sizes of `parts`' live files. */
+  private def sizesForPartitions(view: RootView, parts: Seq[String]): Map[String, Long] =
+    view.entriesFor(parts.map(partDir).toSet).filter(_._2 >= 0).toMap
 
-  private def readManifest(v: Long): Seq[String] = dataLinesOf(manifestLines(v))
+  /** Recorded byte sizes for exactly `files`, resolving only the
+    * segments of the partitions those files live in. */
+  private def sizesForFiles(view: RootView, files: Seq[String]): Map[String, Long] =
+    view.entriesFor(files.map(_.takeWhile(_ != '/')).toSet).filter(_._2 >= 0).toMap
 
-  private def dataLinesOf(lines: Seq[String]): Seq[String] =
-    lines.filterNot(_.startsWith("#"))
-
-  private def sizesOf(lines: Seq[String]): Map[String, Long] =
-    lines.find(_.startsWith("#sizes=")) match {
-      case Some(line) =>
-        line.stripPrefix("#sizes=").split(',').iterator
-          .filter(_.nonEmpty)
-          .flatMap { ent =>
-            val i = ent.lastIndexOf(':')
-            if (i <= 0) None
-            else scala.util.Try(
-              java.net.URLDecoder.decode(ent.substring(0, i), "UTF-8")
-                -> ent.substring(i + 1).toLong).toOption
-          }.toMap
-      case None => Map.empty
-    }
-
-  /** Live deletion-vector entries of a manifest (`#dvs=` header); empty
-    * for manifests without the header (no outstanding MOR deletes).
-    */
-  private def dvsOf(lines: Seq[String]): Seq[DvEntry] =
-    lines.find(_.startsWith("#dvs=")) match {
-      case Some(line) =>
-        val csv = line.stripPrefix("#dvs=")
-        if (csv.isEmpty) Nil
-        else csv.split(',').toSeq.flatMap { s =>
-          s.split('|') match {
-            case Array(p, b, k) => scala.util.Try(DvEntry(
-              java.net.URLDecoder.decode(p, "UTF-8"), b.toInt,
-              java.net.URLDecoder.decode(k, "UTF-8"))).toOption
-            case _ => None
-          }
-        }
-      case None => Nil
-    }
-
-  // header-only reads consult the RAW root: headers never live in pages,
-  // so a paged root must not expand O(live partitions) lines for them
-  private[lake] def readDvs(v: Long): Seq[DvEntry] =
-    if (v < 0) Nil
-    else scala.util.Try(rawRootLines(v)).map(dvsOf).getOrElse(Nil)
-
-  /** Partition values the commit that produced version `v` rewrote
-    * (recorded as a `#touched=` header). Values are URL-encoded in the
-    * header so arbitrary partition values survive the comma separator.
-    * `None` when the manifest was archived by a concurrent vacuum between
-    * our conflict and this read: the conflict fast paths must treat an
-    * unknown touched set as potentially-overlapping, not as empty —
-    * reading it as "touched nothing" would let the re-merge path carry a
-    * stale partition.
+  /** Cells the commit that produced version `v` rewrote. `None` when the
+    * manifest was archived by a concurrent vacuum between our conflict
+    * and this read: the conflict fast paths must treat an unknown touched
+    * set as potentially-overlapping, not as empty — reading it as
+    * "touched nothing" would let the re-merge path carry a stale
+    * partition.
     */
   private def readTouched(v: Long): Option[Set[FileCell]] =
-    try {
-      val csv = rawRootLines(v).find(_.startsWith("#touched=")).get.stripPrefix("#touched=")
-      Some(
-        if (csv.isEmpty) Set.empty[FileCell]
-        else csv.split(',').toSet.map { (s: String) =>
-          // `<url-encoded part>|<bucket>`: the encoding maps '|' to %7C,
-          // so a literal '|' is always OUR separator; an entry without
-          // one is partition scope (global ops, coarse partitions)
-          val i = s.lastIndexOf('|')
-          val bucket =
-            if (i < 0) -1
-            else scala.util.Try(s.substring(i + 1).toInt).getOrElse(-1)
-          val head = if (i < 0 || bucket < 0) s else s.substring(0, i)
-          FileCell(java.net.URLDecoder.decode(head, "UTF-8"), bucket)
-        })
-    } catch { case _: CommitConflictException => None }
+    try Some(rootView(v).touched) catch { case _: CommitConflictException => None }
 
   /** Wall-clock source for the `#ts=` commit stamp — injectable so the
     * monotonicity spec can reproduce a racing publisher whose clock runs
@@ -6546,7 +6297,7 @@ final class AcidTable private (
       files: Seq[String],
       touched: Seq[FileCell],
       sizes: Map[String, Long] = Map.empty,
-      op: String = "",
+      op: String,
       dvs: Seq[DvEntry] = Nil,
       newStats: Map[String, Map[String, (Long, Long)]] = Map.empty,
       reuseRootLines: Seq[String] = Nil,
@@ -6569,28 +6320,15 @@ final class AcidTable private (
       reuseRootLines: Seq[String] = Nil,
       rli: AcidTable.RliUpdate = AcidTable.RliAuto): Unit = {
     val tmp = commitsDir.resolve(s".tmp-${UUID.randomUUID()}")
-    val encoded = touched.map(c =>
-      java.net.URLEncoder.encode(c.part, "UTF-8") +
-        (if (c.bucket < 0) "" else s"|${c.bucket}"))
+    // the base root (one cached view): its commit time, page layout and
+    // record-index headers shape this root
+    val base = rootView(v - 1)
     // clamp the stamp to the predecessor's: System.currentTimeMillis()
     // can step BACKWARD (NTP), and the observe-then-stamp protocol alone
     // does not survive that — clamping makes the visible commit clock
     // monotone BY CONSTRUCTION, which versionAt's binary search relies
-    // on (ties break toward the higher version). One cached header read.
-    val ts = if (v > 0) math.max(commitClock(), commitTime(v - 1)) else commitClock()
-    // the operation name rides the manifest as an audit header — the
-    // timeline surface history() renders (DESCRIBE HISTORY analog)
-    val opHeader = if (op.isEmpty) Nil else Seq(s"#op=${java.net.URLEncoder.encode(op, "UTF-8")}")
-    // live deletion-vector entries (merge-on-read deletes, [[deleteVectored]]):
-    // carried in the manifest itself — the inline small-DV form of Delta's
-    // deletion vectors, so DV lifecycle (restore, clone, vacuum, time
-    // travel) follows the manifest with no sidecar-file bookkeeping.
-    // '|' cannot collide: URL-encoding maps a literal '|' to %7C.
-    val dvHeader =
-      if (dvs.isEmpty) Nil
-      else Seq("#dvs=" + dvs.map(e =>
-        java.net.URLEncoder.encode(e.part, "UTF-8") + "|" + e.bucket + "|" +
-          java.net.URLEncoder.encode(e.key, "UTF-8")).mkString(","))
+    // on (ties break toward the higher version)
+    val ts = if (v > 0) math.max(commitClock(), base.ts) else commitClock()
     // per-partition segments: sizes ride the segment entries (so later
     // commits still size their writes without stat round-trips), and the
     // root line carries the partition's file count, byte total, and —
@@ -6607,12 +6345,8 @@ final class AcidTable private (
         val entries = fs.sorted.map(f => f -> sizes.getOrElse(f, -1L))
         val (name, segBody) = segmentBody(pd, entries)
         val bytes = entries.iterator.map(_._2).filter(_ >= 0).sum
-        val ps = statsCols.flatMap { c =>
-          partitionEnvelope(fs, c, fileStats).map { case (lo, hi) =>
-            s"${java.net.URLEncoder.encode(c, "UTF-8")}:$lo:$hi" }
-        }.mkString(";")
-        (s"@${java.net.URLEncoder.encode(pd, "UTF-8")}|$name|${fs.size}|$bytes|$ps",
-          name, segBody)
+        val envelopes = statsCols.flatMap(c => partitionEnvelope(fs, c, fileStats).map(c -> _))
+        (RootView.segRefLine(pd, name, fs.size, bytes, envelopes), name, segBody)
       }
     // segment PUTs are independent (content-addressed, write-if-absent) —
     // a multi-partition bulk commit issues them CONCURRENTLY, which is
@@ -6649,15 +6383,12 @@ final class AcidTable private (
     // only dirty buckets rebuild from (fresh ++ reuse) — so a trickle
     // commit pays 1-2 page writes + an O(N) root however many partitions
     // are live. Layout-compatible: readers expand `@@` refs in
-    // [[rootLines]]; sub-threshold roots are byte-identical to the
+    // [[RootView.refLines]]; sub-threshold roots are byte-identical to the
     // pre-page format.
-    def lineDir(l: String): String = {
-      val i = l.indexOf('|'); if (i > 1) l.substring(1, i) else l
-    }
-    def sortLines(ls: Seq[String]): Seq[String] = ls.sortBy(lineDir)
+    def sortLines(ls: Seq[String]): Seq[String] = ls.sortBy(RootView.encodedDir)
     val totalLines = segs.size + reuseRootLines.size
     val paged = totalLines > AcidTable.RootPageThreshold
-    var pageHeader: Seq[String] = Nil
+    var pageCount: Option[Int] = None
     // pages this commit WROTE (fresh bodies) — for the post-link
     // re-assert (same GC-race heal as segments). Verbatim-carried pages
     // stay referenced by the base root throughout this publish, so they
@@ -6666,17 +6397,12 @@ final class AcidTable private (
     val rootTail: Seq[String] =
       if (!paged) sortLines(segs.map(_._1) ++ reuseRootLines)
       else {
-        val baseRaw =
-          if (v > 0) scala.util.Try(rawRootLines(v - 1)).getOrElse(Nil) else Nil
-        val baseN = baseRaw.collectFirst {
-          case l if l.startsWith("#pages=") =>
-            scala.util.Try(l.stripPrefix("#pages=").toInt).toOption
-        }.flatten.filter(_ > 0)
+        val baseN = base.pages.filter(_ > 0)
         val n = baseN
           .filter(bn => totalLines.toLong <= bn.toLong * AcidTable.RootPageSize * 2)
           .getOrElse(Integer.highestOneBit(math.max(1,
             (totalLines + AcidTable.RootPageSize - 1) / AcidTable.RootPageSize) * 2 - 1))
-        pageHeader = Seq(s"#pages=$n")
+        pageCount = Some(n)
         def bucketOf(encPd: String): Int = (encPd.hashCode & Int.MaxValue) % n
         def buildPage(i: Int, lines: Seq[String]): String = {
           val body = lines.mkString("\n")
@@ -6686,34 +6412,23 @@ final class AcidTable private (
           // (file count, byte) aggregates ride the ref so DESCRIBE
           // DETAIL / history sum a paged root WITHOUT expanding pages —
           // O(pages) per version instead of O(partitions)
-          var tf = 0L
-          var tb = 0L
-          lines.foreach { l =>
-            val p = l.substring(1).split("\\|", -1)
-            if (p.length > 3) {
-              tf += scala.util.Try(p(2).toLong).getOrElse(0L)
-              tb += scala.util.Try(p(3).toLong).getOrElse(0L)
-            }
-          }
-          s"@@$name|${lines.size}|$i|$tf|$tb"
+          val refs = lines.map(RootView.parseSegRef)
+          RootView.pageRefLine(name, lines.size, i, refs.map(_.count).sum, refs.map(_.bytes).sum)
         }
         // base page ref per bucket index — the incremental route needs a
         // complete, same-N index; anything else falls to full regroup
         val basePages: Map[Int, String] =
           if (!baseN.contains(n)) Map.empty
-          else baseRaw.filter(_.startsWith("@@")).flatMap { l =>
-            val p = l.substring(2).split("\\|", -1)
-            p.lift(2).flatMap(s => scala.util.Try(s.toInt).toOption).map(_ -> l)
-          }.toMap
+          else base.rawRefLines.filter(_.startsWith("@@")).map(l => RootView.pageBucket(l) -> l).toMap
         if (basePages.size == n) {
           val dirty: Set[Int] =
-            (segs.map(s => lineDir(s._1)) ++
+            (segs.map(s => RootView.encodedDir(s._1)) ++
               touched.map(c => java.net.URLEncoder.encode(
                 partDir(c.part), "UTF-8"))).map(bucketOf).toSet
           val dirtyLines = scala.collection.mutable.Map.empty[Int, Vector[String]]
             .withDefaultValue(Vector.empty)
           (segs.map(_._1) ++ reuseRootLines).foreach { l =>
-            val b = bucketOf(lineDir(l))
+            val b = bucketOf(RootView.encodedDir(l))
             if (dirty.contains(b)) dirtyLines(b) = dirtyLines(b) :+ l
           }
           (0 until n).map { i =>
@@ -6724,7 +6439,7 @@ final class AcidTable private (
           // full regroup: first paging, or an N-growth event
           val buckets = Array.fill(n)(Vector.newBuilder[String])
           sortLines(segs.map(_._1) ++ reuseRootLines)
-            .foreach(l => buckets(bucketOf(lineDir(l))) += l)
+            .foreach(l => buckets(bucketOf(RootView.encodedDir(l))) += l)
           (0 until n).map(i => buildPage(i, buckets(i).result()))
         }
       }
@@ -6735,18 +6450,15 @@ final class AcidTable private (
     val rliHeader: Seq[String] =
       if (!rliEnabled) Nil
       else {
-        val baseRawR =
-          if (v > 0) scala.util.Try(rawRootLines(v - 1)).getOrElse(Nil) else Nil
-        val inheritedDone = rliDoneOf(baseRawR) || v == 0
+        val inheritedDone = base.rli.done || v == 0
         // the base's ref lines — `#rligen=` indirection included — carry
         // VERBATIM on the non-folding paths: an unchanged generation must
         // cost a commit zero expansion, rendering, or hashing (the
         // steady-state O(delta tail) contract); rendering is
         // deterministic, so verbatim carry and re-render are
         // byte-identical when both would run
-        def baseRefLines: Seq[String] =
-          baseRawR.filter(l => l.startsWith("#rligen=") || l.startsWith("#rli="))
-        val doneLines = if (inheritedDone) Seq("#rlidone=1") else Nil
+        def baseRefLines: Seq[String] = base.rli.lines
+        val doneLines = if (inheritedDone) Seq(RootView.RliDoneLine) else Nil
         rli match {
           case AcidTable.RliAuto => baseRefLines // refs carry, flag drops
           case AcidTable.RliInherit => baseRefLines ++ doneLines
@@ -6757,17 +6469,17 @@ final class AcidTable private (
             // table) must not re-trigger a fold on every commit. With an
             // indirected generation the tail is exactly the inline refs,
             // so the trigger needs no side-file expansion at all.
-            baseRawR.find(_.startsWith("#rligen=")) match {
-              case Some(genLine) =>
-                val tail = rliInlineRefsOf(baseRawR) ++ newRefs
+            base.rli.gen match {
+              case Some((genFile, members)) =>
+                val tail = base.rli.inline ++ newRefs
                 if (tail.size > AcidTable.MaxRliRefs)
-                  rliHeaderLinesFor(mergeRliRefs(rliRefsOf(baseRawR) ++ newRefs),
+                  rliHeaderLinesFor(mergeRliRefs(rliRefsOf(base.rli) ++ newRefs),
                     inheritedDone)
                 else
-                  Seq(genLine) ++ (if (tail.isEmpty) Nil
-                    else Seq("#rli=" + tail.map(renderRliRef).mkString(","))) ++ doneLines
+                  Seq(RootView.rliGenLine(genFile, members)) ++
+                    (if (tail.isEmpty) Nil else Seq(RootView.rliInlineLine(tail))) ++ doneLines
               case None =>
-                val all = rliInlineRefsOf(baseRawR) ++ newRefs
+                val all = base.rli.inline ++ newRefs
                 val merged =
                   if (all.size - AcidTable.rliGenPrefixLen(all) > AcidTable.MaxRliRefs)
                     mergeRliRefs(all)
@@ -6797,10 +6509,10 @@ final class AcidTable private (
     // and post-link re-assert protocols are the backstop), so a gen side
     // file that cannot be expanded must not abort a commit that carries
     // it verbatim — touch the side file itself plus whatever resolves
+    val newRli = RootView.Rli.of(rliHeader)
     val carriedRli: Seq[String] =
-      rliGenFileOf(rliHeader).map(_._1).toSeq ++
-        scala.util.Try(rliRefsOf(rliHeader)).getOrElse(rliInlineRefsOf(rliHeader))
-          .map(_.name)
+      newRli.gen.map(_._1).toSeq ++
+        scala.util.Try(rliRefsOf(newRli)).getOrElse(newRli.inline).map(_.name)
     def reassertCarriedRef(name: String): Unit =
       if (!segmentsDir.resolve(name).toFile.setLastModified(System.currentTimeMillis())) {
         val cached =
@@ -6812,10 +6524,12 @@ final class AcidTable private (
         cached.foreach(b => ensureSegment(name, b, touch = true))
       }
     (carriedPages ++ carriedRli).foreach(reassertCarriedRef)
-    val body = (Seq(
-      s"#ts=$ts",
-      s"#touched=${encoded.mkString(",")}",
-      "#segments=1") ++ pageHeader ++ opHeader ++ dvHeader ++ rliHeader ++ rootTail).mkString("\n")
+    // the operation name rides the root as an audit header (the timeline
+    // surface history() renders), and so do the live deletion-vector
+    // entries (merge-on-read deletes, [[deleteVectored]]) — the inline
+    // small-DV form of Delta's deletion vectors, so DV lifecycle (restore,
+    // clone, vacuum, time travel) follows the manifest with no sidecar
+    val body = RootView.render(ts, touched, pageCount, op, dvs, rliHeader, rootTail)
     Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
     val ch = FileChannel.open(tmp, StandardOpenOption.WRITE)
     try ch.force(true) finally ch.close()
@@ -6924,10 +6638,11 @@ object AcidTable {
   }
 
   /** Metadata-I/O telemetry (spec-checked): commit-log resolution must be
-    * O(1) probes per [[AcidTable.latestVersion]] and O(log n) header reads
+    * O(1) probes per [[AcidTable.latestVersion]] and O(log n) root reads
     * per [[AcidTable.versionAt]], never a full `_commits` listing — the
     * difference between a bounded and an unbounded timeline scan on a
-    * 100 TB table's object store.
+    * 100 TB table's object store. `manifestHeaderReads` counts physical
+    * root-file reads, all of which happen in [[AcidTable.rootView]].
     */
   private[graft] val metaDirListings = new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] val latestProbes = new java.util.concurrent.atomic.AtomicLong(0)
@@ -6981,11 +6696,6 @@ object AcidTable {
 
   /** Tag refs live under `_commits/_tags/<name>` (see the tag section). */
   private[lake] val TagsDir = "_tags"
-
-  /** Decoded partition directory of a root `@<encoded dir>|…` segment
-    * line — the key both sides of the branch-publish delta compare on. */
-  private[lake] def rootLineDir(l: String): String =
-    java.net.URLDecoder.decode(l.substring(1).takeWhile(_ != '|'), "UTF-8")
 
   /** Stats-sidecar format-version marker key (see readClusterStats). */
   private[lake] val StatsVerKey = "statsver"
@@ -7106,7 +6816,7 @@ object AcidTable {
 
   /** Ref-count above which a root stores its GENERATION list in a
     * content-addressed `rlg-` side file instead of inline `#rli=` text
-    * (see the `rliGenFileOf` scaladoc). 64 refs ≈ 3.5 KB inline — below
+    * (see [[RootView.Rli]]). 64 refs ≈ 3.5 KB inline — below
     * it the indirection saves nothing. A `var` solely so
     * RecordIndexSpec can engage the side-file path on a CI-sized
     * generation. */
@@ -7202,57 +6912,6 @@ object AcidTable {
     segmentCache.get((path, name))
   private[lake] def cacheSegment(path: String, name: String, d: SegData): Unit =
     segmentCache.put((path, name), d)
-
-  /** Small LRU of fully-resolved manifests (headers + synthesized
-    * `#sizes=` + file lines), keyed (table path, version) — manifests are
-    * immutable, and the commit loop re-reads the same version a handful
-    * of times per commit. */
-  private object resolvedManifestCache {
-    private val MaxEntries = 8
-    private val m = new java.util.LinkedHashMap[(String, Long), Seq[String]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), Seq[String]]): Boolean =
-        size() > MaxEntries
-    }
-    def get(k: (String, Long)): Option[Seq[String]] = m.synchronized(Option(m.get(k)))
-    def put(k: (String, Long), v: Seq[String]): Unit = m.synchronized { m.put(k, v); () }
-    def purgePath(p: String): Unit = m.synchronized { m.keySet.removeIf(_._1 == p); () }
-  }
-  private[lake] def cachedResolved(path: String, v: Long): Option[Seq[String]] =
-    resolvedManifestCache.get((path, v))
-  private[lake] def cacheResolved(path: String, v: Long, lines: Seq[String]): Unit =
-    resolvedManifestCache.put((path, v), lines)
-
-  /** Parsed segment refs per (path, version) — the parse (split +
-    * URL-decode per partition line) must not be a per-call O(live
-    * partitions) tax: at 20 k partitions segRefs() is consulted several
-    * times per commit (round 15). (mtime, length)-validated against the
-    * root file (published roots are immutable, but recreation and
-    * hand edits must not serve stale parses);
-    * purged with the resolved cache on table re-creation. */
-  private object segRefsCache {
-    private val MaxEntries = 8
-    private val m = new java.util.LinkedHashMap[
-        (String, Long), (Long, Long, Seq[SegRef])](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), (Long, Long, Seq[SegRef])])
-          : Boolean = size() > MaxEntries
-    }
-    def get(k: (String, Long), mtime: Long, len: Long): Option[Seq[SegRef]] =
-      m.synchronized(Option(m.get(k)).collect {
-        case (mt, l, refs) if mt == mtime && l == len => refs
-      })
-    def put(k: (String, Long), mtime: Long, len: Long,
-        v: Seq[SegRef]): Unit =
-      m.synchronized { m.put(k, (mtime, len, v)); () }
-    def purgePath(p: String): Unit = m.synchronized { m.keySet.removeIf(_._1 == p); () }
-  }
-  private[lake] def cachedSegRefs(path: String, v: Long, mtime: Long, len: Long)
-      : Option[Seq[SegRef]] =
-    segRefsCache.get((path, v), mtime, len)
-  private[lake] def cacheSegRefs(path: String, v: Long, mtime: Long, len: Long,
-      refs: Seq[SegRef]): Unit =
-    segRefsCache.put((path, v), mtime, len, refs)
 
   /** (mtime, length)-validated cache of the per-file stats sidecar: the
     * publish path consults it for partition envelopes, so parsing must
@@ -7504,12 +7163,6 @@ object AcidTable {
     */
   val MorMaxKeys: Int = 4096
 
-  /** (table path, version) → `#ts=` commit time. Manifests are immutable
-    * once published; invalidated when a table directory is re-created.
-    */
-  private[lake] val commitTimeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-
   private val CommitsDir = "_commits"
   private val DataDir = "data"
   private val MetaFile = "_meta.properties"
@@ -7593,9 +7246,10 @@ object AcidTable {
   }
 
   /** Test hook: drop every process-wide cached artifact of `path`
-    * (segment bodies, root pages, index runs) — specs staging
+    * (root views, segment bodies, root pages, index runs) — specs staging
     * unrecoverable-loss scenarios need the "driver restarted" state. */
   private[lake] def purgeCachesForSpec(path: String): Unit = {
+    RootView.forget(path)
     segmentCache.purgePath(path)
     pageCache.purgePath(path)
     rliCache.purgePath(path)
@@ -7629,6 +7283,10 @@ object AcidTable {
   private val ManifestName = """v(\d{12})\.txt""".r
   private def manifestFileName(v: Long): String = f"v$v%012d.txt"
 
+  /** Hash buckets per partition of a table created without an explicit
+    * count — the one default every DDL front end uses. */
+  val DefaultBuckets: Int = 32
+
   /** Create (or overwrite) a table directory — reference A2+A3 DDL path. */
   def create(
       spark: SparkSession,
@@ -7639,7 +7297,7 @@ object AcidTable {
       precombineCol: Option[String] = None,
       overwrite: Boolean = true,
       stablePartitions: Boolean = false,
-      numBuckets: Int = 32): AcidTable = {
+      numBuckets: Int = DefaultBuckets): AcidTable = {
     require(schema.fieldNames.contains(pkCol), s"pk column $pkCol not in schema")
     require(schema.fieldNames.contains(partitionCol), s"partition column $partitionCol not in schema")
     require(schema(partitionCol).dataType == StringType,
@@ -7649,17 +7307,13 @@ object AcidTable {
     val root = new File(path)
     if (overwrite && root.exists()) deleteRecursively(root)
     // a fresh table at a reused path must not inherit a previous table's
-    // cached commit times — purge unconditionally (the old directory may
-    // have been deleted externally, in which case root.exists() was
-    // already false here but the cache still holds the dead table)
-    commitTimeCache.keySet.removeIf(_._1 == path)
-    // the resolved-manifest LRU is keyed (path, version) and versions
-    // RESTART at a recreated path — a stale hit would resolve the NEW
-    // table's v1 against the OLD table's file list. The stats-sidecar
-    // cache is (mtime, length)-validated, but a recreated sidecar could
-    // in principle collide on both; purge it with the rest.
-    resolvedManifestCache.purgePath(path)
-    segRefsCache.purgePath(path)
+    // root views — purge unconditionally (the old directory may have been
+    // deleted externally, in which case root.exists() was already false
+    // here but the cache still holds the dead table). Views are keyed
+    // (path, version) and versions RESTART at a recreated path; they and
+    // the stats-sidecar cache are (mtime, size)-checked, but a recreated
+    // file could in principle collide on both.
+    RootView.forget(path)
     clusterStatsCacheMap.remove(path)
     Files.createDirectories(Paths.get(path, CommitsDir))
     Files.createDirectories(Paths.get(path, DataDir))

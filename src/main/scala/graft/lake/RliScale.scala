@@ -88,9 +88,9 @@ object RliScale {
         sys.error("distributed index write rejected the frame"))
     }
     val base = t.latestVersion()
-    t.publish(base + 1, Nil, Nil, Map.empty, "RLI_REBUILD", t.readDvs(base),
-      reuseRootLines = t.rootLines(base).filter(_.startsWith("@")),
-      rli = AcidTable.RliSet(refs, done = true))
+    val baseView = t.rootView(base)
+    t.publish(base + 1, Nil, Nil, Map.empty, "RLI_REBUILD", baseView.dvs,
+      reuseRootLines = baseView.refLines, rli = AcidTable.RliSet(refs, done = true))
     emit("build_index_distributed", buildMs, Nil,
       s"executor shard-write of $nKeys entries into ${refs.size} runs")
 
@@ -98,13 +98,13 @@ object RliScale {
     //    key count (shard route + binary search)
     val present = Seq(s"k${nKeys / 2}")
     val absent = Seq("nope-xyz")
-    val pCold = timedMs(t.rliLookup(t.latestVersion(), present))
+    val pCold = timedMs(t.rliLookup(t.rootView(t.latestVersion()), present))
     emit("rli_probe_present", pCold,
-      (1 to 10).map(_ => timedMs(t.rliLookup(t.latestVersion(), present))),
-      s"cells=${t.rliLookup(t.latestVersion(), present).map(_.size).getOrElse(-1)}")
-    val aCold = timedMs(t.rliLookup(t.latestVersion(), absent))
+      (1 to 10).map(_ => timedMs(t.rliLookup(t.rootView(t.latestVersion()), present))),
+      s"cells=${t.rliLookup(t.rootView(t.latestVersion()), present).map(_.size).getOrElse(-1)}")
+    val aCold = timedMs(t.rliLookup(t.rootView(t.latestVersion()), absent))
     emit("rli_probe_absent", aCold,
-      (1 to 10).map(_ => timedMs(t.rliLookup(t.latestVersion(), absent))),
+      (1 to 10).map(_ => timedMs(t.rliLookup(t.rootView(t.latestVersion()), absent))),
       "proven-empty")
 
     // helper: one driver-local append commit; returns (ms, refCountAfter)
@@ -115,10 +115,7 @@ object RliScale {
         t.upsert(spark.createDataFrame(java.util.Arrays.asList(
           Row(s"a$seq", "P0", seq.toDouble)), schema), Some(Seq("P0")))
       }
-      val raw = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(
-        dir, "_commits", f"v${t.latestVersion()}%012d.txt"))
-        .toArray(Array.empty[String]).toSeq
-      (ms, t.rliRefsOf(raw).size)
+      (ms, t.rliRefsOf(t.rootView(t.latestVersion()).rli).size)
     }
 
     // 2. append commits until the first fold fires. At 6 M keys the
@@ -144,11 +141,11 @@ object RliScale {
 
     // 4. probe again on the folded generation (route through the wide
     //    generation + fresh deltas)
-    emit("rli_probe_after_folds", timedMs(t.rliLookup(t.latestVersion(), present)),
-      (1 to 10).map(_ => timedMs(t.rliLookup(t.latestVersion(), present))))
-    emit("rli_probe_delta_key", timedMs(t.rliLookup(t.latestVersion(), Seq("a3"))),
-      (1 to 10).map(_ => timedMs(t.rliLookup(t.latestVersion(), Seq("a3")))),
-      s"cells=${t.rliLookup(t.latestVersion(), Seq("a3")).map(_.size).getOrElse(-1)}")
+    emit("rli_probe_after_folds", timedMs(t.rliLookup(t.rootView(t.latestVersion()), present)),
+      (1 to 10).map(_ => timedMs(t.rliLookup(t.rootView(t.latestVersion()), present))))
+    emit("rli_probe_delta_key", timedMs(t.rliLookup(t.rootView(t.latestVersion()), Seq("a3"))),
+      (1 to 10).map(_ => timedMs(t.rliLookup(t.rootView(t.latestVersion()), Seq("a3")))),
+      s"cells=${t.rliLookup(t.rootView(t.latestVersion()), Seq("a3")).map(_.size).getOrElse(-1)}")
 
     // 4b. distributed fold × racing vacuum (round 18, r17 verdict #7):
     //     the executor-leg fold's input anchor (mtime-touch before the
@@ -177,7 +174,7 @@ object RliScale {
         val (raceMs, refsAfterRace) = appendOnce() // the distributed fold, raced
         stop.set(true); vac.join(15000)
         require(errs.isEmpty, s"vacuum errors racing the distributed fold: $errs")
-        val probeOk = t.rliLookup(t.latestVersion(), present).exists(_.nonEmpty)
+        val probeOk = t.rliLookup(t.rootView(t.latestVersion()), present).exists(_.nonEmpty)
         require(probeOk, "probe lost under fold x vacuum race")
         emit("fold_distributed_vacuum_race", raceMs, Nil,
           s"racing sweeper grace=1.5s period=100ms; refs=$refsAfterRace; clean")
@@ -192,14 +189,10 @@ object RliScale {
     //    verbatim between folds, so the ROOT pays O(delta tail) text per
     //    commit however wide the generation (the pre-indirection inline
     //    rendering would be ~55 bytes × shards in EVERY root)
-    val raw = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(
-      dir, "_commits", f"v${t.latestVersion()}%012d.txt"))
-      .toArray(Array.empty[String]).toSeq
-    val headerBytes = raw.filter(l =>
-      l.startsWith("#rli=") || l.startsWith("#rligen=")).map(_.length).sum
-    val inlineWouldBe = t.rliRefsOf(raw).map(r =>
-      s"${r.name}|${r.shard}|${r.nShards}|${r.count}").map(_.length + 1).sum
+    val rli = t.rootView(t.latestVersion()).rli
+    val headerBytes = rli.lines.map(_.length).sum
+    val inlineWouldBe = t.rliRefsOf(rli).map(RootView.renderRliRef(_).length + 1).sum
     emit("root_rli_header_bytes", headerBytes.toDouble, Nil,
-      s"vs $inlineWouldBe inline; gen=${t.rliGenFileOf(raw).map(_._1).getOrElse("inline")}")
+      s"vs $inlineWouldBe inline; gen=${rli.gen.map(_._1).getOrElse("inline")}")
   }
 }

@@ -1589,8 +1589,8 @@ object AcidQueries {
       """)),
 
     // ---- C5 manifest statistics drive join planning (round 10) ------------------
-    // The DSv2 scan reports its PRUNED size from the manifest's #sizes=
-    // header (SupportsReportStatistics), so a dimension-sized ACID table
+    // The DSv2 scan reports its PRUNED size from the sizes the manifest
+    // records (SupportsReportStatistics), so a dimension-sized ACID table
     // auto-broadcasts in a SQL join with NO hint — without the stats, DSv2
     // falls back to defaultSizeInBytes (Long.MaxValue) and every join over
     // the catalog becomes a sort-merge. The broadcast itself is asserted

@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * costs hundreds of milliseconds before the first task launches (measured:
   * 236 ms of a 296 ms count() at 66 files). A transactional table already
   * carries the authoritative file list AND per-file sizes in its commit
-  * manifest (`#sizes=` header), so scan planning here consumes that
+  * manifest (recorded in its segments), so scan planning here consumes that
   * metadata directly: zero filesystem listings, zero stat calls — the same
   * design Delta/Iceberg/Hudi use to plan 100 TB scans from manifest files
   * alone. Partition values ride each file entry and support ordinary

@@ -89,6 +89,24 @@ class AcidStreamSinkSpec extends AnyFunSuite {
     assert(t.lastStreamBatch("ckpt-A") == 1L)
   }
 
+  test("the replay ledger reads #op= headers only: no segment resolves per batch") {
+    val t = AcidTable.create(spark,
+      Files.createTempDirectory("sink-ledger-").resolve("t").toString,
+      schema, "pk", "part", stablePartitions = true)
+    // more retained versions than the process keeps parsed roots for, so
+    // every walk below reads roots that are no longer cached
+    (0L until 12L).foreach { b =>
+      t.streamUpsert(Seq((b, s"p${b % 3}", b.toDouble)).toDF("pk", "part", "v"), "ckpt-L", b)
+    }
+    t.upsert(Seq((99L, "p0", 9.0)).toDF("pk", "part", "v"))
+    AcidTable.resetMetaIoCounters()
+    assert(t.lastStreamBatch("ckpt-L") == 11L)
+    assert(t.lastStreamBatch("ckpt-unknown") == -1L) // walks every retained root
+    assert(AcidTable.segmentResolves.get() == 0,
+      s"the ledger walk resolved ${AcidTable.segmentResolves.get()} segments")
+    assert(AcidTable.manifestHeaderReads.get() > 0, "the walk must read the roots it checks")
+  }
+
   test("the sink refuses to run without a checkpoint-derived stream identity") {
     val t = AcidTable.create(spark,
       Files.createTempDirectory("sink-noid-").resolve("t").toString,

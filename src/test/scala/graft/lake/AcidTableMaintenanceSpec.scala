@@ -241,18 +241,23 @@ class AcidTableMaintenanceSpec extends AnyFunSuite {
     t.upsert(df(Record("R1", "P0", "a0"))) // v0 — the held base
     t.upsert(df(Record("R1", "P0", "a1"))) // v1
     t.upsert(df(Record("R1", "P0", "a2"))) // v2
-    assert(t.rawRootLines(0).nonEmpty) // readable while retained
+    assert(t.rootView(0).segRefs.nonEmpty) // readable while retained
     // a manifest missing INSIDE the retained window (v0 still present, so
     // the horizon is 0 and v1 is not below it) is corruption, not a
     // conflict: the raw error must surface loudly
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(t.path, "_commits", "v000000000001.txt"))
-    intercept[java.nio.file.NoSuchFileException](t.rawRootLines(1))
+    intercept[java.nio.file.NoSuchFileException](t.rootView(1))
+    // …through every reader of v1: none may read the gap as an empty
+    // version (no rows, no deletes) or skip it
+    intercept[java.nio.file.NoSuchFileException](t.snapshot(1))
+    intercept[java.nio.file.NoSuchFileException](t.lookup(Seq("R1"), version = 1))
+    intercept[java.nio.file.NoSuchFileException](t.history())
     // archival removes a PREFIX: with v0 gone too, any read below the
     // horizon types as the retriable OCC signal
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(t.path, "_commits", "v000000000000.txt"))
-    val e = intercept[CommitConflictException](t.rawRootLines(0))
+    val e = intercept[CommitConflictException](t.rootView(0))
     assert(e.getMessage.contains("archived by vacuum"), e.getMessage)
     // …but a read that names the archived version EXPLICITLY is a
     // terminal user error, not a retriable conflict: no retry can ever

@@ -72,8 +72,7 @@ class BranchSpec extends AnyFunSuite {
     val pubV = t.publishBranch("b")
 
     def segLines(v: Long): Map[String, String] =
-      t.rootLines(v).filter(_.startsWith("@"))
-        .map(l => AcidTable.rootLineDir(l) -> l).toMap
+      t.rootView(v).refLines.map(l => RootView.refLineDir(l) -> l).toMap
     val before = segLines(forkV)
     val after = segLines(pubV)
     assert(before.keySet == after.keySet)
@@ -126,8 +125,8 @@ class BranchSpec extends AnyFunSuite {
     br.deleteWhere(org.apache.spark.sql.functions.col("part") === "p2")
     t.publishBranch("b")
     assert(!contents(t).exists(_._2 == "p2"))
-    assert(!t.rootLines(t.latestVersion()).exists(l =>
-      l.startsWith("@") && AcidTable.rootLineDir(l) == "part=p2"))
+    assert(!t.rootView(t.latestVersion()).refLines.exists(l =>
+      RootView.refLineDir(l) == "part=p2"))
   }
 
   test("branch of an empty table publishes its first rows; no-op publish is a no-op") {

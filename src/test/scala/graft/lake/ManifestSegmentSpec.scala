@@ -54,7 +54,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     val t = newTable()
     t.upsert(batch(("a1", "P0", 1L), ("a2", "P0", 2L), ("b1", "P1", 10L)))
     val v1 = t.latestVersion()
-    val refs1 = t.segRefs(v1).map(r => r.partDir -> r).toMap
+    val refs1 = t.rootView(v1).segRefs.map(r => r.partDir -> r).toMap
     val p0Seg1 = refs1("part=P0")
     val p0Bytes1 = segBytes(t, p0Seg1.name)
 
@@ -62,7 +62,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     AcidTable.resetMetaIoCounters()
     t.upsert(batch(("b2", "P1", 11L)))
     val v2 = t.latestVersion()
-    val refs2 = t.segRefs(v2).map(r => r.partDir -> r).toMap
+    val refs2 = t.rootView(v2).segRefs.map(r => r.partDir -> r).toMap
     // untouched partition: same segment NAME (content-addressed) and the
     // bytes on disk are the identical file
     assert(refs2("part=P0").name == p0Seg1.name)
@@ -133,7 +133,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     t.upsert(batch(("b1", "P1", 100L), ("b2", "P1", 190L)))
     t.upsert(batch(("c1", "P2", 1000L), ("c2", "P2", 1900L)))
     val v = t.latestVersion()
-    val refs = t.segRefs(v).map(r => r.partDir -> r).toMap
+    val refs = t.rootView(v).segRefs.map(r => r.partDir -> r).toMap
     assert(refs("part=P0").pstats("x") == (1L, 9L))
     assert(refs("part=P1").pstats("x") == (100L, 190L))
     assert(refs("part=P2").pstats("x") == (1000L, 1900L))
@@ -174,7 +174,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     // P0: y all null; P1: y populated
     t.upsert(mk(Seq(("a1", "P0", 1L, null), ("a2", "P0", 5L, null))))
     t.upsert(mk(Seq(("b1", "P1", 100L, 7L), ("b2", "P1", 190L, 9L))))
-    val refs = t.segRefs(t.latestVersion()).map(r => r.partDir -> r).toMap
+    val refs = t.rootView(t.latestVersion()).segRefs.map(r => r.partDir -> r).toMap
     // all-null partition: empty envelope (MaxValue, MinValue) — prunes
     // against any real range, which is sound (NULL never matches a range)
     assert(refs("part=P0").pstats("y") == (Long.MaxValue, Long.MinValue))
@@ -184,7 +184,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
 
     // rewrite P0 with real y values: envelope follows the rewrite
     t.upsert(mk(Seq(("a1", "P0", 2L, 500L))))
-    val refs2 = t.segRefs(t.latestVersion()).map(r => r.partDir -> r).toMap
+    val refs2 = t.rootView(t.latestVersion()).segRefs.map(r => r.partDir -> r).toMap
     val (ylo, yhi) = refs2("part=P0").pstats("y")
     assert(ylo <= 500L && yhi >= 500L, s"envelope ($ylo, $yhi) must cover the upserted 500")
     // correctness: pruned read == plain filtered read
@@ -215,7 +215,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     // the segments only they referenced
     t.vacuum(keepVersions = 2, graceMillis = 0L)
     val liveRefs = (t.latestVersion() - 1 to t.latestVersion())
-      .flatMap(v => t.segRefs(v).map(_.name)).toSet
+      .flatMap(v => t.rootView(v).segRefs.map(_.name)).toSet
     val after = Option(segDir(t).toFile.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("seg-")).map(_.getName).toSet
     assert(after == liveRefs,
@@ -236,7 +236,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
       (1 to nSynth).map(p => FileCell(s"SP$p", -1)),
       synth.map(_ -> 1024L).toMap, "BULKLOAD")
     val v1 = t.latestVersion()
-    val raw = t.rawRootLines(v1)
+    val raw = t.rootView(v1).rawRefLines
     val pageRefs = raw.filter(_.startsWith("@@"))
     assert(pageRefs.nonEmpty, "root above the threshold must page its lines")
     assert(raw.count(l => l.startsWith("@") && !l.startsWith("@@")) == 0,
@@ -246,12 +246,12 @@ class ManifestSegmentSpec extends AnyFunSuite {
       (nSynth + 1 + AcidTable.RootPageSize - 1) / AcidTable.RootPageSize) * 2 - 1)
     assert(pageRefs.size == expectedN, s"${pageRefs.size} pages, expected $expectedN")
     // readers see the flat shape: every partition's seg ref resolvable
-    assert(t.segRefs(v1).size == nSynth + 1)
+    assert(t.rootView(v1).segRefs.size == nSynth + 1)
     assert(t.detail().collect()(0).getLong(5) == nSynth + 1) // partition count
     // trickle commit on the real partition: pages REUSE (content-addressed
     // chunks of the sorted line list — only P0's chunk changes)
     t.upsert(batch(("R1", "P0", 10L)))
-    val raw2 = t.rawRootLines(t.latestVersion())
+    val raw2 = t.rootView(t.latestVersion()).rawRefLines
     val pageRefs2 = raw2.filter(_.startsWith("@@"))
     val reused = pageRefs.map(_.substring(2).takeWhile(_ != '|')).toSet intersect
       pageRefs2.map(_.substring(2).takeWhile(_ != '|')).toSet
@@ -273,10 +273,10 @@ class ManifestSegmentSpec extends AnyFunSuite {
     val pagesOnDisk = Option(segDir(t).toFile.listFiles()).getOrElse(Array.empty)
       .map(_.getName).filter(_.startsWith("page-")).toSet
     val livePageRefs = (t.latestVersion() - 1 to t.latestVersion())
-      .flatMap(v => t.rawRootLines(v).filter(_.startsWith("@@"))
+      .flatMap(v => t.rootView(v).rawRefLines.filter(_.startsWith("@@"))
         .map(_.substring(2).takeWhile(_ != '|'))).toSet
     assert(pagesOnDisk == livePageRefs,
       s"pages on disk $pagesOnDisk != retained roots' page refs $livePageRefs")
-    assert(t.segRefs(t.latestVersion()).size == nSynth + 1)
+    assert(t.rootView(t.latestVersion()).segRefs.size == nSynth + 1)
   }
 }

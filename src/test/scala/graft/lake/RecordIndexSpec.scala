@@ -39,8 +39,10 @@ class RecordIndexSpec extends AnyFunSuite {
     Files.readAllLines(Paths.get(t.path, "_commits",
       f"v${t.latestVersion()}%012d.txt")).toArray(Array.empty[String]).toSeq
 
+  private def rootRli(t: AcidTable): RootView.Rli = t.rootView(t.latestVersion()).rli
+
   private def rliRefNames(t: AcidTable): Seq[String] =
-    t.rliRefsOf(rawRoot(t)).map(_.name)
+    t.rliRefsOf(rootRli(t)).map(_.name)
 
   private def isDone(t: AcidTable): Boolean = rawRoot(t).contains("#rlidone=1")
 
@@ -205,14 +207,14 @@ class RecordIndexSpec extends AnyFunSuite {
       .selectExpr("concat('G', id) as primaryKeyValue",
         "concat('P', id % 5) as partitionKeyValue", "cast(id as string) as dataValue")
     t.upsert(big)
-    val genBefore = t.rliRefsOf(rawRoot(t))
+    val genBefore = t.rliRefsOf(rootRli(t))
     assert(AcidTable.rliGenPrefixLen(genBefore) == genBefore.size && genBefore.size > 4,
       s"distributed commit must yield a recognizable generation, got $genBefore")
     // MaxRliRefs+1 tiny driver deltas → the delta tail outgrows the bound
     // and the commit folds them INTO the generation
     (1 to AcidTable.MaxRliRefs + 1).foreach(i =>
       t.upsert(df(Record(s"K$i", s"P${i % 5}", s"v$i"))))
-    val after = t.rliRefsOf(rawRoot(t))
+    val after = t.rliRefsOf(rootRli(t))
     assert(after.size - AcidTable.rliGenPrefixLen(after) <= AcidTable.MaxRliRefs,
       s"delta tail must stay bounded, got $after")
     assert(after.forall(_.nShards == genBefore.head.nShards),
@@ -241,7 +243,7 @@ class RecordIndexSpec extends AnyFunSuite {
       t.upsert(big)
       (1 to AcidTable.MaxRliRefs + 1).foreach(i =>
         t.upsert(df(Record(s"X$i", s"P${i % 3}", s"x$i"))))
-      val refs = t.rliRefsOf(rawRoot(t))
+      val refs = t.rliRefsOf(rootRli(t))
       assert(refs.size - AcidTable.rliGenPrefixLen(refs) <= AcidTable.MaxRliRefs)
       assert(isDone(t))
       assert(t.lookup(Seq("D500")).collect().map(_.getString(2)).toSeq == Seq("500"))
@@ -326,14 +328,14 @@ class RecordIndexSpec extends AnyFunSuite {
       val raw = rawRoot(t)
       assert(raw.exists(_.startsWith("#rligen=")),
         s"expected a side-file header, got ${raw.filter(_.startsWith("#rli"))}")
-      val refs = t.rliRefsOf(raw)
+      val refs = t.rliRefsOf(rootRli(t))
       assert(AcidTable.rliGenPrefixLen(refs) > 4, s"expansion must return the members: $refs")
-      val genName = t.rliGenFileOf(raw).get._1
+      val genName = rootRli(t).gen.get._1
       // trickle commits carry the UNCHANGED generation by the same
       // content-addressed name — no per-commit O(shards) header text
       t.upsert(df(Record("T1", "P0", "t1")))
       t.upsert(df(Record("T2", "P1", "t2")))
-      assert(t.rliGenFileOf(rawRoot(t)).get._1 == genName,
+      assert(rootRli(t).gen.get._1 == genName,
         "an unchanged generation must re-reference the same side file")
       assert(isDone(t))
       assert(t.lookup(Seq("D700")).collect().map(_.getString(2)).toSeq == Seq("700"))
@@ -350,7 +352,7 @@ class RecordIndexSpec extends AnyFunSuite {
       assert(t.lookupFiles(Seq("D700")).nonEmpty)
       // a missing side file voids routing, never correctness; repair
       // heals it content-addressably from the generation cache
-      val gn = t.rliGenFileOf(rawRoot(t)).get._1
+      val gn = rootRli(t).gen.get._1
       val segsDir = Paths.get(t.path, "_commits", "_segments")
       Files.delete(segsDir.resolve(gn))
       assert(t.lookup(Seq("D700")).collect().length == 1,

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** One readable on-disk format. Every root a publish writes carries
-  * `#ts=`, `#touched=` and the `#segments=1` format stamp; a root in any
+  * `#ts=`, `#touched=`, `#op=` and the `#segments=1` format stamp; a root in any
   * other shape (each row below is a hand edit of a freshly written root)
   * is refused with an `IllegalStateException` that names the manifest
   * file and its version, and `fsck` reports it as `unsupported_root_format`
@@ -41,6 +41,8 @@ class RootFormatSpec extends AnyFunSuite {
         (_, _, ls) => ls.filterNot(_.startsWith("#ts="))),
       ("no #touched= header", "no #touched= header",
         (_, _, ls) => ls.filterNot(_.startsWith("#touched="))),
+      ("no #op= header", "no #op= header",
+        (_, _, ls) => ls.filterNot(_.startsWith("#op="))),
       // data-file lines + `#sizes=` in place of segment references
       ("flat (pre-segment) manifest", "no #segments=1 header",
         (t, v, ls) => {

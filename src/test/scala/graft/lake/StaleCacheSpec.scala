@@ -11,8 +11,8 @@ import graft.TestSpark
 /** Round-12 advice fixes — process-wide cache/lifecycle hazards:
   *
   *  1. drop/recreate at the SAME path must not serve the old table's
-  *     cached manifest expansion (resolvedManifestCache is keyed
-  *     (path, version) and versions restart at a recreated path);
+  *     cached root view (views are keyed (path, version) and versions
+  *     restart at a recreated path);
   *  2. (superseded in round 14) untouched partitions' segments now carry
   *     by VERBATIM root-line reuse — a foreign commit neither resolves
   *     nor touches them, and vacuum keeps them because any reused
@@ -58,7 +58,7 @@ class StaleCacheSpec extends AnyFunSuite {
     val t = AcidTable.create(spark, path, schema, "pk", "part", stablePartitions = true)
     t.upsert(batch(("a", "P0", 1L)))
     val segs = Paths.get(path, "_commits", AcidTable.SegmentsDir)
-    val p0Seg = t.segRefs(t.latestVersion()).find(_.partDir == "part=P0").get.name
+    val p0Seg = t.rootView(t.latestVersion()).segRefs.find(_.partDir == "part=P0").get.name
     // simulate an ANCIENT segment (mtime far below any grace cutoff)
     assert(segs.resolve(p0Seg).toFile.setLastModified(1000L))
     t.upsert(batch(("b", "P1", 2L))) // P0 untouched — its root line carries VERBATIM
@@ -66,7 +66,7 @@ class StaleCacheSpec extends AnyFunSuite {
     // segment (commit metadata work is O(touched partitions)) …
     assert(segs.resolve(p0Seg).toFile.lastModified() == 1000L,
       "untouched segment must carry by reference, not be re-written or touched")
-    assert(t.segRefs(t.latestVersion()).exists(_.name == p0Seg),
+    assert(t.rootView(t.latestVersion()).segRefs.exists(_.name == p0Seg),
       "latest root must still reference the carried segment")
     // … and vacuum must keep it DESPITE the ancient mtime: a carried
     // segment is referenced by a retained root, so liveness — not the

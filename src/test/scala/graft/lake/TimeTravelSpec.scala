@@ -81,16 +81,16 @@ class TimeTravelSpec extends AnyFunSuite {
       .toArray(Array.empty[String]).toSeq.filterNot(_.startsWith("#"))
 
     t.commitClock = () => 150L
-    t.publish(1, v0Files, Nil)                          // version 1 winner @ ts=150
+    t.publish(1, v0Files, Nil, op = "WRITE")            // version 1 winner @ ts=150
 
     // loser: stamps 300 (clock running ahead), loses the v1 link race —
     // its manifest (and the 300 stamp) must be discarded entirely
     t.commitClock = () => 300L
-    intercept[java.nio.file.FileAlreadyExistsException] { t.publish(1, v0Files, Nil) }
+    intercept[java.nio.file.FileAlreadyExistsException] { t.publish(1, v0Files, Nil, op = "WRITE") }
 
     // winner of the NEXT version stamps 200 < the loser's discarded 300
     t.commitClock = () => 200L
-    t.publish(2, v0Files, Nil)                          // version 2 winner @ ts=200
+    t.publish(2, v0Files, Nil, op = "WRITE")            // version 2 winner @ ts=200
 
     assert(t.latestVersion() == 2L)
     // commit order resolves purely from the visible (monotone) stamps;
@@ -116,8 +116,8 @@ class TimeTravelSpec extends AnyFunSuite {
     (0 until versions).foreach(i => t.upsert(df(Record("R1", "P0", s"v$i"))))
     assert(t.latestVersion() == versions - 1)
 
-    // a FRESH handle (cold per-handle state; the commit-time cache is
-    // per-(path, version) and nothing has read headers yet)
+    // a FRESH handle (cold per-handle state; parsed root views are
+    // cached per (path, version), the last few commits' among them)
     val t2 = AcidTable.open(spark, path.toString)
     AcidTable.resetMetaIoCounters()
     assert(t2.latestVersion() == versions - 1)
