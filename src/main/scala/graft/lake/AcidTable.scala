@@ -2364,9 +2364,10 @@ final class AcidTable private (
 
   /** Commit timeline (the `DESCRIBE HISTORY` / Hudi-timeline surface):
     * one row per RETAINED version — version, operation label (the `#op=`
-    * audit header every publish writes), publish timestamp, live file count, touched-cell count, and total data
-    * bytes. Metadata-only: O(retained versions) manifest reads on the
-    * driver, bounded by vacuum's timeline archival — never a data scan.
+    * audit header every publish writes), publish timestamp, live file
+    * count, touched-cell count, and total data bytes. Metadata-only:
+    * O(retained versions) manifest reads on the driver, bounded by
+    * vacuum's timeline archival — never a data scan.
     */
   def history(): DataFrame = {
     import spark.implicits._
@@ -4020,6 +4021,7 @@ final class AcidTable private (
     * gutted manifest would publish a corrupt table.
     */
   def restore(toVersion: Long): Long = {
+    require(toVersion >= 0, s"cannot restore to v$toVersion: no such version")
     val target =
       try rootView(toVersion)
       catch {
@@ -5665,12 +5667,12 @@ final class AcidTable private (
     * `v < 0` is the empty table. */
   private[lake] def rootView(v: Long): RootView = {
     if (v < 0) return RootView.Empty
-    val file = manifestPath(v)
     try {
-      val attrs = Files.readAttributes(file, classOf[java.nio.file.attribute.BasicFileAttributes])
+      val attrs = Files.readAttributes(
+        manifestPath(v), classOf[java.nio.file.attribute.BasicFileAttributes])
       RootView.cached(path, v, attrs.lastModifiedTime, attrs.size).getOrElse {
         AcidTable.manifestHeaderReads.incrementAndGet()
-        val lines = Files.readAllLines(file, StandardCharsets.UTF_8)
+        val lines = Files.readAllLines(manifestPath(v), StandardCharsets.UTF_8)
           .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
         val view = RootView.parse(lines, unsupportedRoot(v, _), readPage, readSegment)
         RootView.remember(path, v, attrs.lastModifiedTime, attrs.size, view)
@@ -5860,6 +5862,16 @@ final class AcidTable private (
   private[lake] def rliRefsOf(rli: RootView.Rli): Seq[AcidTable.RliRef] =
     rli.gen.toSeq.flatMap(g => readRliGen(g._1)) ++ rli.inline
 
+  /** The record-index header lines for `refs`. Round 17: a wide merged
+    * generation (15 k shard refs at 10⁹ keys) rendered inline would put
+    * ~800 KB of ref text into EVERY root — the same O(live …) per-commit
+    * cliff the paged root removed for partition lines. Above
+    * [[AcidTable.RliGenInlineMax]] refs the GENERATION list lives in a
+    * content-addressed `rlg-` side file (same bytes per member line),
+    * referenced by ONE `#rligen=` line; the delta tail stays inline.
+    * Between folds the generation is unchanged, so trickle commits
+    * re-reference the same side file byte-identically — no write, just
+    * the carried-ref mtime re-assert. */
   private def rliHeaderLinesFor(
       refs: Seq[AcidTable.RliRef], done: Boolean): Seq[String] = {
     val doneLines = if (done) Seq(RootView.RliDoneLine) else Nil
@@ -6816,7 +6828,7 @@ object AcidTable {
 
   /** Ref-count above which a root stores its GENERATION list in a
     * content-addressed `rlg-` side file instead of inline `#rli=` text
-    * (see [[RootView.Rli]]). 64 refs ≈ 3.5 KB inline — below
+    * (see `rliHeaderLinesFor`). 64 refs ≈ 3.5 KB inline — below
     * it the indirection saves nothing. A `var` solely so
     * RecordIndexSpec can engage the side-file path on a CI-sized
     * generation. */

@@ -172,7 +172,7 @@ private[lake] object RootView {
   }
 
   /** The partition dir of an `@` line. */
-  def refLineDir(l: String): String = dec(l.substring(1).takeWhile(_ != '|'))
+  def refLineDir(l: String): String = dec(encodedDir(l))
 
   def pageName(pageRef: String): String = pageRef.substring(2).takeWhile(_ != '|')
 
