@@ -1,9 +1,8 @@
 package graft.lake
 
 import java.io.File
-import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import java.util.UUID
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -21,8 +20,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
   * Layout:
   * {{{
   * <path>/_meta.properties            # schema DDL, pk / partition / precombine cols, numBuckets
-  * <path>/_commits/v<000000000N>.txt  # root manifest of version N
-  * <path>/_commits/_segments/seg-<sha1>.txt  # one partition's live files + sizes
+  * <path>/_commits/                   # the commit log: roots, segments, tags ([[Timeline]])
   * <path>/data/<part>=<value>/b<bbb>-c-<uuid>-<n>.parquet
   * }}}
   *
@@ -32,7 +30,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
   * then lists one `@<partdir>|<segment>|<files>|<bytes>|<envelopes>`
   * line per partition — or, above [[AcidTable.RootPageThreshold]]
   * partitions, `@@<page>|<lines>|<bucket>|<files>|<bytes>` page
-  * references. [[RootView]] owns the format: [[rootView]] is the one
+  * references. [[RootView]] owns the format: [[Timeline.rootView]] is the one
   * reader of a root file, and a root in any other shape is refused with
   * an `IllegalStateException` naming the manifest; [[fsck]] reports it
   * as `unsupported_root_format`.
@@ -123,7 +121,8 @@ final class AcidTable private (
 
   import AcidTable._
 
-  private val commitsDir = Paths.get(path, CommitsDir)
+  /** The table's commit log: every `_commits/` read and write. */
+  private[lake] val timeline = new Timeline(path)
   private val dataRoot = Paths.get(path, DataDir)
 
   /** Target output-file size for commit/compaction writes. A hot partition
@@ -137,116 +136,13 @@ final class AcidTable private (
 
   // ---------------------------------------------------------------- reads --
 
-  /** Highest committed version, or -1 for an empty (just-created) table.
-    *
-    * Checkpointed: `_commits/_latest.hint` records the last published
-    * version, so resolution is one small read plus O(publish-lag)
-    * existence probes — NOT a listing of the whole `_commits` directory,
-    * which grows without bound over a table's life (the unchkpointed-log
-    * failure mode on object stores; Hudi's timeline listing is bounded
-    * the same way). The hint is advisory: it is written AFTER a publish
-    * succeeds, so it can only lag (a racing writer may even regress it by
-    * one), and the forward probe recovers the true latest. A missing or
-    * unreadable hint falls back to the full listing.
-    */
-  def latestVersion(): Long = {
-    val hinted = readLatestHint()
-    if (hinted >= 0 && Files.exists(manifestPath(hinted))) {
-      var v = hinted
-      while ({ AcidTable.latestProbes.incrementAndGet(); Files.exists(manifestPath(v + 1)) }) v += 1
-      v
-    } else {
-      AcidTable.metaDirListings.incrementAndGet()
-      val files = Option(new File(commitsDir.toString).list()).getOrElse(Array.empty)
-      files.collect { case ManifestName(v) => v.toLong }.foldLeft(-1L)(math.max)
-    }
-  }
-
-  private def manifestPath(v: Long): Path = commitsDir.resolve(manifestFileName(v))
-
-  private def readLatestHint(): Long =
-    try {
-      val s = new String(Files.readAllBytes(latestHintPath), StandardCharsets.UTF_8).trim
-      s.toLong
-    } catch { case _: Throwable => -1L }
-
-  /** Advance the hint to `v` (best-effort, atomic move). Written after the
-    * manifest link succeeds, so the hint never points past the true
-    * latest; a lost race between two publishers can leave it one behind,
-    * which the probe in [[latestVersion]] absorbs.
-    */
-  private def writeLatestHint(v: Long): Unit =
-    try {
-      if (readLatestHint() < v) {
-        val tmp = commitsDir.resolve(s".hint-tmp-${UUID.randomUUID()}")
-        Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, latestHintPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-    } catch { case _: Throwable => () } // advisory only; listing fallback covers it
-
-  private def latestHintPath: Path = commitsDir.resolve(LatestHint)
+  /** Highest committed version, or -1 for an empty (just-created) table. */
+  def latestVersion(): Long = timeline.latestVersion()
 
   /** Highest version committed at or before `epochMillis`, or -1 if the
-    * table had no commits yet. Powers `TIMESTAMP AS OF` time travel.
-    *
-    * The commit clock is the `#ts=` header each manifest records at
-    * publish time — it survives copying the table directory (which
-    * rewrites file mtimes) and is immune to the inode-sharing subtlety
-    * of `Files.createLink` (the link's mtime is the temp-file write
-    * time, not the atomic publish point). Header timestamps are
-    * monotone across versions: a publisher only chooses version N+1
-    * after observing version N's published manifest, which N's
-    * publisher stamped before linking — a loser's later stamp is
-    * discarded with its unpublished temp manifest, never visible.
-    * Millisecond ties break toward the higher version. That
-    * monotonicity is what lets this resolve by BINARY SEARCH over
-    * version numbers — O(log n) root reads (views are cached: manifests
-    * are immutable once published) instead of opening every manifest.
-    */
-  def versionAt(epochMillis: Long): Long = {
-    val latest = latestVersion()
-    if (latest < 0) return -1L
-    // archival prunes a PREFIX of the timeline — the search floor is the
-    // oldest manifest still on disk
-    val oldest = oldestRetainedVersion(latest)
-    var lo = oldest
-    var hi = latest
-    var ans = -1L
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      if (rootView(mid).ts <= epochMillis) { ans = mid; lo = mid + 1 }
-      else hi = mid - 1
-    }
-    if (ans < 0 && oldest > 0)
-      // the requested time falls below the archival horizon: the table
-      // HAD committed state then, but its manifest is gone — resolving to
-      // -1 (empty table) would silently return wrong data, so fail loudly
-      // (the Delta/Hudi contract for time travel past retention)
-      throw new IllegalStateException(
-        s"TIMESTAMP AS OF $epochMillis predates the retention horizon of $path" +
-          s" (oldest retained version $oldest)")
-    ans
-  }
-
-  /** Oldest manifest still on disk. Archival only ever removes a prefix
-    * of the timeline, so existence is monotone in the version number and
-    * a binary search over it needs O(log n) probes; the common (never
-    * archived) case is one probe of v0.
-    */
-  private def oldestRetainedVersion(latest: Long): Long = {
-    AcidTable.latestProbes.incrementAndGet()
-    if (Files.exists(manifestPath(0L))) return 0L
-    var lo = 1L // 0 known missing
-    var hi = latest // known present
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      AcidTable.latestProbes.incrementAndGet()
-      if (Files.exists(manifestPath(mid))) hi = mid else lo = mid + 1
-    }
-    lo
-  }
+    * table had no commits yet. Powers `TIMESTAMP AS OF` time travel
+    * ([[Timeline.versionAt]]). */
+  def versionAt(epochMillis: Long): Long = timeline.versionAt(epochMillis)
 
   /** Snapshot of the given (default latest) committed version. The file
     * list is pinned before the scan → snapshot isolation for the whole read.
@@ -263,13 +159,13 @@ final class AcidTable private (
       case e: CommitConflictException if explicit >= 0 =>
         throw new IllegalArgumentException(
           s"version $explicit is below the retention horizon (archived by vacuum; " +
-            s"oldest retained: ${oldestRetainedVersion(latestVersion())}) ($path)", e)
+            s"oldest retained: ${timeline.oldestRetainedVersion(latestVersion())}) ($path)", e)
     }
 
   def snapshot(version: Long = -1L): DataFrame = explicitVersionRead(version) {
     // one view: the file list, the sizes and the deletion vectors all
     // come from the same root read
-    val view = rootView(if (version >= 0) version else latestVersion())
+    val view = timeline.rootView(if (version >= 0) version else latestVersion())
     applyDvs(snapshotFromFiles(view.files, view.sizes), view.dvs)
   }
 
@@ -300,7 +196,7 @@ final class AcidTable private (
     // entries come from the same root even if a commit lands mid-call.
     // Sizes resolve from the pruned files' own segments — a hinted point
     // lookup never expands the full manifest.
-    val view = rootView(if (version >= 0) version else latestVersion())
+    val view = timeline.rootView(if (version >= 0) version else latestVersion())
     if (!keyCastSupported) {
       // PK type outside castKeyTo's set (DATE/TIMESTAMP/DECIMAL/…): the
       // string keys can't be rendered as typed literals, so skip bucket
@@ -311,7 +207,7 @@ final class AcidTable private (
         .filter(col(pkCol).cast(StringType).isInCollection(keys))
     }
     val typed = typedKeys(keys)
-    if (typed.isEmpty) return snapshotFromFiles(Nil)
+    if (typed.isEmpty) return snapshotFromFiles(Nil, Map.empty)
     val files = lookupFilesIn(view, keys, partitionsHint)
     // keys cast to the PK's type (not the column to string) so the In set
     // test stays on the bare scan column and pushes into the parquet read
@@ -345,7 +241,7 @@ final class AcidTable private (
       keys: Seq[String],
       partitionsHint: Option[Seq[String]] = None,
       version: Long = -1L): Seq[String] =
-    lookupFilesIn(rootView(if (version >= 0) version else latestVersion()), keys, partitionsHint)
+    lookupFilesIn(timeline.rootView(if (version >= 0) version else latestVersion()), keys, partitionsHint)
 
   private def lookupFilesIn(
       view: RootView, keys: Seq[String], partitionsHint: Option[Seq[String]]): Seq[String] = {
@@ -400,7 +296,7 @@ final class AcidTable private (
           val refs = view.segRefs
           if (refs.size <= 64)
             refs.flatMap(r => bloomPruneFiles(
-              cellPrune(readSegment(r.name).entries.map(_._1)), keys))
+              cellPrune(timeline.readSegment(r.name).entries.map(_._1)), keys))
           else {
             // CHUNKED submission: one task per ref at 20 k partitions is
             // ~20 k pool round-trips of microsecond work — the overhead
@@ -410,7 +306,7 @@ final class AcidTable private (
             try refs.grouped(64).toSeq.map { chunk =>
               pool.submit(new java.util.concurrent.Callable[Seq[String]] {
                 override def call(): Seq[String] = chunk.flatMap(r =>
-                  bloomPruneFiles(cellPrune(readSegment(r.name).entries.map(_._1)), keys))
+                  bloomPruneFiles(cellPrune(timeline.readSegment(r.name).entries.map(_._1)), keys))
               })
             }.flatMap(_.get())
             finally { pool.shutdown(); () }
@@ -460,23 +356,15 @@ final class AcidTable private (
       }
     })
 
-  private def snapshotFromFiles(
-      files: Seq[String],
-      sizes: Map[String, Long] = Map.empty): DataFrame =
+  private def snapshotFromFiles(files: Seq[String], sizes: Map[String, Long]): DataFrame =
     if (files.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     } else {
       val mf = files.map { f =>
         val pv = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .unescapePathName(f.takeWhile(_ != '/').stripPrefix(s"$partitionCol="))
-        val size = sizes.getOrElse(f, {
-          // a file published without a size — one stat, counted like the
-          // write-sizing fallback
-          AcidTable.sizeStatFallbacks.incrementAndGet()
-          dataRoot.resolve(f).toFile.length()
-        })
         org.apache.spark.sql.graft.ManifestScan.ManifestFile(
-          dataRoot.resolve(f).toString, pv, size)
+          dataRoot.resolve(f).toString, pv, sizes(f))
       }
       if (renamedCols.isEmpty) {
         org.apache.spark.sql.graft.ManifestScan
@@ -627,8 +515,8 @@ final class AcidTable private (
     // header-only: no page expands, no segment resolves. Archival removes
     // a PREFIX of the timeline, so a version archived mid-walk ends it —
     // every older one is gone too
-    (latest to oldestRetainedVersion(latest) by -1).iterator
-      .map(v => try Some(rootView(v).op) catch { case _: CommitConflictException => None })
+    (latest to timeline.oldestRetainedVersion(latest) by -1).iterator
+      .map(v => try Some(timeline.rootView(v).op) catch { case _: CommitConflictException => None })
       .takeWhile(_.isDefined).flatten
       .filter(_.startsWith(prefix))
       .flatMap(op => op.stripPrefix(prefix).toLongOption)
@@ -1450,8 +1338,7 @@ final class AcidTable private (
   /** Cheap driver probe: the manifest's whole file list is within the fast-
     * path budget (count-capped first so a 100 TB manifest never pays
     * per-file stats). Uses direct `File.length` — absent file = unknown =
-    * fail the probe, matching [[inputBytes]]'s conservatism without its
-    * stat-fallback telemetry (this probe is advisory, not a sizing input).
+    * fail the probe (this probe is advisory, not a sizing input).
     */
   private def driverScaleFiles(
       files: Seq[String],
@@ -1658,11 +1545,8 @@ final class AcidTable private (
     if (keyStrings.isEmpty) return latestVersion()
     val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToCatalystConverter(schema(pkCol).dataType)
-    var attempt = 0
-    while (true) {
-      val base = latestVersion()
-      if (base < 0) return base // empty table: nothing to delete
-      val baseView = rootView(base)
+    timeline.occ { base =>
+      val baseView = timeline.rootView(base)
       // resolve the keys' LIVE cells against the DV-applied base snapshot:
       // a bucket-pruned scan (lookupFiles) whose result is ≤ |keys| rows.
       // Only keys that currently match a live row become entries. Driver
@@ -1670,7 +1554,7 @@ final class AcidTable private (
       // a point delete are metadata-scale, so the probe runs on the same
       // driver row kernels DML uses — a MOR delete is then zero Spark
       // jobs end-to-end; outside the gate the distributed probe runs.
-      val pairs = localLookupRowsIn(baseView, keyStrings, hint).map { rows =>
+      lazy val pairs = localLookupRowsIn(baseView, keyStrings, hint).map { rows =>
         rows.map(r => (rowPart(r),
           String.valueOf(r.get(pkFieldIdx, schema(pkFieldIdx).dataType)))).distinct
       }.getOrElse {
@@ -1681,37 +1565,28 @@ final class AcidTable private (
           .select(col(partitionCol).cast(StringType), col(pkCol).cast(StringType))
           .collect().map(r => (r.getString(0), r.getString(1))).toSeq.distinct
       }
-      if (pairs.isEmpty) return base // no live row matches: no-op, no commit
-      val entries = pairs.map { case (p, k) =>
-        DvEntry(p, driverBucketOf(toInternal(castKeyTo(k))), k)
-      }
-      val touched = entries.map(e => FileCell(e.part, e.bucket)).distinct
-      try {
+      // empty table, or no live row matches: no-op, no commit
+      if (base < 0 || pairs.isEmpty) base
+      else {
+        val entries = pairs.map { case (p, k) =>
+          DvEntry(p, driverBucketOf(toInternal(castKeyTo(k))), k)
+        }
         // data files and sizes carry verbatim — this commit rewrites
         // nothing, so prior entries (even of our own cells) stay live.
         // Segmented base: EVERY root line reuses verbatim (round 14) —
         // a DV commit is O(matched keys) metadata however large the table
-        publishDvOnly(base, baseView, touched, (baseView.dvs ++ entries).distinct)
-        return base + 1
-      } catch {
-        case _: FileAlreadyExistsException =>
-          attempt += 1
-          if (attempt > MaxRetries)
-            throw new CommitConflictException(s"gave up after $MaxRetries conflicts at $path")
-          AcidTable.conflictRedoCounter.incrementAndGet()
-          val cap = math.min(1L << math.min(attempt, 8), 256L)
-          Thread.sleep(java.util.concurrent.ThreadLocalRandom.current().nextLong(cap * 2) + 1)
+        publishDvOnly(base, baseView, entries)
+        base + 1
       }
     }
-    -1L // unreachable
   }
 
   /** Publish a DV-only commit on top of `base`: no data file changes, so
     * EVERY root line carries verbatim — the commit is O(matched keys)
     * metadata however large the table (round 14). */
-  private def publishDvOnly(
-      base: Long, baseView: RootView, touched: Seq[FileCell], dvs: Seq[DvEntry]): Unit =
-    publish(base + 1, Nil, touched, Map.empty, "DELETE_DV", dvs,
+  private def publishDvOnly(base: Long, baseView: RootView, entries: Seq[DvEntry]): Unit =
+    publish(base + 1, Nil, entries.map(e => FileCell(e.part, e.bucket)).distinct, Map.empty,
+      "DELETE_DV", (baseView.dvs ++ entries).distinct,
       reuseRootLines = baseView.refLines,
       rli = AcidTable.RliInherit) // removal-only: refs AND completeness carry
 
@@ -1730,40 +1605,28 @@ final class AcidTable private (
   private def deleteVectoredWhere(condition: Column): Option[Long] = {
     val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToCatalystConverter(schema(pkCol).dataType)
-    var attempt = 0
-    while (true) {
-      val base = latestVersion()
-      if (base < 0) return Some(base) // empty table: nothing to delete
-      val baseView = rootView(base)
+    timeline.occ { base =>
+      val baseView = timeline.rootView(base)
       // matched rows ARE live rows of the current snapshot (DV-applied),
       // so one filtered scan yields the (partition, pk) pairs directly
-      val matched = applyDvs(
+      lazy val matched = applyDvs(
         snapshotFromFiles(baseView.files, baseView.sizes), baseView.dvs)
         .filter(condition)
         .select(col(partitionCol).cast(StringType), col(pkCol).cast(StringType))
         .distinct().limit(AcidTable.MorMaxKeys + 1).collect()
-      if (matched.length > AcidTable.MorMaxKeys) return None
-      if (matched.exists(_.isNullAt(1))) return None // NULL pk: only a rewrite removes it
-      if (matched.isEmpty) return Some(base) // no live row matches: no-op, no commit
-      val entries = matched.map { r =>
-        val k = r.getString(1)
-        DvEntry(r.getString(0), driverBucketOf(toInternal(castKeyTo(k))), k)
-      }.toSeq.distinct
-      val touched = entries.map(e => FileCell(e.part, e.bucket)).distinct
-      try {
-        publishDvOnly(base, baseView, touched, (baseView.dvs ++ entries).distinct)
-        return Some(base + 1)
-      } catch {
-        case _: FileAlreadyExistsException =>
-          attempt += 1
-          if (attempt > MaxRetries)
-            throw new CommitConflictException(s"gave up after $MaxRetries conflicts at $path")
-          AcidTable.conflictRedoCounter.incrementAndGet()
-          val cap = math.min(1L << math.min(attempt, 8), 256L)
-          Thread.sleep(java.util.concurrent.ThreadLocalRandom.current().nextLong(cap * 2) + 1)
+      if (base < 0) Some(base) // empty table: nothing to delete
+      else if (matched.length > AcidTable.MorMaxKeys) None
+      else if (matched.exists(_.isNullAt(1))) None // NULL pk: only a rewrite removes it
+      else if (matched.isEmpty) Some(base) // no live row matches: no-op, no commit
+      else {
+        val entries = matched.map { r =>
+          val k = r.getString(1)
+          DvEntry(r.getString(0), driverBucketOf(toInternal(castKeyTo(k))), k)
+        }.toSeq.distinct
+        publishDvOnly(base, baseView, entries)
+        Some(base + 1)
       }
     }
-    None // unreachable
   }
 
   /** Register the CURRENT snapshot as a temp view (reference A13 surface). */
@@ -2110,7 +1973,7 @@ final class AcidTable private (
     if (v < 0) return Nil
     // the partition inventory IS the root's reference list —
     // O(partitions) read, no segment resolution at all
-    rootView(v).segRefs.map(r => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    timeline.rootView(v).segRefs.map(r => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(r.partDir.stripPrefix(s"$partitionCol=")))
       .distinct.sorted
   }
@@ -2129,7 +1992,7 @@ final class AcidTable private (
       spark.sparkContext.emptyRDD[Row], invSchema)
     // count and bytes ride the reference line — the whole inventory
     // costs ONE root read, zero segment resolutions
-    val rows = rootView(v).segRefs
+    val rows = timeline.rootView(v).segRefs
       .map(r => (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(r.partDir.stripPrefix(s"$partitionCol=")), r.count, r.bytes))
       .sortBy(_._1)
@@ -2144,7 +2007,7 @@ final class AcidTable private (
     val detailSchema = AcidTable.DetailSchema
     val v = latestVersion()
     // the one-row summary costs ONE root read (no page expansion)
-    val (nFiles, bytes, nParts) = rootView(v).totals
+    val (nFiles, bytes, nParts) = timeline.rootView(v).totals
     // '; ' separator: property VALUES may contain commas (bloomColumns)
     val props = tableProperties.toSeq.sortBy(_._1)
       .map { case (k, pv) => s"$k=$pv" }.mkString("; ")
@@ -2173,9 +2036,12 @@ final class AcidTable private (
     *    flag is set AND every ref resolves); heal: [[fsckRepair]] or
     *    [[rebuildRecordIndex]].
     *  - `unsupported_root_format` — a retained root fails the one format
-    *    check every read applies (see [[rootView]]): no readable
-    *    version of this build can use it. Not repairable; heal:
+    *    check every read applies (see [[Timeline.rootView]]): no
+    *    readable version of this build can use it. Not repairable; heal:
     *    [[restore]] to an intact version.
+    *  - `missing_root` — a root inside the retained window (newer than
+    *    the oldest root on disk) is gone, so the version cannot be read.
+    *    Not repairable; heal: [[restore]] to an intact version.
     *  - `stale_quarantine` — a `.gc-*` quarantine file older than
     *    `graceMs` (a GC crashed between quarantine and its delete/restore
     *    decision). Safe to delete once no root references its content;
@@ -2214,19 +2080,23 @@ final class AcidTable private (
         lines.foreach { l =>
           val p = l.substring(1).split("\\|", -1)
           p.lift(1).filter(n => n.nonEmpty && seenSegs.add(n)).foreach { n =>
-            if (!Files.exists(segmentsDir.resolve(n)))
+            if (!timeline.contentExists(n))
               out += (("dangling_segment_ref", v, n,
                 java.net.URLDecoder.decode(p(0), "UTF-8")))
           }
         }
       // a version archived by a concurrent vacuum mid-walk has left the
       // retained window: nothing to check
-      (oldestRetainedVersion(latest) to latest).foreach { v =>
+      (timeline.oldestRetainedVersion(latest) to latest).foreach { v =>
         val view =
-          try rootView(v)
+          try timeline.rootView(v)
           catch {
             case e: IllegalStateException =>
-              out += (("unsupported_root_format", v, manifestFileName(v), e.getMessage))
+              out += (("unsupported_root_format", v, Timeline.manifestFileName(v), e.getMessage))
+              RootView.Empty
+            case _: java.nio.file.NoSuchFileException =>
+              out += (("missing_root", v, Timeline.manifestFileName(v),
+                "root missing inside the retained window; heal: restore to an intact version"))
               RootView.Empty
             case _: CommitConflictException => RootView.Empty
           }
@@ -2239,10 +2109,10 @@ final class AcidTable private (
         raw.filter(_.startsWith("@@")).foreach { l =>
           val n = RootView.pageName(l)
           if (n.nonEmpty && seenPages.add(n)) {
-            if (!Files.exists(segmentsDir.resolve(n)))
+            if (!timeline.contentExists(n))
               out += (("dangling_page_ref", v, n,
                 "paged root; heal: fsckRepair or restore to an intact version"))
-            else checkSegLines(v, scala.util.Try(readPage(n)).toOption.toSeq.flatten
+            else checkSegLines(v, scala.util.Try(timeline.readPage(n)).toOption.toSeq.flatten
               .filter(l2 => l2.startsWith("@") && !l2.startsWith("@@")))
           }
         }
@@ -2255,7 +2125,7 @@ final class AcidTable private (
         // damaged table never pays the GC-race retry ladder per version
         var genMissingHere = false
         view.rli.gen.foreach { case (n, _) =>
-          if (!Files.exists(segmentsDir.resolve(n))) {
+          if (!timeline.contentExists(n)) {
             genMissingHere = true
             if (seenRli.add(n))
               out += (("dangling_rli_ref", v, n,
@@ -2266,19 +2136,15 @@ final class AcidTable private (
           if (genMissingHere) view.rli.inline
           else scala.util.Try(rliRefsOf(view.rli)).getOrElse(view.rli.inline)
         refsToCheck.foreach { ref =>
-          if (seenRli.add(ref.name) && !Files.exists(segmentsDir.resolve(ref.name)))
+          if (seenRli.add(ref.name) && !timeline.contentExists(ref.name))
             out += (("dangling_rli_ref", v, ref.name,
               "record index; heal: fsckRepair or rebuildRecordIndex"))
         }
       }
     }
-    if (Files.exists(segmentsDir)) {
-      val cutoff = System.currentTimeMillis() - graceMs
-      Option(segmentsDir.toFile.listFiles()).getOrElse(Array.empty).foreach { f =>
-        if (f.getName.startsWith(".gc-") && f.lastModified() < cutoff)
-          out += (("stale_quarantine", -1L, f.getName,
-            "quarantined by vacuum, never resolved; swept by the next vacuum"))
-      }
+    timeline.staleQuarantine(System.currentTimeMillis() - graceMs).foreach { n =>
+      out += (("stale_quarantine", -1L, n,
+        "quarantined by vacuum, never resolved; swept by the next vacuum"))
     }
     out.toSeq
   }
@@ -2308,45 +2174,23 @@ final class AcidTable private (
     import spark.implicits._
     val found = findings(graceMs)
     // content of every stale quarantine, hashed once — the recovery pool
-    val quarantine: Map[String, Path] =
-      if (!Files.exists(segmentsDir)) Map.empty
-      else Option(segmentsDir.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(".gc-")).flatMap { f =>
-          scala.util.Try {
-            val body = new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-            AcidTable.sha1Hex(body) -> f.toPath
-          }.toOption
-        }.toMap
+    val quarantine = timeline.quarantineByHash()
     def sha1OfName(n: String): String =
       n.stripSuffix(".txt").dropWhile(_ != '-').drop(1)
     val claimed = scala.collection.mutable.Set.empty[String]
     val repaired = found.map { case (kind, v, name, detail) =>
       val action = kind match {
         case "dangling_segment_ref" | "dangling_page_ref" | "dangling_rli_ref" =>
-          val target = segmentsDir.resolve(name)
-          val cached: Option[String] =
-            if (kind == "dangling_page_ref")
-              AcidTable.pageCache.get((path, name)).map(_.mkString("\n"))
-            else if (kind == "dangling_segment_ref")
-              AcidTable.cachedSegmentBody(path, name)
-            else if (name.startsWith("rlg-"))
-              AcidTable.rliGenCache.get((path, name)).map(_._2)
-            else AcidTable.rliCache.get((path, name)).map(_.body)
-          cached match {
+          timeline.cachedBody(name) match {
             case Some(body) if AcidTable.sha1Hex(body) == sha1OfName(name) =>
-              ensureSegment(name, body)
+              timeline.writeContent(name, body)
               "repaired_from_cache"
             case _ => quarantine.get(sha1OfName(name)) match {
               case Some(q) =>
-                claimed += q.getFileName.toString
-                try {
-                  Files.move(q, target, StandardCopyOption.ATOMIC_MOVE)
-                  "repaired_from_quarantine"
-                } catch {
-                  case _: java.io.IOException =>
-                    // a racing publisher/GC restored it first — verify
-                    if (Files.exists(target)) "repaired_from_quarantine" else "unrecoverable"
-                }
+                claimed += q
+                // false: neither we nor a racing publisher/GC restored it
+                if (timeline.unquarantine(q, name)) "repaired_from_quarantine"
+                else "unrecoverable"
               case None => "unrecoverable"
             }
           }
@@ -2354,7 +2198,7 @@ final class AcidTable private (
           // content claimed by a dangling ref above is MOVED, not swept;
           // everything else is a crashed GC's leftover past grace
           if (claimed.contains(name)) "repaired_from_quarantine"
-          else { Files.deleteIfExists(segmentsDir.resolve(name)); "swept" }
+          else { timeline.deleteContent(name); "swept" }
         case _ => "unrecoverable"
       }
       (kind, v, name, detail, action)
@@ -2374,12 +2218,12 @@ final class AcidTable private (
     val latest = latestVersion()
     val rows =
       if (latest < 0) Seq.empty
-      else (oldestRetainedVersion(latest) to latest).map { v =>
+      else (timeline.oldestRetainedVersion(latest) to latest).map { v =>
         // header + per-partition tallies all live in the root: the whole
         // timeline costs O(retained versions) ROOT reads, no segments —
         // and on PAGED roots no page expansion either (the `@@` refs
         // carry (files, bytes) aggregates, round 15)
-        val view = rootView(v)
+        val view = timeline.rootView(v)
         val (nFiles, bytes, _) = view.totals
         (v, view.op, view.ts, nFiles, view.touched.size.toLong, bytes)
       }
@@ -2388,27 +2232,23 @@ final class AcidTable private (
   }
 
   /** Bytes the given manifest files occupy, from the sizes their segments
-    * recorded (one stat fallback per file published without a size,
-    * counted like the write-sizing fallback). The planner-statistics
+    * recorded. The planner-statistics
     * surface: scan size estimates come from commit metadata, never from
     * listing or footer-probing a 100 TB table's object store.
     */
   private[lake] def filesBytes(files: Seq[String], version: Long): Long =
-    filesBytesIn(rootView(version), files)
+    filesBytesIn(timeline.rootView(version), files)
 
   private def filesBytesIn(view: RootView, files: Seq[String]): Long = {
     val sizes = sizesForFiles(view, files)
-    files.iterator.map(f => sizes.getOrElse(f, {
-      AcidTable.sizeStatFallbacks.incrementAndGet()
-      dataRoot.resolve(f).toFile.length()
-    })).sum
+    files.iterator.map(sizes).sum
   }
 
   /** Total live bytes of the pinned (default latest) snapshot, from
     * manifest metadata alone. */
   def liveBytes(version: Long = -1L): Long = {
     val v = if (version >= 0) version else latestVersion()
-    val view = rootView(v)
+    val view = timeline.rootView(v)
     filesBytesIn(view, view.files)
   }
 
@@ -2477,8 +2317,8 @@ final class AcidTable private (
   private def diffScope(fromVersion: Long, toVersion: Long)
       : (Seq[String], Seq[String], Map[String, Long], Map[String, Long],
          Seq[DvEntry], Seq[DvEntry]) = {
-    val fromView = rootView(fromVersion)
-    val toView = rootView(toVersion)
+    val fromView = timeline.rootView(fromVersion)
+    val toView = timeline.rootView(toVersion)
     val (fr, tr) = (fromView.segRefs, toView.segRefs)
     val (fromDvs, toDvs) = (fromView.dvs, toView.dvs)
     def byPd(dvs: Seq[DvEntry]): Map[String, Set[DvEntry]] =
@@ -2491,10 +2331,10 @@ final class AcidTable private (
         fDv.getOrElse(pd, Set.empty) != tDv.getOrElse(pd, Set.empty)
     }
     def scoped(refs: Seq[AcidTable.SegRef]): Seq[(String, Long)] =
-      refs.filter(r => changed(r.partDir)).flatMap(r => readSegment(r.name).entries)
+      refs.filter(r => changed(r.partDir)).flatMap(r => timeline.readSegment(r.name).entries)
     val fe = scoped(fr); val te = scoped(tr)
     (fe.map(_._1), te.map(_._1),
-      fe.filter(_._2 >= 0).toMap, te.filter(_._2 >= 0).toMap, fromDvs, toDvs)
+      fe.toMap, te.toMap, fromDvs, toDvs)
   }
 
   /** Driver image of [[changesBetween]] for trickle-scale diffs (round-11
@@ -2561,7 +2401,7 @@ final class AcidTable private (
       keys: Seq[String], version: Long = -1L,
       partitionsHint: Option[Seq[String]] = None)
       : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
-    localLookupRowsIn(rootView(if (version >= 0) version else latestVersion()),
+    localLookupRowsIn(timeline.rootView(if (version >= 0) version else latestVersion()),
       keys, partitionsHint)
 
   private def localLookupRowsIn(
@@ -2625,7 +2465,7 @@ final class AcidTable private (
     // materializer for deletion vectors (read once before the loop — a
     // concurrent MOR delete landing mid-compaction keeps its entries,
     // correctly, via the carried-DV rule)
-    val dvParts = rootView(latestVersion()).dvs.map(e => partDir(e.part)).toSet
+    val dvParts = timeline.rootView(latestVersion()).dvs.map(e => partDir(e.part)).toSet
     val v = commitLoop(
       touchedOf = (_, files) => {
         val byPartition = files().groupBy(f => f.takeWhile(_ != '/'))
@@ -2672,7 +2512,7 @@ final class AcidTable private (
       case Some(ps) => // scoped rewrite records stats for ONLY its partitions
         val dirs = ps.map(partDir).toSet
         recordStatsForFiles(
-          rootView(v).files.filter(f => dirs.contains(f.takeWhile(_ != '/'))), clusterBy)
+          timeline.rootView(v).files.filter(f => dirs.contains(f.takeWhile(_ != '/'))), clusterBy)
     }
     v
   }
@@ -2775,7 +2615,7 @@ final class AcidTable private (
     * — conservative, and a range predicate can't match their rows anyway.
     */
   private def recordClusterStats(version: Long, clusterBy: Seq[String]): Unit =
-    recordStatsForFiles(rootView(version).files, clusterBy)
+    recordStatsForFiles(timeline.rootView(version).files, clusterBy)
 
   /** One distributed pass over `files` recording per-file min/max of
     * `cols` — the clustered-compaction stats pass, generalized to any
@@ -3072,7 +2912,7 @@ final class AcidTable private (
       val memo = idx.lastSlice
       if (memo != null && memo._1 == key) memo._2
       else {
-        val parsed = AcidTable.bloomCache.get(key).getOrElse {
+        val parsed = AcidTable.bloomCache.get(path, key).getOrElse {
           val p = scala.util.Try {
             val raf = new java.io.RandomAccessFile(segPath.toFile, "r")
             try {
@@ -3083,7 +2923,7 @@ final class AcidTable private (
                 new java.io.ByteArrayInputStream(buf)))
             } finally raf.close()
           }.getOrElse(Map.empty[String, org.apache.spark.util.sketch.BloomFilter])
-          AcidTable.bloomCache.put(key, p)
+          AcidTable.bloomCache.put(path, key, p)
           p
         }
         idx.lastSlice = (key, parsed)
@@ -3391,7 +3231,7 @@ final class AcidTable private (
       version: Long = -1L,
       partitions: Option[Seq[String]] = None,
       nullChecks: Seq[(String, Boolean)] = Nil): Seq[String] =
-    prunedFilesIn(rootView(if (version >= 0) version else latestVersion()),
+    prunedFilesIn(timeline.rootView(if (version >= 0) version else latestVersion()),
       bounds, equals, partitions, nullChecks)
 
   private def prunedFilesIn(
@@ -3440,7 +3280,7 @@ final class AcidTable private (
       nullChecks: Seq[(String, Boolean)],
       version: Long): Option[org.apache.spark.sql.graft.AcidBatchScanPlan] = {
     if (renamedCols.nonEmpty) return None
-    val view = rootView(if (version >= 0) version else latestVersion())
+    val view = timeline.rootView(if (version >= 0) version else latestVersion())
     val dvs = view.dvs
     if (dvs.nonEmpty && (!keyCastSupported || pkCol == partitionCol)) return None
     val rels: Seq[String] = pkKeys match {
@@ -3466,12 +3306,8 @@ final class AcidTable private (
     val files = rels.map { f =>
       val pv = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(f.takeWhile(_ != '/').stripPrefix(s"$partitionCol="))
-      val size = sizes.getOrElse(f, {
-        AcidTable.sizeStatFallbacks.incrementAndGet()
-        dataRoot.resolve(f).toFile.length()
-      })
       org.apache.spark.sql.graft.AcidBatchFile(
-        f, dataRoot.resolve(f).toString, pv, size, fileBucketOf(f), dvKeysFor(f))
+        f, dataRoot.resolve(f).toString, pv, sizes(f), fileBucketOf(f), dvKeysFor(f))
     }
     val pkDt = schema(pkCol).dataType
     val bucketsOf: Seq[Any] => Option[Set[Int]] =
@@ -3499,7 +3335,7 @@ final class AcidTable private (
       version: Long = -1L,
       partitions: Option[Seq[String]] = None,
       nullChecks: Seq[(String, Boolean)] = Nil): DataFrame = explicitVersionRead(version) {
-    val view = rootView(if (version >= 0) version else latestVersion())
+    val view = timeline.rootView(if (version >= 0) version else latestVersion())
     // sizes scoped to the PRUNED list (segment-resolved per partition) —
     // every live file's size would be O(live files) for a read whose
     // point is to touch a handful of them
@@ -3674,7 +3510,7 @@ final class AcidTable private (
     */
   private[graft] def rangePrunedFiles(
       bounds: Map[String, (Long, Long)], version: Long = -1L): Seq[String] =
-    rangePrunedIn(rootView(if (version >= 0) version else latestVersion()), bounds)
+    rangePrunedIn(timeline.rootView(if (version >= 0) version else latestVersion()), bounds)
 
   private def rangePrunedIn(view: RootView, bounds: Map[String, (Long, Long)]): Seq[String] = {
     if (bounds.isEmpty) return view.files
@@ -3687,7 +3523,7 @@ final class AcidTable private (
       r.pstats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
     })
     if (keep.isEmpty) return Nil
-    val candidates = keep.flatMap(r => readSegment(r.name).entries.map(_._1))
+    val candidates = keep.flatMap(r => timeline.readSegment(r.name).entries.map(_._1))
     val stats = readClusterStats()
     candidates.filter { f =>
       stats.get(f).forall(cols => bounds.forall { case (c, (lo, hi)) =>
@@ -3704,7 +3540,7 @@ final class AcidTable private (
     */
   def snapshotRange(bounds: Map[String, (Long, Long)], version: Long = -1L): DataFrame =
       explicitVersionRead(version) {
-    val view = rootView(if (version >= 0) version else latestVersion())
+    val view = timeline.rootView(if (version >= 0) version else latestVersion())
     val files = rangePrunedIn(view, bounds)
     applyDvs(snapshotFromFiles(files, sizesForFiles(view, files)), view.dvs)
   }
@@ -3723,9 +3559,9 @@ final class AcidTable private (
     val files = scala.collection.mutable.Set.empty[String]
     val seenSegs = scala.collection.mutable.Set.empty[String]
     (liveFrom to latest).foreach { v =>
-      rootView(v).segRefs.iterator.map(_.name)
+      timeline.rootView(v).segRefs.iterator.map(_.name)
         .filter(n => n.nonEmpty && seenSegs.add(n))
-        .foreach(n => readSegment(n).entries.foreach(files += _._1))
+        .foreach(n => timeline.readSegment(n).entries.foreach(files += _._1))
     }
     files.toSet
   }
@@ -3747,11 +3583,11 @@ final class AcidTable private (
     val keepFrom = math.max(0L, latest - keepVersions + 1)
     val cutoff = System.currentTimeMillis() - graceMillis
     val pinned = taggedVersions()
-    val archivable = (oldestRetainedVersion(latest) until keepFrom)
-      .takeWhile(v => rootView(v + 1).ts < cutoff && !pinned.contains(v))
+    val archivable = (timeline.oldestRetainedVersion(latest) until keepFrom)
+      .takeWhile(v => timeline.rootView(v + 1).ts < cutoff && !pinned.contains(v))
     // liveness anchored where the REAL run would anchor it: the oldest
     // manifest that would remain on disk after the archival above
-    val liveFromAfter = oldestRetainedVersion(latest) + archivable.size
+    val liveFromAfter = timeline.oldestRetainedVersion(latest) + archivable.size
     val live = liveDataFiles(liveFromAfter, latest)
     val deadData = Option(dataRoot.toFile.listFiles()).getOrElse(Array.empty).toSeq
       .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty).toSeq)
@@ -3762,7 +3598,7 @@ final class AcidTable private (
       }
       .map(f => ("data", s"${f.getParentFile.getName}/${f.getName}", f.length()))
     val manifests = archivable.map(v =>
-      ("manifest", manifestFileName(v), manifestPath(v).toFile.length()))
+      ("manifest", Timeline.manifestFileName(v), timeline.rootBytes(v)))
     (manifests ++ deadData).toDF("kind", "name", "bytes").orderBy("kind", "name")
   }
 
@@ -3798,12 +3634,9 @@ final class AcidTable private (
     // the monotone-existence contract the binary searches rely on), so a
     // tagged snapshot stays readable by name regardless of keepVersions
     val pinned = taggedVersions()
-    (oldestRetainedVersion(latest) until keepFrom)
-      .takeWhile(v => rootView(v + 1).ts < cutoff && !pinned.contains(v))
-      .foreach { v =>
-        Files.deleteIfExists(manifestPath(v))
-        ()
-      }
+    (timeline.oldestRetainedVersion(latest) until keepFrom)
+      .takeWhile(v => timeline.rootView(v + 1).ts < cutoff && !pinned.contains(v))
+      .foreach(timeline.archive)
     // ONE liveness anchor for every GC pass (data files, segments, pages,
     // index runs): the oldest manifest still ON DISK after archival — not
     // the version-count window. The grace window keeps superseded
@@ -3814,7 +3647,7 @@ final class AcidTable private (
     // dereferenced file also survives as long as the youngest manifest
     // referencing it — the manifest IS the deletion tombstone, so grace
     // bounds reader exposure even for files whose own mtime is ancient.
-    val liveFrom = oldestRetainedVersion(latest)
+    val liveFrom = timeline.oldestRetainedVersion(latest)
     val live: Set[String] = liveDataFiles(liveFrom, latest)
     // steady-state sweep is 8-way over PARTITION DIRECTORIES (round-16
     // verdict #4: the per-file listing + mtime probe + delete loop was
@@ -3878,129 +3711,93 @@ final class AcidTable private (
     // same age guard protects a concurrent publisher's freshly-written
     // segments; publishImpl additionally re-asserts its segments after
     // its root links, so even a racing reuse-then-GC resolves safely.
-    if (Files.exists(segmentsDir)) {
-      // seg liveness reads EXPANDED roots (paged roots list their seg
-      // refs inside pages); page liveness reads RAW roots (`@@` refs) —
-      // raw reads cannot fail on a missing page, so page GC stays sound
-      // even against a root whose expansion would throw. An expansion (or
-      // raw-read) FAILURE for a scanned version must not read as "that
-      // version references nothing": one unreadable page would silently
-      // drop the whole version's segment refs from the live set and let
-      // the GC delete segments the root still needs — a dangling page
-      // escalating to losing the version's metadata. The failure flag
-      // ABORTS ref GC for this cycle instead (fsck reports the dangling
-      // page for healing); data-file/temp sweeps above are unaffected.
-      // one generation-expansion memo for ALL refsOf passes this cycle
-      val genMemo =
-        scala.collection.mutable.Map.empty[String, Option[Seq[AcidTable.RliRef]]]
-      def refsOf(vs: Iterator[Long]): (Set[String], Set[String], Boolean) = {
-        val segs = scala.collection.mutable.Set.empty[String]
-        val pgs = scala.collection.mutable.Set.empty[String]
-        var ok = true
-        vs.foreach { v =>
-          scala.util.Try(rootView(v)) match {
-            case scala.util.Success(view) =>
-              view.rawRefLines.foreach { l =>
-                if (l.startsWith("@@")) pgs += RootView.pageName(l)
-              }
-              // record-index runs share the segment GC (rli-/rlg-
-              // prefixes, tracked in the PAGE set: all are
-              // raw-root-header refs with identical liveness/quarantine
-              // semantics). The generation SIDE FILE is live alongside
-              // its members; an unreadable side file must abort ref GC
-              // (treating it as "references nothing" would delete every
-              // generation shard the root still needs). Expansion
-              // failures are memoized per NAME for this pass — many
-              // retained versions reference one generation, and a
-              // missing file must not pay the retry ladder per version
-              view.rli.gen match {
-                case None => view.rli.inline.foreach(r => pgs += r.name)
-                case Some((n, _)) =>
-                  pgs += n
-                  genMemo.getOrElseUpdate(n,
-                    scala.util.Try(readRliGen(n)).toOption) match {
-                    case Some(members) =>
-                      (members ++ view.rli.inline).foreach(r => pgs += r.name)
-                    case None =>
-                      ok = false
-                      view.rli.inline.foreach(r => pgs += r.name)
-                  }
-              }
-              scala.util.Try(view.segRefs) match {
-                case scala.util.Success(refs) => refs.foreach(r => segs += r.name)
-                case scala.util.Failure(_) => ok = false
-              }
-            case scala.util.Failure(_) => ok = false
-          }
-        }
-        (segs.toSet, pgs.toSet, ok)
-      }
-      val (liveSegs, livePages, scanOk) = refsOf((liveFrom to latest).iterator)
-      // re-read roots published AFTER our scan window right before the
-      // delete pass: a publisher that reused a pre-cutoff segment has its
-      // root visible by now (and its post-link re-assert TOUCHES the
-      // segment, so even a root landing after this re-read is protected
-      // by the age guard)
-      val latestNow = latestVersion()
-      val (lateSegs, latePages, lateOk) =
-        if (latestNow <= latest) (Set.empty[String], Set.empty[String], true)
-        else refsOf(((latest + 1) to latestNow).iterator)
-      val allLive = liveSegs ++ lateSegs
-      val allLivePages = livePages ++ latePages
-      val refGcSafe = scanOk && lateOk
-      def deadRef(name: String): Boolean =
-        refGcSafe && (
-          (name.startsWith("seg-") && !allLive.contains(name)) ||
-            ((name.startsWith("page-") || name.startsWith("rli-") ||
-              name.startsWith("rlg-")) &&
-              !allLivePages.contains(name)))
-      Option(segmentsDir.toFile.listFiles()).getOrElse(Array.empty).foreach { f =>
-        val name = f.getName
-        if ((name.startsWith(".tmp-") || name.startsWith(".gc-"))
-            && f.lastModified() < cutoff) {
-          f.delete() // orphaned publisher/GC temp
-          ()
-        } else if (deadRef(name) && f.lastModified() < cutoff) {
-          // quarantine-then-recheck (not a bare delete): re-read the mtime
-          // at the last instant (a publisher touches reused segments both
-          // before its root links and in its post-link re-assert, so a
-          // fresh touch means a live reuse is in flight), then RENAME the
-          // segment aside atomically and re-read the root set once more.
-          // A root that linked before the recheck restores the segment
-          // from quarantine; one that links after is healed by its own
-          // publisher's post-link re-assert, which finds the segment
-          // missing and REWRITES it (ensureSegment is write-if-absent
-          // with the body in hand). Residual best-effort window: a
-          // publisher that crashes between its root link and its re-assert
-          // while this GC's recheck ran before that link — same order of
-          // improbability as a crash mid-commit, and detectable (the root
-          // names a segment that no longer exists).
-          val q = segmentsDir.resolve(s".gc-${UUID.randomUUID()}")
-          val renamed = f.lastModified() < cutoff && (
-            try { Files.move(f.toPath, q, StandardCopyOption.ATOMIC_MOVE); true }
-            catch { case _: java.io.IOException => false })
-          if (renamed) {
-            val latestFinal = latestVersion()
-            val nowLive = latestNow < latestFinal && {
-              // an unreadable late root acquits: restore rather than delete
-              val (lateS, lateP, ok) = refsOf(((latestNow + 1) to latestFinal).iterator)
-              !ok || (if (name.startsWith("page-") || name.startsWith("rli-") ||
-                          name.startsWith("rlg-"))
-                        lateP.contains(name)
-                      else lateS.contains(name))
+    // seg liveness reads EXPANDED roots (paged roots list their seg
+    // refs inside pages); page liveness reads RAW roots (`@@` refs) —
+    // raw reads cannot fail on a missing page, so page GC stays sound
+    // even against a root whose expansion would throw. An expansion (or
+    // raw-read) FAILURE for a scanned version must not read as "that
+    // version references nothing": one unreadable page would silently
+    // drop the whole version's segment refs from the live set and let
+    // the GC delete segments the root still needs — a dangling page
+    // escalating to losing the version's metadata. The failure flag
+    // ABORTS ref GC for this cycle instead (fsck reports the dangling
+    // page for healing); data-file/temp sweeps above are unaffected.
+    // one generation-expansion memo for ALL refsOf passes this cycle
+    val genMemo =
+      scala.collection.mutable.Map.empty[String, Option[Seq[AcidTable.RliRef]]]
+    def refsOf(vs: Iterator[Long]): (Set[String], Set[String], Boolean) = {
+      val segs = scala.collection.mutable.Set.empty[String]
+      val pgs = scala.collection.mutable.Set.empty[String]
+      var ok = true
+      vs.foreach { v =>
+        scala.util.Try(timeline.rootView(v)) match {
+          case scala.util.Success(view) =>
+            view.rawRefLines.foreach { l =>
+              if (l.startsWith("@@")) pgs += RootView.pageName(l)
             }
-            if (nowLive) {
-              // restore; REPLACE_EXISTING is safe — content-addressed, so
-              // a concurrent publisher rewrite holds identical bytes
-              try Files.move(q, f.toPath, StandardCopyOption.ATOMIC_MOVE,
-                StandardCopyOption.REPLACE_EXISTING)
-              catch { case _: java.io.IOException => () }
-              ()
-            } else { Files.deleteIfExists(q); () }
-          }
+            // record-index runs share the segment GC (rli-/rlg-
+            // prefixes, tracked in the PAGE set: all are
+            // raw-root-header refs with identical liveness/quarantine
+            // semantics). The generation SIDE FILE is live alongside
+            // its members; an unreadable side file must abort ref GC
+            // (treating it as "references nothing" would delete every
+            // generation shard the root still needs). Expansion
+            // failures are memoized per NAME for this pass — many
+            // retained versions reference one generation, and a
+            // missing file must not pay the retry ladder per version
+            view.rli.gen match {
+              case None => view.rli.inline.foreach(r => pgs += r.name)
+              case Some((n, _)) =>
+                pgs += n
+                genMemo.getOrElseUpdate(n,
+                  scala.util.Try(timeline.readRliGen(n)).toOption) match {
+                  case Some(members) =>
+                    (members ++ view.rli.inline).foreach(r => pgs += r.name)
+                  case None =>
+                    ok = false
+                    view.rli.inline.foreach(r => pgs += r.name)
+                }
+            }
+            scala.util.Try(view.segRefs) match {
+              case scala.util.Success(refs) => refs.foreach(r => segs += r.name)
+              case scala.util.Failure(_) => ok = false
+            }
+          case scala.util.Failure(_) => ok = false
         }
       }
+      (segs.toSet, pgs.toSet, ok)
     }
+    val (liveSegs, livePages, scanOk) = refsOf((liveFrom to latest).iterator)
+    // re-read roots published AFTER our scan window right before the
+    // delete pass: a publisher that reused a pre-cutoff segment has its
+    // root visible by now (and its post-link re-assert TOUCHES the
+    // segment, so even a root landing after this re-read is protected
+    // by the age guard)
+    val latestNow = latestVersion()
+    val (lateSegs, latePages, lateOk) =
+      if (latestNow <= latest) (Set.empty[String], Set.empty[String], true)
+      else refsOf(((latest + 1) to latestNow).iterator)
+    val allLive = liveSegs ++ lateSegs
+    val allLivePages = livePages ++ latePages
+    val refGcSafe = scanOk && lateOk
+    def deadRef(name: String): Boolean =
+      refGcSafe && (
+        (name.startsWith("seg-") && !allLive.contains(name)) ||
+          ((name.startsWith("page-") || name.startsWith("rli-") ||
+            name.startsWith("rlg-")) &&
+            !allLivePages.contains(name)))
+    timeline.sweepStore(cutoff, deadRef, name => {
+      // the recheck: roots linked since the scan above (an unreadable
+      // late root acquits: restore rather than delete)
+      val latestFinal = latestVersion()
+      latestNow < latestFinal && {
+        val (lateS, lateP, ok) = refsOf(((latestNow + 1) to latestFinal).iterator)
+        !ok || (if (name.startsWith("page-") || name.startsWith("rli-") ||
+                    name.startsWith("rlg-"))
+                  lateP.contains(name)
+                else lateS.contains(name))
+      }
+    })
     removed
   }
 
@@ -4023,7 +3820,7 @@ final class AcidTable private (
   def restore(toVersion: Long): Long = {
     require(toVersion >= 0, s"cannot restore to v$toVersion: no such version")
     val target =
-      try rootView(toVersion)
+      try timeline.rootView(toVersion)
       catch {
         // the read layer types a below-horizon manifest as a retriable
         // conflict (the archived-BASE race) — but restore names its
@@ -4040,31 +3837,19 @@ final class AcidTable private (
         s" (first: ${missing.headOption.getOrElse("")})")
     def partOf(f: String) = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .unescapePathName(f.takeWhile(_ != '/').stripPrefix(s"$partitionCol="))
-    var attempt = 0
-    while (true) {
-      val base = latestVersion()
+    timeline.occ { base =>
       require(toVersion <= base, s"restore target v$toVersion does not exist (latest: v$base)")
-      val baseFiles = rootView(base).files
+      val baseFiles = timeline.rootView(base).files
       val touched = (files ++ baseFiles).map(partOf).distinct.map(FileCell(_, -1))
-      try {
-        // the restored state includes the target version's outstanding MOR
-        // deletes — without them the restore would resurrect DV'd rows.
-        // The record index follows the manifest: the TARGET version's refs
-        // and completeness describe exactly the restored content (its runs
-        // are live — the target is retained, so vacuum kept them)
-        publish(base + 1, files, touched, target.sizes, "RESTORE", target.dvs,
-          rli = AcidTable.RliSet(rliRefsOf(target.rli), target.rli.done))
-        return base + 1
-      } catch {
-        case _: FileAlreadyExistsException =>
-          attempt += 1
-          if (attempt > MaxRetries)
-            throw new CommitConflictException(s"gave up after $MaxRetries conflicts at $path")
-          Thread.sleep(
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(64) + 1)
-      }
+      // the restored state includes the target version's outstanding MOR
+      // deletes — without them the restore would resurrect DV'd rows.
+      // The record index follows the manifest: the TARGET version's refs
+      // and completeness describe exactly the restored content (its runs
+      // are live — the target is retained, so vacuum kept them)
+      publish(base + 1, files, touched, target.sizes, "RESTORE", target.dvs,
+        rli = AcidTable.RliSet(rliRefsOf(target.rli), target.rli.done))
+      base + 1
     }
-    -1L // unreachable
   }
 
   /** Zero-copy snapshot clone — the SHALLOW CLONE surface (Delta's
@@ -4096,7 +3881,7 @@ final class AcidTable private (
         columnDefaults)
     val dest = AcidTable.open(spark, destPath)
     if (v < 0) return dest // empty source → empty clone
-    val srcView = rootView(v)
+    val srcView = timeline.rootView(v)
     val files = srcView.files
     val destData = Paths.get(destPath, DataDir)
     files.foreach { f =>
@@ -4150,14 +3935,7 @@ final class AcidTable private (
     // content-addressed files — copy the bytes, carry the refs + the
     // completeness flag of the CLONED version (round 16)
     val srcRli = rliRefsOf(srcView.rli)
-    srcRli.foreach { r =>
-      val from = segmentsDir.resolve(r.name)
-      if (Files.exists(from))
-        AcidTable.writeContentFile(
-          Paths.get(destPath, CommitsDir, AcidTable.SegmentsDir).toString,
-          r.name,
-          new String(Files.readAllBytes(from), StandardCharsets.UTF_8))
-    }
+    srcRli.foreach(r => dest.timeline.adopt(timeline, r.name))
     // outstanding MOR deletes travel with the pinned snapshot (inline
     // entries: nothing extra to link)
     dest.publish(0L, files, touched, srcView.sizes, "CLONE", srcView.dvs,
@@ -4301,8 +4079,8 @@ final class AcidTable private (
     def valueOfDir(d: String): String =
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(d.stripPrefix(s"$partitionCol="))
-    val head = br.rootView(headB)
-    val forkView = rootView(fork)
+    val head = br.timeline.rootView(headB)
+    val forkView = timeline.rootView(fork)
     // delta vs the fork: a partition whose `@` line is byte-identical
     // (same content-addressed segment, same counts/stats) is untouched and
     // carries verbatim; everything else resolves through the branch's
@@ -4315,7 +4093,7 @@ final class AcidTable private (
       ((bByDir.keySet ++ mByDir.keySet) -- reuse.map(RootView.refLineDir)).toSeq.sorted
     val entries = head.entriesFor(touchedDirs.toSet)
     val files = entries.map(_._1)
-    val sizes = entries.filter(_._2 >= 0).toMap
+    val sizes = entries.toMap
     // DV-only branch deletes are metadata commits: the partition's segment
     // line stays byte-identical (carried verbatim) while the root's #dvs=
     // header changes — the touched set must still cover those partitions,
@@ -4343,12 +4121,7 @@ final class AcidTable private (
     // carried side state, all content-addressed / idempotent: record-index
     // runs, bloom filters for the published files, cluster statistics
     val bRli = br.rliRefsOf(head.rli)
-    bRli.foreach { r =>
-      val from = br.segmentsDir.resolve(r.name)
-      if (Files.exists(from) && !Files.exists(segmentsDir.resolve(r.name)))
-        AcidTable.writeContentFile(segmentsDir.toString, r.name,
-          new String(Files.readAllBytes(from), StandardCharsets.UTF_8))
-    }
+    bRli.foreach(r => timeline.adopt(br.timeline, r.name))
     writeBloomSegment(files.flatMap { f =>
       val m = br.readBlooms(f)
       if (m.isEmpty) None
@@ -4382,7 +4155,7 @@ final class AcidTable private (
   // -------------------------------------------------------------------- tags --
   //
   // Named immutable snapshot refs (round 18c, the Iceberg tag surface):
-  // a tag is a name → version mapping under `_commits/_tags/` whose
+  // a tag is a name → version mapping in the timeline ([[Timeline.createTag]]) whose
   // target vacuum's timeline archival must RETAIN — "the exact corpus
   // snapshot run 1234 trained on" stays readable by name forever, not
   // just for keepVersions commits. Retention semantics on a LINEAR
@@ -4397,9 +4170,6 @@ final class AcidTable private (
   // anchor is already "oldest manifest on disk", which the pin holds at
   // or below the tagged version.
 
-  private def tagsDir: Path = commitsDir.resolve(AcidTable.TagsDir)
-  private def tagPath(name: String): Path = tagsDir.resolve(name)
-
   /** Tag `version` (default: current latest) as `name`. Tags are
     * immutable — re-tagging an existing name fails (drop it first) — and
     * purely numeric names are refused so `VERSION AS OF '<name>'` can
@@ -4412,25 +4182,16 @@ final class AcidTable private (
     val v = if (version >= 0) version else latest
     require(v >= 0, s"cannot tag an empty table ($path)")
     require(v <= latest, s"tag target v$v does not exist (latest: v$latest)")
-    require(Files.exists(manifestPath(v)),
+    require(timeline.rootExists(v),
       s"cannot tag v$v: manifest archived by vacuum " +
-        s"(oldest retained: v${oldestRetainedVersion(latest)})")
-    Files.createDirectories(tagsDir)
-    val tmp = tagsDir.resolve(s".tmp-${UUID.randomUUID()}")
-    Files.write(tmp, s"$v\n".getBytes(StandardCharsets.UTF_8))
-    try Files.createLink(tagPath(name), tmp)
-    catch {
-      case _: FileAlreadyExistsException =>
-        throw new IllegalArgumentException(
-          s"tag '$name' already exists on $path (tags are immutable; DROP TAG first)")
-    }
-    finally { Files.deleteIfExists(tmp); () }
+        s"(oldest retained: v${timeline.oldestRetainedVersion(latest)})")
+    timeline.createTag(name, v)
     // close the create-vs-archival race: a vacuum that read the tag set
     // just before this link may archive v concurrently — re-check and
     // withdraw the tag rather than leave a name pointing at a gutted
     // version
-    if (!Files.exists(manifestPath(v))) {
-      Files.deleteIfExists(tagPath(name))
+    if (!timeline.rootExists(v)) {
+      timeline.dropTag(name)
       throw new IllegalArgumentException(
         s"cannot tag v$v: manifest archived by a concurrent vacuum ($path)")
     }
@@ -4440,19 +4201,18 @@ final class AcidTable private (
   /** Remove a tag; its pinned versions become archivable at the next
     * vacuum. */
   def dropTag(name: String): Unit = {
-    require(Files.deleteIfExists(tagPath(name)), s"unknown tag '$name' on $path")
+    require(timeline.dropTag(name), s"unknown tag '$name' on $path")
     ()
   }
 
   /** (name, version) of every live tag, name-sorted. */
   def listTags(): Seq[(String, Long)] =
-    Option(tagsDir.toFile.list()).getOrElse(Array.empty).toSeq
-      .filterNot(_.startsWith(".")).sorted
+    timeline.tagNames().sorted
       .flatMap(n => scala.util.Try(tagVersion(n)).toOption.map(n -> _))
 
   /** The version tag `name` pins. */
   def tagVersion(name: String): Long =
-    try new String(Files.readAllBytes(tagPath(name)), StandardCharsets.UTF_8).trim.toLong
+    try timeline.readTag(name)
     catch {
       case _: java.nio.file.NoSuchFileException =>
         throw new IllegalArgumentException(s"unknown tag '$name' on $path")
@@ -4462,8 +4222,7 @@ final class AcidTable private (
   def snapshotTag(name: String): DataFrame = snapshot(tagVersion(name))
 
   private[lake] def taggedVersions(): Set[Long] =
-    Option(tagsDir.toFile.list()).getOrElse(Array.empty).toSeq
-      .filterNot(_.startsWith("."))
+    timeline.tagNames()
       .flatMap(n => scala.util.Try(tagVersion(n)).toOption).toSet
 
   // ------------------------------------------------------------ internals --
@@ -4754,7 +4513,7 @@ final class AcidTable private (
       // complete file list — the O(live-files) resolution is forced only
       // by discovery closures that genuinely scan the table (predicate
       // discovery, overwrite, compaction selection)
-      val baseView = rootView(base)
+      val baseView = timeline.rootView(base)
       // outstanding MOR deletes: every pre-image this commit reads — the
       // discovery snapshot, the distributed rewrite input, the driver
       // fast-path rows — must be DV-applied, or a rewrite of a DV'd cell
@@ -4894,7 +4653,7 @@ final class AcidTable private (
           // cells carry forward — including any a concurrent MOR delete
           // added since our base (its cells are disjoint, or we'd have
           // taken the conflict path)
-          val pubView = rootView(publishBase)
+          val pubView = timeline.rootView(publishBase)
           val carriedDvs = pubView.dvs.filterNot(e =>
             touched.exists(c => c.part == e.part && (c.bucket < 0 || c.bucket == e.bucket)))
           // write-time file statistics (opt-in via the statsColumns table
@@ -4907,7 +4666,7 @@ final class AcidTable private (
           if (pendingRli == null) {
             pendingRli =
               if (rliCarry) AcidTable.RliInherit
-              else computeRliUpdate(newFiles.map(_._1), statsLocalRows)
+              else computeRliUpdate(newFiles, statsLocalRows)
             if (rliReplace) pendingRli = pendingRli match {
               case AcidTable.RliAppend(refs) => AcidTable.RliSet(refs, done = true)
               case AcidTable.RliInherit => AcidTable.RliSet(Nil, done = true)
@@ -4952,8 +4711,7 @@ final class AcidTable private (
                 s"CAS commit lost the race at v${publishBase + 1} ($path)")
             }
             attempt += 1
-            if (attempt > MaxRetries)
-              throw new CommitConflictException(s"gave up after $MaxRetries conflicts at $path")
+            timeline.checkRetryBudget(attempt)
             // a conflict streak can hold staged files unpublished past the
             // GC age guard — staged files are referenced by NO manifest
             // yet, so their mtime is their only protection from a
@@ -4983,16 +4741,8 @@ final class AcidTable private (
               AcidTable.conflictRedoNanos.addAndGet(tRetry - fullRedoSince)
               fullRedoSince = -1L
             }
-            // capped exponential backoff with jitter: without it a writer
-            // that keeps losing the publish race can starve behind a
-            // faster peer until the retry budget drains (observed in the
-            // 1000-txn run as 100-conflict streaks). Applied per conflict
-            // CLASS below — a disjoint-cell re-merge retries immediately.
-            def backoff(): Unit = {
-              val cap = math.min(1L << math.min(attempt, 8), 256L)
-              Thread.sleep(
-                java.util.concurrent.ThreadLocalRandom.current().nextLong(cap * 2) + 1)
-            }
+            // the backoff is applied per conflict CLASS below — a
+            // disjoint-cell re-merge retries immediately
             val newBase = latestVersion()
             if (stablePartitions && !globalScope && !staleStaged) {
               // an intervening manifest with no #touched header has an
@@ -5009,19 +4759,19 @@ final class AcidTable private (
                 // disjoint-key conflict 1-3 ms for a merge that needs no
                 // rethinking). The backoff still arms on a losing STREAK,
                 // where it prevents starvation behind a faster peer.
-                if (attempt > 3) backoff()
+                if (attempt > 3) Timeline.backoff(attempt)
                 AcidTable.conflictRemergeCounter.incrementAndGet()
                 AcidTable.conflictRemergeNanos.addAndGet(System.nanoTime() - tRetry)
                 publishBase = newBase // fast path: re-merge manifests only
               } else {
-                backoff()
+                Timeline.backoff(attempt)
                 AcidTable.conflictRedoCounter.incrementAndGet()
                 // partial redo: drop only the stale (overlapping) cells'
                 // staged files and recompute THEM against the new
                 // snapshot; staged files of non-overlapping touched cells
                 // remain valid and are carried into the next publish
                 // attempt
-                val newBaseView = rootView(newBase)
+                val newBaseView = timeline.rootView(newBase)
                 val newSnapAll = newBaseView.files
                 // an intervening commit may have introduced bucketless
                 // files (older build) into an overlap partition — the
@@ -5073,7 +4823,7 @@ final class AcidTable private (
                 AcidTable.conflictRedoNanos.addAndGet(System.nanoTime() - tRetry)
               }
             } else {
-              backoff()
+              Timeline.backoff(attempt)
               AcidTable.conflictRedoCounter.incrementAndGet()
               // full redo: drop our orphaned files, re-apply on the new
               // snapshot. The clock stays open across the outer-loop
@@ -5207,24 +4957,13 @@ final class AcidTable private (
     */
   /** Sum of sizes of manifest-relative files — the scan volume a commit's
     * rewrite will read. Sizes come from the manifest's segments (recorded
-    * at publish); a stat is only the fallback for a file published
-    * without a size — steady state costs
-    * ZERO filesystem calls, which is what makes commit sizing free on an
-    * object store.
+    * at publish), so commit sizing costs ZERO filesystem calls, which is
+    * what makes it free on an object store.
     */
   private def inputBytes(files: Seq[String], known: Map[String, Long]): Long = {
     var sum = 0L
     files.foreach { f =>
-      sum += known.getOrElse(f, {
-        AcidTable.sizeStatFallbacks.incrementAndGet()
-        val file = dataRoot.resolve(f).toFile
-        val len = file.length()
-        // File.length() reports 0 for an ABSENT file — that is "size
-        // unknown", not "empty"; treating it as 0 could collapse a large
-        // rewrite onto the single-task write path
-        if (len == 0L && !file.exists()) return Long.MaxValue
-        len
-      })
+      sum += known(f)
       if (sum < 0) return Long.MaxValue // overflow guard
     }
     sum
@@ -5655,155 +5394,6 @@ final class AcidTable private (
     }
   }
 
-  /** Version `v`'s root, parsed once ([[RootView]]): the ONE place a root
-    * file is read. Views are cached (a few recent versions, checked
-    * against the file's mtime and size), so repeated reads of a version
-    * cost one stat. A root that cannot be read never reads as empty:
-    *  - archived by vacuum below the retained horizon → the retriable
-    *    [[CommitConflictException]];
-    *  - missing INSIDE the retained window → the raw
-    *    `NoSuchFileException` (corruption);
-    *  - malformed → `IllegalStateException` "unsupported root format".
-    * `v < 0` is the empty table. */
-  private[lake] def rootView(v: Long): RootView = {
-    if (v < 0) return RootView.Empty
-    try {
-      val attrs = Files.readAttributes(
-        manifestPath(v), classOf[java.nio.file.attribute.BasicFileAttributes])
-      RootView.cached(path, v, attrs.lastModifiedTime, attrs.size).getOrElse {
-        AcidTable.manifestHeaderReads.incrementAndGet()
-        val lines = Files.readAllLines(manifestPath(v), StandardCharsets.UTF_8)
-          .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
-        val view = RootView.parse(lines, unsupportedRoot(v, _), readPage, readSegment)
-        RootView.remember(path, v, attrs.lastModifiedTime, attrs.size, view)
-        view
-      }
-    } catch {
-      case e: java.nio.file.NoSuchFileException =>
-        // archived-base race (found by the cross-process harness): vacuum's
-        // timeline archival removes a PREFIX of manifests, and an operation
-        // in another process may still hold an archived version as its OCC
-        // base or read snapshot. That operation is provably stale — newer
-        // commits exist — so surface the TYPED, retriable conflict signal
-        // (callers' retry wrappers re-apply against the fresh snapshot)
-        // instead of a raw missing-file crash. A manifest missing INSIDE
-        // the retained window is real corruption: rethrow loudly.
-        val latest = latestVersion()
-        if (latest > v && v < oldestRetainedVersion(latest))
-          throw new CommitConflictException(
-            s"version $v was archived by vacuum while in use (retained " +
-              s"horizon ${oldestRetainedVersion(latest)}..$latest); " +
-              s"retry against the current snapshot ($path)")
-        throw e
-    }
-  }
-
-  private def unsupportedRoot(v: Long, why: String): Nothing =
-    throw new IllegalStateException(
-      s"unsupported root format in manifest ${manifestFileName(v)} (version $v) of $path: $why")
-
-  /** One immutable root page (content-addressed, so cacheable forever —
-    * the LRU only bounds memory). A missing file is retried briefly, the
-    * SAME protocol [[readSegment]] uses: vacuum quarantines a dead-looking
-    * page by RENAME before its liveness recheck, so a reader expanding a
-    * live paged root concurrently with GC can observe the sub-millisecond
-    * gap between the rename and the restore/publisher-rewrite that
-    * re-materializes the same content-addressed bytes. A page still
-    * missing after the retries is a corrupt root: fail loudly like a
-    * missing segment; [[fsck]] reports it. */
-  private def readPage(name: String): Seq[String] = {
-    val key = (path, name)
-    AcidTable.pageCache.get(key).getOrElse {
-      def readBytes(attempt: Int): Array[Byte] =
-        try Files.readAllBytes(segmentsDir.resolve(name))
-        catch {
-          case e: java.nio.file.NoSuchFileException =>
-            if (attempt >= 20) throw e
-            Thread.sleep(5L * (attempt + 1))
-            readBytes(attempt + 1)
-        }
-      val body = new String(readBytes(0), StandardCharsets.UTF_8)
-      val lines = body.linesIterator.filter(_.nonEmpty).toSeq
-      AcidTable.pageCache.put(key, lines)
-      lines
-    }
-  }
-
-  private def segmentsDir: Path = commitsDir.resolve(AcidTable.SegmentsDir)
-
-  /** Resolve one immutable segment (cache-first; a disk read parses the
-    * `#segpart=` header and the `<enc file>|<bytes>` entry lines).
-    * A missing file is retried briefly: a concurrent vacuum quarantines
-    * dead-looking segments by RENAME before its liveness recheck, so a
-    * reader racing a reused segment can observe a sub-millisecond gap
-    * between the GC's rename and either the GC's restore or the
-    * publisher's post-link rewrite — both of which re-materialize the
-    * same content-addressed bytes. */
-  private def readSegment(name: String): AcidTable.SegData = {
-    AcidTable.segmentResolves.incrementAndGet()
-    AcidTable.cachedSegment(path, name).getOrElse {
-      AcidTable.segmentDiskReads.incrementAndGet()
-      def readLines(attempt: Int): java.util.List[String] =
-        try Files.readAllLines(segmentsDir.resolve(name), StandardCharsets.UTF_8)
-        catch {
-          case e: java.nio.file.NoSuchFileException =>
-            if (attempt >= 20) throw e
-            Thread.sleep(5L * (attempt + 1))
-            readLines(attempt + 1)
-        }
-      val lines = readLines(0)
-        .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
-      val pd = lines.find(_.startsWith("#segpart="))
-        .map(l => java.net.URLDecoder.decode(l.stripPrefix("#segpart="), "UTF-8"))
-        .getOrElse("")
-      val entries = lines.filterNot(_.startsWith("#")).map { l =>
-        val i = l.lastIndexOf('|')
-        (java.net.URLDecoder.decode(l.substring(0, i), "UTF-8"), l.substring(i + 1).toLong)
-      }
-      val d = AcidTable.SegData(pd, entries)
-      AcidTable.cacheSegment(path, name, d)
-      d
-    }
-  }
-
-  /** Write-if-absent of a content-addressed segment (same name = same
-    * bytes, so losing a creation race to any writer is success). Called
-    * again AFTER the root links to close the vacuum race: a concurrent GC
-    * could delete a just-reused old segment between our existence probe
-    * and our root publish. */
-  private def ensureSegment(name: String, body: String, touch: Boolean = false): Unit = {
-    val target = segmentsDir.resolve(name)
-    if (Files.exists(target)) {
-      // REFRESH a reused segment's mtime so the vacuum age guard
-      // (mtime < cutoff) protects it: pre-link, so a racing GC's
-      // last-instant mtime re-read sees the reuse in flight; and in the
-      // post-root-link re-assert, because a reused old segment whose only
-      // pre-existing referencing root just left retention would otherwise
-      // keep a pre-cutoff mtime for a GC whose liveSegs set predates our
-      // root link
-      if (touch) { target.toFile.setLastModified(System.currentTimeMillis()); () }
-      return
-    }
-    Files.createDirectories(segmentsDir)
-    val tmp = segmentsDir.resolve(s".tmp-${UUID.randomUUID()}")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    val ch = FileChannel.open(tmp, StandardOpenOption.WRITE)
-    try ch.force(true) finally ch.close()
-    try Files.createLink(target, tmp)
-    catch { case _: FileAlreadyExistsException => () }
-    finally { Files.deleteIfExists(tmp); () }
-    AcidTable.segmentWrites.incrementAndGet()
-  }
-
-  /** Body + content-addressed name of the segment listing `entries` for
-    * partition dir `pd` (entries pre-sorted by the caller). */
-  private def segmentBody(pd: String, entries: Seq[(String, Long)]): (String, String) = {
-    val body = (s"#segpart=${java.net.URLEncoder.encode(pd, "UTF-8")}" +:
-      entries.map { case (f, b) => s"${java.net.URLEncoder.encode(f, "UTF-8")}|$b" })
-      .mkString("\n")
-    ("seg-" + AcidTable.sha1Hex(body) + ".txt", body)
-  }
-
   // --------------------------------------------------------- record index --
   //
   // pk → partition record-level index (the Hudi RLI / Delta
@@ -5833,34 +5423,11 @@ final class AcidTable private (
   private[lake] def rliEnabled: Boolean =
     tableProperty("recordIndex").contains("true") && keyCastSupported
 
-  /** Resolve a generation side file to its member refs (cache-first,
-    * GC-race retry like [[readRli]]). THROWS when unreadable after
-    * retries — callers on the commit path must abort (a commit that
-    * silently dropped inherited refs while the completeness flag carries
-    * would turn lookups into wrong proven-empties); read-only callers
-    * wrap ([[rliLookup]] → no routing, vacuum → ref-GC abort, fsck →
-    * dangling finding). */
-  private def readRliGen(name: String): Seq[AcidTable.RliRef] =
-    AcidTable.rliGenCache.get((path, name)).map(_._1).getOrElse {
-      def readBody(attempt: Int): String =
-        try new String(Files.readAllBytes(segmentsDir.resolve(name)), StandardCharsets.UTF_8)
-        catch {
-          case e: java.nio.file.NoSuchFileException =>
-            if (attempt >= 20) throw e
-            Thread.sleep(5L * (attempt + 1))
-            readBody(attempt + 1)
-        }
-      val body = readBody(0)
-      val refs = body.linesIterator.filter(_.nonEmpty).flatMap(RootView.parseRliRef).toSeq
-      AcidTable.rliGenCache.put((path, name), (refs, body))
-      refs
-    }
-
   /** ALL index refs of a root: the generation side file's members (when
     * present) followed by the inline delta tail. May read (and therefore
-    * throw on) the side file — see [[readRliGen]]. */
+    * throw on) the side file — see [[Timeline.readRliGen]]. */
   private[lake] def rliRefsOf(rli: RootView.Rli): Seq[AcidTable.RliRef] =
-    rli.gen.toSeq.flatMap(g => readRliGen(g._1)) ++ rli.inline
+    rli.gen.toSeq.flatMap(g => timeline.readRliGen(g._1)) ++ rli.inline
 
   /** The record-index header lines for `refs`. Round 17: a wide merged
     * generation (15 k shard refs at 10⁹ keys) rendered inline would put
@@ -5882,11 +5449,7 @@ final class AcidTable private (
         Seq(RootView.rliInlineLine(refs)) ++ doneLines
       else {
         val (gen, tail) = refs.splitAt(gl)
-        val body = gen.map(RootView.renderRliRef).mkString("\n")
-        val name = "rlg-" + AcidTable.sha1Hex(body) + ".txt"
-        ensureSegment(name, body, touch = true)
-        AcidTable.rliGenCache.put((path, name), (gen, body))
-        Seq(RootView.rliGenLine(name, gen.size)) ++
+        Seq(RootView.rliGenLine(timeline.writeRliGen(gen), gen.size)) ++
           (if (tail.isEmpty) Nil else Seq(RootView.rliInlineLine(tail))) ++ doneLines
       }
     }
@@ -5902,15 +5465,7 @@ final class AcidTable private (
     val lines = entries.iterator.map { case (k, p) =>
       (java.net.URLEncoder.encode(k, "UTF-8"), java.net.URLEncoder.encode(p, "UTF-8"))
     }.toArray.distinct.sorted.map { case (k, p) => s"$k|$p" }.toSeq
-    val body = lines.mkString("\n")
-    val name = "rli-" + AcidTable.sha1Hex(body) + ".txt"
-    ensureSegment(name, body, touch = true)
-    val (ks, ps) = lines.map { l =>
-      val i = l.indexOf('|'); (l.substring(0, i), l.substring(i + 1))
-    }.unzip
-    AcidTable.rliCache.put((path, name),
-      AcidTable.RliData(ks.toArray, ps.toArray, body))
-    Some(AcidTable.RliRef(name, 0, 1, lines.size.toLong))
+    Some(AcidTable.RliRef(timeline.writeRli(lines, remember = true), 0, 1, lines.size.toLong))
   }
 
   /** Write a SHARDED delta from a distributed (pk string, partition
@@ -5926,8 +5481,7 @@ final class AcidTable private (
       kp: DataFrame): Option[Seq[AcidTable.RliRef]] = {
     import org.apache.spark.HashPartitioner
     val n = 16 // delta shard count; the MaxRliRefs merge re-sizes by volume
-    val segDirStr = segmentsDir.toString
-    Files.createDirectories(segmentsDir)
+    val storeDir = timeline.storeDir
     // NULL detection rides the shard-write pass itself (round-16 verdict
     // minor #3: a separate isEmpty pre-pass was one extra Spark job per
     // indexed distributed commit): null rows are counted in an
@@ -5951,43 +5505,14 @@ final class AcidTable private (
       if (ls.isEmpty) Iterator.empty
       else {
         val body = ls.mkString("\n")
-        val name = "rli-" + AcidTable.sha1Hex(body) + ".txt"
-        AcidTable.writeContentFile(segDirStr, name, body)
+        val name = Timeline.contentName("rli", body)
+        Timeline.writeContent(storeDir, name, body, touch = false)
         Iterator.single((name, i, ls.length.toLong))
       }
     }.collect().toSeq
     if (nullRows.value > 0) None
     else Some(refs.map { case (name, i, c) => AcidTable.RliRef(name, i, n, c) })
   }
-
-  /** Resolve one index run (cache-first; the disk read retries a missing
-    * file briefly — the same GC quarantine-rename race protocol
-    * [[readSegment]] heals). */
-  private def readRli(name: String): AcidTable.RliData =
-    AcidTable.rliCache.get((path, name)).getOrElse {
-      def readBody(attempt: Int): String =
-        try new String(Files.readAllBytes(segmentsDir.resolve(name)), StandardCharsets.UTF_8)
-        catch {
-          case e: java.nio.file.NoSuchFileException =>
-            if (attempt >= 20) throw e
-            Thread.sleep(5L * (attempt + 1))
-            readBody(attempt + 1)
-        }
-      val body = readBody(0)
-      val lines = body.linesIterator.filter(_.nonEmpty).toArray
-      val ks = new Array[String](lines.length)
-      val ps = new Array[String](lines.length)
-      var i = 0
-      while (i < lines.length) {
-        val j = lines(i).indexOf('|')
-        ks(i) = lines(i).substring(0, j)
-        ps(i) = lines(i).substring(j + 1)
-        i += 1
-      }
-      val d = AcidTable.RliData(ks, ps, body)
-      AcidTable.rliCache.put((path, name), d)
-      d
-    }
 
   /** The candidate partition VALUES the index knows for `keys` at
     * root `view` — Some ONLY when the index is complete (`#rlidone=1`)
@@ -6009,7 +5534,7 @@ final class AcidTable private (
         if (ref.nShards <= 1) encKeys
         else encKeys.filter(e => AcidTable.rliShardOf(e, ref.nShards) == ref.shard)
       if (probe.nonEmpty) {
-        val d = readRli(ref.name)
+        val d = timeline.readRli(ref.name)
         probe.foreach { e =>
           var i = java.util.Arrays.binarySearch(
             d.keys.asInstanceOf[Array[AnyRef]], e)
@@ -6065,7 +5590,7 @@ final class AcidTable private (
     val deltaEst = deltas.map(_.count).sum
     def entriesOf(rs: Seq[AcidTable.RliRef]): Seq[(String, String)] =
       rs.flatMap { r =>
-        val d = readRli(r.name)
+        val d = timeline.readRli(r.name)
         d.keys.indices.map(i => (d.keys(i), d.parts(i)))
       }
     val keepGen = gen.nonEmpty &&
@@ -6079,10 +5604,8 @@ final class AcidTable private (
         val rewritten = byShard.toSeq.sortBy(_._1).map { case (s, es0) =>
           val es = (genByShard.get(s).map(r => entriesOf(Seq(r))).getOrElse(Nil) ++ es0)
             .distinct.sorted // tuple sort — see writeRliDelta
-          val body = es.map { case (k, p) => s"$k|$p" }.mkString("\n")
-          val name = "rli-" + AcidTable.sha1Hex(body) + ".txt"
-          ensureSegment(name, body, touch = true)
-          AcidTable.RliRef(name, s, n0, es.size.toLong)
+          AcidTable.RliRef(timeline.writeRli(es.map { case (k, p) => s"$k|$p" }, remember = false),
+            s, n0, es.size.toLong)
         }
         (untouched ++ rewritten).sortBy(_.shard)
       } else distributedRliFold(gen, deltas, n0)
@@ -6095,10 +5618,9 @@ final class AcidTable private (
         if (all.isEmpty) Nil
         else all.groupBy(e => AcidTable.rliShardOf(e._1, n))
           .toSeq.sortBy(_._1).map { case (shard, es) =>
-            val body = es.map { case (k, p) => s"$k|$p" }.mkString("\n")
-            val name = "rli-" + AcidTable.sha1Hex(body) + ".txt"
-            ensureSegment(name, body, touch = true)
-            AcidTable.RliRef(name, shard, n, es.size.toLong)
+            AcidTable.RliRef(
+              timeline.writeRli(es.map { case (k, p) => s"$k|$p" }, remember = false),
+              shard, n, es.size.toLong)
           }
       } else distributedRliFold(Nil, refs, n)
     }
@@ -6106,7 +5628,7 @@ final class AcidTable private (
 
   /** The fold's distributed leg: executor-read of the participating runs
     * → shuffle by target shard → per-shard distinct/sort → executor
-    * content-addressed shard write ([[AcidTable.writeContentFile]], same
+    * content-addressed shard write ([[Timeline.writeContent]], same
     * idempotence as [[writeRliDeltaDistributed]]'s). `gen` shards the
     * delta does not touch carry verbatim; with `gen` empty this is the
     * full re-shard. Inputs are mtime-touched up front so a racing
@@ -6117,15 +5639,12 @@ final class AcidTable private (
       gen: Seq[AcidTable.RliRef], deltas: Seq[AcidTable.RliRef],
       n: Int): Seq[AcidTable.RliRef] = {
     import org.apache.spark.HashPartitioner
-    val segDirStr = segmentsDir.toString
-    val now = System.currentTimeMillis()
-    (gen ++ deltas).foreach { r =>
-      segmentsDir.resolve(r.name).toFile.setLastModified(now); ()
-    }
+    val storeDir = timeline.storeDir
+    (gen ++ deltas).foreach(r => timeline.touch(r.name))
     val sc = spark.sparkContext
     def entriesRdd(rs: Seq[AcidTable.RliRef]) =
       sc.parallelize(rs.map(_.name), math.max(1, math.min(rs.size, 64)))
-        .flatMap(name => AcidTable.readRliEntriesAt(segDirStr, name))
+        .flatMap(name => Timeline.readRliEntries(storeDir, name))
     // dirty target shards from the delta entries (one pass over delta
     // bytes; with no generation every target shard is implicitly dirty).
     // The delta RDD feeds BOTH the dirty-shard probe and the merge job —
@@ -6151,8 +5670,8 @@ final class AcidTable private (
           if (es.isEmpty) Iterator.empty
           else {
             val body = es.iterator.map { case (k, p) => s"$k|$p" }.mkString("\n")
-            val name = "rli-" + AcidTable.sha1Hex(body) + ".txt"
-            AcidTable.writeContentFile(segDirStr, name, body)
+            val name = Timeline.contentName("rli", body)
+            Timeline.writeContent(storeDir, name, body, touch = false)
             Iterator.single((name, i, es.length.toLong))
           }
         }.collect().toSeq
@@ -6169,8 +5688,9 @@ final class AcidTable private (
     * Anything unrenderable (NULL pk/partition) degrades to
     * [[AcidTable.RliAuto]]. */
   private def computeRliUpdate(
-      newFiles: Seq[String],
+      written: Seq[(String, Long)],
       localRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]]): AcidTable.RliUpdate = {
+    val newFiles = written.map(_._1)
     if (!rliEnabled) return AcidTable.RliAuto
     if (newFiles.isEmpty && localRows.forall(_.isEmpty)) return AcidTable.RliInherit
     localRows match {
@@ -6207,7 +5727,7 @@ final class AcidTable private (
           case None =>
             // snapshotFromFiles, not a raw parquet read: the partition value
             // lives in the directory name, not in the file bytes
-            val kp = snapshotFromFiles(newFiles)
+            val kp = snapshotFromFiles(newFiles, written.toMap)
               .select(col(pkCol).cast(StringType).as("__rk"),
                 col(partitionCol).cast(StringType).as("__rp"))
               .distinct()
@@ -6232,10 +5752,8 @@ final class AcidTable private (
       s"record index requires a string/integral PK, got ${schema(pkCol).dataType}")
     if (!tableProperty("recordIndex").contains("true"))
       setTableProperty("recordIndex", Some("true"))
-    var attempt = 0
-    while (true) {
-      val base = latestVersion()
-      val baseView = rootView(base)
+    timeline.occ { base =>
+      val baseView = timeline.rootView(base)
       val refs =
         if (base < 0) Nil
         else {
@@ -6246,41 +5764,28 @@ final class AcidTable private (
           writeRliDeltaDistributed(kp).getOrElse(throw new IllegalStateException(
             "record index unsupported: table holds NULL pk or partition values"))
         }
-      try {
-        if (base >= 0)
-          publish(base + 1, Nil, Nil, Map.empty, "RLI_REBUILD", baseView.dvs,
-            reuseRootLines = baseView.refLines, rli = AcidTable.RliSet(refs, done = true))
-        else
-          publish(0L, Nil, Nil, Map.empty, "RLI_REBUILD",
-            rli = AcidTable.RliSet(Nil, done = true))
-        return latestVersion()
-      } catch {
-        case _: FileAlreadyExistsException =>
-          attempt += 1
-          if (attempt > MaxRetries)
-            throw new CommitConflictException(s"gave up after $MaxRetries conflicts at $path")
-          Thread.sleep(
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(64) + 1)
-      }
+      // an empty base (-1) publishes version 0 with no refs
+      publish(base + 1, Nil, Nil, Map.empty, "RLI_REBUILD", baseView.dvs,
+        reuseRootLines = baseView.refLines, rli = AcidTable.RliSet(refs, done = true))
+      base + 1
     }
-    -1L // unreachable
   }
 
   /** The live files of `parts` (partition VALUES) at version `v`. */
   private[graft] def filesForPartitions(v: Long, parts: Seq[String]): Seq[String] =
-    filesForPartitions(rootView(v), parts)
+    filesForPartitions(timeline.rootView(v), parts)
 
   private def filesForPartitions(view: RootView, parts: Seq[String]): Seq[String] =
     view.entriesFor(parts.map(partDir).toSet).map(_._1)
 
   /** Recorded byte sizes of `parts`' live files. */
   private def sizesForPartitions(view: RootView, parts: Seq[String]): Map[String, Long] =
-    view.entriesFor(parts.map(partDir).toSet).filter(_._2 >= 0).toMap
+    view.entriesFor(parts.map(partDir).toSet).toMap
 
   /** Recorded byte sizes for exactly `files`, resolving only the
     * segments of the partitions those files live in. */
   private def sizesForFiles(view: RootView, files: Seq[String]): Map[String, Long] =
-    view.entriesFor(files.map(_.takeWhile(_ != '/')).toSet).filter(_._2 >= 0).toMap
+    view.entriesFor(files.map(_.takeWhile(_ != '/')).toSet).toMap
 
   /** Cells the commit that produced version `v` rewrote. `None` when the
     * manifest was archived by a concurrent vacuum between our conflict
@@ -6290,7 +5795,7 @@ final class AcidTable private (
     * partition.
     */
   private def readTouched(v: Long): Option[Set[FileCell]] =
-    try Some(rootView(v).touched) catch { case _: CommitConflictException => None }
+    try Some(timeline.rootView(v).touched) catch { case _: CommitConflictException => None }
 
   /** Wall-clock source for the `#ts=` commit stamp — injectable so the
     * monotonicity spec can reproduce a racing publisher whose clock runs
@@ -6331,10 +5836,13 @@ final class AcidTable private (
       newStats: Map[String, Map[String, (Long, Long)]],
       reuseRootLines: Seq[String] = Nil,
       rli: AcidTable.RliUpdate = AcidTable.RliAuto): Unit = {
-    val tmp = commitsDir.resolve(s".tmp-${UUID.randomUUID()}")
+    // every listed file carries its recorded size, so no reader stats one
+    val unsized = files.filterNot(sizes.contains)
+    require(unsized.isEmpty, s"publish of v$v lists ${unsized.size} files without a " +
+      s"recorded size (first: ${unsized.head}) ($path)")
     // the base root (one cached view): its commit time, page layout and
     // record-index headers shape this root
-    val base = rootView(v - 1)
+    val base = timeline.rootView(v - 1)
     // clamp the stamp to the predecessor's: System.currentTimeMillis()
     // can step BACKWARD (NTP), and the observe-then-stamp protocol alone
     // does not survive that — clamping makes the visible commit clock
@@ -6354,32 +5862,17 @@ final class AcidTable private (
       else readClusterStats() ++ newStats
     val segs = files.groupBy(f => f.takeWhile(_ != '/')).toSeq.sortBy(_._1)
       .map { case (pd, fs) =>
-        val entries = fs.sorted.map(f => f -> sizes.getOrElse(f, -1L))
-        val (name, segBody) = segmentBody(pd, entries)
-        val bytes = entries.iterator.map(_._2).filter(_ >= 0).sum
+        val entries = fs.sorted.map(f => f -> sizes(f))
+        val (name, segBody) = Timeline.segmentBody(pd, entries)
+        val bytes = entries.iterator.map(_._2).sum
         val envelopes = statsCols.flatMap(c => partitionEnvelope(fs, c, fileStats).map(c -> _))
         (RootView.segRefLine(pd, name, fs.size, bytes, envelopes), name, segBody)
       }
-    // segment PUTs are independent (content-addressed, write-if-absent) —
-    // a multi-partition bulk commit issues them CONCURRENTLY, which is
-    // the object-store shape (parallel PUTs) and cuts the fsync-bound
-    // local bulk publish ~linearly in pool width. Trickle commits (1-2
-    // segments, the OCC hot path) stay inline — no pool overhead. The
-    // pre-link touch-on-reuse survives: a racing GC whose scan predates
-    // this commit sees a fresh mtime at its last-instant re-read and
-    // skips the segment without ever quarantining it. All writes are
-    // awaited (and failures rethrown) BEFORE the root links below.
-    if (segs.size <= 2) {
-      segs.foreach { case (_, name, segBody) => ensureSegment(name, segBody, touch = true) }
-    } else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(8, segs.size))
-      try segs.map { case (_, name, segBody) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = ensureSegment(name, segBody, touch = true)
-        })
-      }.foreach(_.get())
-      finally { pool.shutdown(); () }
-    }
+    // segment PUTs are independent (content-addressed, write-if-absent)
+    // and finish before the root links below. The touch-on-reuse means a
+    // racing GC whose scan predates this commit sees a fresh mtime at its
+    // last-instant re-read and skips the segment without quarantining it.
+    timeline.writeAll(segs.map { case (_, name, segBody) => (name, segBody) })
     // PAGED ROOT (round 15): above the threshold the root lists
     // content-addressed PAGES of partition lines instead of the lines
     // themselves — the O(live partitions) text every commit used to
@@ -6418,8 +5911,8 @@ final class AcidTable private (
         def bucketOf(encPd: String): Int = (encPd.hashCode & Int.MaxValue) % n
         def buildPage(i: Int, lines: Seq[String]): String = {
           val body = lines.mkString("\n")
-          val name = "page-" + AcidTable.sha1Hex(body) + ".txt"
-          ensureSegment(name, body, touch = true)
+          val name = Timeline.contentName("page", body)
+          timeline.writeContent(name, body, touch = true)
           pagesOut += ((name, body))
           // (file count, byte) aggregates ride the ref so DESCRIBE
           // DETAIL / history sum a paged root WITHOUT expanding pages —
@@ -6501,59 +5994,32 @@ final class AcidTable private (
           case AcidTable.RliSet(refs, done) => rliHeaderLinesFor(refs, done)
         }
       }
-    // pre-link touch of CARRIED refs — pages reused verbatim from the
-    // base root, and index runs whose refs carry through the `#rli=`
-    // header — mirroring the reused-segment protocol: a racing GC whose
-    // scan predates this commit re-reads the mtime at the last instant
-    // and a fresh touch makes it skip the file without quarantining.
-    // Freshly built pages/runs were touched by their ensureSegment;
-    // without this, carried refs' survival rested only on the base root
-    // staying in the GC's scanned window plus the final recheck. A file
-    // already missing at touch time is re-materialized from its content
-    // cache when possible (content-addressed — idempotent); a cache miss
-    // leaves it to the quarantine-restore/post-link protocol below.
+    // CARRIED refs — pages reused verbatim from the base root, and index
+    // runs whose refs carry through the `#rli=` header — are re-asserted
+    // around the link like the segments this commit wrote: without it
+    // their survival would rest only on the base root staying in a racing
+    // GC's scanned window plus its final recheck. The touch is
+    // best-effort protection (the quarantine-recheck and post-link
+    // re-assert protocols are the backstop), so a gen side file that
+    // cannot be expanded must not abort a commit that carries it
+    // verbatim — touch the side file itself plus whatever resolves.
     val carriedPages: Seq[String] =
       if (!paged) Nil
       else rootTail.collect { case l if l.startsWith("@@") =>
         l.substring(2).takeWhile(_ != '|')
       }.filterNot(n => pagesOut.exists(_._1 == n))
-    // the touch pass is best-effort protection (the quarantine-recheck
-    // and post-link re-assert protocols are the backstop), so a gen side
-    // file that cannot be expanded must not abort a commit that carries
-    // it verbatim — touch the side file itself plus whatever resolves
     val newRli = RootView.Rli.of(rliHeader)
     val carriedRli: Seq[String] =
       newRli.gen.map(_._1).toSeq ++
         scala.util.Try(rliRefsOf(newRli)).getOrElse(newRli.inline).map(_.name)
-    def reassertCarriedRef(name: String): Unit =
-      if (!segmentsDir.resolve(name).toFile.setLastModified(System.currentTimeMillis())) {
-        val cached =
-          if (name.startsWith("page-"))
-            AcidTable.pageCache.get((path, name)).map(_.mkString("\n"))
-          else if (name.startsWith("rlg-"))
-            AcidTable.rliGenCache.get((path, name)).map(_._2)
-          else AcidTable.rliCache.get((path, name)).map(_.body)
-        cached.foreach(b => ensureSegment(name, b, touch = true))
-      }
-    (carriedPages ++ carriedRli).foreach(reassertCarriedRef)
     // the operation name rides the root as an audit header (the timeline
     // surface history() renders), and so do the live deletion-vector
     // entries (merge-on-read deletes, [[deleteVectored]]) — the inline
     // small-DV form of Delta's deletion vectors, so DV lifecycle (restore,
     // clone, vacuum, time travel) follows the manifest with no sidecar
     val body = RootView.render(ts, touched, pageCount, op, dvs, rliHeader, rootTail)
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    val ch = FileChannel.open(tmp, StandardOpenOption.WRITE)
-    try ch.force(true) finally ch.close()
-    try Files.createLink(commitsDir.resolve(manifestFileName(v)), tmp)
-    finally Files.deleteIfExists(tmp)
-    // close the concurrent-vacuum race: our root is now visible, so any
-    // segment (or page) the GC removed between our reuse probe and the
-    // link gets rewritten (content-addressed — idempotent)
-    segs.foreach { case (_, name, segBody) => ensureSegment(name, segBody, touch = true) }
-    pagesOut.foreach { case (name, pageBody) => ensureSegment(name, pageBody, touch = true) }
-    (carriedPages ++ carriedRli).foreach(reassertCarriedRef)
-    writeLatestHint(v)
+    timeline.link(v, body, segs.map { case (_, name, segBody) => (name, segBody) } ++ pagesOut,
+      carriedPages ++ carriedRli)
   }
 
   /** Partition-level [min, max] of `c` over `fs` in the encoded-long
@@ -6654,12 +6120,11 @@ object AcidTable {
     * per [[AcidTable.versionAt]], never a full `_commits` listing — the
     * difference between a bounded and an unbounded timeline scan on a
     * 100 TB table's object store. `manifestHeaderReads` counts physical
-    * root-file reads, all of which happen in [[AcidTable.rootView]].
+    * root-file reads, all of which happen in [[Timeline.rootView]].
     */
   private[graft] val metaDirListings = new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] val latestProbes = new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] val manifestHeaderReads = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val sizeStatFallbacks = new java.util.concurrent.atomic.AtomicLong(0)
   /** Manifest-segment telemetry (spec-checked): a commit writes segments
     * only for partitions whose file set CHANGED (content addressing makes
     * reuse literal — the same bytes get the same name, so untouched
@@ -6679,7 +6144,6 @@ object AcidTable {
   private[graft] val lookupScans = new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] def resetMetaIoCounters(): Unit = {
     metaDirListings.set(0); latestProbes.set(0); manifestHeaderReads.set(0)
-    sizeStatFallbacks.set(0)
     segmentWrites.set(0); segmentDiskReads.set(0); segmentResolves.set(0)
     clusterStatsLoads.set(0)
   }
@@ -6695,10 +6159,7 @@ object AcidTable {
   // same name, so its segment is literally the same immutable file across
   // commits — nothing to rewrite, byte identity by construction — and
   // restore/clone/DV-only commits reuse every segment they re-reference.
-  // Segments are immutable once written, so both caches below are sound.
-
-  /** Segment directory under `_commits`. */
-  private[lake] val SegmentsDir = "_segments"
+  // [[Timeline]] stores and caches them.
 
   /** Branch roots live under `<table>/_branches/<name>/` (see the branch
     * section in the class); the sidecar records the fork version the
@@ -6706,14 +6167,11 @@ object AcidTable {
   private[lake] val BranchesDir = "_branches"
   private[lake] val BranchPropsFile = "_branch.properties"
 
-  /** Tag refs live under `_commits/_tags/<name>` (see the tag section). */
-  private[lake] val TagsDir = "_tags"
-
   /** Stats-sidecar format-version marker key (see readClusterStats). */
   private[lake] val StatsVerKey = "statsver"
 
   /** One resolved segment: the partition directory it lists and the
-    * (manifest-relative file, recorded bytes | -1) entries. */
+    * (manifest-relative file, recorded bytes) entries. */
   private[lake] final case class SegData(partDir: String, entries: Seq[(String, Long)])
 
   /** One root-manifest segment reference, including the partition-level
@@ -6799,27 +6257,6 @@ object AcidTable {
     * distributed leg on a CI-sized table. */
   private[lake] var RliDriverFoldMax = 1L << 20
 
-  /** Executor-side run read for the distributed fold: same brief-retry
-    * protocol as the driver's `readRli` (a racing GC quarantine-renames
-    * then restores — the reader outwaits the rename window). Static and
-    * cache-free: executors in local mode share the JVM but must not
-    * contend on the driver's LRU for a one-shot streaming read. */
-  private[lake] def readRliEntriesAt(dir: String, name: String): Seq[(String, String)] = {
-    def readBody(attempt: Int): String =
-      try new String(Files.readAllBytes(
-        java.nio.file.Paths.get(dir).resolve(name)), StandardCharsets.UTF_8)
-      catch {
-        case e: java.nio.file.NoSuchFileException =>
-          if (attempt >= 20) throw e
-          Thread.sleep(5L * (attempt + 1))
-          readBody(attempt + 1)
-      }
-    readBody(0).linesIterator.filter(_.nonEmpty).map { l =>
-      val j = l.indexOf('|')
-      (l.substring(0, j), l.substring(j + 1))
-    }.toSeq
-  }
-
   /** The shard a key probes/lands in: over the URL-ENCODED key rendering
     * (the line format's own domain), identical on the write path (driver
     * and executor), the merge, and the probe. */
@@ -6834,96 +6271,17 @@ object AcidTable {
     * generation. */
   private[lake] var RliGenInlineMax = 64
 
-  /** Process-wide LRU of generation side files, keyed (table path,
-    * file name) → (member refs, raw body — the content-addressed repair
-    * source). Content addressing makes entries permanently valid. */
-  private[lake] object rliGenCache {
-    private val MaxEntries = 64
-    private val m =
-      new java.util.LinkedHashMap[(String, String), (Seq[RliRef], String)](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, String), (Seq[RliRef], String)]): Boolean =
-          size() > MaxEntries
-      }
-    def get(k: (String, String)): Option[(Seq[RliRef], String)] =
-      m.synchronized(Option(m.get(k)))
-    def put(k: (String, String), v: (Seq[RliRef], String)): Unit =
-      m.synchronized { m.put(k, v); () }
-  }
-
-  /** Process-wide LRU of loaded index runs, keyed (table path, ref name) —
-    * content addressing makes entries permanently valid. Sized for a few
-    * tables' merged shards plus their delta tails. */
-  private[lake] object rliCache {
-    private val MaxEntries = 256
-    private val m = new java.util.LinkedHashMap[(String, String), RliData](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), RliData]): Boolean =
-        size() > MaxEntries
-    }
-    def get(k: (String, String)): Option[RliData] = m.synchronized(Option(m.get(k)))
-    def put(k: (String, String), v: RliData): Unit = m.synchronized { m.put(k, v); () }
-    def purgePath(p: String): Unit = m.synchronized { m.keySet.removeIf(_._1 == p); () }
-  }
-
   /** Index-probe telemetry (spec-checked): how many unhinted lookups
     * consulted the record index, and how many of those it routed (cells
     * resolved without touching the per-partition segment sweep). */
   private[graft] val rliProbes = new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] val rliRouted = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Canonical segment body rebuilt from the parsed cache entry — byte-
-    * identical to what [[segmentBody]] produced (same renderer), so its
-    * sha1 matches the content-addressed name; [[fsckRepair]]'s
-    * cache-recovery route. */
-  private[lake] def cachedSegmentBody(path: String, name: String): Option[String] =
-    cachedSegment(path, name).map { d =>
-      (s"#segpart=${java.net.URLEncoder.encode(d.partDir, "UTF-8")}" +:
-        d.entries.map { case (f, b) => s"${java.net.URLEncoder.encode(f, "UTF-8")}|$b" })
-        .mkString("\n")
-    }
-
   private[lake] def sha1Hex(s: String): String = {
     val d = java.security.MessageDigest.getInstance("SHA-1")
       .digest(s.getBytes(StandardCharsets.UTF_8))
     d.map(b => f"$b%02x").mkString
   }
-
-  /** Executor-safe content-addressed write-if-absent (the static form of
-    * the instance `ensureSegment`, for shard files written from RDD
-    * tasks): tmp + fsync + create-exclusive link, losing a creation race
-    * is success — identical name means identical bytes. */
-  private[lake] def writeContentFile(dir: String, name: String, body: String): Unit = {
-    val d = java.nio.file.Paths.get(dir)
-    val target = d.resolve(name)
-    if (Files.exists(target)) return
-    Files.createDirectories(d)
-    val tmp = d.resolve(s".tmp-${UUID.randomUUID()}")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    val ch = FileChannel.open(tmp, StandardOpenOption.WRITE)
-    try ch.force(true) finally ch.close()
-    try Files.createLink(target, tmp)
-    catch { case _: FileAlreadyExistsException => () }
-    finally { Files.deleteIfExists(tmp); () }
-  }
-
-  /** Process-wide cache of immutable segments, keyed (table path, segment
-    * name) — content addressing makes entries permanently valid. */
-  private object segmentCache {
-    private val MaxEntries = 8192
-    private val m = new java.util.LinkedHashMap[(String, String), SegData](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), SegData]): Boolean =
-        size() > MaxEntries
-    }
-    def get(k: (String, String)): Option[SegData] = m.synchronized(Option(m.get(k)))
-    def put(k: (String, String), v: SegData): Unit = m.synchronized { m.put(k, v); () }
-    def purgePath(p: String): Unit = m.synchronized { m.keySet.removeIf(_._1 == p); () }
-  }
-  private[lake] def cachedSegment(path: String, name: String): Option[SegData] =
-    segmentCache.get((path, name))
-  private[lake] def cacheSegment(path: String, name: String, d: SegData): Unit =
-    segmentCache.put((path, name), d)
 
   /** (mtime, length)-validated cache of the per-file stats sidecar: the
     * publish path consults it for partition envelopes, so parsing must
@@ -7175,10 +6533,8 @@ object AcidTable {
     */
   val MorMaxKeys: Int = 4096
 
-  private val CommitsDir = "_commits"
   private val DataDir = "data"
   private val MetaFile = "_meta.properties"
-  private val LatestHint = "_latest.hint"
   private[lake] val ClusterStatsFile = "_cluster.properties"
 
   /** [[AcidTable.detail]]'s one-row schema — shared with the catalog
@@ -7224,12 +6580,6 @@ object AcidTable {
   private def bloomSegIndex(path: String): BloomSegIndex =
     bloomSegIndexes.computeIfAbsent(path, _ => new BloomSegIndex)
 
-  /** Parsed bloom sidecars, keyed by absolute sidecar path. SOUND to cache
-    * forever: a sidecar is written once next to an immutable, uniquely
-    * named data file and never modified — it can only orphan (vacuum), at
-    * which point no manifest references its data file. LRU-bounded by
-    * entry count (each parsed sidecar is ~12 KB of bit array per column).
-    */
   /** Paged-root sizing (round 15): roots with more partition lines than
     * the threshold page them in fixed chunks. 4096 inline lines ≈ 400 KB
     * root — the point where rewriting it per commit starts to show
@@ -7239,48 +6589,18 @@ object AcidTable {
   val RootPageThreshold: Int = 4096
   val RootPageSize: Int = 1024
 
-  /** (table path, page name) → expanded lines. Pages are content-
-    * addressed and immutable; the LRU bounds memory only (64 pages ×
-    * ~100 KB ≈ 6 MB). */
-  private object pageCache {
-    private val MaxEntries = 64
-    private val map = new java.util.LinkedHashMap[(String, String), Seq[String]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), Seq[String]]): Boolean =
-        size() > MaxEntries
-    }
-    def get(key: (String, String)): Option[Seq[String]] =
-      synchronized(Option(map.get(key)))
-    def put(key: (String, String), v: Seq[String]): Unit =
-      synchronized { map.put(key, v); () }
-    def purgePath(p: String): Unit = synchronized { map.keySet.removeIf(_._1 == p); () }
-  }
-
-  /** Test hook: drop every process-wide cached artifact of `path`
-    * (root views, segment bodies, root pages, index runs) — specs staging
+  /** Test hook: drop every process-wide cached artifact of `path` (root
+    * views, segments, pages, index runs, bloom slices) — specs staging
     * unrecoverable-loss scenarios need the "driver restarted" state. */
-  private[lake] def purgeCachesForSpec(path: String): Unit = {
-    RootView.forget(path)
-    segmentCache.purgePath(path)
-    pageCache.purgePath(path)
-    rliCache.purgePath(path)
-  }
+  private[lake] def purgeCachesForSpec(path: String): Unit = Lru.forget(path)
 
-  private object bloomCache {
-    private val MaxEntries = 4096
-    private val map = new java.util.LinkedHashMap[
-        String, Map[String, org.apache.spark.util.sketch.BloomFilter]](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[
-          String, Map[String, org.apache.spark.util.sketch.BloomFilter]]): Boolean =
-        size() > MaxEntries
-    }
-    def get(key: String): Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] =
-      synchronized(Option(map.get(key)))
-    def put(key: String,
-        v: Map[String, org.apache.spark.util.sketch.BloomFilter]): Unit =
-      synchronized { map.put(key, v); () }
-  }
+  /** Parsed bloom-segment slices, keyed (table path,
+    * `<segment>#<offset>#<length>`). SOUND to cache forever: a bloom
+    * segment is written once and never modified — it can only orphan
+    * (vacuum), at which point no manifest references its data files. Each
+    * parsed slice is ~12 KB of bit array per column. */
+  private val bloomCache =
+    new Lru[String, Map[String, org.apache.spark.util.sketch.BloomFilter]](4096)
 
   /** Per-table-path lock serializing stats-sidecar read-modify-writes
     * within this JVM (see [[AcidTable.mergeFileStats]]). */
@@ -7288,12 +6608,6 @@ object AcidTable {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[lake] def statsLock(path: String): Object =
     statsLocks.computeIfAbsent(path, _ => new Object)
-  // generous: under a FIFO local scheduler a writer queued behind reader
-  // scans can lose many consecutive publish races; the jittered backoff
-  // breaks the phase-lock, the budget bounds pathological livelock
-  private val MaxRetries = 300
-  private val ManifestName = """v(\d{12})\.txt""".r
-  private def manifestFileName(v: Long): String = f"v$v%012d.txt"
 
   /** Hash buckets per partition of a table created without an explicit
     * count — the one default every DDL front end uses. */
@@ -7325,9 +6639,9 @@ object AcidTable {
     // (path, version) and versions RESTART at a recreated path; they and
     // the stats-sidecar cache are (mtime, size)-checked, but a recreated
     // file could in principle collide on both.
-    RootView.forget(path)
+    Lru.forget(path)
     clusterStatsCacheMap.remove(path)
-    Files.createDirectories(Paths.get(path, CommitsDir))
+    new Timeline(path).init()
     Files.createDirectories(Paths.get(path, DataDir))
     writeMeta(path, schema, pkCol, partitionCol, precombineCol, stablePartitions, numBuckets)
     new AcidTable(spark, path, schema, pkCol, partitionCol, precombineCol, stablePartitions,

@@ -133,7 +133,8 @@ object MetaScale {
     t.writeBloomSegment(synth.map(rel => rel -> sentinelBloom))
     val allFiles = realFiles ++ synth
     val touched = (1 until nParts).map(p => FileCell(s"P$p", -1))
-    val sizes = synth.map(_ -> 64L * 1024 * 1024).toMap
+    val sizes = t.timeline.rootView(t.latestVersion()).sizes ++
+      synth.map(_ -> 64L * 1024 * 1024)
     // record-index synthesis mirrors the bloom synthesis above: a real
     // bulk load's distributed commit shard-writes (pk, partition) runs
     // from executors (writeRliDeltaDistributed); here the placeholder

@@ -1,10 +1,9 @@
 package graft.lake
 
 import java.net.{URLDecoder, URLEncoder}
-import java.nio.file.attribute.FileTime
 
 /** One root manifest, parsed ONCE from one read of its file — the only
-  * form in which [[AcidTable]] sees a root ([[AcidTable.rootView]]).
+  * form in which [[AcidTable]] sees a root ([[Timeline.rootView]]).
   * Every field a read of version `v` needs derives from this one value,
   * so two fields of one read can never come from two states of the
   * timeline (the Delta Lake `Snapshot` design: one log read, every field
@@ -54,7 +53,7 @@ private[lake] final class RootView private (
 
   lazy val segRefs: Seq[AcidTable.SegRef] = refLines.map(RootView.parseSegRef)
 
-  /** Every live (file, recorded size | -1) entry, in ref order — segment
+  /** Every live (file, recorded size) entry, in ref order — segment
     * resolution runs 8-way above 64 refs (cache hits after the first
     * touch; the pool pays off on the cold object-store-shaped read). */
   lazy val entries: Seq[(String, Long)] =
@@ -71,7 +70,7 @@ private[lake] final class RootView private (
 
   lazy val files: Seq[String] = entries.map(_._1)
 
-  lazy val sizes: Map[String, Long] = entries.iterator.filter(_._2 >= 0).toMap
+  lazy val sizes: Map[String, Long] = entries.toMap
 
   /** The entries of the partition dirs `dirs` only — resolves just those
     * partitions' segments, the O(#cells) metadata read that keeps a
@@ -239,34 +238,4 @@ private[lake] object RootView {
       pages.map(n => s"#pages=$n") ++ Seq(s"#op=${enc(op)}") ++ dvHeader ++ rliLines ++
       refLines).mkString("\n")
   }
-
-  /** The views of the most recently read roots, keyed (table path,
-    * version) and checked against the root file's (mtime, size): a
-    * published root is immutable, but an archived one must fail again
-    * (typed) and a rewritten one must be parsed — and refused — again. */
-  private object cache {
-    private val MaxEntries = 8
-    private val m = new java.util.LinkedHashMap[(String, Long), (FileTime, Long, RootView)](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), (FileTime, Long, RootView)]): Boolean =
-        size() > MaxEntries
-    }
-    def get(k: (String, Long), mtime: FileTime, size: Long): Option[RootView] =
-      m.synchronized(Option(m.get(k)).collect {
-        case (mt, s, view) if mt == mtime && s == size => view
-      })
-    def put(k: (String, Long), mtime: FileTime, size: Long, view: RootView): Unit =
-      m.synchronized { m.put(k, (mtime, size, view)); () }
-    def purgePath(p: String): Unit = m.synchronized { m.keySet.removeIf(_._1 == p); () }
-  }
-
-  def cached(path: String, v: Long, mtime: FileTime, size: Long): Option[RootView] =
-    cache.get((path, v), mtime, size)
-
-  def remember(path: String, v: Long, mtime: FileTime, size: Long, view: RootView): Unit =
-    cache.put((path, v), mtime, size, view)
-
-  /** Drop `path`'s views: versions restart when a table is re-created. */
-  def forget(path: String): Unit = cache.purgePath(path)
 }

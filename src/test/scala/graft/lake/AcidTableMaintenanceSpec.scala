@@ -241,23 +241,31 @@ class AcidTableMaintenanceSpec extends AnyFunSuite {
     t.upsert(df(Record("R1", "P0", "a0"))) // v0 — the held base
     t.upsert(df(Record("R1", "P0", "a1"))) // v1
     t.upsert(df(Record("R1", "P0", "a2"))) // v2
-    assert(t.rootView(0).segRefs.nonEmpty) // readable while retained
+    assert(t.timeline.rootView(0).segRefs.nonEmpty) // readable while retained
     // a manifest missing INSIDE the retained window (v0 still present, so
     // the horizon is 0 and v1 is not below it) is corruption, not a
     // conflict: the raw error must surface loudly
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(t.path, "_commits", "v000000000001.txt"))
-    intercept[java.nio.file.NoSuchFileException](t.rootView(1))
+    intercept[java.nio.file.NoSuchFileException](t.timeline.rootView(1))
     // …through every reader of v1: none may read the gap as an empty
     // version (no rows, no deletes) or skip it
     intercept[java.nio.file.NoSuchFileException](t.snapshot(1))
     intercept[java.nio.file.NoSuchFileException](t.lookup(Seq("R1"), version = 1))
     intercept[java.nio.file.NoSuchFileException](t.history())
+    // fsck reports the gap instead of throwing, and repair cannot heal it
+    import org.apache.spark.sql.functions.col
+    val missing = t.fsck().filter(col("kind") === "missing_root").collect()
+    assert(missing.map(r => (r.getLong(1), r.getString(2))).toSeq ==
+      Seq((1L, "v000000000001.txt")), missing.toSeq)
+    val repaired = t.fsckRepair().filter(col("kind") === "missing_root")
+      .collect().map(_.getString(4)).toSeq
+    assert(repaired == Seq("unrecoverable"), repaired)
     // archival removes a PREFIX: with v0 gone too, any read below the
     // horizon types as the retriable OCC signal
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(t.path, "_commits", "v000000000000.txt"))
-    val e = intercept[CommitConflictException](t.rootView(0))
+    val e = intercept[CommitConflictException](t.timeline.rootView(0))
     assert(e.getMessage.contains("archived by vacuum"), e.getMessage)
     // …but a read that names the archived version EXPLICITLY is a
     // terminal user error, not a retriable conflict: no retry can ever

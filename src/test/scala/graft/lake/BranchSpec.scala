@@ -72,7 +72,7 @@ class BranchSpec extends AnyFunSuite {
     val pubV = t.publishBranch("b")
 
     def segLines(v: Long): Map[String, String] =
-      t.rootView(v).refLines.map(l => RootView.refLineDir(l) -> l).toMap
+      t.timeline.rootView(v).refLines.map(l => RootView.refLineDir(l) -> l).toMap
     val before = segLines(forkV)
     val after = segLines(pubV)
     assert(before.keySet == after.keySet)
@@ -125,7 +125,7 @@ class BranchSpec extends AnyFunSuite {
     br.deleteWhere(org.apache.spark.sql.functions.col("part") === "p2")
     t.publishBranch("b")
     assert(!contents(t).exists(_._2 == "p2"))
-    assert(!t.rootView(t.latestVersion()).refLines.exists(l =>
+    assert(!t.timeline.rootView(t.latestVersion()).refLines.exists(l =>
       RootView.refLineDir(l) == "part=p2"))
   }
 

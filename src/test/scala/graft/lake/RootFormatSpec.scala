@@ -88,6 +88,32 @@ class RootFormatSpec extends AnyFunSuite {
     }
   }
 
+  test("segment entry without a recorded size: refused loudly") {
+    val t = newTable()
+    t.upsert(batch(("a1", "P0", 1L), ("b1", "P1", 10L)))
+    val seg = t.timeline.rootView(t.latestVersion()).segRefs.find(_.partDir == "part=P0").get.name
+    val segPath = Paths.get(t.path, "_commits", Timeline.SegmentsDir, seg)
+    val edited = Files.readAllLines(segPath).toArray(Array.empty[String]).toSeq.map(l =>
+      if (l.startsWith("#")) l else l.substring(0, l.lastIndexOf('|')) + "|-1")
+    Files.delete(segPath) // a fresh inode: the written segment is immutable
+    Files.write(segPath, edited.mkString("\n").getBytes("UTF-8"))
+    AcidTable.purgeCachesForSpec(t.path)
+
+    val v = t.latestVersion()
+    val reads: Seq[(String, () => Any)] = Seq(
+      "snapshot" -> (() => t.snapshot().collect()),
+      "lookup" -> (() => t.lookup(Seq("a1"), Some(Seq("P0"))).collect()),
+      "upsert" -> (() => t.upsert(batch(("a1", "P0", 2L)))))
+    reads.foreach { case (what, read) =>
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains("unsupported root format") && e.getMessage.contains(seg) &&
+        e.getMessage.contains("no recorded size"), s"$what: ${e.getMessage}")
+    }
+    assert(t.latestVersion() == v, "a commit on a refused segment must not publish")
+    // the other partition's segment still reads
+    assert(t.lookup(Seq("b1"), Some(Seq("P1"))).collect().map(_.getLong(2)).toSeq == Seq(10L))
+  }
+
   test("unversioned stats sidecar: refused loudly") {
     val t = newTable()
     t.setTableProperty("statsColumns", Some("x"))

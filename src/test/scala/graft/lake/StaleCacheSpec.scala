@@ -57,8 +57,8 @@ class StaleCacheSpec extends AnyFunSuite {
     val path = Files.createTempDirectory("touch-").resolve("t").toString
     val t = AcidTable.create(spark, path, schema, "pk", "part", stablePartitions = true)
     t.upsert(batch(("a", "P0", 1L)))
-    val segs = Paths.get(path, "_commits", AcidTable.SegmentsDir)
-    val p0Seg = t.rootView(t.latestVersion()).segRefs.find(_.partDir == "part=P0").get.name
+    val segs = Paths.get(path, "_commits", Timeline.SegmentsDir)
+    val p0Seg = t.timeline.rootView(t.latestVersion()).segRefs.find(_.partDir == "part=P0").get.name
     // simulate an ANCIENT segment (mtime far below any grace cutoff)
     assert(segs.resolve(p0Seg).toFile.setLastModified(1000L))
     t.upsert(batch(("b", "P1", 2L))) // P0 untouched — its root line carries VERBATIM
@@ -66,7 +66,7 @@ class StaleCacheSpec extends AnyFunSuite {
     // segment (commit metadata work is O(touched partitions)) …
     assert(segs.resolve(p0Seg).toFile.lastModified() == 1000L,
       "untouched segment must carry by reference, not be re-written or touched")
-    assert(t.rootView(t.latestVersion()).segRefs.exists(_.name == p0Seg),
+    assert(t.timeline.rootView(t.latestVersion()).segRefs.exists(_.name == p0Seg),
       "latest root must still reference the carried segment")
     // … and vacuum must keep it DESPITE the ancient mtime: a carried
     // segment is referenced by a retained root, so liveness — not the

@@ -77,22 +77,28 @@ class TimeTravelSpec extends AnyFunSuite {
     t.commitClock = () => 100L
     t.upsert(df(Record("R1", "P0", "v0")))              // version 0 @ ts=100
 
-    val v0Files = Files.readAllLines(path.resolve("_commits/v000000000000.txt"))
-      .toArray(Array.empty[String]).toSeq.filterNot(_.startsWith("#"))
+    // versions 1 and 2 republish v0's data files with their sizes
+    val v0 = t.timeline.rootView(0)
 
     t.commitClock = () => 150L
-    t.publish(1, v0Files, Nil, op = "WRITE")            // version 1 winner @ ts=150
+    t.publish(1, v0.files, Nil, v0.sizes, op = "WRITE") // version 1 winner @ ts=150
 
     // loser: stamps 300 (clock running ahead), loses the v1 link race —
     // its manifest (and the 300 stamp) must be discarded entirely
     t.commitClock = () => 300L
-    intercept[java.nio.file.FileAlreadyExistsException] { t.publish(1, v0Files, Nil, op = "WRITE") }
+    intercept[java.nio.file.FileAlreadyExistsException] {
+      t.publish(1, v0.files, Nil, v0.sizes, op = "WRITE")
+    }
 
     // winner of the NEXT version stamps 200 < the loser's discarded 300
     t.commitClock = () => 200L
-    t.publish(2, v0Files, Nil, op = "WRITE")            // version 2 winner @ ts=200
+    t.publish(2, v0.files, Nil, v0.sizes, op = "WRITE") // version 2 winner @ ts=200
 
     assert(t.latestVersion() == 2L)
+    // the published versions read v0's row
+    Seq(1L, 2L).foreach { v =>
+      assert(t.snapshot(v).as[Record].collect().map(_.dataValue).toSeq == Seq("v0"), s"v$v")
+    }
     // commit order resolves purely from the visible (monotone) stamps;
     // the loser's 300 never influences any version
     assert(t.versionAt(99L) == -1L)
