@@ -289,6 +289,11 @@ object CrossProcess {
       // really committed work) — without both, the run degenerates to a
       // no-crash test that would still pass every other check
       victimWasAlive: Boolean,
+      // the version of the snapshot in which the orchestrator saw a victim
+      // row before the kill (-1: never) — the victim's own later deletes
+      // can remove every such row from the FINAL snapshot, so the final
+      // count alone cannot tell whether the victim committed
+      victimEvidenceVersion: Long,
       victimRowsSeen: Int,
       survivorCommitted: Int,
       survivorFailedVerifications: Int,
@@ -349,17 +354,19 @@ object CrossProcess {
     // races a fast-booting survivor, leaving victimRowsSeen spuriously 0)
     val killTarget = math.max(1L, (2L * txnsPerWorker * 2L) / 5L)
     val deadline = System.currentTimeMillis() + 120000
-    def victimEvidence(): Boolean = scala.util.Try {
+    def victimEvidence(): Long = scala.util.Try {
       import spark.implicits._
-      table.snapshot().as[Record].collect().exists(r =>
+      val v = table.latestVersion()
+      val seen = table.snapshot(v).as[Record].collect().exists(r =>
         scala.util.Try(r.primaryKeyValue.stripPrefix("Record").toInt)
           .toOption.exists(_ % 2 == 1))
-    }.getOrElse(false)
-    var sawVictimWork = false
-    while ((table.latestVersion() < killTarget || !sawVictimWork) &&
+      if (seen) v else -1L
+    }.getOrElse(-1L)
+    var evidenceVersion = -1L
+    while ((table.latestVersion() < killTarget || evidenceVersion < 0) &&
         victim.isAlive && System.currentTimeMillis() < deadline) {
       Thread.sleep(100)
-      if (!sawVictimWork) sawVictimWork = victimEvidence()
+      if (evidenceVersion < 0) evidenceVersion = victimEvidence()
     }
     val killedAt = table.latestVersion()
     val victimWasAlive = victim.isAlive
@@ -415,6 +422,7 @@ object CrossProcess {
     CrashSummary(
       killedAtVersion = killedAt,
       victimWasAlive = victimWasAlive,
+      victimEvidenceVersion = evidenceVersion,
       victimRowsSeen = victimRows.size,
       survivorCommitted = report.map(_.committed).getOrElse(0),
       survivorFailedVerifications = report.map(_.failedVerifications).getOrElse(0),
@@ -1146,7 +1154,8 @@ object CrossProcess {
     def arr(xs: Seq[String]) = xs.map(x => "\"" + esc(x) + "\"").mkString("[", ",", "]")
     s"""{"metric":"cross_process_crash","ok":${s.ok},""" +
       s""""killedAtVersion":${s.killedAtVersion},""" +
-      s""""victimWasAlive":${s.victimWasAlive},"victimRowsSeen":${s.victimRowsSeen},""" +
+      s""""victimWasAlive":${s.victimWasAlive},""" +
+      s""""victimEvidenceVersion":${s.victimEvidenceVersion},"victimRowsSeen":${s.victimRowsSeen},""" +
       s""""survivorCommitted":${s.survivorCommitted},""" +
       s""""survivorFailedVerifications":${s.survivorFailedVerifications},""" +
       s""""survivorLost":${s.survivorLost.size},"survivorExtra":${s.survivorExtra.size},""" +

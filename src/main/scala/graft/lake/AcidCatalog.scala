@@ -613,7 +613,7 @@ final class AcidScanBuilder(acid: AcidTable, version: Option[Long] = None)
     * Every conjunct is re-applied as a row filter below, so this is pure
     * file skipping — a bloom false positive costs a scan, never a row. */
   private def pushedBloomEquals: Seq[(String, Seq[Any])] = {
-    val cols = acid.bloomColumnsRead
+    val cols = acid.indexes.bloomColumnsRead
     if (cols.isEmpty) Nil
     else pushed.toSeq.collect {
       case sources.EqualTo(a, v)
@@ -677,7 +677,7 @@ final class AcidScanBuilder(acid: AcidTable, version: Option[Long] = None)
       val v = version.getOrElse(acid.latestVersion())
       val files = pushedPkKeys match {
         case Some(ks) => acid.lookupFiles(ks, pushedPartHint, v)
-        case None => acid.prunedFiles(
+        case None => acid.indexes.prunedFiles(
           AcidScanBuilder.rangeBounds(pushed, acid.schema), pushedBloomEquals, v,
           transformPartHint, pushedNullChecks)
       }
@@ -739,7 +739,7 @@ object AcidScanBuilder {
 
   /** Closed per-column [lo, hi] ranges implied by the pushed TOP-LEVEL
     * conjuncts, encoded into the stats sidecar's long domain through
-    * [[AcidTable.statsEncode]] — so every stats-supported type (integrals,
+    * [[Indexes.statsEncode]] — so every stats-supported type (integrals,
     * DATE, TIMESTAMP, DECIMAL, STRING-prefix) prunes declaratively.
     * Multiple conjuncts on one column intersect. Conservative by
     * construction: anything not understood contributes no bound, and
@@ -751,7 +751,7 @@ object AcidScanBuilder {
       pushed: Array[Filter], schema: StructType): Map[String, (Long, Long)] = {
     def enc(a: String, v: Any): Option[Long] =
       schema.fields.find(_.name == a)
-        .flatMap(f => AcidTable.statsEncode(f.dataType, v))
+        .flatMap(f => Indexes.statsEncode(f.dataType, v))
     // unit-exact types: a strict bound can be tightened by 1 in the
     // encoded domain; the string prefix cannot (two distinct strings may
     // share an encoding), so strict stays inclusive there

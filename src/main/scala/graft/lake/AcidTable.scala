@@ -8,7 +8,7 @@ import java.util.UUID
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 /** Transactional (ACID) keyed, partitioned table over plain parquet — the
   * Spark-native replacement for the reference's Hudi COW + OCC layer
@@ -123,7 +123,9 @@ final class AcidTable private (
 
   /** The table's commit log: every `_commits/` read and write. */
   private[lake] val timeline = new Timeline(path)
-  private val dataRoot = Paths.get(path, DataDir)
+  /** The table's per-file indexes: stats, blooms, the record index. */
+  private[lake] val indexes = new Indexes(this)
+  private[lake] val dataRoot = Paths.get(path, DataDir)
 
   /** Target output-file size for commit/compaction writes. A hot partition
     * splits into ~this many bytes per file instead of fusing into one
@@ -230,7 +232,7 @@ final class AcidTable private (
     * numeric PK matches no row and drops out (mirroring the join semantics
     * `delete(keys.toDF)` would give it).
     */
-  private def typedKeys(keys: Seq[String]): Seq[Any] =
+  private[lake] def typedKeys(keys: Seq[String]): Seq[Any] =
     keys.flatMap(k => scala.util.Try(castKeyTo(k)).toOption)
 
   /** The pruned manifest-relative file list a [[lookup]] of `keys` scans —
@@ -283,34 +285,26 @@ final class AcidTable private (
     // (round-14 verdict #3). The tail of every route:
     // per-file blooms (when bloomColumns covers the PK) drop candidates
     // that cannot hold any probe key.
+    val bloomPrune = indexes.keyPruner(keys)
     hint match {
-      case Some(ps) => bloomPruneFiles(cellPrune(filesForPartitions(view, ps)), keys)
-      case None => rliLookup(view, keys) match {
+      case Some(ps) => bloomPrune(cellPrune(filesForPartitions(view, ps)))
+      case None => indexes.rliLookup(view, keys) match {
         // record index (round 16): a COMPLETE pk→partition index turns
         // the unhinted probe into a hint-shaped one — O(#known cells)
         // segment reads instead of the O(live partitions) per-ref sweep
         // below. Some(Nil) is a proven-empty probe (key nowhere).
         case Some(cells) =>
-          bloomPruneFiles(cellPrune(filesForPartitions(view, cells)), keys)
+          bloomPrune(cellPrune(filesForPartitions(view, cells)))
         case None =>
           val refs = view.segRefs
-          if (refs.size <= 64)
-            refs.flatMap(r => bloomPruneFiles(
-              cellPrune(timeline.readSegment(r.name).entries.map(_._1)), keys))
-          else {
-            // CHUNKED submission: one task per ref at 20 k partitions is
-            // ~20 k pool round-trips of microsecond work — the overhead
-            // dominated the probe. 64-ref chunks keep 8 threads busy with
-            // ~tens of tasks instead.
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-            try refs.grouped(64).toSeq.map { chunk =>
-              pool.submit(new java.util.concurrent.Callable[Seq[String]] {
-                override def call(): Seq[String] = chunk.flatMap(r =>
-                  bloomPruneFiles(cellPrune(timeline.readSegment(r.name).entries.map(_._1)), keys))
-              })
-            }.flatMap(_.get())
-            finally { pool.shutdown(); () }
-          }
+          def pruneRef(r: AcidTable.SegRef): Seq[String] =
+            bloomPrune(cellPrune(timeline.readSegment(r.name).entries.map(_._1)))
+          // CHUNKED submission: one task per ref at 20 k partitions is
+          // ~20 k pool round-trips of microsecond work — the overhead
+          // dominated the probe. 64-ref chunks keep 8 threads busy with
+          // ~tens of tasks instead.
+          if (refs.size <= 64) refs.flatMap(pruneRef)
+          else Par.map(refs.grouped(64).toSeq)(_.flatMap(pruneRef)).flatten
       }
     }
   }
@@ -318,7 +312,7 @@ final class AcidTable private (
   /** A string key rendered in the PK column's external type (the
     * `delete(Seq[String])` convention extended to typed PKs).
     */
-  private def castKeyTo(k: String): Any = schema(pkCol).dataType match {
+  private[lake] def castKeyTo(k: String): Any = schema(pkCol).dataType match {
     case StringType => k
     case org.apache.spark.sql.types.LongType => k.toLong
     case org.apache.spark.sql.types.IntegerType => k.toInt
@@ -356,7 +350,7 @@ final class AcidTable private (
       }
     })
 
-  private def snapshotFromFiles(files: Seq[String], sizes: Map[String, Long]): DataFrame =
+  private[lake] def snapshotFromFiles(files: Seq[String], sizes: Map[String, Long]): DataFrame =
     if (files.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     } else {
@@ -400,7 +394,7 @@ final class AcidTable private (
     * filter is a narrow per-row predicate — no join, no exchange — so the
     * read-side cost of an outstanding MOR delete is a codegen'd set test.
     */
-  private def applyDvs(df: DataFrame, dvs: Seq[DvEntry]): DataFrame =
+  private[lake] def applyDvs(df: DataFrame, dvs: Seq[DvEntry]): DataFrame =
     if (dvs.isEmpty) df
     else {
       val hidden = dvs.groupBy(_.part).map { case (p, es) =>
@@ -601,7 +595,7 @@ final class AcidTable private (
       // on any lost race.
       globalScope = true,
       touchedOf = (_, files) => {
-        val existing = files().map(_.takeWhile(_ != '/')).distinct.map(d =>
+        val existing = files().map(_._1.takeWhile(_ != '/')).distinct.map(d =>
           org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
             .unescapePathName(d.stripPrefix(s"$partitionCol=")))
         val incoming = org.apache.spark.sql.graft.PlanShim
@@ -1150,7 +1144,7 @@ final class AcidTable private (
         val local = kernel.flatMap { case (pred, _) =>
           if (!driverScaleFiles(files)) None
           else scala.util.Try {
-            readRowsLocal(files).filter(pred)
+            readRowsLocal(files.map(_._1)).filter(pred)
               .map(r => FileCell(rowPart(r), rowBucket(r))).distinct
           }.toOption // an interpreted-eval surprise falls back, never fails
         }
@@ -1219,7 +1213,7 @@ final class AcidTable private (
         val local = pred.flatMap { p =>
           if (!driverScaleFiles(files)) None
           else scala.util.Try {
-            readRowsLocal(files).filter(p)
+            readRowsLocal(files.map(_._1)).filter(p)
               .map(r => FileCell(rowPart(r), rowBucket(r))).distinct
           }.toOption
         }
@@ -1335,22 +1329,16 @@ final class AcidTable private (
     }.toOption.flatten
   }
 
-  /** Cheap driver probe: the manifest's whole file list is within the fast-
-    * path budget (count-capped first so a 100 TB manifest never pays
-    * per-file stats). Uses direct `File.length` — absent file = unknown =
-    * fail the probe (this probe is advisory, not a sizing input).
+  /** Cheap driver probe: `files` (with their recorded sizes) fit the
+    * fast-path budget — count-capped first, then summed from the sizes
+    * the manifest records, so the probe costs no filesystem call.
     */
-  private def driverScaleFiles(
-      files: Seq[String],
+  private[lake] def driverScaleFiles(
+      files: Seq[(String, Long)],
       maxBytes: Long = AcidTable.FastPathMaxBytes): Boolean =
     files.size <= 4096 && {
       var sum = 0L
-      files.forall { f =>
-        val file = dataRoot.resolve(f).toFile
-        val len = file.length()
-        sum += len
-        (len > 0L || file.exists()) && sum <= maxBytes
-      }
+      files.forall { case (_, len) => sum += len; sum <= maxBytes }
     }
 
   /** Delete by key set (reference A8, as a left-anti join — the reference's
@@ -1374,18 +1362,10 @@ final class AcidTable private (
     * … SET/UNSET TBLPROPERTIES` surface. Atomic meta rewrite; schema-
     * evolution meta rewrites carry properties over. */
   def setTableProperty(key: String, value: Option[String]): Unit = {
-    // statsColumns is validated AT SET TIME (round-10 verdict #5): a typo'd
-    // or unsupported-type column must error here, not silently record no
-    // stats (the old behavior) or fail every later commit.
-    if (key == "statsColumns") value.foreach(
-      _.split(',').map(_.trim).filter(_.nonEmpty).foreach(validateStatsColumn))
-    // bloomColumns / bloomExpectedItems get the same set-time loudness
-    if (key == "bloomColumns") value.foreach(
-      _.split(',').map(_.trim).filter(_.nonEmpty).foreach(validateBloomColumn))
-    if (key == "bloomExpectedItems") value.foreach { v =>
-      require(scala.util.Try(v.toInt).toOption.exists(_ > 0),
-        s"bloomExpectedItems must be a positive integer, got '$v'")
-    }
+    // index properties are validated AT SET TIME (round-10 verdict #5): a
+    // typo'd or unsupported-type column must error here, not fail every
+    // later commit
+    value.foreach(indexes.validateProperty(key, _))
     // hidden partitioning: the transform IS the data placement — validate
     // loudly, refuse changes once set (and sets after data exists), and
     // auto-add the CHECK constraint that makes read-side transposition
@@ -1588,7 +1568,7 @@ final class AcidTable private (
     publish(base + 1, Nil, entries.map(e => FileCell(e.part, e.bucket)).distinct, Map.empty,
       "DELETE_DV", (baseView.dvs ++ entries).distinct,
       reuseRootLines = baseView.refLines,
-      rli = AcidTable.RliInherit) // removal-only: refs AND completeness carry
+      rli = Indexes.RliInherit) // removal-only: refs AND completeness carry
 
   /** Predicate-driven deletion-vector commit: the merge-on-read route of
     * [[deleteWhere]]. Unlike the key-pinned [[deleteVectored]] (whose
@@ -1717,9 +1697,7 @@ final class AcidTable private (
             s"(DROP CONSTRAINT $cn first)")
       }
       // same guard for the always-validated stats/bloom properties: a
-      // dangling reference would make every LATER commit throw after its
-      // publish (recordWriteStats runs post-publish), reporting failure
-      // for a write that durably landed
+      // dangling reference would make every LATER commit throw
       requireNotStatsOrBloomColumn(n, "drop")
     }
     AcidTable.writeMeta(path, next, pkCol, partitionCol, precombineCol, stablePartitions,
@@ -2134,7 +2112,7 @@ final class AcidTable private (
         }
         val refsToCheck =
           if (genMissingHere) view.rli.inline
-          else scala.util.Try(rliRefsOf(view.rli)).getOrElse(view.rli.inline)
+          else scala.util.Try(indexes.rliRefsOf(view.rli)).getOrElse(view.rli.inline)
         refsToCheck.foreach { ref =>
           if (seenRli.add(ref.name) && !timeline.contentExists(ref.name))
             out += (("dangling_rli_ref", v, ref.name,
@@ -2360,7 +2338,7 @@ final class AcidTable private (
       maxBytes: Long = AcidTable.FastPathMaxBytes)
       : Option[Seq[(org.apache.spark.sql.catalyst.InternalRow, Int)]] = {
     if (!fastSchemaOk || !AcidTable.localCommitEnabled) return None
-    val (fromFiles, toFiles, _, _, fromDvs, toDvs) =
+    val (fromFiles, toFiles, fromSizes, toSizes, fromDvs, toDvs) =
       diffScope(fromVersion, toVersion)
     def applicableDvs(f: String, dvs: Seq[DvEntry]): Set[DvEntry] =
       dvs.filter(e => fileInCell(f, FileCell(e.part, e.bucket))).toSet
@@ -2368,7 +2346,8 @@ final class AcidTable private (
       .filter(f => applicableDvs(f, fromDvs) == applicableDvs(f, toDvs))
     val fromDiff = fromFiles.filterNot(stable)
     val toDiff = toFiles.filterNot(stable)
-    if (!driverScaleFiles(fromDiff ++ toDiff, maxBytes)) return None
+    if (!driverScaleFiles(fromDiff.map(f => f -> fromSizes(f)) ++ toDiff.map(f => f -> toSizes(f)),
+        maxBytes)) return None
     // value-equality key of a full row; byte arrays wrapped so content
     // (not identity) compares — everything else keeps its boxed equals
     def rowKey(r: org.apache.spark.sql.catalyst.InternalRow): IndexedSeq[Any] =
@@ -2409,7 +2388,8 @@ final class AcidTable private (
       : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
     if (!fastSchemaOk || !AcidTable.localCommitEnabled) return None
     val files = lookupFilesIn(view, keys, partitionsHint)
-    if (!driverScaleFiles(files)) return None
+    val sizes = sizesForFiles(view, files)
+    if (!driverScaleFiles(files.map(f => f -> sizes(f)))) return None
     // the `#dvs=` entries are a header of the same view: listing them
     // never expands every partition's segment
     val ks = keys.toSet
@@ -2429,10 +2409,11 @@ final class AcidTable private (
     * directly, two interleave into a Morton (Z-order) key — rolled into
     * `targetFileBytes`-sized PARTITION-SCOPE files, and each output
     * file's per-column min/max ranges are recorded in the table's
-    * `_cluster.properties` sidecar. Consecutive files then cover tight,
+    * stats sidecar by the commit's one index pass, next to any
+    * `statsColumns` ([[Indexes.forNewFiles]]). Consecutive files then cover tight,
     * near-disjoint key ranges, so a range predicate on EITHER clustered
     * column prunes the file list before any Spark plan exists
-    * ([[rangePrunedFiles]] / the catalog scan's range route) — the
+    * ([[Indexes.rangePrunedFiles]] / the catalog scan's range route) — the
     * mechanism that turns a 100 TB scan-with-predicate into a handful of
     * file groups. Trade-offs, stated: clustered files are bucketless, so
     * keyed commits into a clustered partition escalate to
@@ -2468,7 +2449,7 @@ final class AcidTable private (
     val dvParts = timeline.rootView(latestVersion()).dvs.map(e => partDir(e.part)).toSet
     val v = commitLoop(
       touchedOf = (_, files) => {
-        val byPartition = files().groupBy(f => f.takeWhile(_ != '/'))
+        val byPartition = files().map(_._1).groupBy(f => f.takeWhile(_ != '/'))
         val inScope: String => Boolean = partitions match {
           case Some(ps) => ps.map(partDir).toSet.contains _
           case None => _ => true
@@ -2502,18 +2483,10 @@ final class AcidTable private (
         if (clusterBy.nonEmpty) None
         else Some((rows: Seq[org.apache.spark.sql.catalyst.InternalRow]) => rows),
       resultOf = snapT => snapT,
-      sortCols = clusterBy.map(clusterSortExpr(clusterBy)),
-      forceCoarse = clusterBy.nonEmpty,
+      clusterBy = clusterBy,
       opName = if (clusterBy.nonEmpty) "CLUSTER" else "COMPACT",
       rebucket = clusterBy.isEmpty,
       rliCarry = true)
-    if (clusterBy.nonEmpty && v >= 0) partitions match {
-      case None => recordClusterStats(v, clusterBy)
-      case Some(ps) => // scoped rewrite records stats for ONLY its partitions
-        val dirs = ps.map(partDir).toSet
-        recordStatsForFiles(
-          timeline.rootView(v).files.filter(f => dirs.contains(f.takeWhile(_ != '/'))), clusterBy)
-    }
     v
   }
 
@@ -2538,722 +2511,9 @@ final class AcidTable private (
       }.reduce(_ + _)
     }
 
-  // ------------------------------------------------ clustering statistics --
-  //
-  // Per-file min/max ranges of the clustering columns, kept in a sidecar
-  // (`_cluster.properties`) keyed by manifest-relative file name. Sound
-  // because data files are IMMUTABLE and uniquely named: an entry can
-  // never go stale, only orphan (its file vacuumed — harmless). Readers
-  // prune conservatively: a file with no recorded range is always kept.
-
-  private def clusterStatsPath: Path = Paths.get(path, ClusterStatsFile)
-
-  /** rel file → cluster column → (min, max). Empty when never clustered.
-    * (mtime, length)-cached: entries for immutable files never mutate, so
-    * a stale hit only misses pruning opportunities, never prunes wrongly. */
-  private[graft] def readClusterStats(): Map[String, Map[String, (Long, Long)]] = {
-    AcidTable.clusterStatsLoads.incrementAndGet()
-    if (!Files.exists(clusterStatsPath)) return Map.empty
-    val f = clusterStatsPath.toFile
-    val (mtime, len) = (f.lastModified(), f.length())
-    AcidTable.cachedClusterStats(path, mtime, len) match {
-      case Some(cached) => return cached
-      case None => ()
-    }
-    val props = new java.util.Properties()
-    val in = Files.newInputStream(clusterStatsPath)
-    try props.load(in) finally in.close()
-    import scala.jdk.CollectionConverters._
-    // the one readable sidecar format is `statsver=2` (TIMESTAMP ranges
-    // encoded with floorDiv, exact for pre-1970 fractional seconds);
-    // anything else would prune on ranges this build cannot trust
-    val ver = props.getProperty(AcidTable.StatsVerKey)
-    if (ver != "2")
-      throw new IllegalStateException(
-        s"unsupported stats sidecar format in $clusterStatsPath: " +
-          s"${AcidTable.StatsVerKey}=${Option(ver).getOrElse("<absent>")}, expected 2")
-    val parsed = props.stringPropertyNames().asScala
-      .filter(_ != AcidTable.StatsVerKey).map { k =>
-      val rel = java.net.URLDecoder.decode(k, "UTF-8")
-      val cols = props.getProperty(k).split(';').iterator.filter(_.nonEmpty).flatMap { ent =>
-        ent.split(':') match {
-          case Array(c, lo, hi) => scala.util.Try(
-            java.net.URLDecoder.decode(c, "UTF-8") -> (lo.toLong, hi.toLong)).toOption
-          case _ => None
-        }
-      }.toMap
-      rel -> cols
-    }.toMap
-    AcidTable.cacheClusterStats(path, mtime, len, parsed)
-    parsed
-  }
-
-  private def writeClusterStats(merged: Map[String, Map[String, (Long, Long)]]): Unit = {
-    val props = new java.util.Properties()
-    // stamp the current format version (see readClusterStats): file rel
-    // paths always contain '/', so the bare marker key cannot collide
-    props.setProperty(AcidTable.StatsVerKey, "2")
-    merged.foreach { case (rel, cols) =>
-      props.setProperty(
-        java.net.URLEncoder.encode(rel, "UTF-8"),
-        cols.map { case (c, (lo, hi)) =>
-          s"${java.net.URLEncoder.encode(c, "UTF-8")}:$lo:$hi"
-        }.mkString(";"))
-    }
-    val tmp = Paths.get(path, s".cluster-tmp-${UUID.randomUUID()}")
-    val out = Files.newOutputStream(tmp)
-    try props.store(out, "graft cluster statistics") finally out.close()
-    Files.move(tmp, clusterStatsPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** One distributed pass over the clustered version's files recording
-    * per-file min/max of the clustering columns (basename-keyed: every
-    * data file name carries a commit UUID, so basenames are unique).
-    * Null-only files record no range for that column and stay unprunable
-    * — conservative, and a range predicate can't match their rows anyway.
-    */
-  private def recordClusterStats(version: Long, clusterBy: Seq[String]): Unit =
-    recordStatsForFiles(timeline.rootView(version).files, clusterBy)
-
-  /** One distributed pass over `files` recording per-file min/max of
-    * `cols` — the clustered-compaction stats pass, generalized to any
-    * file list so write-time statistics can scan ONLY a commit's new
-    * files (cost ∝ what the commit wrote, never table size).
-    */
-  private def recordStatsForFiles(files: Seq[String], cols: Seq[String]): Unit =
-    mergeFileStats(statsEntriesForFiles(files, cols))
-
-  private def statsEntriesForFiles(
-      files: Seq[String], cols: Seq[String]): Map[String, Map[String, (Long, Long)]] = {
-    if (files.isEmpty || cols.isEmpty) return Map.empty
-    // small-commit driver route (round 18): new files under the fast-path
-    // budget are read back on the driver (cached local parquet reads) and
-    // get EXACTLY the distributed pass's per-file ranges with zero Spark
-    // jobs — unlike the commit-batch fast path above, which only has the
-    // commit's rows in hand and stamps commit-wide ranges.
-    if (fastSchemaOk && driverScaleFiles(files)) {
-      return files.map { f =>
-        val rows = readFileRowsLocal(f)
-        f -> cols.flatMap { c =>
-          val idx = schema.fieldIndex(c)
-          val dt = schema(idx).dataType
-          var lo = Long.MaxValue; var hi = Long.MinValue
-          var seen = false; var nulls = 0L
-          rows.foreach { r =>
-            if (r.isNullAt(idx)) nulls += 1
-            else AcidTable.statsEncodeInternal(dt, r, idx).foreach { v =>
-              if (v < lo) lo = v
-              if (v > hi) hi = v
-              seen = true
-            }
-          }
-          (if (seen) Seq(c -> (lo, hi)) else Nil) ++
-            Seq(s"$c#n" -> (nulls, rows.size.toLong))
-        }.toMap
-      }.toMap
-    }
-    val byBasename = files.map(f => f.substring(f.lastIndexOf('/') + 1) -> f).toMap
-    // min/max in the column's NATIVE type (Spark's ordering for date/
-    // timestamp/decimal/string matches the sidecar encoding's order), then
-    // encode to the sidecar long domain driver-side — one place holds the
-    // per-type encoding for both the distributed and the 0-job fast path.
-    val aggs = cols.flatMap(c => Seq(
-      min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"),
-      count(col(c)).as(s"__cnt_$c"))) :+ count(lit(1)).as("__rows")
-    val stats = spark.read.schema(dataFileSchema)
-      .parquet(files.map(f => dataRoot.resolve(f).toString): _*)
-      .groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val entries = stats.flatMap { r =>
-      val uri = r.getAs[String]("__file")
-      val base = uri.substring(uri.lastIndexOf('/') + 1)
-      byBasename.get(base).map { rel =>
-        val rows = r.getAs[Long]("__rows")
-        rel -> cols.flatMap { c =>
-          val dt = schema(c).dataType
-          val lo = Option(r.getAs[Any](s"__min_$c")).flatMap(AcidTable.statsEncode(dt, _))
-          val hi = Option(r.getAs[Any](s"__max_$c")).flatMap(AcidTable.statsEncode(dt, _))
-          // `c#n` pseudo-entry: exact per-file (nullCount, rowCount)
-          val nulls = Seq(s"$c#n" -> (rows - r.getAs[Long](s"__cnt_$c"), rows))
-          (for (l <- lo; h <- hi) yield c -> (l, h)).toSeq ++ nulls
-        }.toMap
-      }
-    }.toMap
-    entries
-  }
-
-  /** Read-modify-write of the stats sidecar under a per-path JVM lock so
-    * same-process concurrent commits can't drop each other's entries.
-    * Cross-process lost updates remain possible and remain SAFE: a file
-    * whose entry is lost just stays unprunable (conservative).
-    */
-  private def mergeFileStats(entries: Map[String, Map[String, (Long, Long)]]): Unit = {
-    if (entries.isEmpty) return
-    AcidTable.statsLock(path).synchronized {
-      writeClusterStats(readClusterStats() ++ entries)
-    }
-  }
-
-  /** Columns write-time file statistics are maintained for: the
-    * `statsColumns` table property (comma-separated). Supported types are
-    * everything [[AcidTable.statsSupported]] admits — integrals, DATE,
-    * TIMESTAMP, DECIMAL(≤18, s) and STRING (8-byte prefix, Delta's
-    * truncated-string min/max analog). A column that does not exist or has
-    * an unsupported type FAILS LOUDLY (round-10 verdict #5): a
-    * misconfigured pruning property silently doing nothing is worse than
-    * an error. Empty (the default) = write-time stats off — the commit hot
-    * path pays one meta read and nothing else.
-    */
-  private def statsColumnsProp: Seq[String] = {
-    val cols = scala.util.Try(tableProperty("statsColumns")).toOption.flatten
-      .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
-    cols.foreach(validateStatsColumn)
-    cols
-  }
-
-  private def validateStatsColumn(c: String): Unit = {
-    require(schema.fieldNames.contains(c),
-      s"statsColumns: column '$c' does not exist in table schema " +
-        s"(${schema.fieldNames.mkString(", ")})")
-    require(AcidTable.statsSupported(schema(c).dataType),
-      s"statsColumns: column '$c' has type ${schema(c).dataType.sql}, which " +
-        "write-time statistics do not support (supported: TINYINT/SMALLINT/" +
-        "INT/BIGINT, FLOAT, DOUBLE, DATE, TIMESTAMP, DECIMAL(p<=18), STRING)")
-  }
-
-  /** Encode a query-side bound value for `column` into the sidecar's
-    * order-preserving long domain — the public face of the per-type stats
-    * encoding, so callers can range-read over DATE/TIMESTAMP/DECIMAL/
-    * STRING stats columns without knowing the encoding
-    * (days / micros / unscaled-at-declared-scale / utf8-prefix).
-    */
-  def statsBound(column: String, value: Any): Long = {
-    validateStatsColumn(column)
-    AcidTable.statsEncode(schema(column).dataType, value).getOrElse(
-      throw new IllegalArgumentException(
-        s"statsBound: cannot encode $value (${value.getClass.getName}) " +
-          s"for column $column of type ${schema(column).dataType.sql}"))
-  }
-
-  // ------------------------------------------------ per-file bloom filters --
-  //
-  // The Hudi bloom-index analog (the reference stack's engine keys its
-  // upsert tagging on exactly this structure): an opt-in `bloomColumns`
-  // table property makes every commit stamp a Bloom filter of each listed
-  // column's values onto its new files, consolidated as ONE immutable
-  // offset-indexed segment per commit (`_blooms/seg-*.bloomseg`, round
-  // 14).
-  // Point lookups then prune candidate files the filter EXCLUDES — the
-  // pruning min/max ranges cannot do on an unclustered table, where every
-  // file's PK range spans the keyspace. At 100 TB the shape is:
-  // partition/bucket pruning first (manifest strings, zero I/O), then one
-  // ranged ~12 KB segment-slice read per surviving file (driver-cached;
-  // on an object store, one ranged GET — cheaper than the per-file footer
-  // GET Hudi pays), typically ending at the 1-2 files that actually hold
-  // the key instead of one file per partition. Stamping writes ONE object
-  // per commit however many files the commit lands.
-  //
-  // Soundness: membership tests can false-positive (file kept, row filter
-  // discards) but never false-negative — strings hash their full UTF-8
-  // bytes on both the write and probe side; every other supported type
-  // hashes its order-preserving stats encoding (exact, not truncated).
-  // Fast-path commits stamp one COMMIT-wide filter on each new file
-  // (superset of any single file's keys — wider, never wrong) with zero
-  // Spark jobs; distributed commits run ONE job over just the new files.
-  // A file without a sidecar is never pruned, so a crash after publish,
-  // a pre-property file, or a clone all degrade to "no skip", not error.
-
-  private def bloomRoot: Path = Paths.get(path, AcidTable.BloomDir)
-
-  /** Columns per-file bloom filters are maintained for (the `bloomColumns`
-    * table property). Misconfiguration FAILS LOUDLY, same standard as
-    * `statsColumns`. Empty (default) = blooms off. */
-  private[graft] def bloomColumnsProp: Seq[String] = {
-    val cols = scala.util.Try(tableProperty("bloomColumns")).toOption.flatten
-      .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
-    cols.foreach(validateBloomColumn)
-    cols
-  }
-
-  private def validateBloomColumn(c: String): Unit = {
-    require(schema.fieldNames.contains(c),
-      s"bloomColumns: column '$c' does not exist in table schema " +
-        s"(${schema.fieldNames.mkString(", ")})")
-    require(AcidTable.statsSupported(schema(c).dataType),
-      s"bloomColumns: column '$c' has type ${schema(c).dataType.sql}, which " +
-        "per-file bloom filters do not support (supported: TINYINT/SMALLINT/" +
-        "INT/BIGINT, FLOAT, DOUBLE, DATE, TIMESTAMP, DECIMAL(p<=18), STRING)")
-  }
-
-  /** Sizing hint for each file's filter (`bloomExpectedItems` property,
-    * default 10 000 → ~12 KB at the 1 % target FPP). An overfull filter
-    * degrades its false-positive rate, never its no-false-negative
-    * guarantee. */
-  private def bloomExpectedItemsProp: Int =
-    tableProperty("bloomExpectedItems").map(_.toInt).getOrElse(10000)
-
-  /** Atomic write of ONE commit-wide bloom segment holding every new
-    * file's serialized filters: magic, a directory of (rel, absolute
-    * offset, length), then the payloads. One PUT per commit replaces one
-    * sidecar PUT per data file (round 14) — a 500-file commit stamps its
-    * blooms in a single object write, and a point lookup still reads only
-    * its file's slice (offset-ranged read). Each payload matches the
-    * per-file sidecar BODY (column count, then (name, length, filter
-    * bytes) per column), so the parse path is shared; pairs that share
-    * the same payload REFERENCE (commit-wide fallback filters) share one
-    * payload slot instead of duplicating it per file. */
-  private[lake] def writeBloomSegment(
-      pairs: Seq[(String, Seq[(String, Array[Byte])])]): Unit = {
-    val entries = pairs.filter(_._2.nonEmpty)
-    if (entries.isEmpty) return
-    def payloadOf(cols: Seq[(String, Array[Byte])]): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val out = new java.io.DataOutputStream(bos)
-      out.writeInt(cols.size)
-      cols.foreach { case (c, bytes) =>
-        out.writeUTF(c); out.writeInt(bytes.length); out.write(bytes)
-      }
-      out.flush()
-      bos.toByteArray
-    }
-    // shared-slot assignment: same entries reference → same payload
-    val slotOf = new java.util.IdentityHashMap[AnyRef, Int]()
-    val payloads = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    val relSlots: Seq[(String, Int)] = entries.map { case (rel, cols) =>
-      val slot = Option(slotOf.get(cols)).getOrElse {
-        payloads += payloadOf(cols)
-        slotOf.put(cols, payloads.length - 1)
-        payloads.length - 1
-      }
-      rel -> slot
-    }
-    // DataOutputStream.writeUTF emits 2 length bytes + modified UTF-8
-    def modUtfLen(s: String): Int =
-      s.iterator.map(c => if (c >= 1 && c <= 0x7f) 1 else if (c <= 0x7ff) 2 else 3).sum
-    val dirLen = 8L + relSlots.iterator.map { case (r, _) => 2L + modUtfLen(r) + 12L }.sum
-    val slotOffsets = payloads.scanLeft(dirLen)((acc, p) => acc + p.length)
-    Files.createDirectories(bloomRoot)
-    val target = bloomRoot.resolve(s"seg-${UUID.randomUUID()}.bloomseg")
-    val tmp = target.resolveSibling(s".tmp-${target.getFileName}")
-    val out = new java.io.DataOutputStream(
-      new java.io.BufferedOutputStream(Files.newOutputStream(tmp)))
-    try {
-      out.writeInt(AcidTable.BloomSegMagic)
-      out.writeInt(relSlots.size)
-      relSlots.foreach { case (rel, slot) =>
-        out.writeUTF(rel)
-        out.writeLong(slotOffsets(slot))
-        out.writeInt(payloads(slot).length)
-      }
-      payloads.foreach(out.write)
-      out.flush()
-      require(out.size().toLong == slotOffsets.last,
-        s"bloom segment directory sizing bug: wrote ${out.size()}, computed ${slotOffsets.last}")
-    } finally out.close()
-    Files.move(tmp, target,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Directory parse of one bloom segment: (rel, offset, length) triples.
-    * Throws on malformed input — callers decide the conservative posture. */
-  private def readBloomSegDirectory(seg: Path): Seq[(String, Long, Int)] = {
-    val in = new java.io.DataInputStream(
-      new java.io.BufferedInputStream(Files.newInputStream(seg)))
-    try {
-      require(in.readInt() == AcidTable.BloomSegMagic, s"bad bloom segment magic in $seg")
-      (0 until in.readInt()).map { _ =>
-        (in.readUTF(), in.readLong(), in.readInt())
-      }
-    } finally in.close()
-  }
-
-  /** Segment-index resolution of one data file's filters: refresh the
-    * per-table directory index from unseen `.bloomseg` files on a miss,
-    * then ranged-read just the file's payload slice. None = the file has
-    * no segment entry (written before `bloomColumns` was set, or the
-    * stamp has not landed). */
-  private def bloomSegLookup(rel: String)
-      : Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
-    val idx = AcidTable.bloomSegIndex(path)
-    // lock-free fast read; the lock guards only the miss-triggered
-    // directory re-scan (double-checked inside)
-    val hit = Option(idx.rels.get(rel)).orElse {
-      idx.synchronized {
-        var h = Option(idx.rels.get(rel))
-        if (h.isEmpty && Files.isDirectory(bloomRoot)) {
-          Option(bloomRoot.toFile.listFiles()).getOrElse(Array.empty)
-            .filter(f => f.getName.endsWith(".bloomseg") &&
-              !f.getName.startsWith(".") && // in-flight .tmp- writes excluded
-              !idx.seen.contains(f.getName))
-            .foreach { f =>
-              idx.seen.add(f.getName)
-              scala.util.Try(readBloomSegDirectory(f.toPath)).foreach(_.foreach {
-                case (r, off, len) => idx.rels.put(r, (f.toPath, off, len))
-              })
-            }
-          h = Option(idx.rels.get(rel))
-        }
-        h
-      }
-    }
-    hit.map { case (segPath, off, len) =>
-      // cache by SLICE identity, not by file: a bulk load's commit-wide
-      // fallback stamp maps thousands of files to ONE shared slice, and
-      // per-rel keys made each of them a distinct LRU entry — 20 k
-      // candidates thrashed the 4096-entry cache into re-reading the
-      // same bytes per probe (round-15 MetaScale, 1.85 s unhinted delete
-      // at 500 k files). Per-file exact filters have distinct offsets,
-      // so the key stays unique where content differs.
-      val key = s"$segPath#$off#$len"
-      val memo = idx.lastSlice
-      if (memo != null && memo._1 == key) memo._2
-      else {
-        val parsed = AcidTable.bloomCache.get(path, key).getOrElse {
-          val p = scala.util.Try {
-            val raf = new java.io.RandomAccessFile(segPath.toFile, "r")
-            try {
-              raf.seek(off)
-              val buf = new Array[Byte](len)
-              raf.readFully(buf)
-              parseBloomBody(new java.io.DataInputStream(
-                new java.io.ByteArrayInputStream(buf)))
-            } finally raf.close()
-          }.getOrElse(Map.empty[String, org.apache.spark.util.sketch.BloomFilter])
-          AcidTable.bloomCache.put(path, key, p)
-          p
-        }
-        idx.lastSlice = (key, parsed)
-        parsed
-      }
-    }
-  }
-
-  /** The payload parse of one segment slice: column count, then (name,
-    * length, filter bytes) per column. */
-  private def parseBloomBody(in: java.io.DataInputStream)
-      : Map[String, org.apache.spark.util.sketch.BloomFilter] =
-    (0 until in.readInt()).map { _ =>
-      val c = in.readUTF()
-      val bytes = new Array[Byte](in.readInt())
-      in.readFully(bytes)
-      c -> org.apache.spark.util.sketch.BloomFilter
-        .readFrom(new java.io.ByteArrayInputStream(bytes))
-    }.toMap
-
-  /** Parsed bloom filters of one data file from the commit segment
-    * index (empty when absent or unreadable — unprunable, never an
-    * error). Cached process-wide by segment slice: segments are
-    * immutable once written. */
-  private[graft] def readBlooms(rel: String): Map[String, org.apache.spark.util.sketch.BloomFilter] =
-    bloomSegLookup(rel).getOrElse(Map.empty)
-
-  /** Zero-job bloom stamping for driver fast-path commits. When every new
-    * file names a (partition, bucket) cell and the PK is hash-safe, each
-    * row routes to ITS file's filter by the same partition value + bucket
-    * hash the writer used — exact per-file filters even for multi-file
-    * commits (a whole-table compact under the fast-path byte gate would
-    * otherwise stamp one commit-wide filter on 100+ files, sound but
-    * pruning nothing). Coarse/bucketless layouts fall back to the
-    * commit-wide filter (superset of any file's keys — wider, never
-    * wrong). A column whose value fails to encode for any row records no
-    * filter — conservative, like the stats ranges. */
-  private def recordBloomsLocal(
-      files: Seq[String],
-      cols: Seq[String],
-      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): Unit = {
-    val expected = math.max(bloomExpectedItemsProp.toLong, rows.size.toLong)
-    def newFilter() =
-      org.apache.spark.util.sketch.BloomFilter.create(expected, AcidTable.BloomFpp)
-
-    // cell routing: rel "part=<esc>/bNNN-…" → (partition value, Option
-    // bucket). BUCKETLESS files (bin-packed / coarse partitions) route by
-    // PARTITION alone — each absorbs every row of its partition, so its
-    // sidecar holds exactly its partition's keys and point-lookup pruning
-    // still drops the other partitions' files (pre-round-18 this fell
-    // back to one commit-wide filter shared by EVERY file, which made
-    // bloom pruning a no-op on any commit containing a coarse file).
-    val partIdx = schema.fieldIndex(partitionCol)
-    val pkIdx = schema.fieldIndex(pkCol)
-    val pkDt = schema(pkIdx).dataType
-    val bucketRoutable = hashSafeInternal(pkDt)
-    val filesByPart: Map[String, Seq[(String, Option[Int])]] = files
-      .map { f =>
-        val pv = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(f.takeWhile(_ != '/').stripPrefix(s"$partitionCol="))
-        (f, pv, fileBucketOf(f))
-      }
-      .groupBy(_._2).view.mapValues(_.map(t => (t._1, t._3))).toMap
-
-    // one filter per (file, col) under cell routing; per col commit-wide else
-    val perFile: Map[String, scala.collection.mutable.Map[String,
-        org.apache.spark.util.sketch.BloomFilter]] =
-      files.map(_ -> scala.collection.mutable.Map.empty[String,
-        org.apache.spark.util.sketch.BloomFilter]).toMap
-    val commitWide = scala.collection.mutable.Map.empty[String,
-      org.apache.spark.util.sketch.BloomFilter]
-    val incomplete = scala.collection.mutable.Set.empty[String]
-    val colIdx = cols.map(c => c -> schema.fieldIndex(c))
-    rows.foreach { r =>
-      val targets: Seq[scala.collection.mutable.Map[String,
-          org.apache.spark.util.sketch.BloomFilter]] =
-        if (r.isNullAt(partIdx) || r.isNullAt(pkIdx)) Seq(commitWide) // never routed
-        else {
-          val pv = r.getUTF8String(partIdx).toString
-          val inPart = filesByPart.getOrElse(pv, Nil)
-          // bucketless files always absorb the row; bucketed ones only
-          // when the row's hash bucket matches (un-hashable PK types
-          // cannot route by bucket → every partition file, conservative).
-          // Hash the row's bucket ONCE, not per candidate file.
-          val rowBucket =
-            if (bucketRoutable && inPart.exists(_._2.isDefined))
-              driverBucketOf(r.get(pkIdx, pkDt))
-            else -1
-          val fs = inPart.collect {
-            case (f, None) => f
-            case (f, Some(b)) if !bucketRoutable || b == rowBucket => f
-          }
-          if (fs.nonEmpty) fs.map(perFile)
-          else Seq(commitWide) // row outside any new file's cell
-        }
-      colIdx.foreach { case (c, idx) =>
-        if (!r.isNullAt(idx)) {
-          val dt = schema(idx).dataType
-          targets.foreach { m =>
-            val bf = m.getOrElseUpdate(c, newFilter())
-            dt match {
-              case StringType => bf.putBinary(r.getUTF8String(idx).getBytes); ()
-              case _ => AcidTable.statsEncodeInternal(dt, r, idx) match {
-                case Some(l) => bf.putLong(l); ()
-                case None => incomplete += c; ()
-              }
-            }
-          }
-        }
-      }
-    }
-    def serialize(m: scala.collection.Map[String,
-        org.apache.spark.util.sketch.BloomFilter]): Seq[(String, Array[Byte])] =
-      cols.flatMap { c =>
-        m.get(c).filterNot(_ => incomplete(c)).map { bf =>
-          val bos = new java.io.ByteArrayOutputStream()
-          bf.writeTo(bos)
-          c -> bos.toByteArray
-        }
-      }
-    // any commit-wide leakage (NULL cells, unrouted rows) merges into
-    // every file's filter so no key is ever missing from a stamp
-    writeBloomSegment(files.map { f =>
-      val m = perFile(f)
-      commitWide.foreach { case (c, wide) =>
-        m.get(c) match {
-          case Some(bf) => bf.mergeInPlace(wide); ()
-          case None => m(c) = wide
-        }
-      }
-      f -> serialize(m)
-    })
-  }
-
-  /** ONE distributed pass over a commit's new files building per-file
-    * filters: tasks emit per-partition partial filters (identical sizing,
-    * so they merge), the driver merges by file and writes sidecars. Cost
-    * ∝ what the commit wrote, never table size. */
-  private def recordBloomsForFiles(files: Seq[String], cols: Seq[String]): Unit = {
-    if (files.isEmpty || cols.isEmpty) return
-    // small-commit driver route (round 18): new files under the fast-path
-    // budget are read back on the driver and stamped with EXACTLY the
-    // per-file filters the distributed pass builds — each file's filter
-    // holds its own rows only — with zero Spark jobs.
-    if (fastSchemaOk && driverScaleFiles(files)) {
-      val expected = bloomExpectedItemsProp.toLong
-      val colIdx = cols.map(c => (c, schema.fieldIndex(c), schema(c).dataType))
-      writeBloomSegment(files.map { f =>
-        val rows = readFileRowsLocal(f)
-        f -> colIdx.flatMap { case (c, idx, dt) =>
-          val bf = org.apache.spark.util.sketch.BloomFilter
-            .create(expected, AcidTable.BloomFpp)
-          var ok = true
-          rows.foreach { r =>
-            if (!r.isNullAt(idx)) dt match {
-              case StringType => bf.putBinary(r.getUTF8String(idx).getBytes); ()
-              case _ => AcidTable.statsEncodeInternal(dt, r, idx) match {
-                case Some(l) => bf.putLong(l); ()
-                case None => ok = false
-              }
-            }
-          }
-          if (ok) {
-            val bos = new java.io.ByteArrayOutputStream()
-            bf.writeTo(bos)
-            Some(c -> bos.toByteArray)
-          } else None
-        }
-      })
-      return
-    }
-    val byBasename = files.map(f => f.substring(f.lastIndexOf('/') + 1) -> f).toMap
-    val dts: Seq[DataType] = cols.map(c => schema(c).dataType)
-    val expected = bloomExpectedItemsProp
-    val src = spark.read.schema(dataFileSchema)
-      .parquet(files.map(f => dataRoot.resolve(f).toString): _*)
-      .select(input_file_name().as("__file") +: cols.map(col): _*)
-    val partials = src.rdd.mapPartitions { it =>
-      val acc = scala.collection.mutable.LinkedHashMap[
-        (String, Int), org.apache.spark.util.sketch.BloomFilter]()
-      val bad = scala.collection.mutable.Set[(String, Int)]()
-      it.foreach { r =>
-        val file = r.getString(0)
-        var i = 0
-        while (i < dts.length) {
-          if (!r.isNullAt(i + 1)) {
-            val key = (file, i)
-            val bf = acc.getOrElseUpdate(key, org.apache.spark.util.sketch.BloomFilter
-              .create(expected.toLong, AcidTable.BloomFpp))
-            dts(i) match {
-              case StringType =>
-                bf.putBinary(r.getString(i + 1)
-                  .getBytes(java.nio.charset.StandardCharsets.UTF_8)); ()
-              case dt => AcidTable.statsEncode(dt, r.get(i + 1)) match {
-                case Some(l) => bf.putLong(l); ()
-                case None => bad += key; ()
-              }
-            }
-          }
-          i += 1
-        }
-      }
-      acc.iterator.map { case (key @ (f, i), bf) =>
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        (f, i, bos.toByteArray, !bad.contains(key))
-      }
-    }.collect()
-    val merged = scala.collection.mutable.LinkedHashMap[
-      String, scala.collection.mutable.Map[Int, org.apache.spark.util.sketch.BloomFilter]]()
-    val badCols = scala.collection.mutable.Set[(String, Int)]()
-    partials.foreach { case (uri, i, bytes, ok) =>
-      val base = uri.substring(uri.lastIndexOf('/') + 1)
-      byBasename.get(base).foreach { rel =>
-        if (!ok) { badCols += ((rel, i)); () }
-        val bf = org.apache.spark.util.sketch.BloomFilter
-          .readFrom(new java.io.ByteArrayInputStream(bytes))
-        val m = merged.getOrElseUpdate(rel, scala.collection.mutable.Map.empty)
-        m.get(i) match {
-          case Some(prev) => prev.mergeInPlace(bf); ()
-          case None => m(i) = bf
-        }
-      }
-    }
-    writeBloomSegment(merged.toSeq.map { case (rel, m) =>
-      rel -> m.toSeq.sortBy(_._1).collect {
-        case (i, bf) if !badCols((rel, i)) =>
-          val bos = new java.io.ByteArrayOutputStream()
-          bf.writeTo(bos)
-          cols(i) -> bos.toByteArray
-      }.toSeq
-    })
-  }
-
-  /** READ-side view of `bloomColumns`: a property invalidated after the
-    * fact (e.g. its column later dropped) must degrade scans to
-    * "no pruning", not break every read — commits stay loud. */
-  private[lake] def bloomColumnsRead: Seq[String] =
-    scala.util.Try(bloomColumnsProp).getOrElse(Nil)
-
-  /** Drop candidate files whose bloom filter for `column` EXCLUDES every
-    * probe value — sound file skipping for an equality/IN predicate.
-    * Conservative exits: column not bloom-maintained, a probe value that
-    * does not encode (pruning on the rest could drop its rows), files
-    * without a filter (pre-property, post-crash). NULL probes drop out
-    * first: SQL equality never matches NULL. */
-  private[graft] def bloomPrunedFilesFor(
-      candidates: Seq[String], column: String, values: Seq[Any]): Seq[String] = {
-    if (candidates.isEmpty || !bloomColumnsRead.contains(column)) return candidates
-    val dt = schema(column).dataType
-    val nonNull = values.filter(_ != null)
-    val probes: Seq[Either[Array[Byte], Long]] = dt match {
-      case StringType => nonNull.collect {
-        case s: String => Left(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      case _ => nonNull.flatMap(v => AcidTable.statsEncode(dt, v)).map(Right(_))
-    }
-    if (probes.size != nonNull.size) return candidates // some value unencodable
-    candidates.filter { f =>
-      readBlooms(f).get(column) match {
-        case None => true
-        case Some(bf) => probes.exists {
-          case Left(b) => bf.mightContainBinary(b)
-          case Right(l) => bf.mightContainLong(l)
-        }
-      }
-    }
-  }
-
-  /** [[bloomPrunedFilesFor]] on the PK for string-rendered lookup keys —
-    * the sidecar-backed tail of [[lookupFiles]]' pruning chain. */
-  private def bloomPruneFiles(candidates: Seq[String], keys: Seq[String]): Seq[String] = {
-    if (candidates.isEmpty || !keyCastSupported) return candidates
-    val typed: Seq[Any] =
-      if (schema(pkCol).dataType == StringType) keys else typedKeys(keys)
-    bloomPrunedFilesFor(candidates, pkCol, typed)
-  }
-
-  /** The file subset of `version` that can satisfy the per-column closed
-    * ranges (cluster/write-time stats), the per-column equality probe
-    * sets (bloom sidecars), AND an optional partition list (directory
-    * prefixes — e.g. a hidden-partitioning transposition) — the composed
-    * metadata-pruning face the DSv2 scan routes pushed predicates
-    * through. */
-  /** Drop candidate files whose recorded `column#n` (nullCount, rowCount)
-    * proves they cannot match an IS NULL (`wantNull = true`: zero-null
-    * files skip) or IS NOT NULL (`wantNull = false`: all-null files skip)
-    * predicate — the Delta nullCount-stats analog. Files without the
-    * pseudo-entry are kept. */
-  private[graft] def nullPrunedFiles(
-      candidates: Seq[String], column: String, wantNull: Boolean): Seq[String] = {
-    if (candidates.isEmpty) return candidates
-    val stats = readClusterStats()
-    candidates.filter { f =>
-      stats.get(f).flatMap(_.get(s"$column#n")) match {
-        case Some((nulls, rows)) => if (wantNull) nulls > 0 else nulls < rows
-        case None => true
-      }
-    }
-  }
-
-  private[graft] def prunedFiles(
-      bounds: Map[String, (Long, Long)],
-      equals: Seq[(String, Seq[Any])],
-      version: Long = -1L,
-      partitions: Option[Seq[String]] = None,
-      nullChecks: Seq[(String, Boolean)] = Nil): Seq[String] =
-    prunedFilesIn(timeline.rootView(if (version >= 0) version else latestVersion()),
-      bounds, equals, partitions, nullChecks)
-
-  private def prunedFilesIn(
-      view: RootView,
-      bounds: Map[String, (Long, Long)],
-      equals: Seq[(String, Seq[Any])],
-      partitions: Option[Seq[String]],
-      nullChecks: Seq[(String, Boolean)]): Seq[String] = {
-    val base = rangePrunedIn(view, bounds)
-    val byPart = partitions match {
-      case Some(ps) =>
-        val dirs = ps.map(p => partDir(p) + "/")
-        base.filter(f => dirs.exists(f.startsWith))
-      case None => base
-    }
-    val byNull = nullChecks.foldLeft(byPart) {
-      case (fs, (c, want)) => nullPrunedFiles(fs, c, want)
-    }
-    equals.foldLeft(byNull) {
-      case (fs, (c, vs)) => bloomPrunedFilesFor(fs, c, vs)
-    }
-  }
+  /** Encode a query-side bound value for `column` into the stats
+    * sidecar's order-preserving long domain ([[Indexes.statsBound]]). */
+  def statsBound(column: String, value: Any): Long = indexes.statsBound(column, value)
 
   /** Resolve the DSv2 BATCH scan plan for [[AcidScanBuilder]] — the
     * runtime-filterable read route (round-11 verdict #2). Applies the SAME
@@ -3287,7 +2547,7 @@ final class AcidTable private (
       case Some(ks) =>
         AcidTable.lookupScans.incrementAndGet() // the point-lookup route
         lookupFilesIn(view, ks, partitions)
-      case None => prunedFilesIn(view, bounds, bloomEqs, partitions, nullChecks)
+      case None => indexes.prunedFilesIn(view, bounds, bloomEqs, partitions, nullChecks)
     }
     // per-file applicable DV keys, as CATALYST-INTERNAL pk values: an
     // entry applies to every file of its cell ([[fileInCell]] — bucketless
@@ -3326,7 +2586,7 @@ final class AcidTable private (
       files, pkCol, partitionCol, scanSchema, bucketsOf, tSource, tToParts))
   }
 
-  /** Snapshot restricted by [[prunedFiles]] — pure file skipping: the
+  /** Snapshot restricted by [[Indexes.prunedFiles]] — pure file skipping: the
     * caller still applies its row predicate, exactly like
     * [[snapshotRange]] (which this generalizes). */
   def snapshotPruned(
@@ -3339,7 +2599,7 @@ final class AcidTable private (
     // sizes scoped to the PRUNED list (segment-resolved per partition) —
     // every live file's size would be O(live files) for a read whose
     // point is to touch a handful of them
-    val files = prunedFilesIn(view, bounds, equals, partitions, nullChecks)
+    val files = indexes.prunedFilesIn(view, bounds, equals, partitions, nullChecks)
     applyDvs(snapshotFromFiles(files, sizesForFiles(view, files)), view.dvs)
   }
 
@@ -3428,110 +2688,6 @@ final class AcidTable private (
       bounds.map { case (c, (lo, hi)) => c -> (statsBound(c, lo), statsBound(c, hi)) },
       version)
 
-  /** Write-time file statistics (the Delta per-file-stats analog): stamp
-    * min/max ranges for the `statsColumns` table property's columns onto a
-    * commit's NEW files, feeding the SAME sidecar clustered compaction
-    * uses — so [[snapshotRange]], [[rangePrunedFiles]], the DSv2 scan's
-    * range route, and its size estimate all prune freshly-written data
-    * with no OPTIMIZE pass.
-    *
-    * Driver fast-path commits (rows in hand) compute the COMMIT-wide
-    * range driver-side — zero Spark jobs, preserving the fast path's
-    * 0-job property — and stamp it on each new file: possibly wider than
-    * any single file's true range, never narrower, so pruning stays
-    * sound. Distributed commits run one per-file aggregate over just the
-    * new files.
-    */
-  /** Per-file stats entries for a commit's NEW files, computed BEFORE the
-    * publish so (1) a misconfigured statsColumns property fails the write
-    * while it is still abortable, and (2) the publish can fold the fresh
-    * ranges into the root manifest's partition envelopes. The fast path
-    * (rows in hand) costs zero Spark jobs; the distributed path runs the
-    * one new-files-only stats job it always ran, just pre-publish. */
-  private def computeWriteStats(
-      files: Seq[String],
-      localRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]])
-      : Map[String, Map[String, (Long, Long)]] = {
-    if (files.isEmpty) return Map.empty
-    val cols = statsColumnsProp
-    if (cols.isEmpty) return Map.empty
-    localRows match {
-      case Some(rows) =>
-        // ranges for non-null values; `c#n` pseudo-entries carry the
-        // commit-wide (nullCount, rowCount) — stamped per file like the
-        // ranges (a zero-null commit has zero-null files; an all-null
-        // commit has all-null files — both prune soundly, the mixed case
-        // conservatively keeps)
-        val ranges = cols.flatMap { c =>
-          val idx = schema.fieldIndex(c)
-          val dt = schema(idx).dataType
-          var lo = Long.MaxValue
-          var hi = Long.MinValue
-          var seen = false
-          var nulls = 0L
-          rows.foreach { r =>
-            if (r.isNullAt(idx)) nulls += 1
-            else {
-              AcidTable.statsEncodeInternal(dt, r, idx).foreach { v =>
-                if (v < lo) lo = v
-                if (v > hi) hi = v
-                seen = true
-              }
-            }
-          }
-          val nullEntry = Seq(s"$c#n" -> (nulls, rows.size.toLong))
-          (if (seen) Seq(c -> (lo, hi)) else Nil) ++ nullEntry
-        }.toMap
-        if (ranges.nonEmpty) files.map(_ -> ranges).toMap else Map.empty
-      case None => statsEntriesForFiles(files, cols)
-    }
-  }
-
-  /** Per-file bloom filters for a commit's NEW files — post-publish like
-    * always (advisory sidecars: a crash in between costs pruning, never
-    * correctness): zero jobs on the fast path, one new-files-only job
-    * distributed. */
-  private def recordWriteBlooms(
-      files: Seq[String],
-      localRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]]): Unit = {
-    if (files.isEmpty) return
-    val bloomCols = bloomColumnsProp
-    if (bloomCols.nonEmpty) localRows match {
-      case Some(rows) => recordBloomsLocal(files, bloomCols, rows)
-      case None => recordBloomsForFiles(files, bloomCols)
-    }
-  }
-
-  /** The file subset of `version`'s manifest that can hold rows matching
-    * the per-column closed ranges in `bounds` — files whose recorded
-    * cluster range misses a bound are skipped; files without stats are
-    * kept (conservative). The assertable core of clustered-scan pruning
-    * (the LookupSpec technique).
-    */
-  private[graft] def rangePrunedFiles(
-      bounds: Map[String, (Long, Long)], version: Long = -1L): Seq[String] =
-    rangePrunedIn(timeline.rootView(if (version >= 0) version else latestVersion()), bounds)
-
-  private def rangePrunedIn(view: RootView, bounds: Map[String, (Long, Long)]): Seq[String] = {
-    if (bounds.isEmpty) return view.files
-    // partition-level envelopes first: a partition whose
-    // recorded [min,max] misses a bound drops WHOLE — its segment never
-    // resolves and its files' sidecar entries are never consulted. When
-    // the root alone refutes every partition, the per-file sidecar is not
-    // even loaded (spec-pinned via clusterStatsLoads).
-    val keep = view.segRefs.filter(r => bounds.forall { case (c, (lo, hi)) =>
-      r.pstats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    })
-    if (keep.isEmpty) return Nil
-    val candidates = keep.flatMap(r => timeline.readSegment(r.name).entries.map(_._1))
-    val stats = readClusterStats()
-    candidates.filter { f =>
-      stats.get(f).forall(cols => bounds.forall { case (c, (lo, hi)) =>
-        cols.get(c).forall { case (fmin, fmax) => fmax >= lo && fmin <= hi }
-      })
-    }
-  }
-
   /** Snapshot restricted to files that can match the given per-column
     * closed ranges — the read face of clustered compaction. The caller
     * still applies its row predicate; this only shrinks the scanned file
@@ -3541,7 +2697,7 @@ final class AcidTable private (
   def snapshotRange(bounds: Map[String, (Long, Long)], version: Long = -1L): DataFrame =
       explicitVersionRead(version) {
     val view = timeline.rootView(if (version >= 0) version else latestVersion())
-    val files = rangePrunedIn(view, bounds)
+    val files = indexes.rangePrunedIn(view, bounds)
     applyDvs(snapshotFromFiles(files, sizesForFiles(view, files)), view.dvs)
   }
 
@@ -3656,30 +2812,12 @@ final class AcidTable private (
     // Partition dirs are disjoint, so tasks share nothing but the
     // `live` set (read-only) and the removed counter.
     val removedCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    def sweepDirs(dirs: Array[File])(perFile: File => Unit): Unit =
-      if (dirs.length <= 2) dirs.foreach(d =>
-        Option(d.listFiles()).getOrElse(Array.empty).foreach(perFile))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-        try dirs.map { d =>
-          pool.submit(new Runnable {
-            override def run(): Unit =
-              Option(d.listFiles()).getOrElse(Array.empty).foreach(perFile)
-          })
-        }.foreach { fut =>
-          // surface the task's own exception type (not the Future wrapper)
-          // and stop the sweep deterministically: siblings already running
-          // finish their current file, queued ones never start
-          try fut.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              pool.shutdownNow()
-              pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-              throw Option(e.getCause).getOrElse(e)
-          }
-        }
-        finally { pool.shutdown(); () }
-      }
+    // a failing directory stops the sweep with its own exception: siblings
+    // already running finish their current file, queued ones never start
+    def sweepDirs(dirs: Array[File])(perFile: File => Unit): Unit = {
+      def sweep(d: File): Unit = Option(d.listFiles()).getOrElse(Array.empty).foreach(perFile)
+      if (dirs.length <= 2) dirs.foreach(sweep) else { Par.map(dirs.toSeq)(sweep); () }
+    }
     sweepDirs(Option(dataRoot.toFile.listFiles()).getOrElse(Array.empty)) { f =>
       val rel = s"${f.getParentFile.getName}/${f.getName}"
       if (f.getName.endsWith(".parquet") && !live.contains(rel)
@@ -3689,23 +2827,7 @@ final class AcidTable private (
       }
     }
     val removed = removedCount.get()
-    // commit bloom segments: reaped only when EVERY directory entry's
-    // data file is gone (one segment serves a whole commit, so its files
-    // retire at different times; a last survivor keeps the segment —
-    // bounded dead weight, ~12 KB per retired file until the survivor
-    // retires too). Unparseable segments are kept (conservative).
-    Option(bloomRoot.toFile.listFiles()).getOrElse(Array.empty).foreach { f =>
-      val n = f.getName
-      if (n.startsWith(".tmp-") && f.lastModified() < cutoff) {
-        f.delete() // orphaned segment temp (crash mid-stamp)
-        ()
-      } else if (n.endsWith(".bloomseg") && f.lastModified() < cutoff) {
-        val anyLive = scala.util.Try(readBloomSegDirectory(f.toPath)
-          .exists { case (rel, _, _) => Files.exists(dataRoot.resolve(rel)) })
-          .getOrElse(true)
-        if (!anyLive) { f.delete(); () }
-      }
-    }
+    indexes.sweepBlooms(cutoff)
     // segment GC: content-addressed segments are shared across versions,
     // so one is dead only when NO retained manifest references it. The
     // same age guard protects a concurrent publisher's freshly-written
@@ -3724,7 +2846,7 @@ final class AcidTable private (
     // page for healing); data-file/temp sweeps above are unaffected.
     // one generation-expansion memo for ALL refsOf passes this cycle
     val genMemo =
-      scala.collection.mutable.Map.empty[String, Option[Seq[AcidTable.RliRef]]]
+      scala.collection.mutable.Map.empty[String, Option[Seq[Indexes.RliRef]]]
     def refsOf(vs: Iterator[Long]): (Set[String], Set[String], Boolean) = {
       val segs = scala.collection.mutable.Set.empty[String]
       val pgs = scala.collection.mutable.Set.empty[String]
@@ -3847,7 +2969,7 @@ final class AcidTable private (
       // and completeness describe exactly the restored content (its runs
       // are live — the target is retained, so vacuum kept them)
       publish(base + 1, files, touched, target.sizes, "RESTORE", target.dvs,
-        rli = AcidTable.RliSet(rliRefsOf(target.rli), target.rli.done))
+        rli = Indexes.RliSet(indexes.rliRefsOf(target.rli), target.rli.done))
       base + 1
     }
   }
@@ -3895,32 +3017,12 @@ final class AcidTable private (
         Files.copy(src, dst); ()
       }
     }
-    // bloom filters travel by VERBATIM CARRY of the bloom root (clone
-    // loses only pruning, never correctness, if skipped): segments are
-    // directories of (data-file rel → payload), and the clone shares
-    // every rel, so the immutable bytes carry unchanged — hard-linked
-    // like the data files. O(bloom bytes), not O(files × deserialize ×
-    // re-serialize): the round-18c MetaScale branch leg measured the
-    // per-file re-stamp this replaces at ~11 s of a 12.7 s fork at 100 k
-    // files. Entries for files outside the pinned snapshot ride along as
-    // bounded dead weight; the clone's own vacuum sweeps them with the
-    // usual liveness rules.
-    if (Files.exists(bloomRoot)) {
-      val destBloomRoot = Paths.get(destPath, AcidTable.BloomDir)
-      Files.createDirectories(destBloomRoot)
-      Option(bloomRoot.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && !f.getName.startsWith(".tmp-")).foreach { f =>
-          val dst = destBloomRoot.resolve(f.getName)
-          try Files.createLink(dst, f.toPath)
-          catch {
-            case _: FileAlreadyExistsException => () // FAE ⊂ FSException: first
-            case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-              Files.copy(f.toPath, dst); ()
-          }
-        }
-    }
-    if (Files.exists(clusterStatsPath))
-      Files.copy(clusterStatsPath, Paths.get(destPath, ClusterStatsFile))
+    // blooms and stats travel verbatim (hard-linked segments, copied
+    // sidecar): O(index bytes), not a per-file re-stamp — the round-18c
+    // MetaScale branch leg measured the re-stamp at ~11 s of a 12.7 s
+    // fork at 100 k files. A clone that skipped them would lose only
+    // pruning, never correctness.
+    indexes.copyTo(destPath)
     // free-form table properties travel too (Delta SHALLOW CLONE parity):
     // without this a clone of a morDeletes table silently reverts to
     // copy-on-write deletes and a statsColumns table stops stamping stats
@@ -3934,12 +3036,12 @@ final class AcidTable private (
     // the record index travels with the pinned snapshot: its runs are
     // content-addressed files — copy the bytes, carry the refs + the
     // completeness flag of the CLONED version (round 16)
-    val srcRli = rliRefsOf(srcView.rli)
+    val srcRli = indexes.rliRefsOf(srcView.rli)
     srcRli.foreach(r => dest.timeline.adopt(timeline, r.name))
     // outstanding MOR deletes travel with the pinned snapshot (inline
     // entries: nothing extra to link)
     dest.publish(0L, files, touched, srcView.sizes, "CLONE", srcView.dvs,
-      rli = AcidTable.RliSet(srcRli, srcView.rli.done))
+      rli = Indexes.RliSet(srcRli, srcView.rli.done))
     dest
   }
 
@@ -4120,27 +3222,13 @@ final class AcidTable private (
     }
     // carried side state, all content-addressed / idempotent: record-index
     // runs, bloom filters for the published files, cluster statistics
-    val bRli = br.rliRefsOf(head.rli)
+    val bRli = br.indexes.rliRefsOf(head.rli)
     bRli.foreach(r => timeline.adopt(br.timeline, r.name))
-    writeBloomSegment(files.flatMap { f =>
-      val m = br.readBlooms(f)
-      if (m.isEmpty) None
-      else Some(f -> m.toSeq.sortBy(_._1).map { case (c, bf) =>
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        c -> bos.toByteArray
-      })
-    })
-    val bNewStats: Map[String, Map[String, (Long, Long)]] =
-      if (statsColumnsProp.isEmpty) Map.empty
-      else {
-        val bStats = br.readClusterStats()
-        if (bStats.nonEmpty) writeClusterStats(readClusterStats() ++ bStats)
-        bStats
-      }
+    val conf = indexes.conf()
+    val bNewStats = indexes.adopt(br.indexes, files, conf)
     try publish(fork + 1, files, touched, sizes, s"PUBLISH $name",
       head.dvs, newStats = bNewStats, reuseRootLines = reuse,
-      rli = AcidTable.RliSet(bRli, head.rli.done))
+      rli = Indexes.RliSet(bRli, head.rli.done), conf = conf)
     catch {
       case _: FileAlreadyExistsException =>
         throw new CommitConflictException(
@@ -4452,18 +3540,18 @@ final class AcidTable private (
   private[lake] var beforePublishHook: () => Unit = () => ()
 
   private def commitLoop(
-      touchedOf: (() => DataFrame, () => Seq[String]) => Seq[FileCell],
+      // (DV-applied base snapshot, the base's (file, recorded size) entries)
+      touchedOf: (() => DataFrame, () => Seq[(String, Long)]) => Seq[FileCell],
       resultOf: DataFrame => DataFrame,
       globalScope: Boolean = false,
       outputBounded: Boolean = true,
       localResultOf: Option[Seq[org.apache.spark.sql.catalyst.InternalRow] =>
         Seq[org.apache.spark.sql.catalyst.InternalRow]] = None,
-      // clustered-compaction hooks: order rows inside each written
-      // partition by these expressions, and write every touched partition
-      // partition-scope (bucketless) so size-rolling yields range-disjoint
-      // files
-      sortCols: Seq[Column] = Nil,
-      forceCoarse: Boolean = false,
+      // clustered compaction: order rows inside each written partition by
+      // these columns' key, write every touched partition partition-scope
+      // (bucketless) so size-rolling yields range-disjoint files, and
+      // record the new files' per-file ranges of these columns
+      clusterBy: Seq[String] = Nil,
       // audit label the publish stamps into the manifest (#op= header)
       opName: String = "WRITE",
       // plain compaction sets this: the rewrite covers its partitions
@@ -4486,6 +3574,7 @@ final class AcidTable private (
       // completeness — with zero maintenance cost (stale entries for
       // removed keys only ever add probe candidates)
       rliCarry: Boolean = false): Long = {
+    val sortCols = clusterBy.map(clusterSortExpr(clusterBy))
     // driver fast-path eligibility for a given rewrite volume (see the
     // fast-path section): kernel available, schema safe, input bounded
     def fastEligible(bytes: Long): Boolean =
@@ -4523,7 +3612,7 @@ final class AcidTable private (
       val baseDvs = baseView.dvs
       val rawCells = touchedOf(
         () => applyDvs(snapshotFromFiles(baseView.files, baseView.sizes), baseDvs),
-        () => baseView.files)
+        () => baseView.entries)
       // cell-scoped metadata (round 14): resolve ONLY the touched
       // partitions' segments for everything downstream — the
       // legacy-expansion probe, the carry filter, input sizing, and the
@@ -4555,7 +3644,7 @@ final class AcidTable private (
       var touched = touched0
       val touchedFiles = scopedFiles.filter(f => touched.exists(c => fileInCell(f, c)))
       val coarseParts =
-        if (forceCoarse) touched.map(_.part).toSet
+        if (clusterBy.nonEmpty) touched.map(_.part).toSet
         else if (rebucket) {
           // compaction BIN-PACKS small partitions (round 18, the
           // acid_scan_identity 2× fix): folding a tiny partition into
@@ -4581,26 +3670,20 @@ final class AcidTable private (
         }
         else denseParts ++ legacyParts
       val inB = if (outputBounded) inputBytes(touchedFiles, scopedSizes) else Long.MaxValue
-      // write-time statistics input: when the driver fast path ran, the
-      // commit's rows are in hand — recordWriteStats can stamp ranges with
-      // ZERO Spark jobs. Any redo invalidates the captured rows (redone
-      // files hold different content) → None routes stats to the
-      // distributed per-file pass.
-      var statsLocalRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = None
-      // write-time stats of newFiles, memoized across publish retries and
-      // invalidated whenever newFiles changes (a redo wrote different
-      // content); null = not yet computed
-      var pendingStats: Map[String, Map[String, (Long, Long)]] = null
-      // record-index update for newFiles, memoized/invalidated the same
-      // way (an invalidated delta run is orphaned — vacuum sweeps it)
-      var pendingRli: AcidTable.RliUpdate = null
+      // whether the driver fast path wrote every new file: its files sit in
+      // the row cache, so the index pass reads them with zero Spark jobs
+      var fastPathRan = fastEligible(inB)
+      // the index work for newFiles (stats, blooms, record-index delta),
+      // memoized across publish retries and invalidated whenever newFiles
+      // changes (a redo wrote different content; an orphaned delta run is
+      // vacuum's); null = not yet computed
+      var pending: Indexes.Pending = null
       var newFiles =
-        if (fastEligible(inB)) {
-          val localRows =
-            localResultOf.get(readRowsLocal(touchedFiles).filter(dvRowFilter(baseDvs)))
-          statsLocalRows = Some(localRows)
-          fastWriteTouched(localRows, touched, coarseParts)
-        } else writeTouched(
+        if (fastPathRan)
+          fastWriteTouched(
+            localResultOf.get(readRowsLocal(touchedFiles).filter(dvRowFilter(baseDvs))),
+            touched, coarseParts)
+        else writeTouched(
           resultOf(applyDvs(snapshotFromFiles(touchedFiles, scopedSizes), baseDvs)),
           touched, inB, coarseParts, sortCols)
       beforePublishHook()
@@ -4656,22 +3739,17 @@ final class AcidTable private (
           val pubView = timeline.rootView(publishBase)
           val carriedDvs = pubView.dvs.filterNot(e =>
             touched.exists(c => c.part == e.part && (c.bucket < 0 || c.bucket == e.bucket)))
-          // write-time file statistics (opt-in via the statsColumns table
-          // property): computed BEFORE publish so the manifest's partition
-          // envelopes cover the new files from the commit that wrote them
-          // (and so a misconfigured property aborts the write instead of
-          // throwing after it durably landed). Zero jobs on the fast path.
-          if (pendingStats == null)
-            pendingStats = computeWriteStats(newFiles.map(_._1), statsLocalRows)
-          if (pendingRli == null) {
-            pendingRli =
-              if (rliCarry) AcidTable.RliInherit
-              else computeRliUpdate(newFiles, statsLocalRows)
-            if (rliReplace) pendingRli = pendingRli match {
-              case AcidTable.RliAppend(refs) => AcidTable.RliSet(refs, done = true)
-              case AcidTable.RliInherit => AcidTable.RliSet(Nil, done = true)
+          // the new files' indexes, in one pass BEFORE publish: the
+          // manifest's partition envelopes cover the new files from the
+          // commit that wrote them, and a misconfigured property aborts
+          // the write instead of throwing after it durably landed
+          if (pending == null) {
+            val p = indexes.forNewFiles(newFiles, fastPathRan, indexKeys = !rliCarry, clusterBy)
+            pending = if (!rliReplace) p else p.copy(rli = p.rli match {
+              case Indexes.RliAppend(refs) => Indexes.RliSet(refs, done = true)
+              case Indexes.RliInherit => Indexes.RliSet(Nil, done = true)
               case other => other // RliAuto: unrenderable rows stay unindexed
-            }
+            })
           }
           // untouched partitions' root lines carry VERBATIM (their
           // segments are pinned byte-identical), so the publish touches
@@ -4690,15 +3768,14 @@ final class AcidTable private (
           val carriedSizes = sizesForPartitions(pubView, tParts)
             .view.filterKeys(carriedSet.contains).toMap
           publish(publishBase + 1, carried ++ newFiles.map(_._1), touched,
-            carriedSizes ++ newFiles, opName, carriedDvs, pendingStats, reuse,
-            rli = pendingRli)
+            carriedSizes ++ newFiles, opName, carriedDvs, pending.stats, reuse,
+            rli = pending.rli, conf = pending.conf)
           if (fullRedoSince > 0)
             AcidTable.conflictRedoNanos.addAndGet(System.nanoTime() - fullRedoSince)
-          // the sidecar merge and the bloom stamping stay post-publish —
+          // the sidecar merge and the bloom segment stay post-publish —
           // both advisory (a file without an entry is never pruned), so a
           // crash between publish and here costs pruning, never correctness
-          if (pendingStats.nonEmpty) mergeFileStats(pendingStats)
-          recordWriteBlooms(newFiles.map(_._1), statsLocalRows)
+          indexes.land(pending)
           return publishBase + 1
         } catch {
           case _: FileAlreadyExistsException =>
@@ -4796,8 +3873,9 @@ final class AcidTable private (
                 // delete on our cells is exactly an overlap) — the redo's
                 // pre-image applies them like the outer loop's does
                 val redoDvs = newBaseView.dvs
+                val redoFast = fastEligible(redoInB)
                 val redoneFiles =
-                  if (fastEligible(redoInB))
+                  if (redoFast)
                     fastWriteTouched(
                       localResultOf.get(
                         readRowsLocal(newSnapFiles).filter(dvRowFilter(redoDvs)))
@@ -4809,10 +3887,8 @@ final class AcidTable private (
                       .filter(cellFilter(overlap)),
                     overlap, redoInB, redoCoarse, sortCols)
                 newFiles = keptFiles ++ redoneFiles
-                // the captured rows no longer describe newFiles' contents
-                statsLocalRows = None
-                pendingStats = null
-                pendingRli = null
+                fastPathRan &&= redoFast
+                pending = null
                 // a legacy expansion widened the rewrite beyond the
                 // original touched set — the published #touched and the
                 // carried-file exclusion must widen with it
@@ -4843,7 +3919,7 @@ final class AcidTable private (
     * writer escapes it — raw interpolation would miss the directory for any
     * value with special characters and silently drop its data.
     */
-  private def partDir(value: String): String =
+  private[lake] def partDir(value: String): String =
     s"$partitionCol=" +
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(value)
 
@@ -5136,8 +4212,8 @@ final class AcidTable private (
       .map(_.copy(nullable = true)))
   private lazy val dataFieldIdx: Array[Int] =
     dataFileSchema.fieldNames.map(schema.fieldIndex)
-  private lazy val partFieldIdx: Int = schema.fieldIndex(partitionCol)
-  private lazy val pkFieldIdx: Int = schema.fieldIndex(pkCol)
+  private[lake] lazy val partFieldIdx: Int = schema.fieldIndex(partitionCol)
+  private[lake] lazy val pkFieldIdx: Int = schema.fieldIndex(pkCol)
 
   /** Schema eligibility for the driver commit path: every column type
     * encodes identically under any session conf, and the partition column
@@ -5145,7 +4221,7 @@ final class AcidTable private (
     * `String.valueOf`, exact only for strings — the same rendering
     * [[cellsBy]] already bakes into FileCell).
     */
-  private lazy val fastSchemaOk =
+  private[lake] lazy val fastSchemaOk =
     org.apache.spark.sql.graft.LocalParquetIO.supportedSchema(schema) &&
       schema(partitionCol).dataType == StringType &&
       // outstanding renames: old files carry prior column names the
@@ -5182,7 +4258,7 @@ final class AcidTable private (
     * like the distributed scan) plus partition-value injection from the
     * directory name — the row-level image of [[snapshotFromFiles]].
     */
-  private def readFileRowsLocal(f: String)
+  private[lake] def readFileRowsLocal(f: String)
       : Seq[org.apache.spark.sql.catalyst.InternalRow] = {
     val pv = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .unescapePathName(f.takeWhile(_ != '/').stripPrefix(s"$partitionCol="))
@@ -5216,19 +4292,14 @@ final class AcidTable private (
     * DML fast-path commits stay 1-2 tiny files and read inline. */
   private def readRowsLocal(files: Seq[String])
       : Seq[org.apache.spark.sql.catalyst.InternalRow] =
-    if (files.size <= 4) files.flatMap(readFileRowsLocal)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, files.size))
-      try files.map { f =>
-        pool.submit(new java.util.concurrent.Callable[
-          Seq[org.apache.spark.sql.catalyst.InternalRow]] {
-          override def call(): Seq[org.apache.spark.sql.catalyst.InternalRow] =
-            readFileRowsLocal(f)
-        })
-      }.flatMap(_.get())
-      finally { pool.shutdown(); () }
-    }
+    perFileLocal(files)(identity).flatten
+
+  /** `f` over each file's rows, in file order, read as [[readRowsLocal]]
+    * reads them: inline up to 4 files, concurrently above. */
+  private[lake] def perFileLocal[B](files: Seq[String])(
+      f: Seq[org.apache.spark.sql.catalyst.InternalRow] => B): Seq[B] =
+    if (files.size <= 4) files.map(x => f(readFileRowsLocal(x)))
+    else Par.map(files)(x => f(readFileRowsLocal(x)))
 
   /** Driver image of [[writeTouched]]: route rows to (partition, bucket)
     * cells exactly as the dynamic-partition writer would (coarse
@@ -5394,382 +4465,8 @@ final class AcidTable private (
     }
   }
 
-  // --------------------------------------------------------- record index --
-  //
-  // pk → partition record-level index (the Hudi RLI / Delta
-  // bloom-on-steroids analog, round-16 verdict #2): an UNHINTED point
-  // probe on a transform-less table otherwise degrades to O(bucket
-  // candidates) bloom probes — 20 000 one-file-per-partition candidates
-  // at the 500 k-file MetaScale point. The index maps each key's
-  // URL-encoded rendering to the partition VALUES it was ever written
-  // into; an unhinted lookup consults it and routes like a partition
-  // hint. LSM shape: each commit appends a sorted content-addressed
-  // delta run (`rli-<sha1>.txt` beside the manifest segments); above
-  // [[AcidTable.MaxRliRefs]] runs the committing writer folds everything
-  // into hash shards sized by [[AcidTable.RliShardTarget]], so a probe
-  // pays O(1 shard + bounded deltas) however large the table. Entries
-  // are CONSERVATIVE (never removed by deletes/moves — stale entries
-  // only add probe candidates that bucket+bloom pruning then drops);
-  // correctness of EMPTY results rides the `#rlidone=1` completeness
-  // flag, which any data-adding commit that cannot index its keys drops
-  // ([[AcidTable.RliAuto]]) and only [[rebuildRecordIndex]] or an
-  // indexed-from-birth timeline sets. Refs ride root headers, so the
-  // index follows the manifest through time travel, restore and clone,
-  // and dies with vacuum's timeline archival.
-
-  /** Whether commits maintain the record index: the `recordIndex` table
-    * property, gated on a PK type whose string rendering round-trips
-    * ([[keyCastSupported]] — same gate as bucket pruning). */
-  private[lake] def rliEnabled: Boolean =
-    tableProperty("recordIndex").contains("true") && keyCastSupported
-
-  /** ALL index refs of a root: the generation side file's members (when
-    * present) followed by the inline delta tail. May read (and therefore
-    * throw on) the side file — see [[Timeline.readRliGen]]. */
-  private[lake] def rliRefsOf(rli: RootView.Rli): Seq[AcidTable.RliRef] =
-    rli.gen.toSeq.flatMap(g => timeline.readRliGen(g._1)) ++ rli.inline
-
-  /** The record-index header lines for `refs`. Round 17: a wide merged
-    * generation (15 k shard refs at 10⁹ keys) rendered inline would put
-    * ~800 KB of ref text into EVERY root — the same O(live …) per-commit
-    * cliff the paged root removed for partition lines. Above
-    * [[AcidTable.RliGenInlineMax]] refs the GENERATION list lives in a
-    * content-addressed `rlg-` side file (same bytes per member line),
-    * referenced by ONE `#rligen=` line; the delta tail stays inline.
-    * Between folds the generation is unchanged, so trickle commits
-    * re-reference the same side file byte-identically — no write, just
-    * the carried-ref mtime re-assert. */
-  private def rliHeaderLinesFor(
-      refs: Seq[AcidTable.RliRef], done: Boolean): Seq[String] = {
-    val doneLines = if (done) Seq(RootView.RliDoneLine) else Nil
-    if (refs.isEmpty) doneLines
-    else {
-      val gl = AcidTable.rliGenPrefixLen(refs)
-      if (refs.size <= AcidTable.RliGenInlineMax || gl <= AcidTable.RliGenInlineMax)
-        Seq(RootView.rliInlineLine(refs)) ++ doneLines
-      else {
-        val (gen, tail) = refs.splitAt(gl)
-        Seq(RootView.rliGenLine(timeline.writeRliGen(gen), gen.size)) ++
-          (if (tail.isEmpty) Nil else Seq(RootView.rliInlineLine(tail))) ++ doneLines
-      }
-    }
-  }
-
-  /** Write one sorted delta run from driver-side (key rendering,
-    * partition value) pairs; None when empty. */
-  private[lake] def writeRliDelta(entries: Seq[(String, String)]): Option[AcidTable.RliRef] = {
-    if (entries.isEmpty) return None
-    // sort by (key, part) TUPLE, never by rendered line: '|' (0x7C)
-    // compares above alphanumerics, so a full-line sort would order
-    // "K1|…" after "K10|…" and break the probe's by-key binary search
-    val lines = entries.iterator.map { case (k, p) =>
-      (java.net.URLEncoder.encode(k, "UTF-8"), java.net.URLEncoder.encode(p, "UTF-8"))
-    }.toArray.distinct.sorted.map { case (k, p) => s"$k|$p" }.toSeq
-    Some(AcidTable.RliRef(timeline.writeRli(lines, remember = true), 0, 1, lines.size.toLong))
-  }
-
-  /** Write a SHARDED delta from a distributed (pk string, partition
-    * string) frame — the bulk-ingest path: shard files are written FROM
-    * EXECUTORS (content-addressed write-if-absent, so task retries and
-    * speculation are idempotent; zombie attempts leave orphans vacuum
-    * sweeps), the same shared-storage shape the data files themselves
-    * use. Returns None when any pk or partition value is NULL — such
-    * rows cannot be rendered into the line domain, so the commit
-    * degrades to [[AcidTable.RliAuto]] (index incomplete) rather than
-    * silently mis-indexing. */
-  private[lake] def writeRliDeltaDistributed(
-      kp: DataFrame): Option[Seq[AcidTable.RliRef]] = {
-    import org.apache.spark.HashPartitioner
-    val n = 16 // delta shard count; the MaxRliRefs merge re-sizes by volume
-    val storeDir = timeline.storeDir
-    // NULL detection rides the shard-write pass itself (round-16 verdict
-    // minor #3: a separate isEmpty pre-pass was one extra Spark job per
-    // indexed distributed commit): null rows are counted in an
-    // accumulator and dropped from the shards; a breach discards the refs
-    // AFTER the single job (the orphaned shard files are content-addressed
-    // write-if-absent leftovers vacuum sweeps — same class as a zombie
-    // task attempt's). Retried/speculative tasks can only over-count
-    // nulls, never mint a zero from a non-zero, so the >0 gate is sound.
-    val nullRows = kp.sparkSession.sparkContext.longAccumulator("graft.rliNullRows")
-    val refs = kp.rdd.flatMap { r =>
-      if (r.isNullAt(0) || r.isNullAt(1)) { nullRows.add(1L); Iterator.empty }
-      else {
-        val ek = java.net.URLEncoder.encode(r.getString(0), "UTF-8")
-        val ep = java.net.URLEncoder.encode(r.getString(1), "UTF-8")
-        Iterator.single((AcidTable.rliShardOf(ek, n), (ek, ep)))
-      }
-    }.partitionBy(new HashPartitioner(n)).mapPartitionsWithIndex { (i, it) =>
-      // tuple sort (see writeRliDelta: a full-line sort would misorder
-      // prefix-sharing keys around the '|' separator)
-      val ls = it.map(_._2).toArray.distinct.sorted.map { case (k, p) => s"$k|$p" }
-      if (ls.isEmpty) Iterator.empty
-      else {
-        val body = ls.mkString("\n")
-        val name = Timeline.contentName("rli", body)
-        Timeline.writeContent(storeDir, name, body, touch = false)
-        Iterator.single((name, i, ls.length.toLong))
-      }
-    }.collect().toSeq
-    if (nullRows.value > 0) None
-    else Some(refs.map { case (name, i, c) => AcidTable.RliRef(name, i, n, c) })
-  }
-
-  /** The candidate partition VALUES the index knows for `keys` at
-    * root `view` — Some ONLY when the index is complete (`#rlidone=1`)
-    * and every consulted run resolves, i.e. when "key absent from the
-    * index" soundly means "key absent from the table". Some(Nil) is a
-    * proven-empty probe. None = no routing (lookups fall back to the
-    * full per-partition sweep — pruning lost, correctness kept). */
-  private[lake] def rliLookup(view: RootView, keys: Seq[String]): Option[Seq[String]] = {
-    if (!keyCastSupported || !view.rli.done) return None
-    AcidTable.rliProbes.incrementAndGet()
-    // an unreadable generation side file voids ROUTING, never correctness
-    // (same contract as a dangling run below)
-    val refs = scala.util.Try(rliRefsOf(view.rli)).getOrElse(return None)
-    val encKeys = keys.flatMap(k => scala.util.Try(castKeyTo(k)).toOption)
-      .map(x => java.net.URLEncoder.encode(String.valueOf(x), "UTF-8")).distinct
-    val cells = scala.collection.mutable.Set.empty[String]
-    try refs.foreach { ref =>
-      val probe =
-        if (ref.nShards <= 1) encKeys
-        else encKeys.filter(e => AcidTable.rliShardOf(e, ref.nShards) == ref.shard)
-      if (probe.nonEmpty) {
-        val d = timeline.readRli(ref.name)
-        probe.foreach { e =>
-          var i = java.util.Arrays.binarySearch(
-            d.keys.asInstanceOf[Array[AnyRef]], e)
-          if (i >= 0) {
-            while (i > 0 && d.keys(i - 1) == e) i -= 1
-            while (i < d.keys.length && d.keys(i) == e) {
-              cells += java.net.URLDecoder.decode(d.parts(i), "UTF-8")
-              i += 1
-            }
-          }
-        }
-      }
-    } catch {
-      case _: java.nio.file.NoSuchFileException => return None // dangling run: no routing
-    }
-    AcidTable.rliRouted.incrementAndGet()
-    Some(cells.toSeq)
-  }
-
-  /** Fold `refs` into size-appropriate hash shards (the LSM merge).
-    * Round 17 (round-16 verdict #1): the fold no longer materializes the
-    * whole index in driver memory — it is INCREMENTAL over the previous
-    * fold's output and DISTRIBUTED above a driver byte budget:
-    *
-    *  - The ref list's LEADING run of refs sharing one `nShards > 1` with
-    *    distinct shard ids is the current GENERATION. Appends only ever
-    *    ADD refs after the fold's output (publish builds
-    *    `inherited ++ new`), so the prefix rule recovers exactly the last
-    *    fold's shards; anything after it — driver deltas (`nShards=1`)
-    *    and distributed delta shard sets — is the delta tail. (A leading
-    *    distributed DELTA misread as a generation is still correct: its
-    *    runs are valid `rliShardOf`-consistent shards to merge into.)
-    *  - While the generation's shard count still fits the estimated
-    *    entry count (≤ nShards × [[AcidTable.RliShardTarget]] ×
-    *    [[AcidTable.RliShardSlack]]), ONLY the shards the delta entries
-    *    hash into are re-read, merged and rewritten — O(delta + dirty
-    *    shard bytes); untouched shard refs carry verbatim (their files
-    *    are re-asserted by publish's carried-ref protocol like pages).
-    *  - Above [[AcidTable.RliDriverFoldMax]] entries the merge runs as a
-    *    distributed pass ([[distributedRliFold]]): executor-read of the
-    *    participating runs, shuffle by target shard, executor-written
-    *    shard files — the [[writeRliDeltaDistributed]] shape; driver
-    *    memory holds REF NAMES only, never index entries.
-    *  - A generation-growth event re-shards everything at the next power
-    *    of two, distributed above the same budget. */
-  private def mergeRliRefs(refs: Seq[AcidTable.RliRef]): Seq[AcidTable.RliRef] = {
-    if (refs.isEmpty) return Nil
-    val n0 = refs.head.nShards
-    val gen: Seq[AcidTable.RliRef] = refs.take(AcidTable.rliGenPrefixLen(refs))
-    val deltas = refs.drop(gen.size)
-    if (deltas.isEmpty) return gen // nothing to fold (defensive)
-    val totalEst = refs.map(_.count).sum // counts duplicates across runs: an upper bound
-    val deltaEst = deltas.map(_.count).sum
-    def entriesOf(rs: Seq[AcidTable.RliRef]): Seq[(String, String)] =
-      rs.flatMap { r =>
-        val d = timeline.readRli(r.name)
-        d.keys.indices.map(i => (d.keys(i), d.parts(i)))
-      }
-    val keepGen = gen.nonEmpty &&
-      totalEst <= n0.toLong * AcidTable.RliShardTarget * AcidTable.RliShardSlack
-    if (keepGen) {
-      if (deltaEst <= AcidTable.RliDriverFoldMax) {
-        // driver incremental: delta entries + dirty shards only
-        val byShard = entriesOf(deltas).groupBy(e => AcidTable.rliShardOf(e._1, n0))
-        val genByShard = gen.map(r => r.shard -> r).toMap
-        val untouched = gen.filterNot(r => byShard.contains(r.shard))
-        val rewritten = byShard.toSeq.sortBy(_._1).map { case (s, es0) =>
-          val es = (genByShard.get(s).map(r => entriesOf(Seq(r))).getOrElse(Nil) ++ es0)
-            .distinct.sorted // tuple sort — see writeRliDelta
-          AcidTable.RliRef(timeline.writeRli(es.map { case (k, p) => s"$k|$p" }, remember = false),
-            s, n0, es.size.toLong)
-        }
-        (untouched ++ rewritten).sortBy(_.shard)
-      } else distributedRliFold(gen, deltas, n0)
-    } else {
-      // generation growth or first fold: full re-shard at the next size
-      val n = math.max(1, Integer.highestOneBit(math.max(1,
-        ((totalEst + AcidTable.RliShardTarget - 1) / AcidTable.RliShardTarget).toInt) * 2 - 1))
-      if (totalEst <= AcidTable.RliDriverFoldMax) {
-        val all = entriesOf(refs).distinct.sorted // tuple sort
-        if (all.isEmpty) Nil
-        else all.groupBy(e => AcidTable.rliShardOf(e._1, n))
-          .toSeq.sortBy(_._1).map { case (shard, es) =>
-            AcidTable.RliRef(
-              timeline.writeRli(es.map { case (k, p) => s"$k|$p" }, remember = false),
-              shard, n, es.size.toLong)
-          }
-      } else distributedRliFold(Nil, refs, n)
-    }
-  }
-
-  /** The fold's distributed leg: executor-read of the participating runs
-    * → shuffle by target shard → per-shard distinct/sort → executor
-    * content-addressed shard write ([[Timeline.writeContent]], same
-    * idempotence as [[writeRliDeltaDistributed]]'s). `gen` shards the
-    * delta does not touch carry verbatim; with `gen` empty this is the
-    * full re-shard. Inputs are mtime-touched up front so a racing
-    * vacuum's age guard keeps them readable for the duration of the job
-    * (the same anchor publish's carried-ref protocol re-asserts after
-    * the root links). */
-  private def distributedRliFold(
-      gen: Seq[AcidTable.RliRef], deltas: Seq[AcidTable.RliRef],
-      n: Int): Seq[AcidTable.RliRef] = {
-    import org.apache.spark.HashPartitioner
-    val storeDir = timeline.storeDir
-    (gen ++ deltas).foreach(r => timeline.touch(r.name))
-    val sc = spark.sparkContext
-    def entriesRdd(rs: Seq[AcidTable.RliRef]) =
-      sc.parallelize(rs.map(_.name), math.max(1, math.min(rs.size, 64)))
-        .flatMap(name => Timeline.readRliEntries(storeDir, name))
-    // dirty target shards from the delta entries (one pass over delta
-    // bytes; with no generation every target shard is implicitly dirty).
-    // The delta RDD feeds BOTH the dirty-shard probe and the merge job —
-    // cache it so the delta run files are executor-read once, not twice
-    // (halves the fold's input I/O and its exposure to the GC
-    // quarantine-rename window)
-    val deltaRdd = entriesRdd(deltas).map(e => (AcidTable.rliShardOf(e._1, n), e))
-    val cacheDelta = gen.nonEmpty // probe only runs with a generation
-    if (cacheDelta) {
-      deltaRdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK); ()
-    }
-    try {
-      val dirty: Set[Int] =
-        if (gen.isEmpty) (0 until n).toSet
-        else deltaRdd.keys.distinct().collect().toSet
-      val carried = gen.filterNot(r => dirty.contains(r.shard))
-      val genDirty = gen.filter(r => dirty.contains(r.shard))
-      val baseRdd = entriesRdd(genDirty).map(e => (AcidTable.rliShardOf(e._1, n), e))
-      val rewritten = deltaRdd.union(baseRdd)
-        .partitionBy(new HashPartitioner(n)) // key s < n ⇒ partition s
-        .mapPartitionsWithIndex { (i, it) =>
-          val es = it.map(_._2).toArray.distinct.sorted // tuple sort
-          if (es.isEmpty) Iterator.empty
-          else {
-            val body = es.iterator.map { case (k, p) => s"$k|$p" }.mkString("\n")
-            val name = Timeline.contentName("rli", body)
-            Timeline.writeContent(storeDir, name, body, touch = false)
-            Iterator.single((name, i, es.length.toLong))
-          }
-        }.collect().toSeq
-      (carried ++ rewritten.map { case (nm, i, c) => AcidTable.RliRef(nm, i, n, c) })
-        .sortBy(_.shard)
-    } finally if (cacheDelta) { deltaRdd.unpersist(blocking = false); () }
-  }
-
-  /** The commit's index update, from what the write path has in hand:
-    * driver-local rows index for free (keys and partition values are
-    * already materialized); a distributed commit re-reads its OWN new
-    * files' (pk, partition) projection — O(written data), the same
-    * maintenance cost Hudi's RLI pays — and shard-writes from executors.
-    * Anything unrenderable (NULL pk/partition) degrades to
-    * [[AcidTable.RliAuto]]. */
-  private def computeRliUpdate(
-      written: Seq[(String, Long)],
-      localRows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]]): AcidTable.RliUpdate = {
-    val newFiles = written.map(_._1)
-    if (!rliEnabled) return AcidTable.RliAuto
-    if (newFiles.isEmpty && localRows.forall(_.isEmpty)) return AcidTable.RliInherit
-    localRows match {
-      case Some(rows) =>
-        if (rows.exists(r => r.isNullAt(pkFieldIdx) || r.isNullAt(partFieldIdx)))
-          AcidTable.RliAuto
-        else AcidTable.RliAppend(writeRliDelta(rows.map(r =>
-          (String.valueOf(r.get(pkFieldIdx, schema(pkFieldIdx).dataType)), rowPart(r)))
-          .distinct).toSeq)
-      case None =>
-        if (newFiles.isEmpty) return AcidTable.RliInherit
-        // small-commit driver route (round 18): the index is on by
-        // default, so this pass taxes EVERY distributed commit with a
-        // Spark job — but a commit whose new files fit the fast-path
-        // budget can read them back on the driver (cached local parquet
-        // reads, partition injected from the directory name) and write
-        // the delta run with zero jobs, producing the same entries the
-        // distributed distinct would. Row-count gated on top of the byte
-        // budget: BULK commits keep the distributed sharded write — its
-        // executor-sharded generation is what seeds the index's shard
-        // layout (RecordIndexSpec pins that shape) — so only
-        // transactional-scale deltas take the driver run.
-        val localRoute =
-          if (fastSchemaOk && driverScaleFiles(newFiles))
-            Some(readRowsLocal(newFiles)).filter(_.size <= AcidTable.RliLocalWriteMaxRows)
-          else None
-        localRoute match {
-          case Some(rows) =>
-            if (rows.exists(r => r.isNullAt(pkFieldIdx) || r.isNullAt(partFieldIdx)))
-              AcidTable.RliAuto
-            else AcidTable.RliAppend(writeRliDelta(rows.map(r =>
-              (String.valueOf(r.get(pkFieldIdx, schema(pkFieldIdx).dataType)), rowPart(r)))
-              .distinct).toSeq)
-          case None =>
-            // snapshotFromFiles, not a raw parquet read: the partition value
-            // lives in the directory name, not in the file bytes
-            val kp = snapshotFromFiles(newFiles, written.toMap)
-              .select(col(pkCol).cast(StringType).as("__rk"),
-                col(partitionCol).cast(StringType).as("__rp"))
-              .distinct()
-            writeRliDeltaDistributed(kp) match {
-              case Some(refs) => AcidTable.RliAppend(refs)
-              case None => AcidTable.RliAuto
-            }
-        }
-    }
-  }
-
-  /** Build (or repair) the record index from the CURRENT snapshot in one
-    * metadata commit: distributed distinct (pk, partition) scan →
-    * executor-written shard runs → a root carrying `#rli=` +
-    * `#rlidone=1` with every data line reused verbatim. Enables the
-    * `recordIndex` property if unset. The route that arms the index on a
-    * table that predates it (or whose flag an unindexed bulk commit
-    * dropped). OCC: retries like any commit; each retry rescans, so
-    * concurrently-added rows cannot escape the rebuilt index. */
-  def rebuildRecordIndex(): Long = {
-    require(keyCastSupported,
-      s"record index requires a string/integral PK, got ${schema(pkCol).dataType}")
-    if (!tableProperty("recordIndex").contains("true"))
-      setTableProperty("recordIndex", Some("true"))
-    timeline.occ { base =>
-      val baseView = timeline.rootView(base)
-      val refs =
-        if (base < 0) Nil
-        else {
-          val kp = applyDvs(snapshotFromFiles(baseView.files, baseView.sizes), baseView.dvs)
-            .select(col(pkCol).cast(StringType).as("__rk"),
-              col(partitionCol).cast(StringType).as("__rp"))
-            .distinct()
-          writeRliDeltaDistributed(kp).getOrElse(throw new IllegalStateException(
-            "record index unsupported: table holds NULL pk or partition values"))
-        }
-      // an empty base (-1) publishes version 0 with no refs
-      publish(base + 1, Nil, Nil, Map.empty, "RLI_REBUILD", baseView.dvs,
-        reuseRootLines = baseView.refLines, rli = AcidTable.RliSet(refs, done = true))
-      base + 1
-    }
-  }
+  /** Build (or repair) the record index ([[Indexes.rebuildRecordIndex]]). */
+  def rebuildRecordIndex(): Long = indexes.rebuildRecordIndex()
 
   /** The live files of `parts` (partition VALUES) at version `v`. */
   private[graft] def filesForPartitions(v: Long, parts: Seq[String]): Seq[String] =
@@ -5816,11 +4513,12 @@ final class AcidTable private (
       sizes: Map[String, Long] = Map.empty,
       op: String,
       dvs: Seq[DvEntry] = Nil,
-      newStats: Map[String, Map[String, (Long, Long)]] = Map.empty,
+      newStats: Indexes.Stats = Map.empty,
       reuseRootLines: Seq[String] = Nil,
-      rli: AcidTable.RliUpdate = AcidTable.RliAuto): Unit = {
+      rli: Indexes.RliUpdate = Indexes.RliAuto,
+      conf: Indexes.Conf = indexes.conf()): Unit = {
     val t0 = System.nanoTime()
-    try publishImpl(v, files, touched, sizes, op, dvs, newStats, reuseRootLines, rli)
+    try publishImpl(v, files, touched, sizes, op, dvs, newStats, reuseRootLines, rli, conf)
     finally AcidTable.publishNanos.addAndGet(System.nanoTime() - t0)
   }
 
@@ -5829,13 +4527,13 @@ final class AcidTable private (
     * stay byte-identical and are neither resolved nor re-hashed, which is
     * what keeps commit metadata work O(touched partitions). `files` then
     * lists ONLY the touched partitions' final contents. Empty = regroup
-    * everything (bulk loads, restore, clone). */
+    * everything (bulk loads, restore, clone). `conf` is the index
+    * properties, read before the commit becomes durable (a misconfigured
+    * statsColumns must not report failure for a landed write). */
   private def publishImpl(
       v: Long, files: Seq[String], touched: Seq[FileCell], sizes: Map[String, Long],
-      op: String, dvs: Seq[DvEntry],
-      newStats: Map[String, Map[String, (Long, Long)]],
-      reuseRootLines: Seq[String] = Nil,
-      rli: AcidTable.RliUpdate = AcidTable.RliAuto): Unit = {
+      op: String, dvs: Seq[DvEntry], newStats: Indexes.Stats, reuseRootLines: Seq[String],
+      rli: Indexes.RliUpdate, conf: Indexes.Conf): Unit = {
     // every listed file carries its recorded size, so no reader stats one
     val unsized = files.filterNot(sizes.contains)
     require(unsized.isEmpty, s"publish of v$v lists ${unsized.size} files without a " +
@@ -5853,20 +4551,18 @@ final class AcidTable private (
     // commits still size their writes without stat round-trips), and the
     // root line carries the partition's file count, byte total, and —
     // when the stats sidecar covers every file — the per-column min/max
-    // envelope range pruning skips whole partitions with. The property
-    // read fails loudly BEFORE the commit becomes durable (misconfigured
-    // statsColumns must not report failure for a landed write).
-    val statsCols = statsColumnsProp
-    val fileStats: Map[String, Map[String, (Long, Long)]] =
+    // envelope range pruning skips whole partitions with
+    val statsCols = conf.statsCols
+    val fileStats: Indexes.Stats =
       if (statsCols.isEmpty || files.isEmpty) Map.empty // no fresh segments → no envelopes to build
-      else readClusterStats() ++ newStats
+      else indexes.readStats() ++ newStats
     val segs = files.groupBy(f => f.takeWhile(_ != '/')).toSeq.sortBy(_._1)
       .map { case (pd, fs) =>
         val entries = fs.sorted.map(f => f -> sizes(f))
         val (name, segBody) = Timeline.segmentBody(pd, entries)
         val bytes = entries.iterator.map(_._2).sum
-        val envelopes = statsCols.flatMap(c => partitionEnvelope(fs, c, fileStats).map(c -> _))
-        (RootView.segRefLine(pd, name, fs.size, bytes, envelopes), name, segBody)
+        (RootView.segRefLine(pd, name, fs.size, bytes, indexes.envelopes(fs, statsCols, fileStats)),
+          name, segBody)
       }
     // segment PUTs are independent (content-addressed, write-if-absent)
     // and finish before the root links below. The touch-on-reuse means a
@@ -5948,52 +4644,9 @@ final class AcidTable private (
           (0 until n).map(i => buildPage(i, buckets(i).result()))
         }
       }
-    // record-index headers (round 16): refs + completeness derived from
-    // the base root and this commit's RliUpdate — see the RliUpdate
-    // scaladoc for the per-variant semantics. Property off = no headers
-    // (any prior refs drop; the orphaned runs die with vacuum).
-    val rliHeader: Seq[String] =
-      if (!rliEnabled) Nil
-      else {
-        val inheritedDone = base.rli.done || v == 0
-        // the base's ref lines — `#rligen=` indirection included — carry
-        // VERBATIM on the non-folding paths: an unchanged generation must
-        // cost a commit zero expansion, rendering, or hashing (the
-        // steady-state O(delta tail) contract); rendering is
-        // deterministic, so verbatim carry and re-render are
-        // byte-identical when both would run
-        def baseRefLines: Seq[String] = base.rli.lines
-        val doneLines = if (inheritedDone) Seq(RootView.RliDoneLine) else Nil
-        rli match {
-          case AcidTable.RliAuto => baseRefLines // refs carry, flag drops
-          case AcidTable.RliInherit => baseRefLines ++ doneLines
-          case AcidTable.RliAppend(newRefs) =>
-            // fold when the DELTA TAIL (refs beyond the current merged
-            // generation) outgrows the bound — not the total ref count: a
-            // wide generation (thousands of shards on a billion-key
-            // table) must not re-trigger a fold on every commit. With an
-            // indirected generation the tail is exactly the inline refs,
-            // so the trigger needs no side-file expansion at all.
-            base.rli.gen match {
-              case Some((genFile, members)) =>
-                val tail = base.rli.inline ++ newRefs
-                if (tail.size > AcidTable.MaxRliRefs)
-                  rliHeaderLinesFor(mergeRliRefs(rliRefsOf(base.rli) ++ newRefs),
-                    inheritedDone)
-                else
-                  Seq(RootView.rliGenLine(genFile, members)) ++
-                    (if (tail.isEmpty) Nil else Seq(RootView.rliInlineLine(tail))) ++ doneLines
-              case None =>
-                val all = base.rli.inline ++ newRefs
-                val merged =
-                  if (all.size - AcidTable.rliGenPrefixLen(all) > AcidTable.MaxRliRefs)
-                    mergeRliRefs(all)
-                  else all
-                rliHeaderLinesFor(merged, inheritedDone)
-            }
-          case AcidTable.RliSet(refs, done) => rliHeaderLinesFor(refs, done)
-        }
-      }
+    // record-index headers: refs + completeness from the base root and
+    // this commit's RliUpdate
+    val rliHeader = indexes.rliHeader(base, v, rli, conf.rli)
     // CARRIED refs — pages reused verbatim from the base root, and index
     // runs whose refs carry through the `#rli=` header — are re-asserted
     // around the link like the segments this commit wrote: without it
@@ -6011,7 +4664,7 @@ final class AcidTable private (
     val newRli = RootView.Rli.of(rliHeader)
     val carriedRli: Seq[String] =
       newRli.gen.map(_._1).toSeq ++
-        scala.util.Try(rliRefsOf(newRli)).getOrElse(newRli.inline).map(_.name)
+        scala.util.Try(indexes.rliRefsOf(newRli)).getOrElse(newRli.inline).map(_.name)
     // the operation name rides the root as an audit header (the timeline
     // surface history() renders), and so do the live deletion-vector
     // entries (merge-on-read deletes, [[deleteVectored]]) — the inline
@@ -6020,34 +4673,6 @@ final class AcidTable private (
     val body = RootView.render(ts, touched, pageCount, op, dvs, rliHeader, rootTail)
     timeline.link(v, body, segs.map { case (_, name, segBody) => (name, segBody) } ++ pagesOut,
       carriedPages ++ carriedRli)
-  }
-
-  /** Partition-level [min, max] of `c` over `fs` in the encoded-long
-    * stats domain — Some only when EVERY file contributed: a range for
-    * the column, or a `c#n` null-count proving the file is ALL-null (its
-    * rows cannot match a range predicate, so it is excluded soundly).
-    * An all-null PARTITION yields (MaxValue, MinValue) — an empty
-    * envelope that prunes against any real probe range. */
-  private def partitionEnvelope(
-      fs: Seq[String], c: String,
-      stats: Map[String, Map[String, (Long, Long)]]): Option[(Long, Long)] = {
-    var lo = Long.MaxValue
-    var hi = Long.MinValue
-    fs.foreach { f =>
-      stats.get(f) match {
-        case Some(m) => m.get(c) match {
-          case Some((a, b)) =>
-            if (a < lo) lo = a
-            if (b > hi) hi = b
-          case None => m.get(s"$c#n") match {
-            case Some((nulls, rows)) if nulls == rows => () // all-null file
-            case _ => return None
-          }
-        }
-        case None => return None
-      }
-    }
-    Some((lo, hi))
   }
 }
 
@@ -6167,9 +4792,6 @@ object AcidTable {
   private[lake] val BranchesDir = "_branches"
   private[lake] val BranchPropsFile = "_branch.properties"
 
-  /** Stats-sidecar format-version marker key (see readClusterStats). */
-  private[lake] val StatsVerKey = "statsver"
-
   /** One resolved segment: the partition directory it lists and the
     * (manifest-relative file, recorded bytes) entries. */
   private[lake] final case class SegData(partDir: String, entries: Seq[(String, Long)])
@@ -6183,230 +4805,10 @@ object AcidTable {
       partDir: String, name: String, count: Long, bytes: Long,
       pstats: Map[String, (Long, Long)])
 
-  // ------------------------------------------------------- record index --
-
-  /** One record-level-index reference as carried in a root's `#rli=`
-    * header (`<name>|<shard>|<nShards>|<count>`, comma-joined): a
-    * content-addressed sorted run of `enc(pk)|enc(partition value)`
-    * lines. `nShards == 1` = an unsharded delta every probe consults;
-    * `nShards > 1` = one shard of a merged index — a probe key consults
-    * only the shard its hash selects, the O(1 shard + #deltas) lookup
-    * shape that survives a billion-key table. */
-  private[lake] final case class RliRef(name: String, shard: Int, nShards: Int, count: Long)
-
-  /** Loaded index run: keys and partition values as PARALLEL sorted
-    * arrays (sorted by key, then value — equal keys adjacent, so a probe
-    * is one binary search + a bounded forward walk), plus the raw body
-    * for content-addressed repair ([[AcidTable.fsckRepair]]). */
-  private[lake] final case class RliData(keys: Array[String], parts: Array[String], body: String)
-
-  /** How a commit updates the record index (the `rli` parameter of
-    * [[AcidTable.publish]]):
-    *  - [[RliAuto]] — rows may have been added but their keys were not
-    *    indexed: inherited refs carry (stale entries only ever ADD probe
-    *    candidates), the completeness flag DROPS — lookups fall back to
-    *    the full probe until [[AcidTable.rebuildRecordIndex]]. The safe
-    *    default every unwired publish path gets.
-    *  - [[RliInherit]] — the commit added no rows (DV-only deletes,
-    *    compaction, metadata ops): refs AND completeness carry verbatim.
-    *  - [[RliAppend]] — the commit's new rows were written as delta
-    *    ref(s): append to the inherited list (merging when the list
-    *    exceeds [[MaxRliRefs]]), completeness carries.
-    *  - [[RliSet]] — replace the index outright (overwrite, rebuild,
-    *    restore, clone). */
-  private[lake] sealed trait RliUpdate
-  private[lake] case object RliAuto extends RliUpdate
-  private[lake] case object RliInherit extends RliUpdate
-  private[lake] final case class RliAppend(refs: Seq[RliRef]) extends RliUpdate
-  private[lake] final case class RliSet(refs: Seq[RliRef], done: Boolean) extends RliUpdate
-
-  /** Delta-run count BEYOND THE CURRENT GENERATION above which a commit
-    * folds the index (the LSM merge): bounds probe fan-out at O(1 shard
-    * + MaxRliRefs deltas). Counted against [[rliGenPrefixLen]], so a
-    * wide merged generation never re-triggers folding by itself. */
-  private[lake] val MaxRliRefs = 16
-
-  /** Length of the leading GENERATION prefix of a ref list: the longest
-    * leading run of refs sharing one `nShards > 1` with pairwise-distinct
-    * shard ids — exactly the previous fold's output, because appends only
-    * ever add refs AFTER it. (A leading distributed delta recognized as a
-    * generation is still a valid one: its runs are `rliShardOf`-consistent
-    * shards.) Driver deltas (`nShards = 1`) never form a generation. */
-  private[lake] def rliGenPrefixLen(refs: Seq[RliRef]): Int = {
-    if (refs.isEmpty) return 0
-    val n0 = refs.head.nShards
-    if (n0 <= 1) return 0
-    val seen = scala.collection.mutable.Set.empty[Int]
-    refs.takeWhile(r => r.nShards == n0 && seen.add(r.shard)).size
-  }
-  /** Target entries per merged shard — shard count is the next power of
-    * two covering `total / RliShardTarget`, so shard bytes stay bounded
-    * as the table grows. */
-  private[lake] val RliShardTarget = 65536
-  /** How far past `nShards × RliShardTarget` the estimated entry count
-    * may grow before a fold re-shards the generation (growth is a full
-    * re-shard, so it must be rare; 4× keeps shard files well under a
-    * typical object-store small-read sweet spot while folding
-    * incrementally through 15/16ths of the generation's life). */
-  private[lake] val RliShardSlack = 4L
-  /** Entry-count budget above which a fold leaves the driver: the driver
-    * leg materializes at most this many (key, partition) string pairs
-    * (~100 MB worst case); bigger folds run distributed
-    * ([[AcidTable]]'s `distributedRliFold`) and the driver holds ref
-    * names only. A `var` solely so RecordIndexSpec can force the
-    * distributed leg on a CI-sized table. */
-  private[lake] var RliDriverFoldMax = 1L << 20
-
-  /** The shard a key probes/lands in: over the URL-ENCODED key rendering
-    * (the line format's own domain), identical on the write path (driver
-    * and executor), the merge, and the probe. */
-  private[lake] def rliShardOf(encKey: String, nShards: Int): Int =
-    if (nShards <= 1) 0 else (encKey.hashCode & Int.MaxValue) % nShards
-
-  /** Ref-count above which a root stores its GENERATION list in a
-    * content-addressed `rlg-` side file instead of inline `#rli=` text
-    * (see `rliHeaderLinesFor`). 64 refs ≈ 3.5 KB inline — below
-    * it the indirection saves nothing. A `var` solely so
-    * RecordIndexSpec can engage the side-file path on a CI-sized
-    * generation. */
-  private[lake] var RliGenInlineMax = 64
-
-  /** Index-probe telemetry (spec-checked): how many unhinted lookups
-    * consulted the record index, and how many of those it routed (cells
-    * resolved without touching the per-partition segment sweep). */
-  private[graft] val rliProbes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val rliRouted = new java.util.concurrent.atomic.AtomicLong(0)
-
   private[lake] def sha1Hex(s: String): String = {
     val d = java.security.MessageDigest.getInstance("SHA-1")
       .digest(s.getBytes(StandardCharsets.UTF_8))
     d.map(b => f"$b%02x").mkString
-  }
-
-  /** (mtime, length)-validated cache of the per-file stats sidecar: the
-    * publish path consults it for partition envelopes, so parsing must
-    * not be a per-commit O(entries) tax. Entries are append-only for
-    * immutable files, so a stale hit only MISSES pruning opportunities —
-    * never prunes wrongly. */
-  private val clusterStatsCacheMap =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Long, Long, Map[String, Map[String, (Long, Long)]])]()
-  private[lake] def cachedClusterStats(
-      path: String, mtime: Long, len: Long): Option[Map[String, Map[String, (Long, Long)]]] =
-    Option(clusterStatsCacheMap.get(path)).collect {
-      case (m, l, v) if m == mtime && l == len => v
-    }
-  private[lake] def cacheClusterStats(
-      path: String, mtime: Long, len: Long,
-      v: Map[String, Map[String, (Long, Long)]]): Unit = {
-    clusterStatsCacheMap.put(path, (mtime, len, v)); ()
-  }
-
-  // ---------------------------------------- write-stats type encoding --
-  //
-  // The stats sidecar stores per-file (Long, Long) ranges. Every supported
-  // type maps into that domain through an ORDER-PRESERVING encoding
-  // (s <= t implies enc(s) <= enc(t)), so range pruning on the encoded
-  // longs is sound for the native values:
-  //   integrals  -> the value
-  //   DATE       -> days since epoch
-  //   TIMESTAMP  -> micros since epoch
-  //   DECIMAL    -> unscaled long at the column's declared scale (p <= 18)
-  //   STRING     -> first 8 UTF-8 bytes, big-endian, sign-bit-flipped so
-  //                 signed long order equals unsigned byte order (Delta's
-  //                 truncated-string min/max analog; the prefix of the
-  //                 file min is <= every row, the prefix of the file max
-  //                 is >= every row — lossy, never unsound)
-
-  private[graft] def statsSupported(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | ShortType | ByteType => true
-    case DateType | TimestampType | StringType => true
-    case org.apache.spark.sql.types.DoubleType | org.apache.spark.sql.types.FloatType => true
-    case d: DecimalType => d.precision <= 18
-    case _ => false
-  }
-
-  /** IEEE-754 total-order encoding into SIGNED long order: non-negative
-    * doubles keep their raw bits (already ascending, ≥ 0); negatives flip
-    * every bit but the sign (stay negative, magnitude order reversed) —
-    * signed long order then equals `java.lang.Double.compare` order
-    * (-Inf < … < 0.0 < … < +Inf < NaN). -0.0 is normalized to 0.0 FIRST
-    * on both the write and the probe side: SQL comparison treats them
-    * equal, so the two must share one encoding or a [0.0, x] range
-    * could prune a file whose max is -0.0. Floats promote to double
-    * (exact, order-preserving). */
-  private[graft] def statsDoubleEncode(d: Double): Long = {
-    val v = if (d == 0.0d) 0.0d else d // collapses -0.0
-    val raw = java.lang.Double.doubleToLongBits(v) // canonical NaN
-    if (raw >= 0) raw else raw ^ Long.MaxValue
-  }
-
-  /** UTF-8 prefix (first 8 bytes, big-endian, zero-padded) with the sign
-    * bit flipped: unsigned byte-wise order — which is exactly Spark's
-    * default UTF8_BINARY string order — becomes signed long order. */
-  private[graft] def statsUtf8Prefix(bytes: Array[Byte]): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 8) {
-      v = (v << 8) | (if (i < bytes.length) bytes(i) & 0xffL else 0L)
-      i += 1
-    }
-    v ^ Long.MinValue
-  }
-
-  /** Encode an EXTERNAL (driver JVM) value into the sidecar long domain.
-    * None for unencodable values — the caller records no range (files
-    * without a range are never pruned, so None is always safe). */
-  private[graft] def statsEncode(dt: DataType, v: Any): Option[Long] = (dt, v) match {
-    case (_, null) => None
-    case (LongType | IntegerType | ShortType | ByteType, n: java.lang.Number) =>
-      Some(n.longValue())
-    case (DateType, d: java.sql.Date) => Some(d.toLocalDate.toEpochDay)
-    case (DateType, d: java.time.LocalDate) => Some(d.toEpochDay)
-    case (TimestampType, t: java.sql.Timestamp) =>
-      // floorDiv, not truncating division: getTime of a pre-1970 timestamp
-      // with fractional seconds rounds TOWARD zero, which would flip the
-      // sub-second part's sign (1969-12-31T23:59:59.5 must encode -500000
-      // micros, not +500000) and diverge from statsEncodeInternal's exact
-      // epoch-micros domain — Spark's own fromJavaTimestamp uses floorDiv.
-      Some(Math.addExact(Math.multiplyExact(Math.floorDiv(t.getTime, 1000L), 1000000L),
-        t.getNanos.toLong / 1000L))
-    case (TimestampType, t: java.time.Instant) =>
-      Some(Math.addExact(Math.multiplyExact(t.getEpochSecond, 1000000L),
-        t.getNano.toLong / 1000L))
-    case (d: DecimalType, b: java.math.BigDecimal) if d.precision <= 18 =>
-      scala.util.Try(
-        b.setScale(d.scale, java.math.RoundingMode.UNNECESSARY)
-          .unscaledValue().longValueExact()).toOption
-    case (d: DecimalType, b: BigDecimal) => statsEncode(d, b.bigDecimal)
-    case (org.apache.spark.sql.types.DoubleType, n: java.lang.Number) =>
-      Some(statsDoubleEncode(n.doubleValue()))
-    case (org.apache.spark.sql.types.FloatType, n: java.lang.Number) =>
-      Some(statsDoubleEncode(n.floatValue().toDouble))
-    case (StringType, s: String) =>
-      Some(statsUtf8Prefix(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    case _ => None
-  }
-
-  /** Encode straight off an InternalRow — the 0-job commit fast path's
-    * route (no external conversion). Caller has null-checked. */
-  private[graft] def statsEncodeInternal(
-      dt: DataType,
-      r: org.apache.spark.sql.catalyst.InternalRow,
-      idx: Int): Option[Long] = dt match {
-    case LongType => Some(r.getLong(idx))
-    case IntegerType => Some(r.getInt(idx).toLong)
-    case ShortType => Some(r.getShort(idx).toLong)
-    case ByteType => Some(r.getByte(idx).toLong)
-    case DateType => Some(r.getInt(idx).toLong) // internal DATE = epoch days
-    case TimestampType => Some(r.getLong(idx)) // internal TS = epoch micros
-    case d: DecimalType if d.precision <= 18 =>
-      scala.util.Try(r.getDecimal(idx, d.precision, d.scale).toUnscaledLong).toOption
-    case StringType => Some(statsUtf8Prefix(r.getUTF8String(idx).getBytes))
-    case org.apache.spark.sql.types.DoubleType => Some(statsDoubleEncode(r.getDouble(idx)))
-    case org.apache.spark.sql.types.FloatType =>
-      Some(statsDoubleEncode(r.getFloat(idx).toDouble))
-    case _ => None
   }
 
   /** Commit-phase wall-time accumulators (nanos) — where a transactional
@@ -6535,7 +4937,6 @@ object AcidTable {
 
   private val DataDir = "data"
   private val MetaFile = "_meta.properties"
-  private[lake] val ClusterStatsFile = "_cluster.properties"
 
   /** [[AcidTable.detail]]'s one-row schema — shared with the catalog
     * front-end's DESCRIBE DETAIL command so the two can never drift. */
@@ -6551,35 +4952,6 @@ object AcidTable {
     StructField("num_buckets", LongType),
     StructField("properties", StringType)))
 
-  private[lake] val BloomDir = "_blooms"
-  private[lake] val BloomSegMagic = 0x424c4d53 // "BLMS" — commit bloom segment
-  private[lake] val BloomFpp = 0.01
-
-  /** Directory index of a table's commit bloom SEGMENTS: which segment
-    * file holds which data file's serialized filters, at what offset.
-    * One segment per commit (round 14) replaces one sidecar PUT per data
-    * file; this index is rebuilt incrementally by listing `_blooms` for
-    * segment files not yet parsed — segments are immutable once written,
-    * so entries never go stale (a vacuumed segment's entries dangle
-    * harmlessly: live snapshots no longer name its files). */
-  /** Lock-free on the hot read path (round 15): an unhinted probe's
-    * 8-way per-ref pool issues tens of thousands of rel lookups — `rels`
-    * is a ConcurrentHashMap read without the lock; the lock only guards
-    * the directory re-scan on a miss. `lastSlice` memoizes the most
-    * recently parsed slice, so a bulk load's shared fallback slice (one
-    * (path, offset, length) for thousands of files) is a volatile read
-    * per candidate instead of a synchronized LRU hit. */
-  private final class BloomSegIndex {
-    val seen = new java.util.HashSet[String]()
-    val rels = new java.util.concurrent.ConcurrentHashMap[String, (Path, Long, Int)]()
-    @volatile var lastSlice: (String,
-      Map[String, org.apache.spark.util.sketch.BloomFilter]) = _
-  }
-  private val bloomSegIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, BloomSegIndex]()
-  private def bloomSegIndex(path: String): BloomSegIndex =
-    bloomSegIndexes.computeIfAbsent(path, _ => new BloomSegIndex)
-
   /** Paged-root sizing (round 15): roots with more partition lines than
     * the threshold page them in fixed chunks. 4096 inline lines ≈ 400 KB
     * root — the point where rewriting it per commit starts to show
@@ -6593,21 +4965,6 @@ object AcidTable {
     * views, segments, pages, index runs, bloom slices) — specs staging
     * unrecoverable-loss scenarios need the "driver restarted" state. */
   private[lake] def purgeCachesForSpec(path: String): Unit = Lru.forget(path)
-
-  /** Parsed bloom-segment slices, keyed (table path,
-    * `<segment>#<offset>#<length>`). SOUND to cache forever: a bloom
-    * segment is written once and never modified — it can only orphan
-    * (vacuum), at which point no manifest references its data files. Each
-    * parsed slice is ~12 KB of bit array per column. */
-  private val bloomCache =
-    new Lru[String, Map[String, org.apache.spark.util.sketch.BloomFilter]](4096)
-
-  /** Per-table-path lock serializing stats-sidecar read-modify-writes
-    * within this JVM (see [[AcidTable.mergeFileStats]]). */
-  private val statsLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[lake] def statsLock(path: String): Object =
-    statsLocks.computeIfAbsent(path, _ => new Object)
 
   /** Hash buckets per partition of a table created without an explicit
     * count — the one default every DDL front end uses. */
@@ -6640,7 +4997,6 @@ object AcidTable {
     // the stats-sidecar cache are (mtime, size)-checked, but a recreated
     // file could in principle collide on both.
     Lru.forget(path)
-    clusterStatsCacheMap.remove(path)
     new Timeline(path).init()
     Files.createDirectories(Paths.get(path, DataDir))
     writeMeta(path, schema, pkCol, partitionCol, precombineCol, stablePartitions, numBuckets)
@@ -6701,31 +5057,46 @@ object AcidTable {
     // delete mode) are NOT structural writeMeta arguments — carry them
     // over from the existing meta so schema-evolution rewrites (which
     // rebuild the file from their own args) can never silently drop them
-    val existing = Paths.get(path, MetaFile)
-    if (Files.exists(existing)) {
-      val prior = new java.util.Properties()
-      val in = Files.newInputStream(existing)
-      try prior.load(in) finally in.close()
+    if (Files.exists(Paths.get(path, MetaFile))) {
+      val prior = loadMeta(path)
       prior.stringPropertyNames().forEach { k =>
         if (k.startsWith(TablePropPrefix) && !props.containsKey(k))
           props.setProperty(k, prior.getProperty(k))
       }
     }
-    val tmp = Paths.get(path, s".meta-tmp-${UUID.randomUUID()}")
+    storeMeta(path, props)
+  }
+
+  /** Load a properties file (`_meta.properties`, the stats sidecar). */
+  private[lake] def loadProperties(file: Path): java.util.Properties = {
+    val props = new java.util.Properties()
+    val in = Files.newInputStream(file)
+    try props.load(in) finally in.close()
+    props
+  }
+
+  /** Atomically replace a properties file: a temp file beside it, then
+    * an atomic rename over it. */
+  private[lake] def storeProperties(props: java.util.Properties, file: Path, comment: String): Unit = {
+    val tmp = file.resolveSibling(s".${file.getFileName}-tmp-${UUID.randomUUID()}")
     val out = Files.newOutputStream(tmp)
-    try props.store(out, "graft AcidTable metadata") finally out.close()
-    Files.move(tmp, Paths.get(path, MetaFile),
+    try props.store(out, comment) finally out.close()
+    Files.move(tmp, file,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    ()
   }
+
+  private def loadMeta(path: String): java.util.Properties = loadProperties(Paths.get(path, MetaFile))
+
+  private def storeMeta(path: String, props: java.util.Properties): Unit =
+    storeProperties(props, Paths.get(path, MetaFile), "graft AcidTable metadata")
 
   /** Open an existing table from its `_meta.properties`. Metadata
     * without a `numBuckets` key fails loudly: the bucket count fixes
     * every data file's cell, so no default can be guessed. */
   def open(spark: SparkSession, path: String): AcidTable = {
-    val props = new java.util.Properties()
-    val in = Files.newInputStream(Paths.get(path, MetaFile))
-    try props.load(in) finally in.close()
+    val props = loadMeta(path)
     val numBuckets = Option(props.getProperty("numBuckets")).getOrElse(
       throw new IllegalStateException(
         s"unsupported table metadata in ${Paths.get(path, MetaFile)}: no numBuckets key"))
@@ -6768,17 +5139,11 @@ object AcidTable {
   /** Read one free-form table property (stored `tableProps.<key>`), a
     * TABLE-LEVEL read like [[readConstraints]]: every handle sees a
     * concurrent SET immediately. */
-  private[lake] def readTableProperty(path: String, key: String): Option[String] = {
-    val props = new java.util.Properties()
-    val in = Files.newInputStream(Paths.get(path, MetaFile))
-    try props.load(in) finally in.close()
-    Option(props.getProperty(TablePropPrefix + key))
-  }
+  private[lake] def readTableProperty(path: String, key: String): Option[String] =
+    Option(loadMeta(path).getProperty(TablePropPrefix + key))
 
   private[lake] def readTableProperties(path: String): Map[String, String] = {
-    val props = new java.util.Properties()
-    val in = Files.newInputStream(Paths.get(path, MetaFile))
-    try props.load(in) finally in.close()
+    val props = loadMeta(path)
     val b = Map.newBuilder[String, String]
     props.stringPropertyNames().forEach { k =>
       if (k.startsWith(TablePropPrefix))
@@ -6790,31 +5155,19 @@ object AcidTable {
   /** Atomically set (value nonEmpty) or remove (None) one free-form table
     * property in `_meta.properties`. */
   private[lake] def writeTableProperty(path: String, key: String, value: Option[String]): Unit = {
-    val props = new java.util.Properties()
-    val metaPath = Paths.get(path, MetaFile)
-    val in = Files.newInputStream(metaPath)
-    try props.load(in) finally in.close()
+    val props = loadMeta(path)
     value match {
       case Some(v) => props.setProperty(TablePropPrefix + key, v)
       case None => props.remove(TablePropPrefix + key)
     }
-    val tmp = Paths.get(path, s".meta-tmp-${UUID.randomUUID()}")
-    val out = Files.newOutputStream(tmp)
-    try props.store(out, "graft AcidTable metadata") finally out.close()
-    Files.move(tmp, metaPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    storeMeta(path, props)
   }
 
   /** The table's CURRENT constraint list from `_meta.properties` — the
     * commit-time metadata read that makes CHECK enforcement table-level
     * rather than handle-scoped. */
-  private[lake] def readConstraints(path: String): Seq[(String, String)] = {
-    val props = new java.util.Properties()
-    val in = Files.newInputStream(Paths.get(path, MetaFile))
-    try props.load(in) finally in.close()
-    parseConstraints(props)
-  }
+  private[lake] def readConstraints(path: String): Seq[(String, String)] =
+    parseConstraints(loadMeta(path))
 
   private def deleteRecursively(f: File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)

@@ -1,7 +1,8 @@
 package graft.lake
 
 /** A count-bounded, access-ordered LRU of one kind of immutable table
-  * artifact (parsed roots, segments, pages, index runs, bloom slices),
+  * artifact (parsed roots, segments, pages, index runs, stats sidecars,
+  * bloom segment directories and slices),
   * shared by every table handle in the process and keyed (table path,
   * name). Every instance registers itself, so [[Lru.forget]] drops all
   * of one path's cached artifacts at once.
@@ -16,6 +17,10 @@ private[lake] final class Lru[K, V](maxEntries: Int) {
   def get(path: String, k: K): Option[V] = m.synchronized(Option(m.get((path, k))))
 
   def put(path: String, k: K, v: V): Unit = m.synchronized { m.put((path, k), v); () }
+
+  def getOrElseUpdate(path: String, k: K)(v: => V): V = m.synchronized {
+    Option(m.get((path, k))).getOrElse { val x = v; m.put((path, k), x); x }
+  }
 
   private def forgetPath(path: String): Unit =
     m.synchronized { m.keySet.removeIf(_._1 == path); () }

@@ -121,16 +121,14 @@ object MetaScale {
         rel
       }
     }
-    // one shared bloom payload (sentinel only) for every placeholder —
-    // the same shared-slot shape a commit-wide fallback stamp uses
+    // one shared bloom payload (sentinel only) for every placeholder:
+    // the segment writer stores a shared payload once
     val sentinelBloom: Seq[(String, Array[Byte])] = {
       val bf = org.apache.spark.util.sketch.BloomFilter.create(10000L, 0.01)
       bf.putBinary(sentinel.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      Seq("pk" -> bos.toByteArray)
+      Seq("pk" -> Indexes.bytesOf(bf))
     }
-    t.writeBloomSegment(synth.map(rel => rel -> sentinelBloom))
+    t.indexes.writeBloomSegment(synth.map(rel => rel -> sentinelBloom))
     val allFiles = realFiles ++ synth
     val touched = (1 until nParts).map(p => FileCell(s"P$p", -1))
     val sizes = t.timeline.rootView(t.latestVersion()).sizes ++
@@ -143,9 +141,9 @@ object MetaScale {
     // published as an RliSet with the completeness flag, exactly the
     // header an indexed-from-birth bulk load stamps
     val rliUpdate =
-      if (!rli) AcidTable.RliAuto
-      else AcidTable.RliSet(
-        t.writeRliDelta(
+      if (!rli) Indexes.RliAuto
+      else Indexes.RliSet(
+        t.indexes.writeRliDelta(
           (0 until filesPerPartition * 10).map(i => s"k$i" -> "P0") ++
             (1 until nParts).map(p => sentinel -> s"P$p")).toSeq,
         done = true)

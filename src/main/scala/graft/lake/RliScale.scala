@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   *  1. probe latency stays FLAT in key count (one shard binary search),
   *  2. the steady-state fold is INCREMENTAL — O(delta + dirty shards),
   *     not O(index) — and runs on the driver only under a bounded entry
-  *     budget ([[AcidTable.RliDriverFoldMax]]),
+  *     budget ([[Indexes.RliDriverFoldMax]]),
   *  3. the generation-growth re-shard (the only O(index) event, log-many
   *     times over a table's life) runs DISTRIBUTED: executor-read →
   *     shuffle by shard → executor-written shard files; the driver holds
@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   *
   * Index synthesis mirrors MetaScale's layout synthesis: the index is
   * built through the REAL distributed shard-write path
-  * ([[AcidTable.writeRliDeltaDistributed]]) from a generated (pk,
+  * ([[Indexes.writeRliDeltaDistributed]]) from a generated (pk,
   * partition) frame and published with the completeness flag — exactly
   * the header an indexed-from-birth bulk load stamps — while the table's
   * real data stays a small seeded partition (probes measured here are
@@ -82,15 +82,15 @@ object RliScale {
         java.util.Arrays.asList(seed.map(r => Row(r.getString(0), "P0")): _*),
         StructType(Seq(StructField("__rk", StringType, nullable = false),
           StructField("__rp", StringType, nullable = false)))))
-    var refs: Seq[AcidTable.RliRef] = Nil
+    var refs: Seq[Indexes.RliRef] = Nil
     val buildMs = timedMs {
-      refs = t.writeRliDeltaDistributed(kp).getOrElse(
+      refs = t.indexes.writeRliDeltaDistributed(kp).getOrElse(
         sys.error("distributed index write rejected the frame"))
     }
     val base = t.latestVersion()
     val baseView = t.timeline.rootView(base)
     t.publish(base + 1, Nil, Nil, Map.empty, "RLI_REBUILD", baseView.dvs,
-      reuseRootLines = baseView.refLines, rli = AcidTable.RliSet(refs, done = true))
+      reuseRootLines = baseView.refLines, rli = Indexes.RliSet(refs, done = true))
     emit("build_index_distributed", buildMs, Nil,
       s"executor shard-write of $nKeys entries into ${refs.size} runs")
 
@@ -98,13 +98,13 @@ object RliScale {
     //    key count (shard route + binary search)
     val present = Seq(s"k${nKeys / 2}")
     val absent = Seq("nope-xyz")
-    val pCold = timedMs(t.rliLookup(t.timeline.rootView(t.latestVersion()), present))
+    val pCold = timedMs(t.indexes.rliLookup(t.timeline.rootView(t.latestVersion()), present))
     emit("rli_probe_present", pCold,
-      (1 to 10).map(_ => timedMs(t.rliLookup(t.timeline.rootView(t.latestVersion()), present))),
-      s"cells=${t.rliLookup(t.timeline.rootView(t.latestVersion()), present).map(_.size).getOrElse(-1)}")
-    val aCold = timedMs(t.rliLookup(t.timeline.rootView(t.latestVersion()), absent))
+      (1 to 10).map(_ => timedMs(t.indexes.rliLookup(t.timeline.rootView(t.latestVersion()), present))),
+      s"cells=${t.indexes.rliLookup(t.timeline.rootView(t.latestVersion()), present).map(_.size).getOrElse(-1)}")
+    val aCold = timedMs(t.indexes.rliLookup(t.timeline.rootView(t.latestVersion()), absent))
     emit("rli_probe_absent", aCold,
-      (1 to 10).map(_ => timedMs(t.rliLookup(t.timeline.rootView(t.latestVersion()), absent))),
+      (1 to 10).map(_ => timedMs(t.indexes.rliLookup(t.timeline.rootView(t.latestVersion()), absent))),
       "proven-empty")
 
     // helper: one driver-local append commit; returns (ms, refCountAfter)
@@ -115,14 +115,14 @@ object RliScale {
         t.upsert(spark.createDataFrame(java.util.Arrays.asList(
           Row(s"a$seq", "P0", seq.toDouble)), schema), Some(Seq("P0")))
       }
-      (ms, t.rliRefsOf(t.timeline.rootView(t.latestVersion()).rli).size)
+      (ms, t.indexes.rliRefsOf(t.timeline.rootView(t.latestVersion()).rli).size)
     }
 
     // 2. append commits until the first fold fires. At 6 M keys the
     //    16-shard bulk generation is past its slack bound, so this fold
     //    is the GENERATION-GROWTH re-shard — distributed (6 M > the
     //    driver fold budget): the one O(index) event, measured alone.
-    val preFold = (1 to AcidTable.MaxRliRefs).map(_ => appendOnce())
+    val preFold = (1 to Indexes.MaxRliRefs).map(_ => appendOnce())
     emit("append_commit_no_fold", preFold.head._1, preFold.tail.map(_._1),
       s"driver delta append; refs=${preFold.last._2}")
     val (reshardMs, refsAfterReshard) = appendOnce()
@@ -132,7 +132,7 @@ object RliScale {
     // 3. steady state on the wide generation: 16 more appends, then the
     //    fold that merges them — INCREMENTAL (delta entries + dirty
     //    shards only; driver leg, bounded by RliDriverFoldMax)
-    val mid = (1 to AcidTable.MaxRliRefs).map(_ => appendOnce())
+    val mid = (1 to Indexes.MaxRliRefs).map(_ => appendOnce())
     emit("append_commit_steady", mid.head._1, mid.tail.map(_._1),
       s"refs=${mid.last._2}")
     val (incMs, refsAfterInc) = appendOnce()
@@ -141,11 +141,11 @@ object RliScale {
 
     // 4. probe again on the folded generation (route through the wide
     //    generation + fresh deltas)
-    emit("rli_probe_after_folds", timedMs(t.rliLookup(t.timeline.rootView(t.latestVersion()), present)),
-      (1 to 10).map(_ => timedMs(t.rliLookup(t.timeline.rootView(t.latestVersion()), present))))
-    emit("rli_probe_delta_key", timedMs(t.rliLookup(t.timeline.rootView(t.latestVersion()), Seq("a3"))),
-      (1 to 10).map(_ => timedMs(t.rliLookup(t.timeline.rootView(t.latestVersion()), Seq("a3")))),
-      s"cells=${t.rliLookup(t.timeline.rootView(t.latestVersion()), Seq("a3")).map(_.size).getOrElse(-1)}")
+    emit("rli_probe_after_folds", timedMs(t.indexes.rliLookup(t.timeline.rootView(t.latestVersion()), present)),
+      (1 to 10).map(_ => timedMs(t.indexes.rliLookup(t.timeline.rootView(t.latestVersion()), present))))
+    emit("rli_probe_delta_key", timedMs(t.indexes.rliLookup(t.timeline.rootView(t.latestVersion()), Seq("a3"))),
+      (1 to 10).map(_ => timedMs(t.indexes.rliLookup(t.timeline.rootView(t.latestVersion()), Seq("a3")))),
+      s"cells=${t.indexes.rliLookup(t.timeline.rootView(t.latestVersion()), Seq("a3")).map(_.size).getOrElse(-1)}")
 
     // 4b. distributed fold × racing vacuum (round 18, r17 verdict #7):
     //     the executor-leg fold's input anchor (mtime-touch before the
@@ -156,8 +156,8 @@ object RliScale {
     //     distributedRliFold while the sweeper runs; any anchor hole
     //     reads as a fold crash, a wrong probe, or a vacuum error.
     locally {
-      val savedBudget = AcidTable.RliDriverFoldMax
-      AcidTable.RliDriverFoldMax = 0L
+      val savedBudget = Indexes.RliDriverFoldMax
+      Indexes.RliDriverFoldMax = 0L
       val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val vac = new Thread(() => {
@@ -170,17 +170,17 @@ object RliScale {
       vac.setDaemon(true)
       vac.start()
       try {
-        (1 to AcidTable.MaxRliRefs).foreach(_ => appendOnce())
+        (1 to Indexes.MaxRliRefs).foreach(_ => appendOnce())
         val (raceMs, refsAfterRace) = appendOnce() // the distributed fold, raced
         stop.set(true); vac.join(15000)
         require(errs.isEmpty, s"vacuum errors racing the distributed fold: $errs")
-        val probeOk = t.rliLookup(t.timeline.rootView(t.latestVersion()), present).exists(_.nonEmpty)
+        val probeOk = t.indexes.rliLookup(t.timeline.rootView(t.latestVersion()), present).exists(_.nonEmpty)
         require(probeOk, "probe lost under fold x vacuum race")
         emit("fold_distributed_vacuum_race", raceMs, Nil,
           s"racing sweeper grace=1.5s period=100ms; refs=$refsAfterRace; clean")
       } finally {
         stop.set(true)
-        AcidTable.RliDriverFoldMax = savedBudget
+        Indexes.RliDriverFoldMax = savedBudget
       }
     }
 
@@ -191,7 +191,7 @@ object RliScale {
     //    rendering would be ~55 bytes × shards in EVERY root)
     val rli = t.timeline.rootView(t.latestVersion()).rli
     val headerBytes = rli.lines.map(_.length).sum
-    val inlineWouldBe = t.rliRefsOf(rli).map(RootView.renderRliRef(_).length + 1).sum
+    val inlineWouldBe = t.indexes.rliRefsOf(rli).map(RootView.renderRliRef(_).length + 1).sum
     emit("root_rli_header_bytes", headerBytes.toDouble, Nil,
       s"vs $inlineWouldBe inline; gen=${rli.gen.map(_._1).getOrElse("inline")}")
   }

@@ -58,15 +58,7 @@ private[lake] final class RootView private (
     * touch; the pool pays off on the cold object-store-shaped read). */
   lazy val entries: Seq[(String, Long)] =
     if (segRefs.size <= 64) segRefs.flatMap(r => readSegment(r.name).entries)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      try segRefs.map { r =>
-        pool.submit(new java.util.concurrent.Callable[Seq[(String, Long)]] {
-          override def call(): Seq[(String, Long)] = readSegment(r.name).entries
-        })
-      }.flatMap(_.get())
-      finally { pool.shutdown(); () }
-    }
+    else Par.map(segRefs)(r => readSegment(r.name).entries).flatten
 
   lazy val files: Seq[String] = entries.map(_._1)
 
@@ -182,7 +174,7 @@ private[lake] object RootView {
     * `#rligen=` / `#rli=` lines as written — carried verbatim by commits
     * that leave the index unchanged. */
   final case class Rli(
-      gen: Option[(String, Long)], inline: Seq[AcidTable.RliRef], done: Boolean,
+      gen: Option[(String, Long)], inline: Seq[Indexes.RliRef], done: Boolean,
       lines: Seq[String])
 
   object Rli {
@@ -202,16 +194,16 @@ private[lake] object RootView {
 
   val RliDoneLine = "#rlidone=1"
 
-  def renderRliRef(r: AcidTable.RliRef): String = s"${r.name}|${r.shard}|${r.nShards}|${r.count}"
+  def renderRliRef(r: Indexes.RliRef): String = s"${r.name}|${r.shard}|${r.nShards}|${r.count}"
 
-  def parseRliRef(s: String): Option[AcidTable.RliRef] = s.split('|') match {
+  def parseRliRef(s: String): Option[Indexes.RliRef] = s.split('|') match {
     case Array(n, sh, ns, c) =>
       for (a <- sh.toIntOption; b <- ns.toIntOption; d <- c.toLongOption)
-        yield AcidTable.RliRef(n, a, b, d)
+        yield Indexes.RliRef(n, a, b, d)
     case _ => None
   }
 
-  def rliInlineLine(refs: Seq[AcidTable.RliRef]): String =
+  def rliInlineLine(refs: Seq[Indexes.RliRef]): String =
     "#rli=" + refs.map(renderRliRef).mkString(",")
 
   def rliGenLine(sideFile: String, members: Long): String = s"#rligen=$sideFile|$members"

@@ -295,15 +295,7 @@ private[lake] final class Timeline(tablePath: String) {
     * and all are awaited (failures rethrown) before this returns. */
   def writeAll(files: Seq[(String, String)]): Unit =
     if (files.size <= 2) files.foreach { case (n, b) => writeContent(n, b, touch = true) }
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(8, files.size))
-      try files.map { case (n, b) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = writeContent(n, b, touch = true)
-        })
-      }.foreach(_.get())
-      finally { pool.shutdown(); () }
-    }
+    else { Par.map(files) { case (n, b) => writeContent(n, b, touch = true) }; () }
 
   /** Copy content file `name` from `other`'s store into this one when it
     * is there (clone and branch publish carry index runs this way). */
@@ -352,7 +344,7 @@ private[lake] final class Timeline(tablePath: String) {
     * commit path must abort (a commit that silently dropped inherited
     * refs while the completeness flag carries would turn lookups into
     * wrong proven-empties); read-only callers wrap. */
-  def readRliGen(name: String): Seq[AcidTable.RliRef] =
+  def readRliGen(name: String): Seq[Indexes.RliRef] =
     rliGens.get(tablePath, name).map(_._1).getOrElse {
       val body = readContent(name)
       val refs = body.linesIterator.filter(_.nonEmpty).flatMap(RootView.parseRliRef).toSeq
@@ -361,7 +353,7 @@ private[lake] final class Timeline(tablePath: String) {
     }
 
   /** Write a generation side file listing `gen`; returns its name. */
-  def writeRliGen(gen: Seq[AcidTable.RliRef]): String = {
+  def writeRliGen(gen: Seq[Indexes.RliRef]): String = {
     val body = gen.map(RootView.renderRliRef).mkString("\n")
     val name = contentName("rlg", body)
     writeContent(name, body, touch = true)
@@ -370,7 +362,7 @@ private[lake] final class Timeline(tablePath: String) {
   }
 
   /** Resolve one record-index run (cache-first). */
-  def readRli(name: String): AcidTable.RliData =
+  def readRli(name: String): Indexes.RliData =
     rlis.get(tablePath, name).getOrElse {
       val d = parseRli(readContent(name))
       rlis.put(tablePath, name, d)
@@ -525,9 +517,9 @@ private[lake] object Timeline {
   private val segments = new Lru[String, AcidTable.SegData](8192)
   // 64 pages × ~100 KB ≈ 6 MB
   private val pages = new Lru[String, Seq[String]](64)
-  private val rliGens = new Lru[String, (Seq[AcidTable.RliRef], String)](64)
+  private val rliGens = new Lru[String, (Seq[Indexes.RliRef], String)](64)
   // a few tables' merged shards plus their delta tails
-  private val rlis = new Lru[String, AcidTable.RliData](256)
+  private val rlis = new Lru[String, Indexes.RliData](256)
 
   private def enc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
   private def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
@@ -545,7 +537,7 @@ private[lake] object Timeline {
   }
 
   /** One record-index run's `<enc key>|<enc partition>` lines, parsed. */
-  private def parseRli(body: String): AcidTable.RliData = {
+  private def parseRli(body: String): Indexes.RliData = {
     val lines = body.linesIterator.filter(_.nonEmpty).toArray
     val ks = new Array[String](lines.length)
     val ps = new Array[String](lines.length)
@@ -556,7 +548,7 @@ private[lake] object Timeline {
       ps(i) = lines(i).substring(j + 1)
       i += 1
     }
-    AcidTable.RliData(ks, ps, body)
+    Indexes.RliData(ks, ps, body)
   }
 
   /** Read content file `name` of store `dir`. Executor-safe and

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.lake.{AcidTable, MatView, MvAgg}
+import graft.lake.{AcidTable, Indexes, MatView, MvAgg}
 
 /** ACID table layer exercised as oracle-checked queries (SURVEY §2C C5):
   * each query creates a real [[AcidTable]] in a scratch directory, drives
@@ -731,7 +731,7 @@ object AcidQueries {
     // ---- C5 write-time stats over TIMESTAMP (round 11) ---------------------------
     // The #1 pruning key on a real lakehouse table is event time. With
     // `statsColumns = ts`, each append stamps the micros-encoded min/max
-    // range of its timestamp column (AcidTable.statsEncode); the read
+    // range of its timestamp column (Indexes.statsEncode); the read
     // takes one year out of three ingest bands via snapshotRangeValues —
     // typed bounds, no knowledge of the encoding. WriteStatsSpec pins the
     // file-skip and encoding soundness; this gate pins end-to-end content
@@ -2232,11 +2232,11 @@ object AcidQueries {
         t.upsert(base.filter(col("pk").cast("long") % 4 === 1)
           .withColumn("val", col("val") * 2))
         t.deleteVectored(Seq("11")) // DV-only commit: refs + flag inherit
-        val probes0 = AcidTable.rliProbes.get()
-        val routed0 = AcidTable.rliRouted.get()
+        val probes0 = Indexes.rliProbes.get()
+        val routed0 = Indexes.rliRouted.get()
         val keys = Seq("3", "11", "41", "200", "555", "899", "424242")
         val res = t.lookup(keys).orderBy(col("pk"))
-        require(AcidTable.rliProbes.get() > probes0 && AcidTable.rliRouted.get() > routed0,
+        require(Indexes.rliProbes.get() > probes0 && Indexes.rliRouted.get() > routed0,
           "q_acid_rli_lookup: unhinted lookup did not route through the record index")
         require(t.lookupFiles(Seq("424242")).isEmpty,
           "q_acid_rli_lookup: index must prove an absent key empty (zero files)")

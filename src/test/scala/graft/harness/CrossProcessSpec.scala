@@ -183,10 +183,13 @@ class CrossProcessSpec extends AnyFunSuite {
     assert(s.vacuumErrors.isEmpty, s"vacuum threw during crash run: ${s.vacuumErrors}")
     assert(s.vacuumRuns >= 3, s"vacuum loop barely ran: $s")
     // the kill's evidence: SIGKILL hit a LIVE process (it did not merely
-    // exit first) and the dead worker left committed rows behind — both
-    // required, or the run degenerates to a no-crash test
+    // exit first) and the dead worker had committed rows before it — both
+    // required, or the run degenerates to a no-crash test. The rows are
+    // those the orchestrator saw in a snapshot before the kill: the
+    // victim's own later deletes may leave none in the final snapshot
     assert(s.victimWasAlive, s"victim exited before the kill — nothing was crashed: $s")
-    assert(s.victimRowsSeen > 0, s"victim committed nothing before the kill: $s")
+    assert(s.victimEvidenceVersion >= 0 && s.victimEvidenceVersion <= s.killedAtVersion,
+      s"victim committed nothing before the kill: $s")
   }
 
   test("BRANCH WAP contention: two JVMs race fork/stage/audit/publish, CAS serializes") {

@@ -215,7 +215,7 @@ class AcidSqlSpec extends AnyFunSuite {
 
     // OPTIMIZE ZORDER BY records per-file cluster stats for range pruning
     sess.execute("OPTIMIZE db.m ZORDER BY (v)")
-    assert(sess.table("db.m").readClusterStats().nonEmpty)
+    assert(sess.table("db.m").indexes.readStats().nonEmpty)
 
     // scoped ZORDER rewrites and records stats for ONLY its partitions
     sess.execute("OPTIMIZE db.m WHERE part = 'p1' ZORDER BY (v)")

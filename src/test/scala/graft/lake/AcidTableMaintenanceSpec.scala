@@ -333,6 +333,7 @@ class AcidTableMaintenanceSpec extends AnyFunSuite {
     val t = AcidTable.create(spark,
       Files.createTempDirectory("acid-cluster-").resolve("t").toString,
       cschema, "pk", "part", stablePartitions = true)
+    t.setTableProperty("statsColumns", Some("pk"))
     // small target so the single partition must roll into several files
     t.targetFileBytes = 4096L
     val rows = (0L until 2000L).map(i => (i, "P0", (i * 37) % 512, (i * 91) % 512))
@@ -342,17 +343,20 @@ class AcidTableMaintenanceSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](t.compact(clusterBy = Seq("part")))
     val v = t.compact(clusterBy = Seq("x", "y"))
     t.vacuum(keepVersions = 1, graceMillis = 0L)
-    val all = t.rangePrunedFiles(Map.empty, v)
+    val all = t.indexes.rangePrunedFiles(Map.empty, v)
     assert(all.size > 3, s"expected a multi-file clustered layout, got ${all.size}")
     // every live file has recorded stats for both dims
-    val stats = t.readClusterStats()
+    val stats = t.indexes.readStats()
     assert(all.forall(f => stats.get(f).exists(m => m.contains("x") && m.contains("y"))),
       "clustered compaction must record min/max for every output file")
+    // ... in the same entry as the statsColumns range, not in place of it
+    assert(all.forall(f => stats.get(f).exists(m => m.contains("pk") && m.contains("pk#n"))),
+      s"clustered compaction dropped the statsColumns entries: $stats")
     // THE gate: a narrow range on either clustered dim skips files
-    val prunedX = t.rangePrunedFiles(Map("x" -> (0L, 40L)), v)
+    val prunedX = t.indexes.rangePrunedFiles(Map("x" -> (0L, 40L)), v)
     assert(prunedX.size < all.size,
       s"x-range scan did not skip files: ${prunedX.size} of ${all.size}")
-    val prunedY = t.rangePrunedFiles(Map("y" -> (0L, 40L)), v)
+    val prunedY = t.indexes.rangePrunedFiles(Map("y" -> (0L, 40L)), v)
     assert(prunedY.size < all.size,
       s"y-range scan did not skip files: ${prunedY.size} of ${all.size}")
     // pruning is sound: the pruned scan + row filter equals the full scan
@@ -386,8 +390,8 @@ class AcidTableMaintenanceSpec extends AnyFunSuite {
     assert(got.toSeq === expect)
     val scanned = df.queryExecution.executedPlan.collectLeaves()
       .flatMap(_.toString().linesIterator).mkString
-    val liveFiles = t.rangePrunedFiles(Map.empty).size
-    val prunedFiles = t.rangePrunedFiles(Map("x" -> (100L, 140L))).size
+    val liveFiles = t.indexes.rangePrunedFiles(Map.empty).size
+    val prunedFiles = t.indexes.rangePrunedFiles(Map("x" -> (100L, 140L))).size
     assert(prunedFiles < liveFiles,
       s"stats route kept all $liveFiles files for the catalog range scan")
     spark.sql("DROP TABLE graft.cl.t")

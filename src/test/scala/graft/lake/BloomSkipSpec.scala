@@ -163,7 +163,7 @@ class BloomSkipSpec extends AnyFunSuite {
   }
 
   private def bloomSegs(dir: Path): Seq[String] = {
-    val root = dir.resolve("t").resolve(AcidTable.BloomDir)
+    val root = dir.resolve("t").resolve(Indexes.BloomDir)
     if (!Files.exists(root)) Nil
     else {
       val s = Files.walk(root)
@@ -242,15 +242,15 @@ class BloomSkipSpec extends AnyFunSuite {
       t.upsert(spark.createDataFrame(java.util.Arrays.asList(rows: _*), tagSchema))
     }
     // equality on the NON-key column prunes through its blooms
-    val pruned = t.prunedFiles(Map.empty, Seq("tag" -> Seq("tag3")))
+    val pruned = t.indexes.prunedFiles(Map.empty, Seq("tag" -> Seq("tag3")))
     assert(pruned.size == 1 && pruned.head.startsWith("part=P3/"), pruned.toString)
     // snapshotPruned is pure file skipping: kept files' rows all surface
     val rows = t.snapshotPruned(Map.empty, Seq("tag" -> Seq("tag3")))
       .filter(col("tag") === "tag3").collect()
     assert(rows.length == 10 && rows.forall(_.getString(1) == "P3"))
     // an unencodable or absent probe degrades to no pruning / empty scan
-    assert(t.prunedFiles(Map.empty, Seq("tag" -> Seq("no_such_tag"))).isEmpty)
-    assert(t.prunedFiles(Map.empty, Seq("val" -> Seq(1.0))).size == 5) // not bloom-maintained
+    assert(t.indexes.prunedFiles(Map.empty, Seq("tag" -> Seq("no_such_tag"))).isEmpty)
+    assert(t.indexes.prunedFiles(Map.empty, Seq("val" -> Seq(1.0))).size == 5) // not bloom-maintained
   }
 
   test("catalog SQL route: pushed equality on a bloom column prunes the scan") {
@@ -275,7 +275,7 @@ class BloomSkipSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
     assert(got == (0 until 8).map(i => (s"k${200 + i}", i.toDouble)))
     // the engine-level pruning the route consults
-    assert(t.prunedFiles(Map.empty, Seq("tag" -> Seq("tag2"))).size == 1)
+    assert(t.indexes.prunedFiles(Map.empty, Seq("tag" -> Seq("tag2"))).size == 1)
     spark.sql("DROP TABLE graft.bloomdb.events")
   }
 
@@ -284,7 +284,7 @@ class BloomSkipSpec extends AnyFunSuite {
     val t = AcidTable.create(spark, dir.resolve("t").toString, schema, "pk", "part",
       stablePartitions = true, numBuckets = 1)
     seed(t, parts = 3, keysPerPart = 5)
-    assert(!Files.exists(dir.resolve("t").resolve(AcidTable.BloomDir)))
+    assert(!Files.exists(dir.resolve("t").resolve(Indexes.BloomDir)))
     assert(t.lookupFiles(Seq("k1002")).size == 3) // bucket pruning only
   }
 }

@@ -91,7 +91,7 @@ class HiddenPartitionSpec extends AnyFunSuite {
       ("c", "2024-03-28 23:59:59", 3.0), ("d", "2024-04-01 00:00:00", 4.0)))
     val parts = t.transformPartitionsForEquals("ts", Seq(ts("2024-02-11 00:30:00")))
     assert(parts.contains(Seq("2024-02")))
-    assert(t.prunedFiles(Map.empty, Nil, -1L, parts).forall(_.startsWith("part=2024-02/")))
+    assert(t.indexes.prunedFiles(Map.empty, Nil, -1L, parts).forall(_.startsWith("part=2024-02/")))
     // non-source column or no transform: declined
     assert(t.transformPartitionsForEquals("val", Seq(1.0)).isEmpty)
   }
@@ -104,8 +104,8 @@ class HiddenPartitionSpec extends AnyFunSuite {
     val parts = t.transformPartitionsForRange("ts",
       ts("2024-02-20 00:00:00"), ts("2024-04-02 00:00:00"))
     assert(parts.contains(Seq("2024-02", "2024-03", "2024-04")))
-    val files = t.prunedFiles(Map.empty, Nil, -1L, parts)
-    val all = t.prunedFiles(Map.empty, Nil)
+    val files = t.indexes.prunedFiles(Map.empty, Nil, -1L, parts)
+    val all = t.indexes.prunedFiles(Map.empty, Nil)
     assert(files.nonEmpty && files.size < all.size, s"${files.size} of ${all.size}")
     assert(files.forall(f => f.startsWith("part=2024-02/") || f.startsWith("part=2024-03/")))
     // a range wider than 4096 periods declines rather than enumerating

@@ -140,15 +140,17 @@ class ManifestSegmentSpec extends AnyFunSuite {
 
     // a probe no partition can hold: refuted from the ROOT alone
     AcidTable.resetMetaIoCounters()
-    assert(t.rangePrunedFiles(Map("x" -> (300L, 800L)), v).isEmpty)
+    assert(t.indexes.rangePrunedFiles(Map("x" -> (300L, 800L)), v).isEmpty)
     assert(AcidTable.clusterStatsLoads.get() == 0,
       s"root-refuted probe loaded per-file stats ${AcidTable.clusterStatsLoads.get()} times")
     assert(AcidTable.segmentResolves.get() == 0,
       s"root-refuted probe resolved ${AcidTable.segmentResolves.get()} segments")
 
     // a probe hitting one band: only that partition's segment resolves
+    // (the probe reaches b2's x = 190: per-file ranges are exact, so a
+    // probe between P1's two rows keeps no file at all)
     AcidTable.resetMetaIoCounters()
-    val hit = t.rangePrunedFiles(Map("x" -> (150L, 180L)), v)
+    val hit = t.indexes.rangePrunedFiles(Map("x" -> (150L, 190L)), v)
     assert(hit.nonEmpty && hit.forall(_.startsWith("part=P1/")))
     assert(AcidTable.segmentResolves.get() == 1,
       s"one-band probe resolved ${AcidTable.segmentResolves.get()} segments")
@@ -179,7 +181,7 @@ class ManifestSegmentSpec extends AnyFunSuite {
     // against any real range, which is sound (NULL never matches a range)
     assert(refs("part=P0").pstats("y") == (Long.MaxValue, Long.MinValue))
     assert(refs("part=P1").pstats("y") == (7L, 9L))
-    val yHit = t.rangePrunedFiles(Map("y" -> (1L, 100L)))
+    val yHit = t.indexes.rangePrunedFiles(Map("y" -> (1L, 100L)))
     assert(yHit.nonEmpty && yHit.forall(_.startsWith("part=P1/")))
 
     // rewrite P0 with real y values: envelope follows the rewrite
@@ -278,5 +280,18 @@ class ManifestSegmentSpec extends AnyFunSuite {
     assert(pagesOnDisk == livePageRefs,
       s"pages on disk $pagesOnDisk != retained roots' page refs $livePageRefs")
     assert(t.timeline.rootView(t.latestVersion()).segRefs.size == nSynth + 1)
+  }
+
+  test("a missing segment surfaces as NoSuchFileException above the 64-ref parallel read") {
+    val t = newTable()
+    // 65 partitions: the root view resolves its segments on the pool
+    t.upsert(batch((0 until 65).map(i => (s"k$i", s"P$i", i.toLong)): _*))
+    val view = t.timeline.rootView(t.latestVersion())
+    assert(view.segRefs.size == 65)
+    Files.delete(segDir(t).resolve(view.segRefs(40).name))
+    AcidTable.purgeCachesForSpec(t.path)
+    // the task's own exception, as below the threshold — not the pool's
+    // ExecutionException wrapper
+    intercept[java.nio.file.NoSuchFileException](t.snapshot())
   }
 }

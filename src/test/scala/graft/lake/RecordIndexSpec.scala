@@ -42,7 +42,7 @@ class RecordIndexSpec extends AnyFunSuite {
   private def rootRli(t: AcidTable): RootView.Rli = t.timeline.rootView(t.latestVersion()).rli
 
   private def rliRefNames(t: AcidTable): Seq[String] =
-    t.rliRefsOf(rootRli(t)).map(_.name)
+    t.indexes.rliRefsOf(rootRli(t)).map(_.name)
 
   private def isDone(t: AcidTable): Boolean = rawRoot(t).contains("#rlidone=1")
 
@@ -52,11 +52,11 @@ class RecordIndexSpec extends AnyFunSuite {
     t.upsert(df(Record("K3", "P2", "v3")))
     assert(isDone(t), "every commit indexed its keys → flag must hold")
     assert(rliRefNames(t).nonEmpty)
-    val routedBefore = AcidTable.rliRouted.get()
+    val routedBefore = Indexes.rliRouted.get()
     // unhinted: no partition restated — the index must resolve only K3's
     // partition's files, not sweep every partition's segment
     val files = t.lookupFiles(Seq("K3"))
-    assert(AcidTable.rliRouted.get() > routedBefore, "probe must route via the index")
+    assert(Indexes.rliRouted.get() > routedBefore, "probe must route via the index")
     assert(files.nonEmpty && files.forall(_.startsWith("partitionKeyValue=P2/")),
       s"index must narrow to P2, got $files")
     // proven-empty: a key the table never held resolves ZERO files
@@ -90,13 +90,13 @@ class RecordIndexSpec extends AnyFunSuite {
 
   test("LSM merge: ref list folds above MaxRliRefs, probes stay exact") {
     val t = newTable()
-    (1 to AcidTable.MaxRliRefs + 4).foreach(i =>
+    (1 to Indexes.MaxRliRefs + 4).foreach(i =>
       t.upsert(df(Record(s"K$i", s"P${i % 3}", s"v$i"))))
-    assert(rliRefNames(t).size <= AcidTable.MaxRliRefs,
+    assert(rliRefNames(t).size <= Indexes.MaxRliRefs,
       s"merge must bound the ref list, got ${rliRefNames(t).size}")
     assert(isDone(t))
-    val files = t.lookupFiles(Seq(s"K${AcidTable.MaxRliRefs + 1}"))
-    val expectPart = s"partitionKeyValue=P${(AcidTable.MaxRliRefs + 1) % 3}/"
+    val files = t.lookupFiles(Seq(s"K${Indexes.MaxRliRefs + 1}"))
+    val expectPart = s"partitionKeyValue=P${(Indexes.MaxRliRefs + 1) % 3}/"
     assert(files.nonEmpty && files.forall(_.startsWith(expectPart)))
   }
 
@@ -207,15 +207,15 @@ class RecordIndexSpec extends AnyFunSuite {
       .selectExpr("concat('G', id) as primaryKeyValue",
         "concat('P', id % 5) as partitionKeyValue", "cast(id as string) as dataValue")
     t.upsert(big)
-    val genBefore = t.rliRefsOf(rootRli(t))
-    assert(AcidTable.rliGenPrefixLen(genBefore) == genBefore.size && genBefore.size > 4,
+    val genBefore = t.indexes.rliRefsOf(rootRli(t))
+    assert(Indexes.rliGenPrefixLen(genBefore) == genBefore.size && genBefore.size > 4,
       s"distributed commit must yield a recognizable generation, got $genBefore")
     // MaxRliRefs+1 tiny driver deltas → the delta tail outgrows the bound
     // and the commit folds them INTO the generation
-    (1 to AcidTable.MaxRliRefs + 1).foreach(i =>
+    (1 to Indexes.MaxRliRefs + 1).foreach(i =>
       t.upsert(df(Record(s"K$i", s"P${i % 5}", s"v$i"))))
-    val after = t.rliRefsOf(rootRli(t))
-    assert(after.size - AcidTable.rliGenPrefixLen(after) <= AcidTable.MaxRliRefs,
+    val after = t.indexes.rliRefsOf(rootRli(t))
+    assert(after.size - Indexes.rliGenPrefixLen(after) <= Indexes.MaxRliRefs,
       s"delta tail must stay bounded, got $after")
     assert(after.forall(_.nShards == genBefore.head.nShards),
       "incremental fold must keep the generation's shard count")
@@ -233,30 +233,30 @@ class RecordIndexSpec extends AnyFunSuite {
   }
 
   test("distributed fold leg: driver holds ref names only, probes exact") {
-    val saved = AcidTable.RliDriverFoldMax
-    AcidTable.RliDriverFoldMax = 0L // force every fold through the executor path
+    val saved = Indexes.RliDriverFoldMax
+    Indexes.RliDriverFoldMax = 0L // force every fold through the executor path
     try {
       val t = newTable()
       val big = spark.range(0, 1000)
         .selectExpr("concat('D', id) as primaryKeyValue",
           "concat('P', id % 3) as partitionKeyValue", "cast(id as string) as dataValue")
       t.upsert(big)
-      (1 to AcidTable.MaxRliRefs + 1).foreach(i =>
+      (1 to Indexes.MaxRliRefs + 1).foreach(i =>
         t.upsert(df(Record(s"X$i", s"P${i % 3}", s"x$i"))))
-      val refs = t.rliRefsOf(rootRli(t))
-      assert(refs.size - AcidTable.rliGenPrefixLen(refs) <= AcidTable.MaxRliRefs)
+      val refs = t.indexes.rliRefsOf(rootRli(t))
+      assert(refs.size - Indexes.rliGenPrefixLen(refs) <= Indexes.MaxRliRefs)
       assert(isDone(t))
       assert(t.lookup(Seq("D500")).collect().map(_.getString(2)).toSeq == Seq("500"))
       assert(t.lookup(Seq("X3")).collect().map(_.getString(2)).toSeq == Seq("x3"))
       assert(t.lookupFiles(Seq("MISSING")).isEmpty)
       // growth leg: shrink the shard budget so the NEXT fold must re-shard
       // the generation distributedly, then verify probes again
-      (1 to AcidTable.MaxRliRefs + 1).foreach(i =>
+      (1 to Indexes.MaxRliRefs + 1).foreach(i =>
         t.upsert(df(Record(s"Y$i", s"P${i % 3}", s"y$i"))))
       assert(t.lookup(Seq("Y5")).collect().map(_.getString(2)).toSeq == Seq("y5"))
       assert(t.lookup(Seq("D7")).collect().map(_.getString(2)).toSeq == Seq("7"))
       assert(t.lookupFiles(Seq("NADA")).isEmpty)
-    } finally AcidTable.RliDriverFoldMax = saved
+    } finally Indexes.RliDriverFoldMax = saved
   }
 
   test("distributed fold survives an aggressive concurrent vacuum (anchor holds)") {
@@ -279,8 +279,8 @@ class RecordIndexSpec extends AnyFunSuite {
     // an upsert hit FILE_NOT_EXIST on a live data file). 6 s still sweeps
     // first-half files while the ~30-upsert distributed-fold loop runs,
     // keeping the run-file anchor genuinely raced, within contract.
-    val saved = AcidTable.RliDriverFoldMax
-    AcidTable.RliDriverFoldMax = 0L
+    val saved = Indexes.RliDriverFoldMax
+    Indexes.RliDriverFoldMax = 0L
     try {
       val t = newTable()
       t.upsert(spark.range(0, 2000)
@@ -301,24 +301,24 @@ class RecordIndexSpec extends AnyFunSuite {
         // two full delta windows: the first overflow fold is the growth
         // re-shard, the second a wide-generation incremental — both on
         // the executor leg, both racing the sweeper
-        (1 to 2 * (AcidTable.MaxRliRefs + 1)).foreach(i =>
+        (1 to 2 * (Indexes.MaxRliRefs + 1)).foreach(i =>
           t.upsert(df(Record(s"V$i", s"P${i % 3}", s"v$i"))))
       } finally { stop.set(true); vac.join(15000) }
       assert(errs.isEmpty, s"vacuum threw while racing the fold: $errs")
       assert(isDone(t), "fold under racing vacuum must keep the done flag")
       assert(t.lookup(Seq("R500")).collect().map(_.getString(2)).toSeq == Seq("500"))
-      assert(t.lookup(Seq(s"V${AcidTable.MaxRliRefs}")).collect()
-        .map(_.getString(2)).toSeq == Seq(s"v${AcidTable.MaxRliRefs}"))
+      assert(t.lookup(Seq(s"V${Indexes.MaxRliRefs}")).collect()
+        .map(_.getString(2)).toSeq == Seq(s"v${Indexes.MaxRliRefs}"))
       assert(t.lookupFiles(Seq("GONE")).isEmpty, "proven-empty must survive the race")
       val findings = t.fsck(graceMs = 0).collect()
       assert(findings.isEmpty, s"fsck not clean after fold × vacuum race: " +
         findings.map(_.toString).mkString(", "))
-    } finally AcidTable.RliDriverFoldMax = saved
+    } finally Indexes.RliDriverFoldMax = saved
   }
 
   test("wide generation: refs move to a content-addressed side file") {
-    val saved = AcidTable.RliGenInlineMax
-    AcidTable.RliGenInlineMax = 4 // engage the indirection on a CI-sized generation
+    val saved = Indexes.RliGenInlineMax
+    Indexes.RliGenInlineMax = 4 // engage the indirection on a CI-sized generation
     try {
       val t = newTable()
       val big = spark.range(0, 1500)
@@ -328,8 +328,8 @@ class RecordIndexSpec extends AnyFunSuite {
       val raw = rawRoot(t)
       assert(raw.exists(_.startsWith("#rligen=")),
         s"expected a side-file header, got ${raw.filter(_.startsWith("#rli"))}")
-      val refs = t.rliRefsOf(rootRli(t))
-      assert(AcidTable.rliGenPrefixLen(refs) > 4, s"expansion must return the members: $refs")
+      val refs = t.indexes.rliRefsOf(rootRli(t))
+      assert(Indexes.rliGenPrefixLen(refs) > 4, s"expansion must return the members: $refs")
       val genName = rootRli(t).gen.get._1
       // trickle commits carry the UNCHANGED generation by the same
       // content-addressed name — no per-commit O(shards) header text
@@ -342,7 +342,7 @@ class RecordIndexSpec extends AnyFunSuite {
       assert(t.lookup(Seq("T1")).collect().map(_.getString(2)).toSeq == Seq("t1"))
       assert(t.lookupFiles(Seq("NOPE")).isEmpty)
       // fold on the indirected generation: delta tail past the bound
-      (1 to AcidTable.MaxRliRefs + 1).foreach(i =>
+      (1 to Indexes.MaxRliRefs + 1).foreach(i =>
         t.upsert(df(Record(s"W$i", s"P${i % 5}", s"w$i"))))
       assert(t.lookup(Seq("W9")).collect().map(_.getString(2)).toSeq == Seq("w9"))
       assert(t.lookup(Seq("D700")).collect().map(_.getString(2)).toSeq == Seq("700"))
@@ -364,12 +364,12 @@ class RecordIndexSpec extends AnyFunSuite {
         s"expected a cache heal of $gn, got $actions")
       assert(t.fsck().count() == 0)
       assert(t.lookupFiles(Seq("D700")).nonEmpty, "routing must return after the heal")
-    } finally AcidTable.RliGenInlineMax = saved
+    } finally Indexes.RliGenInlineMax = saved
   }
 
   test("purging a table's caches drops its index generation list too") {
-    val saved = AcidTable.RliGenInlineMax
-    AcidTable.RliGenInlineMax = 4 // engage the side file on a CI-sized generation
+    val saved = Indexes.RliGenInlineMax
+    Indexes.RliGenInlineMax = 4 // engage the side file on a CI-sized generation
     try {
       val t = newTable()
       t.upsert(spark.range(0, 1500)
@@ -381,11 +381,11 @@ class RecordIndexSpec extends AnyFunSuite {
       // the "driver restarted" state: no cached copy of the side file may
       // keep routing lookups through an index whose generation is gone
       AcidTable.purgeCachesForSpec(t.path)
-      val routedBefore = AcidTable.rliRouted.get()
+      val routedBefore = Indexes.rliRouted.get()
       assert(t.lookup(Seq("D700")).collect().map(_.getString(2)).toSeq == Seq("700"))
-      assert(AcidTable.rliRouted.get() == routedBefore,
+      assert(Indexes.rliRouted.get() == routedBefore,
         "a lookup must not route through a purged, missing generation")
-    } finally AcidTable.RliGenInlineMax = saved
+    } finally Indexes.RliGenInlineMax = saved
   }
 
   test("fsckRepair re-materializes a dangling index run from cache") {

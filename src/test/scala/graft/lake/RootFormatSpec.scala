@@ -118,19 +118,19 @@ class RootFormatSpec extends AnyFunSuite {
     val t = newTable()
     t.setTableProperty("statsColumns", Some("x"))
     t.upsert(batch(("a1", "P0", 1L)))
-    val sidecar = Paths.get(t.path, AcidTable.ClusterStatsFile)
+    val sidecar = Paths.get(t.path, Indexes.StatsFile)
     val props = new java.util.Properties()
     val in = Files.newInputStream(sidecar)
     try props.load(in) finally in.close()
-    assert(props.getProperty(AcidTable.StatsVerKey) == "2", "every write stamps statsver=2")
-    assert(t.readClusterStats().nonEmpty)
+    assert(props.getProperty(Indexes.StatsVerKey) == "2", "every write stamps statsver=2")
+    assert(t.indexes.readStats().nonEmpty)
 
     // the sidecar shape written before format versioning: no statsver key
-    props.remove(AcidTable.StatsVerKey)
+    props.remove(Indexes.StatsVerKey)
     val out = Files.newOutputStream(sidecar)
     try props.store(out, "unversioned sidecar") finally out.close()
-    val e = intercept[IllegalStateException](t.readClusterStats())
-    assert(e.getMessage.contains(AcidTable.ClusterStatsFile) &&
+    val e = intercept[IllegalStateException](t.indexes.readStats())
+    assert(e.getMessage.contains(Indexes.StatsFile) &&
       e.getMessage.contains("statsver=<absent>"), e.getMessage)
     // a stats-maintaining commit reads the sidecar before it publishes
     val v = t.latestVersion()

@@ -53,12 +53,12 @@ class WriteStatsSpec extends AnyFunSuite {
     t.upsert(batch((1 to 20).map(i => (s"a$i", "P0", i.toLong)): _*))
     t.upsert(batch((1 to 20).map(i => (s"b$i", "P1", 1000L + i)): _*))
     t.upsert(batch((1 to 20).map(i => (s"c$i", "P2", 2000L + i)): _*))
-    val all = t.rangePrunedFiles(Map.empty)
-    val lowOnly = t.rangePrunedFiles(Map("x" -> (0L, 100L)))
+    val all = t.indexes.rangePrunedFiles(Map.empty)
+    val lowOnly = t.indexes.rangePrunedFiles(Map("x" -> (0L, 100L)))
     assert(lowOnly.nonEmpty && lowOnly.size < all.size,
       s"expected a strict file skip: ${lowOnly.size} of ${all.size}")
     // only commit 1's files can hold x <= 100 — no commit-2/3 file survives
-    val midOnly = t.rangePrunedFiles(Map("x" -> (1000L, 1100L)))
+    val midOnly = t.indexes.rangePrunedFiles(Map("x" -> (1000L, 1100L)))
     assert(midOnly.intersect(lowOnly).isEmpty,
       "disjoint-range commits must prune to disjoint file sets")
     // content through the pruned scan == plain filtered snapshot
@@ -83,11 +83,21 @@ class WriteStatsSpec extends AnyFunSuite {
       Thread.sleep(500)
       assert(jobs.get() === 0, "stats recording broke the fast path's 0-job property")
       // and the stats genuinely landed: the new commit's files prune
-      val newFiles = t.rangePrunedFiles(Map("x" -> (500L, 600L)), v)
-      val none = t.rangePrunedFiles(Map("x" -> (10000L, 10001L)), v)
+      val newFiles = t.indexes.rangePrunedFiles(Map("x" -> (500L, 600L)), v)
+      val none = t.indexes.rangePrunedFiles(Map("x" -> (10000L, 10001L)), v)
       assert(!none.exists(newFiles.contains),
         "fast-path files missing stats entries: nothing pruned")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a fast-path commit over two partitions records each file's own range") {
+    val t = newTable()
+    val v = t.upsert(batch(
+      (0 to 10).map(i => (s"a$i", "P0", i.toLong)) ++
+        (0 to 10).map(i => (s"b$i", "P1", 1000L + i)): _*), Some(Seq("P0", "P1")))
+    // a commit-wide range ([0, 1010] on every file) would keep P1's files
+    val kept = t.indexes.rangePrunedFiles(Map("x" -> (0L, 10L)), v)
+    assert(kept.nonEmpty && kept.forall(_.startsWith("part=P0/")), kept.toString)
   }
 
   test("distributed commits record per-file stats over only the new files") {
@@ -97,8 +107,8 @@ class WriteStatsSpec extends AnyFunSuite {
       t.upsert(batch((1 to 50).map(i => (s"a$i", "P0", i.toLong)): _*))
       t.upsert(batch((1 to 50).map(i => (s"b$i", "P0", 5000L + i)): _*))
     } finally AcidTable.localCommitEnabled = true
-    val all = t.rangePrunedFiles(Map.empty)
-    val low = t.rangePrunedFiles(Map("x" -> (0L, 100L)))
+    val all = t.indexes.rangePrunedFiles(Map.empty)
+    val low = t.indexes.rangePrunedFiles(Map("x" -> (0L, 100L)))
     assert(low.nonEmpty && low.size < all.size)
     val got = t.snapshotRange(Map("x" -> (0L, 100L)))
       .filter(col("x") <= 100).count()
@@ -130,8 +140,8 @@ class WriteStatsSpec extends AnyFunSuite {
     // skip is not expected here (that's what clusterBy is for) — assert
     // the entries exist and pruning stays sound.
     t.compact()
-    val stats = t.readClusterStats()
-    t.rangePrunedFiles(Map.empty).foreach { f =>
+    val stats = t.indexes.readStats()
+    t.indexes.rangePrunedFiles(Map.empty).foreach { f =>
       assert(stats.get(f).exists(_.contains("x")),
         s"post-compact file $f lost its stats entry")
     }
@@ -151,8 +161,8 @@ class WriteStatsSpec extends AnyFunSuite {
     spark.sql(
       "INSERT INTO graft.ws.t SELECT CAST(id AS STRING), 'P1', id FROM range(7000, 7040)")
     val t = AcidTable.open(spark, s"$wh/ws/t")
-    val all = t.rangePrunedFiles(Map.empty)
-    val low = t.rangePrunedFiles(Map("x" -> (0L, 50L)))
+    val all = t.indexes.rangePrunedFiles(Map.empty)
+    val low = t.indexes.rangePrunedFiles(Map("x" -> (0L, 50L)))
     assert(low.nonEmpty && low.size < all.size,
       "catalog-created table with statsColumns did not record write-time stats")
     val rows = spark.sql("SELECT pk FROM graft.ws.t WHERE x BETWEEN 0 AND 50")
@@ -162,7 +172,7 @@ class WriteStatsSpec extends AnyFunSuite {
     val inBounds = AcidScanBuilder.rangeBounds(
       Array(org.apache.spark.sql.sources.In("x", Array(7001L, 7038L))), t.schema)
     assert(inBounds == Map("x" -> (7001L, 7038L)))
-    val inPruned = t.rangePrunedFiles(inBounds)
+    val inPruned = t.indexes.rangePrunedFiles(inBounds)
     assert(inPruned.nonEmpty && inPruned.size < all.size,
       s"IN-envelope should prune: ${inPruned.size} of ${all.size}")
     val inRows = spark.sql("SELECT pk FROM graft.ws.t WHERE x IN (7001, 7038)")
@@ -214,29 +224,29 @@ class WriteStatsSpec extends AnyFunSuite {
     t.upsert(mk("a", 5, 100, "apple"))
     t.upsert(mk("b", 15, 5000, "melon"))
     t.upsert(mk("c", 25, 90000, "zebra"))
-    val all = t.rangePrunedFiles(Map.empty)
+    val all = t.indexes.rangePrunedFiles(Map.empty)
 
     // timestamp band: only commit 1's files survive
-    val tsLow = t.rangePrunedFiles(Map("ts" ->
+    val tsLow = t.indexes.rangePrunedFiles(Map("ts" ->
       (t.statsBound("ts", ts("2026-01-01 00:00:00")),
         t.statsBound("ts", ts("2026-01-06 00:00:00")))))
     assert(tsLow.nonEmpty && tsLow.size < all.size,
       s"timestamp stats did not skip: ${tsLow.size} of ${all.size}")
 
     // date band: middle commit only, disjoint from the low-ts set
-    val dMid = t.rangePrunedFiles(Map("d" ->
+    val dMid = t.indexes.rangePrunedFiles(Map("d" ->
       (t.statsBound("d", dt("2026-01-10")), t.statsBound("d", dt("2026-01-20")))))
     assert(dMid.nonEmpty && dMid.intersect(tsLow).isEmpty,
       "disjoint date bands must prune to disjoint file sets")
 
     // decimal band: exact unscaled encoding, top commit only
-    val pHigh = t.rangePrunedFiles(Map("price" ->
+    val pHigh = t.indexes.rangePrunedFiles(Map("price" ->
       (t.statsBound("price", new java.math.BigDecimal("80000.00")),
         t.statsBound("price", new java.math.BigDecimal("99999.99")))))
     assert(pHigh.nonEmpty && pHigh.size < all.size, "decimal stats did not skip")
 
     // string prefix band: names starting a..f = commit 1 only
-    val sLow = t.rangePrunedFiles(Map("name" ->
+    val sLow = t.indexes.rangePrunedFiles(Map("name" ->
       (t.statsBound("name", "a"), t.statsBound("name", "f"))))
     assert(sLow.nonEmpty && sLow.size < all.size, "string-prefix stats did not skip")
 
@@ -262,8 +272,8 @@ class WriteStatsSpec extends AnyFunSuite {
         (s"b$i", "P0", ts(f"2026-09-01 ${i % 24}%02d:00:00"), dt("2026-09-01"),
           new java.math.BigDecimal(s"${70000 + i}.50"), f"zzz$i%03d")): _*))
     } finally AcidTable.localCommitEnabled = true
-    val all = t.rangePrunedFiles(Map.empty)
-    val low = t.rangePrunedFiles(Map("ts" ->
+    val all = t.indexes.rangePrunedFiles(Map.empty)
+    val low = t.indexes.rangePrunedFiles(Map("ts" ->
       (t.statsBound("ts", ts("2026-01-01 00:00:00")),
         t.statsBound("ts", ts("2026-04-01 00:00:00")))))
     assert(low.nonEmpty && low.size < all.size, "distributed typed stats did not skip")
@@ -287,8 +297,8 @@ class WriteStatsSpec extends AnyFunSuite {
       SELECT CAST(id AS STRING), 'P1', timestampadd(HOUR, id - 100, TIMESTAMP'2026-07-01 00:00:00')
       FROM range(100, 124)""")
     val t = AcidTable.open(spark, s"$wh/wst/t")
-    val all = t.rangePrunedFiles(Map.empty)
-    val janOnly = t.rangePrunedFiles(Map("ts" ->
+    val all = t.indexes.rangePrunedFiles(Map.empty)
+    val janOnly = t.indexes.rangePrunedFiles(Map("ts" ->
       (t.statsBound("ts", ts("2026-01-01 00:00:00")),
         t.statsBound("ts", ts("2026-02-01 00:00:00")))))
     assert(janOnly.nonEmpty && janOnly.size < all.size)
@@ -330,12 +340,12 @@ class WriteStatsSpec extends AnyFunSuite {
         Double.PositiveInfinity, Double.NaN)
     ds.sortWith(java.lang.Double.compare(_, _) < 0).sliding(2).foreach {
       case Seq(a, b) =>
-        val (ea, eb) = (AcidTable.statsDoubleEncode(a), AcidTable.statsDoubleEncode(b))
+        val (ea, eb) = (Indexes.statsDoubleEncode(a), Indexes.statsDoubleEncode(b))
         assert(ea <= eb, s"inverted: $a -> $ea vs $b -> $eb")
       case _ =>
     }
     // -0.0 and 0.0 share one encoding (SQL comparison treats them equal)
-    assert(AcidTable.statsDoubleEncode(-0.0) == AcidTable.statsDoubleEncode(0.0))
+    assert(Indexes.statsDoubleEncode(-0.0) == Indexes.statsDoubleEncode(0.0))
     // end-to-end: a DOUBLE stats column skips files on fresh commits
     val s2 = StructType(Seq(
       StructField("pk", StringType), StructField("part", StringType),
@@ -348,8 +358,8 @@ class WriteStatsSpec extends AnyFunSuite {
       java.util.Arrays.asList(rows.map(r => Row(r._1, r._2, r._3)): _*), s2)
     t.upsert(b((1 to 20).map(i => (s"a$i", "P0", i * 0.5)): _*))
     t.upsert(b((1 to 20).map(i => (s"b$i", "P1", 1000.0 + i * 0.5)): _*))
-    val all = t.rangePrunedFiles(Map.empty)
-    val low = t.rangePrunedFiles(Map("m" ->
+    val all = t.indexes.rangePrunedFiles(Map.empty)
+    val low = t.indexes.rangePrunedFiles(Map("m" ->
       (t.statsBound("m", 0.0), t.statsBound("m", 100.0))))
     assert(low.size < all.size && low.nonEmpty, s"${low.size} of ${all.size}")
     val got = t.snapshotRangeValues(Map("m" -> (0.0, 100.0)))
@@ -366,19 +376,19 @@ class WriteStatsSpec extends AnyFunSuite {
     t.upsert(rows("P1", Seq.fill(8)(null: java.lang.Long)))                   // all null
     t.upsert(rows("P2", Seq(java.lang.Long.valueOf(5L), null, null,
       java.lang.Long.valueOf(9L))))                                           // mixed
-    val all = t.prunedFiles(Map.empty, Nil)
+    val all = t.indexes.prunedFiles(Map.empty, Nil)
     def parts(fs: Seq[String]) = fs.map(_.takeWhile(_ != '/')).distinct.sorted
     assert(parts(all) == Seq("part=P0", "part=P1", "part=P2"))
-    val isNull = t.prunedFiles(Map.empty, Nil, -1L, None, Seq("x" -> true))
+    val isNull = t.indexes.prunedFiles(Map.empty, Nil, -1L, None, Seq("x" -> true))
     assert(parts(isNull) == Seq("part=P1", "part=P2"),
       s"zero-null files must skip IS NULL: ${parts(isNull)}")
-    val notNull = t.prunedFiles(Map.empty, Nil, -1L, None, Seq("x" -> false))
+    val notNull = t.indexes.prunedFiles(Map.empty, Nil, -1L, None, Seq("x" -> false))
     assert(parts(notNull) == Seq("part=P0", "part=P2"),
       s"all-null files must skip IS NOT NULL: ${parts(notNull)}")
     // the combination that range stats alone can NEVER produce: the
     // all-null file records no range (conservatively kept by ranges) but
     // the null pseudo-entry drops it for any non-null-seeking read
-    val ranged = t.prunedFiles(Map("x" -> (0L, 100L)), Nil, -1L, None, Seq("x" -> false))
+    val ranged = t.indexes.prunedFiles(Map("x" -> (0L, 100L)), Nil, -1L, None, Seq("x" -> false))
     assert(!ranged.exists(_.startsWith("part=P1/")), ranged.toString)
     // values through the pruned scan stay exact
     val got = t.snapshotPruned(Map.empty, Nil, -1L, None, Seq("x" -> true))
@@ -388,7 +398,7 @@ class WriteStatsSpec extends AnyFunSuite {
     AcidTable.localCommitEnabled = false
     try t.upsert(rows("P3", Seq.fill(4)(null: java.lang.Long)))
     finally AcidTable.localCommitEnabled = true
-    val nn2 = t.prunedFiles(Map.empty, Nil, -1L, None, Seq("x" -> false))
+    val nn2 = t.indexes.prunedFiles(Map.empty, Nil, -1L, None, Seq("x" -> false))
     assert(!nn2.exists(_.startsWith("part=P3/")), nn2.toString)
   }
 
@@ -399,8 +409,8 @@ class WriteStatsSpec extends AnyFunSuite {
     val sorted = strs.sorted // JVM String order == UTF8 binary order for these
     sorted.sliding(2).foreach {
       case Seq(a, b) =>
-        val ea = AcidTable.statsUtf8Prefix(a.getBytes("UTF-8"))
-        val eb = AcidTable.statsUtf8Prefix(b.getBytes("UTF-8"))
+        val ea = Indexes.statsUtf8Prefix(a.getBytes("UTF-8"))
+        val eb = Indexes.statsUtf8Prefix(b.getBytes("UTF-8"))
         assert(ea <= eb, s"encoding inverted order: '$a' -> $ea vs '$b' -> $eb")
       case _ =>
     }
@@ -435,12 +445,12 @@ class WriteStatsSpec extends AnyFunSuite {
     // agree with the internal epoch-micros domain.
     val inst = java.time.Instant.parse("1969-12-31T23:59:59.500Z")
     val jts = java.sql.Timestamp.from(inst)
-    assert(AcidTable.statsEncode(TimestampType, jts) === Some(-500000L))
-    assert(AcidTable.statsEncode(TimestampType, inst) === Some(-500000L))
+    assert(Indexes.statsEncode(TimestampType, jts) === Some(-500000L))
+    assert(Indexes.statsEncode(TimestampType, inst) === Some(-500000L))
     // order preservation straddling the epoch
-    val before = AcidTable.statsEncode(TimestampType,
+    val before = Indexes.statsEncode(TimestampType,
       java.sql.Timestamp.from(java.time.Instant.parse("1969-12-31T23:59:58.250Z"))).get
-    val after = AcidTable.statsEncode(TimestampType,
+    val after = Indexes.statsEncode(TimestampType,
       java.sql.Timestamp.from(java.time.Instant.parse("1970-01-01T00:00:00.250Z"))).get
     assert(before < -500000L && -500000L < after)
   }
