@@ -674,14 +674,14 @@ final class AcidScanBuilder(acid: AcidTable, version: Option[Long] = None)
       * one manifest read, no file listing, no Spark job at plan time.
       */
     override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-      val v = version.getOrElse(acid.latestVersion())
+      val view = acid.timeline.rootView(version.getOrElse(acid.latestVersion()))
       val files = pushedPkKeys match {
-        case Some(ks) => acid.lookupFiles(ks, pushedPartHint, v)
-        case None => acid.indexes.prunedFiles(
-          AcidScanBuilder.rangeBounds(pushed, acid.schema), pushedBloomEquals, v,
+        case Some(ks) => acid.lookupFilesIn(view, ks, pushedPartHint)
+        case None => acid.indexes.prunedFilesIn(view,
+          AcidScanBuilder.rangeBounds(pushed, acid.schema), pushedBloomEquals,
           transformPartHint, pushedNullChecks)
       }
-      val bytes = acid.filesBytes(files, v)
+      val bytes = files.iterator.map(_._2).sum
       new org.apache.spark.sql.connector.read.Statistics {
         override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
         override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()

@@ -1,6 +1,5 @@
 package graft.lake
 
-import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import java.util.UUID
@@ -21,7 +20,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
   * {{{
   * <path>/_meta.properties            # schema DDL, pk / partition / precombine cols, numBuckets
   * <path>/_commits/                   # the commit log: roots, segments, tags ([[Timeline]])
-  * <path>/data/<part>=<value>/b<bbb>-c-<uuid>-<n>.parquet
+  * <path>/data/                      # the data files ([[DataFiles]])
   * }}}
   *
   * One root format is readable. Every root starts with `#ts=<publish
@@ -125,7 +124,8 @@ final class AcidTable private (
   private[lake] val timeline = new Timeline(path)
   /** The table's per-file indexes: stats, blooms, the record index. */
   private[lake] val indexes = new Indexes(this)
-  private[lake] val dataRoot = Paths.get(path, DataDir)
+  /** The table's data files: every `data/` read and write. */
+  private[lake] val dataFiles = new DataFiles(this)
 
   /** Target output-file size for commit/compaction writes. A hot partition
     * splits into ~this many bytes per file instead of fusing into one
@@ -168,7 +168,7 @@ final class AcidTable private (
     // one view: the file list, the sizes and the deletion vectors all
     // come from the same root read
     val view = timeline.rootView(if (version >= 0) version else latestVersion())
-    applyDvs(snapshotFromFiles(view.files, view.sizes), view.dvs)
+    applyDvs(snapshotFromFiles(view.entries), view.dvs)
   }
 
   /** Point-lookup read: the pinned (default latest) snapshot restricted to
@@ -183,7 +183,7 @@ final class AcidTable private (
     * bucket files: O(#cells) file groups regardless of table size — the
     * property that makes a point read on a 100 TB table touch a handful of
     * files. Bucketless legacy files prune by partition only (they can hold
-    * any bucket — same conservatism as [[fileInCell]]); a non-string or
+    * any bucket — same conservatism as [[DataFiles.inCell]]); a non-string or
     * non-hash-safe PK type skips bucket pruning and scans the (partition-
     * pruned) snapshot. The row filter itself is an `isInCollection` set
     * test pushed into the scan. Point lookups are read-only: no commit, no
@@ -194,26 +194,23 @@ final class AcidTable private (
       partitionsHint: Option[Seq[String]] = None,
       version: Long = -1L): DataFrame = explicitVersionRead(version) {
     AcidTable.lookupScans.incrementAndGet()
-    // ONE view of the version: the file list, the size map and the DV
-    // entries come from the same root even if a commit lands mid-call.
-    // Sizes resolve from the pruned files' own segments — a hinted point
-    // lookup never expands the full manifest.
+    // ONE view of the version: the file entries and the DV entries come
+    // from the same root even if a commit lands mid-call. A hinted point
+    // lookup resolves only the hinted partitions' segments.
     val view = timeline.rootView(if (version >= 0) version else latestVersion())
     if (!keyCastSupported) {
       // PK type outside castKeyTo's set (DATE/TIMESTAMP/DECIMAL/…): the
       // string keys can't be rendered as typed literals, so skip bucket
       // pruning and filter the (partition-pruned) snapshot by the PK's
       // string rendering — never return empty for a type we can't parse
-      val files = lookupFilesIn(view, keys, partitionsHint)
-      return applyDvs(snapshotFromFiles(files, sizesForFiles(view, files)), view.dvs)
+      return applyDvs(snapshotFromFiles(lookupFilesIn(view, keys, partitionsHint)), view.dvs)
         .filter(col(pkCol).cast(StringType).isInCollection(keys))
     }
     val typed = typedKeys(keys)
-    if (typed.isEmpty) return snapshotFromFiles(Nil, Map.empty)
-    val files = lookupFilesIn(view, keys, partitionsHint)
+    if (typed.isEmpty) return snapshotFromFiles(Nil)
     // keys cast to the PK's type (not the column to string) so the In set
     // test stays on the bare scan column and pushes into the parquet read
-    applyDvs(snapshotFromFiles(files, sizesForFiles(view, files)), view.dvs)
+    applyDvs(snapshotFromFiles(lookupFilesIn(view, keys, partitionsHint)), view.dvs)
       .filter(col(pkCol).isInCollection(typed))
   }
 
@@ -244,9 +241,12 @@ final class AcidTable private (
       partitionsHint: Option[Seq[String]] = None,
       version: Long = -1L): Seq[String] =
     lookupFilesIn(timeline.rootView(if (version >= 0) version else latestVersion()), keys, partitionsHint)
+      .map(_._1)
 
-  private def lookupFilesIn(
-      view: RootView, keys: Seq[String], partitionsHint: Option[Seq[String]]): Seq[String] = {
+  /** [[lookupFiles]] on one view, as the (file, recorded size) entries
+    * the pruned segments resolved. */
+  private[lake] def lookupFilesIn(
+      view: RootView, keys: Seq[String], partitionsHint: Option[Seq[String]]): Seq[(String, Long)] = {
     if (keys.isEmpty) return Nil
     // hidden partitioning on the PK itself (e.g. bucket(n, pk)): the
     // keys DETERMINE their partitions, so an explicit hint is redundant —
@@ -268,10 +268,10 @@ final class AcidTable private (
       else {
         val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
           .createToCatalystConverter(schema(pkCol).dataType)
-        Some(typedKeys(keys).map(k => driverBucketOf(toInternal(k))).toSet)
+        Some(typedKeys(keys).map(k => dataFiles.driverBucketOf(toInternal(k))).toSet)
       }
-    def cellPrune(files: Seq[String]): Seq[String] = bucketsOpt match {
-      case Some(bs) => files.filter(f => fileBucketOf(f).forall(bs.contains))
+    def cellPrune(files: Seq[(String, Long)]): Seq[(String, Long)] = bucketsOpt match {
+      case Some(bs) => files.filter(f => dataFiles.bucketOf(f._1).forall(bs.contains))
       case None => files
     }
     // a hinted lookup on a segmented manifest resolves ONLY the hinted
@@ -297,8 +297,8 @@ final class AcidTable private (
           bloomPrune(cellPrune(filesForPartitions(view, cells)))
         case None =>
           val refs = view.segRefs
-          def pruneRef(r: AcidTable.SegRef): Seq[String] =
-            bloomPrune(cellPrune(timeline.readSegment(r.name).entries.map(_._1)))
+          def pruneRef(r: AcidTable.SegRef): Seq[(String, Long)] =
+            bloomPrune(cellPrune(timeline.readSegment(r.name).entries))
           // CHUNKED submission: one task per ref at 20 k partitions is
           // ~20 k pool round-trips of microsecond work — the overhead
           // dominated the probe. 64-ref chunks keep 8 threads busy with
@@ -322,17 +322,6 @@ final class AcidTable private (
       s"lookup keys as strings unsupported for PK type $other")
   }
 
-  /** Scan of an explicit manifest-relative file list (a pinned snapshot or
-    * any partition-subset of one). Planned ENTIRELY from manifest metadata
-    * ([[org.apache.spark.sql.graft.ManifestScan]]): partition values are
-    * parsed off the directory names and per-file sizes come from the
-    * manifest's segments, so building the scan costs no filesystem
-    * listing or stat calls — a snapshot's planning cost is O(files) string
-    * work, the property that keeps reads cheap while file-group commits
-    * accumulate files (and, at 100 TB, the property that lets scan
-    * planning run from manifests alone, as Delta/Iceberg/Hudi do).
-    * Partition pruning works against the parsed values.
-    */
   /** The table schema with existence-default metadata attached for
     * [[columnDefaults]] columns — Spark's parquet readers consult the
     * `EXISTS_DEFAULT` key and fill the default ONLY where the column is
@@ -350,19 +339,19 @@ final class AcidTable private (
       }
     })
 
-  private[lake] def snapshotFromFiles(files: Seq[String], sizes: Map[String, Long]): DataFrame =
+  /** Scan of explicit (file, recorded size) entries (a pinned snapshot or
+    * any partition-subset of one), planned from the entries alone
+    * ([[DataFiles.scan]]): no listing or stat call, so a snapshot's
+    * planning cost is O(files) string work — the property that lets scan
+    * planning run from manifests alone, as Delta/Iceberg/Hudi do.
+    * Partition pruning works against the directory-parsed values.
+    */
+  private[lake] def snapshotFromFiles(files: Seq[(String, Long)]): DataFrame =
     if (files.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     } else {
-      val mf = files.map { f =>
-        val pv = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(f.takeWhile(_ != '/').stripPrefix(s"$partitionCol="))
-        org.apache.spark.sql.graft.ManifestScan.ManifestFile(
-          dataRoot.resolve(f).toString, pv, sizes(f))
-      }
       if (renamedCols.isEmpty) {
-        org.apache.spark.sql.graft.ManifestScan
-          .dataFrame(spark, scanSchema, partitionCol, dataRoot.toString, mf)
+        dataFiles.scan(files, scanSchema)
           .select(schema.fieldNames.map(col): _*) // canonical column order
       } else {
         // outstanding metadata-only renames: request current AND prior
@@ -376,8 +365,7 @@ final class AcidTable private (
         val extended = StructType(scanSchema.fields.flatMap(f =>
           f +: renamedCols.getOrElse(f.name, Nil).map(p =>
             StructField(p, f.dataType, nullable = true))))
-        org.apache.spark.sql.graft.ManifestScan
-          .dataFrame(spark, extended, partitionCol, dataRoot.toString, mf)
+        dataFiles.scan(files, extended)
           .select(schema.fields.map { f =>
             val priors = renamedCols.getOrElse(f.name, Nil)
             if (priors.isEmpty) col(f.name)
@@ -595,9 +583,7 @@ final class AcidTable private (
       // on any lost race.
       globalScope = true,
       touchedOf = (_, files) => {
-        val existing = files().map(_._1.takeWhile(_ != '/')).distinct.map(d =>
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(d.stripPrefix(s"$partitionCol=")))
+        val existing = files().map(e => dataFiles.dirOf(e._1)).distinct.map(dataFiles.partValue)
         val incoming = org.apache.spark.sql.graft.PlanShim
           .smallLocalColumn(b.select(partitionCol), maxRows = 10000) match {
           case Some(set) => set.map(String.valueOf).toSeq
@@ -863,7 +849,7 @@ final class AcidTable private (
         // stays proportional to the predicate's reach, not table size
         val nmbsCells = nmbsCond.map { c =>
           snap.as("t").filter(c)
-            .select(col(partitionCol).as("__p"), bucketExpr.as("__b"))
+            .select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b"))
             .distinct().collect().map(r => FileCell(r.getString(0), r.getInt(1))).toSeq
         }.getOrElse(Nil)
         // expression inserts can send a row to any cell their assignments
@@ -872,7 +858,7 @@ final class AcidTable private (
         val imageCells =
           if (!hasExprInserts) Nil
           else insertImages(snap, src, notMatched).map { img =>
-            img.select(col(partitionCol).cast("string").as("__p"), bucketExpr.as("__b"))
+            img.select(col(partitionCol).cast("string").as("__p"), dataFiles.bucketExpr.as("__b"))
               .distinct().collect().map(r => FileCell(r.getString(0), r.getInt(1))).toSeq
           }.getOrElse(Nil)
         (srcCells ++ nmbsCells ++ imageCells).distinct
@@ -1144,13 +1130,13 @@ final class AcidTable private (
         val local = kernel.flatMap { case (pred, _) =>
           if (!driverScaleFiles(files)) None
           else scala.util.Try {
-            readRowsLocal(files.map(_._1)).filter(pred)
+            dataFiles.readRows(files).filter(pred)
               .map(r => FileCell(rowPart(r), rowBucket(r))).distinct
           }.toOption // an interpreted-eval surprise falls back, never fails
         }
         local.getOrElse {
           snap().filter(condition)
-            .select(col(partitionCol).as("__p"), bucketExpr.as("__b"))
+            .select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b"))
             .distinct().collect().map(r => FileCell(r.getString(0), r.getInt(1))).toSeq
         }
       },
@@ -1213,13 +1199,13 @@ final class AcidTable private (
         val local = pred.flatMap { p =>
           if (!driverScaleFiles(files)) None
           else scala.util.Try {
-            readRowsLocal(files.map(_._1)).filter(p)
+            dataFiles.readRows(files).filter(p)
               .map(r => FileCell(rowPart(r), rowBucket(r))).distinct
           }.toOption
         }
         local.getOrElse {
           snap().filter(condition)
-            .select(col(partitionCol).as("__p"), bucketExpr.as("__b"))
+            .select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b"))
             .distinct().collect().map(r => FileCell(r.getString(0), r.getInt(1))).toSeq
         }
       },
@@ -1442,7 +1428,7 @@ final class AcidTable private (
         kLocal.map { case (attrs, rows) =>
           rows.map(r => FileCell(
             String.valueOf(r.get(1, attrs(1).dataType)),
-            driverBucketOf(r.get(0, attrs.head.dataType)))).distinct
+            dataFiles.driverBucketOf(r.get(0, attrs.head.dataType)))).distinct
         }
       else None
     commitLoop(
@@ -1457,7 +1443,7 @@ final class AcidTable private (
             // matched rows can live in any partition, but always in their
             // pk's bucket (a pure function of the key)
             snap().join(keysDf, Seq(pkCol), "left_semi")
-              .select(col(partitionCol).as("__p"), bucketExpr.as("__b")).distinct()
+              .select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b")).distinct()
               .collect().map(r => FileCell(r.getString(0), r.getInt(1))).toSeq
           }
         },
@@ -1538,9 +1524,7 @@ final class AcidTable private (
         rows.map(r => (rowPart(r),
           String.valueOf(r.get(pkFieldIdx, schema(pkFieldIdx).dataType)))).distinct
       }.getOrElse {
-        val probeFiles = lookupFilesIn(baseView, keyStrings, hint)
-        applyDvs(
-          snapshotFromFiles(probeFiles, sizesForFiles(baseView, probeFiles)), baseView.dvs)
+        applyDvs(snapshotFromFiles(lookupFilesIn(baseView, keyStrings, hint)), baseView.dvs)
           .filter(col(pkCol).cast(StringType).isInCollection(keyStrings))
           .select(col(partitionCol).cast(StringType), col(pkCol).cast(StringType))
           .collect().map(r => (r.getString(0), r.getString(1))).toSeq.distinct
@@ -1549,7 +1533,7 @@ final class AcidTable private (
       if (base < 0 || pairs.isEmpty) base
       else {
         val entries = pairs.map { case (p, k) =>
-          DvEntry(p, driverBucketOf(toInternal(castKeyTo(k))), k)
+          DvEntry(p, dataFiles.driverBucketOf(toInternal(castKeyTo(k))), k)
         }
         // data files and sizes carry verbatim — this commit rewrites
         // nothing, so prior entries (even of our own cells) stay live.
@@ -1589,8 +1573,7 @@ final class AcidTable private (
       val baseView = timeline.rootView(base)
       // matched rows ARE live rows of the current snapshot (DV-applied),
       // so one filtered scan yields the (partition, pk) pairs directly
-      lazy val matched = applyDvs(
-        snapshotFromFiles(baseView.files, baseView.sizes), baseView.dvs)
+      lazy val matched = applyDvs(snapshotFromFiles(baseView.entries), baseView.dvs)
         .filter(condition)
         .select(col(partitionCol).cast(StringType), col(pkCol).cast(StringType))
         .distinct().limit(AcidTable.MorMaxKeys + 1).collect()
@@ -1601,7 +1584,7 @@ final class AcidTable private (
       else {
         val entries = matched.map { r =>
           val k = r.getString(1)
-          DvEntry(r.getString(0), driverBucketOf(toInternal(castKeyTo(k))), k)
+          DvEntry(r.getString(0), dataFiles.driverBucketOf(toInternal(castKeyTo(k))), k)
         }.toSeq.distinct
         publishDvOnly(base, baseView, entries)
         Some(base + 1)
@@ -1951,9 +1934,7 @@ final class AcidTable private (
     if (v < 0) return Nil
     // the partition inventory IS the root's reference list —
     // O(partitions) read, no segment resolution at all
-    timeline.rootView(v).segRefs.map(r => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(r.partDir.stripPrefix(s"$partitionCol=")))
-      .distinct.sorted
+    timeline.rootView(v).segRefs.map(r => dataFiles.partValue(r.partDir)).distinct.sorted
   }
 
   /** The `SHOW PARTITIONS` surface: one row per live partition value with
@@ -1971,8 +1952,7 @@ final class AcidTable private (
     // count and bytes ride the reference line — the whole inventory
     // costs ONE root read, zero segment resolutions
     val rows = timeline.rootView(v).segRefs
-      .map(r => (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(r.partDir.stripPrefix(s"$partitionCol=")), r.count, r.bytes))
+      .map(r => (dataFiles.partValue(r.partDir), r.count, r.bytes))
       .sortBy(_._1)
       .map { case (p, n, b) => Row(p, n, b) }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), invSchema)
@@ -2209,26 +2189,10 @@ final class AcidTable private (
       "total_bytes")
   }
 
-  /** Bytes the given manifest files occupy, from the sizes their segments
-    * recorded. The planner-statistics
-    * surface: scan size estimates come from commit metadata, never from
-    * listing or footer-probing a 100 TB table's object store.
-    */
-  private[lake] def filesBytes(files: Seq[String], version: Long): Long =
-    filesBytesIn(timeline.rootView(version), files)
-
-  private def filesBytesIn(view: RootView, files: Seq[String]): Long = {
-    val sizes = sizesForFiles(view, files)
-    files.iterator.map(sizes).sum
-  }
-
   /** Total live bytes of the pinned (default latest) snapshot, from
     * manifest metadata alone. */
-  def liveBytes(version: Long = -1L): Long = {
-    val v = if (version >= 0) version else latestVersion()
-    val view = timeline.rootView(v)
-    filesBytesIn(view, view.files)
-  }
+  def liveBytes(version: Long = -1L): Long =
+    timeline.rootView(if (version >= 0) version else latestVersion()).entries.iterator.map(_._2).sum
 
   /** CDC-style diff between two committed versions: every row added and
     * every row removed (an update appears as remove+insert of the two row
@@ -2238,26 +2202,9 @@ final class AcidTable private (
     */
   def changesBetween(fromVersion: Long, toVersion: Long): DataFrame =
       explicitVersionRead(math.min(fromVersion, toVersion)) {
-    val (fromFiles, toFiles, fromSizes, toSizes, fromDvs, toDvs) =
-      diffScope(fromVersion, toVersion)
-    // FILE-granular diff pruning (round 11; previously partition-granular):
-    // a data file present in BOTH manifests with IDENTICAL applicable
-    // deletion-vector entries contributes the same multiset of visible
-    // rows to both sides, and multiset difference cancels shared rows —
-    // (U + A) exceptAll (U + B) == A exceptAll B — so such files are
-    // dropped from BOTH scans with an exactly-equal result. Files are
-    // immutable and uniquely named, so name identity IS content identity.
-    // A small upsert rewrites only its keys' CELLS; the diff then reads
-    // those cells' old+new files — at 100 TB the diff cost tracks the
-    // commits' touched cells, never partition row counts.
-    def applicableDvs(f: String, dvs: Seq[DvEntry]): Set[DvEntry] =
-      dvs.filter(e => fileInCell(f, FileCell(e.part, e.bucket))).toSet
-    val stable: Set[String] = (fromFiles.toSet intersect toFiles.toSet)
-      .filter(f => applicableDvs(f, fromDvs) == applicableDvs(f, toDvs))
-    val from = applyDvs(snapshotFromFiles(
-      fromFiles.filterNot(stable), fromSizes), fromDvs)
-    val to = applyDvs(snapshotFromFiles(
-      toFiles.filterNot(stable), toSizes), toDvs)
+    val (fromFiles, toFiles, fromDvs, toDvs) = diffScope(fromVersion, toVersion)
+    val from = applyDvs(snapshotFromFiles(fromFiles), fromDvs)
+    val to = applyDvs(snapshotFromFiles(toFiles), toDvs)
     // ONE signed net aggregation instead of the former
     //   to.exceptAll(from) ∪ from.exceptAll(to):
     // Spark rewrites EACH exceptAll into its own union + count-aggregate +
@@ -2282,25 +2229,31 @@ final class AcidTable private (
       .drop("__cdc_net")
   }
 
-  /** The diff-relevant file lists (+ recorded sizes, + DV entries) of two
-    * versions. A partition whose SEGMENT REF and applicable DV entries are
-    * identical in both versions contributes identical visible-row
-    * multisets to both sides — it is dropped from the diff WITHOUT
-    * resolving its segment, so a trickle diff's metadata
-    * cost is O(changed partitions), not O(live files). A MOR delete
-    * changes a file's visible rows without changing its name, which is
-    * why a partition's DV entries participate in the stability check (a
-    * partition kept for a DV change still gets the caller's file-granular
-    * pruning). */
+  /** The diff-relevant (file, recorded size) entries of each of two
+    * versions, plus each version's DV entries. A partition whose SEGMENT
+    * REF and DV entries are identical in both versions contributes
+    * identical visible-row multisets to both sides — it is dropped
+    * WITHOUT resolving its segment, so a trickle diff's metadata cost is
+    * O(changed partitions), not O(live files). A MOR delete changes a
+    * file's visible rows without changing its name, which is why DV
+    * entries take part in both stability checks.
+    *
+    * Within the changed partitions the pruning is FILE-granular: a file
+    * in BOTH versions with IDENTICAL applicable DV entries contributes
+    * the same visible rows to both sides, and multiset difference cancels
+    * shared rows — (U + A) exceptAll (U + B) == A exceptAll B — so it is
+    * dropped from both sides with an exactly-equal result. Files are
+    * immutable and uniquely named, so name identity IS content identity:
+    * a small upsert's diff reads only its keys' cells' old and new files.
+    */
   private def diffScope(fromVersion: Long, toVersion: Long)
-      : (Seq[String], Seq[String], Map[String, Long], Map[String, Long],
-         Seq[DvEntry], Seq[DvEntry]) = {
+      : (Seq[(String, Long)], Seq[(String, Long)], Seq[DvEntry], Seq[DvEntry]) = {
     val fromView = timeline.rootView(fromVersion)
     val toView = timeline.rootView(toVersion)
     val (fr, tr) = (fromView.segRefs, toView.segRefs)
     val (fromDvs, toDvs) = (fromView.dvs, toView.dvs)
     def byPd(dvs: Seq[DvEntry]): Map[String, Set[DvEntry]] =
-      dvs.groupBy(e => partDir(e.part)).view.mapValues(_.toSet).toMap
+      dvs.groupBy(e => dataFiles.partDir(e.part)).view.mapValues(_.toSet).toMap
     val fDv = byPd(fromDvs); val tDv = byPd(toDvs)
     val fByPd = fr.map(r => r.partDir -> r).toMap
     val tByPd = tr.map(r => r.partDir -> r).toMap
@@ -2311,8 +2264,11 @@ final class AcidTable private (
     def scoped(refs: Seq[AcidTable.SegRef]): Seq[(String, Long)] =
       refs.filter(r => changed(r.partDir)).flatMap(r => timeline.readSegment(r.name).entries)
     val fe = scoped(fr); val te = scoped(tr)
-    (fe.map(_._1), te.map(_._1),
-      fe.toMap, te.toMap, fromDvs, toDvs)
+    def applicableDvs(f: String, dvs: Seq[DvEntry]): Set[DvEntry] =
+      dvs.filter(e => dataFiles.inCell(f, FileCell(e.part, e.bucket))).toSet
+    val stable: Set[String] = (fe.map(_._1).toSet intersect te.map(_._1).toSet)
+      .filter(f => applicableDvs(f, fromDvs) == applicableDvs(f, toDvs))
+    (fe.filterNot(e => stable(e._1)), te.filterNot(e => stable(e._1)), fromDvs, toDvs)
   }
 
   /** Driver image of [[changesBetween]] for trickle-scale diffs (round-11
@@ -2338,16 +2294,8 @@ final class AcidTable private (
       maxBytes: Long = AcidTable.FastPathMaxBytes)
       : Option[Seq[(org.apache.spark.sql.catalyst.InternalRow, Int)]] = {
     if (!fastSchemaOk || !AcidTable.localCommitEnabled) return None
-    val (fromFiles, toFiles, fromSizes, toSizes, fromDvs, toDvs) =
-      diffScope(fromVersion, toVersion)
-    def applicableDvs(f: String, dvs: Seq[DvEntry]): Set[DvEntry] =
-      dvs.filter(e => fileInCell(f, FileCell(e.part, e.bucket))).toSet
-    val stable: Set[String] = (fromFiles.toSet intersect toFiles.toSet)
-      .filter(f => applicableDvs(f, fromDvs) == applicableDvs(f, toDvs))
-    val fromDiff = fromFiles.filterNot(stable)
-    val toDiff = toFiles.filterNot(stable)
-    if (!driverScaleFiles(fromDiff.map(f => f -> fromSizes(f)) ++ toDiff.map(f => f -> toSizes(f)),
-        maxBytes)) return None
+    val (fromDiff, toDiff, fromDvs, toDvs) = diffScope(fromVersion, toVersion)
+    if (!driverScaleFiles(fromDiff ++ toDiff, maxBytes)) return None
     // value-equality key of a full row; byte arrays wrapped so content
     // (not identity) compares — everything else keeps its boxed equals
     def rowKey(r: org.apache.spark.sql.catalyst.InternalRow): IndexedSeq[Any] =
@@ -2359,12 +2307,12 @@ final class AcidTable private (
       }
     val net = new java.util.LinkedHashMap[IndexedSeq[Any],
       (org.apache.spark.sql.catalyst.InternalRow, Int)]
-    readRowsLocal(toDiff).filter(dvRowFilter(toDvs)).foreach { r =>
+    dataFiles.readRows(toDiff).filter(dvRowFilter(toDvs)).foreach { r =>
       val k = rowKey(r)
       val cur = net.get(k)
       net.put(k, if (cur == null) (r, 1) else (cur._1, cur._2 + 1))
     }
-    readRowsLocal(fromDiff).filter(dvRowFilter(fromDvs)).foreach { r =>
+    dataFiles.readRows(fromDiff).filter(dvRowFilter(fromDvs)).foreach { r =>
       val k = rowKey(r)
       val cur = net.get(k)
       net.put(k, if (cur == null) (r, -1) else (cur._1, cur._2 - 1))
@@ -2388,12 +2336,11 @@ final class AcidTable private (
       : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
     if (!fastSchemaOk || !AcidTable.localCommitEnabled) return None
     val files = lookupFilesIn(view, keys, partitionsHint)
-    val sizes = sizesForFiles(view, files)
-    if (!driverScaleFiles(files.map(f => f -> sizes(f)))) return None
+    if (!driverScaleFiles(files)) return None
     // the `#dvs=` entries are a header of the same view: listing them
     // never expands every partition's segment
     val ks = keys.toSet
-    Some(readRowsLocal(files).filter(dvRowFilter(view.dvs)).filter(r =>
+    Some(dataFiles.readRows(files).filter(dvRowFilter(view.dvs)).filter(r =>
       ks.contains(String.valueOf(r.get(pkFieldIdx, schema(pkFieldIdx).dataType)))))
   }
 
@@ -2446,12 +2393,12 @@ final class AcidTable private (
     // materializer for deletion vectors (read once before the loop — a
     // concurrent MOR delete landing mid-compaction keeps its entries,
     // correctly, via the carried-DV rule)
-    val dvParts = timeline.rootView(latestVersion()).dvs.map(e => partDir(e.part)).toSet
+    val dvParts = timeline.rootView(latestVersion()).dvs.map(e => dataFiles.partDir(e.part)).toSet
     val v = commitLoop(
       touchedOf = (_, files) => {
-        val byPartition = files().map(_._1).groupBy(f => f.takeWhile(_ != '/'))
+        val byPartition = files().groupBy(e => dataFiles.dirOf(e._1))
         val inScope: String => Boolean = partitions match {
-          case Some(ps) => ps.map(partDir).toSet.contains _
+          case Some(ps) => ps.map(dataFiles.partDir).toSet.contains _
           case None => _ => true
         }
         val selected =
@@ -2460,9 +2407,7 @@ final class AcidTable private (
           else byPartition.filter(kv =>
             kv._2.size > maxFilesPerPartition || dvParts.contains(kv._1)).keys
         selected
-          .map(d =>
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(d.stripPrefix(s"$partitionCol=")))
+          .map(dataFiles.partValue)
           // whole-partition scope: compaction's point is folding the
           // partition's accumulated per-commit files; the plain rewrite
           // emits one file per NON-EMPTY BUCKET (the file-group layout
@@ -2543,14 +2488,14 @@ final class AcidTable private (
     val view = timeline.rootView(if (version >= 0) version else latestVersion())
     val dvs = view.dvs
     if (dvs.nonEmpty && (!keyCastSupported || pkCol == partitionCol)) return None
-    val rels: Seq[String] = pkKeys match {
+    val rels: Seq[(String, Long)] = pkKeys match {
       case Some(ks) =>
         AcidTable.lookupScans.incrementAndGet() // the point-lookup route
         lookupFilesIn(view, ks, partitions)
       case None => indexes.prunedFilesIn(view, bounds, bloomEqs, partitions, nullChecks)
     }
     // per-file applicable DV keys, as CATALYST-INTERNAL pk values: an
-    // entry applies to every file of its cell ([[fileInCell]] — bucketless
+    // entry applies to every file of its cell ([[DataFiles.inCell]] — bucketless
     // files belong to every bucket of their partition, the standing
     // conservatism). Unparseable keys drop out exactly as in [[applyDvs]].
     val dvKeysFor: String => Array[Any] =
@@ -2558,16 +2503,13 @@ final class AcidTable private (
       else {
         val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
           .createToCatalystConverter(schema(pkCol).dataType)
-        f => dvs.filter(e => fileInCell(f, FileCell(e.part, e.bucket)))
+        f => dvs.filter(e => dataFiles.inCell(f, FileCell(e.part, e.bucket)))
           .flatMap(e => scala.util.Try(castKeyTo(e.key)).toOption)
           .map(toInternal(_)).toArray
       }
-    val sizes = sizesForFiles(view, rels)
-    val files = rels.map { f =>
-      val pv = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(f.takeWhile(_ != '/').stripPrefix(s"$partitionCol="))
-      org.apache.spark.sql.graft.AcidBatchFile(
-        f, dataRoot.resolve(f).toString, pv, sizes(f), fileBucketOf(f), dvKeysFor(f))
+    val files = rels.map { case (f, size) =>
+      org.apache.spark.sql.graft.AcidBatchFile(f, dataFiles.abs(f).toString,
+        dataFiles.partValue(f), size, dataFiles.bucketOf(f), dvKeysFor(f))
     }
     val pkDt = schema(pkCol).dataType
     val bucketsOf: Seq[Any] => Option[Set[Int]] =
@@ -2576,7 +2518,7 @@ final class AcidTable private (
         scala.util.Try {
           val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
             .createToCatalystConverter(pkDt)
-          vs.map(k => driverBucketOf(toInternal(k))).toSet
+          vs.map(k => dataFiles.driverBucketOf(toInternal(k))).toSet
         }.toOption
       }
     val tSource = scala.util.Try(partitionTransform).toOption.flatten.map(_.sourceCol)
@@ -2596,11 +2538,8 @@ final class AcidTable private (
       partitions: Option[Seq[String]] = None,
       nullChecks: Seq[(String, Boolean)] = Nil): DataFrame = explicitVersionRead(version) {
     val view = timeline.rootView(if (version >= 0) version else latestVersion())
-    // sizes scoped to the PRUNED list (segment-resolved per partition) —
-    // every live file's size would be O(live files) for a read whose
-    // point is to touch a handful of them
-    val files = indexes.prunedFilesIn(view, bounds, equals, partitions, nullChecks)
-    applyDvs(snapshotFromFiles(files, sizesForFiles(view, files)), view.dvs)
+    applyDvs(snapshotFromFiles(indexes.prunedFilesIn(view, bounds, equals, partitions, nullChecks)),
+      view.dvs)
   }
 
   // -------------------------------------- hidden-partition transposition --
@@ -2697,8 +2636,7 @@ final class AcidTable private (
   def snapshotRange(bounds: Map[String, (Long, Long)], version: Long = -1L): DataFrame =
       explicitVersionRead(version) {
     val view = timeline.rootView(if (version >= 0) version else latestVersion())
-    val files = indexes.rangePrunedIn(view, bounds)
-    applyDvs(snapshotFromFiles(files, sizesForFiles(view, files)), view.dvs)
+    applyDvs(snapshotFromFiles(indexes.rangePrunedIn(view, bounds)), view.dvs)
   }
 
   /** Union of live data files over every on-disk manifest in
@@ -2722,6 +2660,29 @@ final class AcidTable private (
     files.toSet
   }
 
+  /** The versions a vacuum at `latest` archives: the retained prefix
+    * below the `keepVersions` window, stopped at the first version that
+    * is still inside the grace window or tagged.
+    *
+    * The age guard is the SUPERSESSION time — `v + 1`'s commit time, the
+    * instant v stopped being latest — not v's own stamp: a version
+    * created long ago but superseded a moment ago may still be some
+    * process's resolved snapshot and must stay readable for the grace
+    * window (found by the cross-process harness: keepVersions=2 at ~10
+    * commits/s archived a writer's base mid-commit). Supersession times
+    * are monotone in v, so stopping at the first young one preserves the
+    * prefix property the conflict paths and oldestRetainedVersion rely
+    * on. Tags pin the prefix the same way: archival stops at the oldest
+    * tagged version (see the tag section — retaining a mid-timeline hole
+    * would break the monotone-existence contract the binary searches
+    * rely on), so a tagged snapshot stays readable by name regardless of
+    * keepVersions. */
+  private def archivable(latest: Long, keepVersions: Int, cutoff: Long): Seq[Long] = {
+    val pinned = taggedVersions()
+    (timeline.oldestRetainedVersion(latest) until math.max(0L, latest - keepVersions + 1))
+      .takeWhile(v => timeline.rootView(v + 1).ts < cutoff && !pinned.contains(v))
+  }
+
   /** Read-only preview of a `vacuum(keepVersions, graceMillis)` run — the
     * Delta `VACUUM … DRY RUN` face: one row per would-be-removed item
     * (`kind` = manifest | data), with bytes for data files, and NOTHING
@@ -2736,24 +2697,14 @@ final class AcidTable private (
     import spark.implicits._
     val latest = latestVersion()
     if (latest < 0) return Seq.empty[(String, String, Long)].toDF("kind", "name", "bytes")
-    val keepFrom = math.max(0L, latest - keepVersions + 1)
     val cutoff = System.currentTimeMillis() - graceMillis
-    val pinned = taggedVersions()
-    val archivable = (timeline.oldestRetainedVersion(latest) until keepFrom)
-      .takeWhile(v => timeline.rootView(v + 1).ts < cutoff && !pinned.contains(v))
+    val archived = archivable(latest, keepVersions, cutoff)
     // liveness anchored where the REAL run would anchor it: the oldest
     // manifest that would remain on disk after the archival above
-    val liveFromAfter = timeline.oldestRetainedVersion(latest) + archivable.size
-    val live = liveDataFiles(liveFromAfter, latest)
-    val deadData = Option(dataRoot.toFile.listFiles()).getOrElse(Array.empty).toSeq
-      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty).toSeq)
-      .filter { f =>
-        val rel = s"${f.getParentFile.getName}/${f.getName}"
-        f.getName.endsWith(".parquet") && !live.contains(rel) &&
-          f.lastModified() < cutoff
-      }
-      .map(f => ("data", s"${f.getParentFile.getName}/${f.getName}", f.length()))
-    val manifests = archivable.map(v =>
+    val live = liveDataFiles(timeline.oldestRetainedVersion(latest) + archived.size, latest)
+    val deadData = dataFiles.sweep(live, cutoff, delete = false)
+      .map { case (rel, bytes) => ("data", rel, bytes) }
+    val manifests = archived.map(v =>
       ("manifest", Timeline.manifestFileName(v), timeline.rootBytes(v)))
     (manifests ++ deadData).toDF("kind", "name", "bytes").orderBy("kind", "name")
   }
@@ -2769,30 +2720,14 @@ final class AcidTable private (
   def vacuum(keepVersions: Int = 2, graceMillis: Long = 10 * 60 * 1000L): Int = {
     val latest = latestVersion()
     if (latest < 0) return 0
-    val keepFrom = math.max(0L, latest - keepVersions + 1)
     val cutoff = System.currentTimeMillis() - graceMillis
     // timeline archival runs FIRST (the Hudi-archive / Delta-log-retention
     // analog): manifests below the version-count window are pruned to keep
     // `_commits` bounded, and everything after this point treats "still on
-    // disk" as the ONE definition of retained. The age guard is the
-    // SUPERSESSION time — `v + 1`'s commit time, the instant v stopped being
-    // latest — not v's own stamp: a version created long ago but
-    // superseded a moment ago may still be some process's resolved
-    // snapshot and must stay readable for the grace window (found by the
-    // cross-process harness: keepVersions=2 at ~10 commits/s archived a
-    // writer's base mid-commit). Supersession times are monotone in v, so
-    // stopping at the first young one preserves the prefix property the
-    // conflict paths and oldestRetainedVersion rely on. Time travel below
-    // the horizon then fails loudly instead of resolving against a gutted
+    // disk" as the ONE definition of retained. Time travel below the
+    // horizon then fails loudly instead of resolving against a gutted
     // manifest.
-    // tags pin the prefix: archival stops at the oldest tagged version
-    // (see the tag section — retaining a mid-timeline hole would break
-    // the monotone-existence contract the binary searches rely on), so a
-    // tagged snapshot stays readable by name regardless of keepVersions
-    val pinned = taggedVersions()
-    (timeline.oldestRetainedVersion(latest) until keepFrom)
-      .takeWhile(v => timeline.rootView(v + 1).ts < cutoff && !pinned.contains(v))
-      .foreach(timeline.archive)
+    archivable(latest, keepVersions, cutoff).foreach(timeline.archive)
     // ONE liveness anchor for every GC pass (data files, segments, pages,
     // index runs): the oldest manifest still ON DISK after archival — not
     // the version-count window. The grace window keeps superseded
@@ -2804,29 +2739,10 @@ final class AcidTable private (
     // referencing it — the manifest IS the deletion tombstone, so grace
     // bounds reader exposure even for files whose own mtime is ancient.
     val liveFrom = timeline.oldestRetainedVersion(latest)
-    val live: Set[String] = liveDataFiles(liveFrom, latest)
     // steady-state sweep is 8-way over PARTITION DIRECTORIES (round-16
     // verdict #4: the per-file listing + mtime probe + delete loop was
-    // the single-threaded majority of the 3.2 s 500 k-file sweep; the
-    // same fixed pool bulk publish and unhinted probes already ride).
-    // Partition dirs are disjoint, so tasks share nothing but the
-    // `live` set (read-only) and the removed counter.
-    val removedCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    // a failing directory stops the sweep with its own exception: siblings
-    // already running finish their current file, queued ones never start
-    def sweepDirs(dirs: Array[File])(perFile: File => Unit): Unit = {
-      def sweep(d: File): Unit = Option(d.listFiles()).getOrElse(Array.empty).foreach(perFile)
-      if (dirs.length <= 2) dirs.foreach(sweep) else { Par.map(dirs.toSeq)(sweep); () }
-    }
-    sweepDirs(Option(dataRoot.toFile.listFiles()).getOrElse(Array.empty)) { f =>
-      val rel = s"${f.getParentFile.getName}/${f.getName}"
-      if (f.getName.endsWith(".parquet") && !live.contains(rel)
-          && f.lastModified() < cutoff && f.delete()) {
-        removedCount.incrementAndGet()
-        ()
-      }
-    }
-    val removed = removedCount.get()
+    // the single-threaded majority of the 3.2 s 500 k-file sweep)
+    val removed = dataFiles.sweep(liveDataFiles(liveFrom, latest), cutoff, delete = true).size
     indexes.sweepBlooms(cutoff)
     // segment GC: content-addressed segments are shared across versions,
     // so one is dead only when NO retained manifest references it. The
@@ -2953,16 +2869,15 @@ final class AcidTable private (
             s"cannot restore to v$toVersion: manifest missing (never existed or archived by vacuum)")
       }
     val files = target.files
-    val missing = files.filterNot(f => Files.exists(dataRoot.resolve(f)))
+    val missing = files.filterNot(dataFiles.exists)
     require(missing.isEmpty,
       s"cannot restore to v$toVersion: ${missing.size} data files vacuumed" +
         s" (first: ${missing.headOption.getOrElse("")})")
-    def partOf(f: String) = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .unescapePathName(f.takeWhile(_ != '/').stripPrefix(s"$partitionCol="))
     timeline.occ { base =>
       require(toVersion <= base, s"restore target v$toVersion does not exist (latest: v$base)")
       val baseFiles = timeline.rootView(base).files
-      val touched = (files ++ baseFiles).map(partOf).distinct.map(FileCell(_, -1))
+      val touched = (files ++ baseFiles).map(dataFiles.dirOf).distinct
+        .map(d => FileCell(dataFiles.partValue(d), -1))
       // the restored state includes the target version's outstanding MOR
       // deletes — without them the restore would resurrect DV'd rows.
       // The record index follows the manifest: the TARGET version's refs
@@ -3005,18 +2920,9 @@ final class AcidTable private (
     if (v < 0) return dest // empty source → empty clone
     val srcView = timeline.rootView(v)
     val files = srcView.files
-    val destData = Paths.get(destPath, DataDir)
-    files.foreach { f =>
-      val src = dataRoot.resolve(f)
-      val dst = destData.resolve(f)
-      Files.createDirectories(dst.getParent)
-      // hard link = zero-copy shared inode; cross-filesystem clones (no
-      // link support) degrade to a copy rather than failing
-      try Files.createLink(dst, src)
-      catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-        Files.copy(src, dst); ()
-      }
-    }
+    // hard link = zero-copy shared inode; cross-filesystem clones (no
+    // link support) degrade to a copy rather than failing
+    dest.dataFiles.linkFrom(dataFiles, files)
     // blooms and stats travel verbatim (hard-linked segments, copied
     // sidecar): O(index bytes), not a per-file re-stamp — the round-18c
     // MetaScale branch leg measured the re-stamp at ~11 s of a 12.7 s
@@ -3029,10 +2935,7 @@ final class AcidTable private (
     tableProperties.foreach { case (k, value) =>
       AcidTable.writeTableProperty(destPath, k, Some(value))
     }
-    val touched = files.map(f =>
-      FileCell(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(f.takeWhile(_ != '/').stripPrefix(s"$partitionCol=")), -1))
-      .distinct
+    val touched = files.map(dataFiles.dirOf).distinct.map(d => FileCell(dataFiles.partValue(d), -1))
     // the record index travels with the pinned snapshot: its runs are
     // content-addressed files — copy the bytes, carry the refs + the
     // completeness flag of the CLONED version (round 16)
@@ -3123,18 +3026,7 @@ final class AcidTable private (
     requireBranchName(name)
     val root = branchRoot(name)
     require(Files.exists(root), s"unknown branch '$name' on $path")
-    import java.nio.file.{FileVisitResult, SimpleFileVisitor}
-    import java.nio.file.attribute.BasicFileAttributes
-    Files.walkFileTree(root, new SimpleFileVisitor[Path] {
-      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
-        Files.delete(f); FileVisitResult.CONTINUE
-      }
-      override def postVisitDirectory(d: Path, e: java.io.IOException): FileVisitResult = {
-        if (e != null) throw e
-        Files.delete(d); FileVisitResult.CONTINUE
-      }
-    })
-    ()
+    DataFiles.deleteTree(root)
   }
 
   /** Fast-forward main to branch `name`'s head as ONE squashed commit at
@@ -3178,9 +3070,6 @@ final class AcidTable private (
         s"branch '$name' fast-forward failed: main advanced v$fork -> v$cur since " +
           s"the fork; the audited branch state no longer derives from main's head " +
           s"(drop and re-branch) ($path)")
-    def valueOfDir(d: String): String =
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(d.stripPrefix(s"$partitionCol="))
     val head = br.timeline.rootView(headB)
     val forkView = timeline.rootView(fork)
     // delta vs the fork: a partition whose `@` line is byte-identical
@@ -3205,21 +3094,11 @@ final class AcidTable private (
     val headDvs = head.dvs.toSet
     val dvTouched = ((headDvs diff forkDvs) ++ (forkDvs diff headDvs))
       .map(e => FileCell(e.part, -1)).toSeq
-    val touched = (touchedDirs.map(d => FileCell(valueOfDir(d), -1)) ++ dvTouched).distinct
+    val touched = (touchedDirs.map(d => FileCell(dataFiles.partValue(d), -1)) ++ dvTouched).distinct
     // the branch's new data bytes enter main by hard link at the SAME
     // relative paths its manifest lines name (fork-inherited files already
-    // share inodes with main and are skipped)
-    files.foreach { f =>
-      val dst = dataRoot.resolve(f)
-      if (!Files.exists(dst)) {
-        val src = br.dataRoot.resolve(f)
-        Files.createDirectories(dst.getParent)
-        try Files.createLink(dst, src)
-        catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-          Files.copy(src, dst); ()
-        }
-      }
-    }
+    // share inodes with main and count as linked)
+    dataFiles.linkFrom(br.dataFiles, files)
     // carried side state, all content-addressed / idempotent: record-index
     // runs, bloom filters for the published files, cluster statistics
     val bRli = br.indexes.rliRefsOf(head.rli)
@@ -3483,7 +3362,7 @@ final class AcidTable private (
     * matched rows can only live in the batch's own cells, so the snapshot
     * lookup job is skipped entirely; a DRIVER-LOCAL batch needs no Spark
     * job at all — partitions and buckets are read off the optimized plan
-    * ([[driverBucketOf]] evaluates the same Murmur3 the executors would).
+    * ([[DataFiles.driverBucketOf]] evaluates the same Murmur3 the executors would).
     * That job-free path is what bounds harness txn/s, and it subsumes the
     * partitions hint: the hint only still matters for DISTRIBUTED batches,
     * where it pins partition scope without a discovery job.
@@ -3500,20 +3379,20 @@ final class AcidTable private (
           val pdt = attrs.head.dataType
           return rows.map(r => FileCell(
             String.valueOf(r.get(0, pdt)),
-            driverBucketOf(r.get(1, attrs(1).dataType)))).distinct
+            dataFiles.driverBucketOf(r.get(1, attrs(1).dataType)))).distinct
         }
     }
     hint match {
       case Some(parts) => parts.map(FileCell(_, -1))
       case None =>
-        val own = batch.select(col(partitionCol).as("__p"), bucketExpr.as("__b"))
+        val own = batch.select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b"))
         if (stablePartitions)
           own.distinct().collect().map(r => FileCell(r.getString(0), r.getInt(1))).toSeq
         else {
           // matched keys may live in any PARTITION, but always in their
           // pk's bucket
           val matched = snap.join(keys, Seq(pkCol), "left_semi")
-            .select(col(partitionCol).as("__p"), bucketExpr.as("__b"))
+            .select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b"))
           own.union(matched).distinct().collect()
             .map(r => FileCell(r.getString(0), r.getInt(1))).toSeq
         }
@@ -3611,16 +3490,14 @@ final class AcidTable private (
       // are a root header — never a reason to expand the manifest.
       val baseDvs = baseView.dvs
       val rawCells = touchedOf(
-        () => applyDvs(snapshotFromFiles(baseView.files, baseView.sizes), baseDvs),
+        () => applyDvs(snapshotFromFiles(baseView.entries), baseDvs),
         () => baseView.entries)
       // cell-scoped metadata (round 14): resolve ONLY the touched
       // partitions' segments for everything downstream — the
       // legacy-expansion probe, the carry filter, input sizing, and the
       // fast-path pre-image. Commit metadata cost is then O(touched), not
       // O(live files).
-      val rawParts = rawCells.map(_.part).distinct
-      val scopedFiles = filesForPartitions(baseView, rawParts)
-      val scopedSizes = sizesForPartitions(baseView, rawParts)
+      val scopedFiles = filesForPartitions(baseView, rawCells.map(_.part).distinct)
       // Dense distributed batches defeat the point of fine-grained cells:
       // a commit touching most of a partition's buckets conflicts with any
       // concurrent writer in that partition regardless of scope, yet pays
@@ -3642,7 +3519,7 @@ final class AcidTable private (
         rawCells.map(c => if (denseParts(c.part)) FileCell(c.part, -1) else c).distinct,
         scopedFiles)
       var touched = touched0
-      val touchedFiles = scopedFiles.filter(f => touched.exists(c => fileInCell(f, c)))
+      val touchedFiles = scopedFiles.filter(f => touched.exists(c => dataFiles.inCell(f._1, c)))
       val coarseParts =
         if (clusterBy.nonEmpty) touched.map(_.part).toSet
         else if (rebucket) {
@@ -3661,15 +3538,15 @@ final class AcidTable private (
           // next compaction past the threshold re-buckets it.
           // one pass over touchedFiles (a 20 k-partition compact must not
           // pay O(partitions × files) membership filters)
-          val bytesByDir = touchedFiles.groupBy(_.takeWhile(_ != '/'))
-            .map { case (d, fs) => d -> inputBytes(fs, scopedSizes) }
+          val bytesByDir = touchedFiles.groupBy(f => dataFiles.dirOf(f._1))
+            .map { case (d, fs) => d -> inputBytes(fs) }
           touched.iterator.map(_.part).filter { p =>
-            bytesByDir.getOrElse(partDir(p), 0L) <
+            bytesByDir.getOrElse(dataFiles.partDir(p), 0L) <
               numBuckets.toLong * AcidTable.CompactMinBucketFileBytes
           }.toSet
         }
         else denseParts ++ legacyParts
-      val inB = if (outputBounded) inputBytes(touchedFiles, scopedSizes) else Long.MaxValue
+      val inB = if (outputBounded) inputBytes(touchedFiles) else Long.MaxValue
       // whether the driver fast path wrote every new file: its files sit in
       // the row cache, so the index pass reads them with zero Spark jobs
       var fastPathRan = fastEligible(inB)
@@ -3681,10 +3558,10 @@ final class AcidTable private (
       var newFiles =
         if (fastPathRan)
           fastWriteTouched(
-            localResultOf.get(readRowsLocal(touchedFiles).filter(dvRowFilter(baseDvs))),
+            localResultOf.get(dataFiles.readRows(touchedFiles).filter(dvRowFilter(baseDvs))),
             touched, coarseParts)
         else writeTouched(
-          resultOf(applyDvs(snapshotFromFiles(touchedFiles, scopedSizes), baseDvs)),
+          resultOf(applyDvs(snapshotFromFiles(touchedFiles), baseDvs)),
           touched, inB, coarseParts, sortCols)
       beforePublishHook()
       // inner publish loop: losing the version race does NOT force a full
@@ -3760,15 +3637,12 @@ final class AcidTable private (
           // sizing needs no filesystem stats at all
           val tParts = touched.map(_.part).distinct
           val tPds = tParts
-            .map(p => java.net.URLEncoder.encode(partDir(p), "UTF-8")).toSet
+            .map(p => java.net.URLEncoder.encode(dataFiles.partDir(p), "UTF-8")).toSet
           val reuse = pubView.refLines.filterNot(l => tPds.contains(RootView.encodedDir(l)))
           val carried = filesForPartitions(pubView, tParts)
-            .filterNot(f => touched.exists(c => fileInCell(f, c)))
-          val carriedSet = carried.toSet
-          val carriedSizes = sizesForPartitions(pubView, tParts)
-            .view.filterKeys(carriedSet.contains).toMap
-          publish(publishBase + 1, carried ++ newFiles.map(_._1), touched,
-            carriedSizes ++ newFiles, opName, carriedDvs, pending.stats, reuse,
+            .filterNot(f => touched.exists(c => dataFiles.inCell(f._1, c)))
+          publish(publishBase + 1, (carried ++ newFiles).map(_._1), touched,
+            (carried ++ newFiles).toMap, opName, carriedDvs, pending.stats, reuse,
             rli = pending.rli, conf = pending.conf)
           if (fullRedoSince > 0)
             AcidTable.conflictRedoNanos.addAndGet(System.nanoTime() - fullRedoSince)
@@ -3783,7 +3657,7 @@ final class AcidTable private (
               // CAS mode: losing the version race IS the signal — the
               // caller's fold was computed from the pinned base and must
               // not be re-merged onto someone else's commit
-              newFiles.foreach(f => Files.deleteIfExists(dataRoot.resolve(f._1)))
+              dataFiles.discard(newFiles.map(_._1))
               throw new CommitConflictException(
                 s"CAS commit lost the race at v${publishBase + 1} ($path)")
             }
@@ -3802,10 +3676,7 @@ final class AcidTable private (
             // attempt outlived the grace window): the staged output is
             // unpublishable — force the FULL-redo branch below rather
             // than link a manifest with a dangling data-file reference.
-            val staleStaged = newFiles.exists { f =>
-              val file = dataRoot.resolve(f._1).toFile
-              !file.setLastModified(System.currentTimeMillis()) && !file.exists()
-            }
+            val staleStaged = !dataFiles.touch(newFiles.map(_._1))
             // retry-latency telemetry (round-7 verdict #8): time from
             // losing the race to being ready for the next publish attempt,
             // attributed to the conflict class taken below — INCLUDING the
@@ -3849,23 +3720,23 @@ final class AcidTable private (
                 // remain valid and are carried into the next publish
                 // attempt
                 val newBaseView = timeline.rootView(newBase)
-                val newSnapAll = newBaseView.files
+                val newSnapAll = newBaseView.entries
                 // an intervening commit may have introduced bucketless
                 // files (older build) into an overlap partition — the
                 // redo of that partition must then take whole-partition
                 // scope, exactly like the outer loop's expansion
                 val (overlap, overlapLegacy) = expandForLegacy(overlap0, newSnapAll)
                 val (staleFiles, keptFiles) = newFiles.partition(f =>
-                  overlap.exists(c => fileInCell(f._1, c)))
-                staleFiles.foreach(f => Files.deleteIfExists(dataRoot.resolve(f._1)))
+                  overlap.exists(c => dataFiles.inCell(f._1, c)))
+                dataFiles.discard(staleFiles.map(_._1))
                 val newSnapFiles = newSnapAll
-                  .filter(f => overlap.exists(c => fileInCell(f, c)))
+                  .filter(f => overlap.exists(c => dataFiles.inCell(f._1, c)))
                 // resultOf may emit rows outside the recomputed subset
                 // (e.g. a merge's not-matched inserts for other cells) —
                 // restrict to the overlap cells; the non-overlap rows are
                 // already covered by keptFiles
                 val redoInB =
-                  if (outputBounded) inputBytes(newSnapFiles, newBaseView.sizes)
+                  if (outputBounded) inputBytes(newSnapFiles)
                   else Long.MaxValue
                 val redoCoarse =
                   (coarseParts ++ overlapLegacy).intersect(overlap.map(_.part).toSet)
@@ -3878,12 +3749,12 @@ final class AcidTable private (
                   if (redoFast)
                     fastWriteTouched(
                       localResultOf.get(
-                        readRowsLocal(newSnapFiles).filter(dvRowFilter(redoDvs)))
+                        dataFiles.readRows(newSnapFiles).filter(dvRowFilter(redoDvs)))
                         .filter(rowInCells(overlap)),
                       overlap, redoCoarse)
                   else writeTouched(
                     resultOf(applyDvs(
-                      snapshotFromFiles(newSnapFiles, newBaseView.sizes), redoDvs))
+                      snapshotFromFiles(newSnapFiles), redoDvs))
                       .filter(cellFilter(overlap)),
                     overlap, redoInB, redoCoarse, sortCols)
                 newFiles = keptFiles ++ redoneFiles
@@ -3905,7 +3776,7 @@ final class AcidTable private (
               // snapshot. The clock stays open across the outer-loop
               // recompute (see fullRedoSince) — charging only the backoff
               // here would understate exactly the most expensive class
-              newFiles.foreach(f => Files.deleteIfExists(dataRoot.resolve(f._1)))
+              dataFiles.discard(newFiles.map(_._1))
               fullRedoSince = tRetry
               done = true
             }
@@ -3914,14 +3785,6 @@ final class AcidTable private (
     }
     -1L // unreachable
   }
-
-  /** Partition directory name, escaped exactly the way Spark's partitioned
-    * writer escapes it — raw interpolation would miss the directory for any
-    * value with special characters and silently drop its data.
-    */
-  private[lake] def partDir(value: String): String =
-    s"$partitionCol=" +
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(value)
 
   // ------------------------------------------------- file-group (cell) scope --
   //
@@ -3934,55 +3797,13 @@ final class AcidTable private (
   // disjoint keys by construction) redid ~50% of its commits; cell scope is
   // what makes multi-writer throughput track key collisions, not partition
   // collisions. `bucket == -1` means the whole partition (global operations,
-  // and legacy files written before bucketing — see [[fileInCell]]).
-
-  /** Bucket assignment, Spark side: Murmur3 (the `hash()` function, seed 42)
-    * of the PK, non-negative mod. [[driverBucketOf]] must agree exactly.
-    */
-  private def bucketExpr: Column = pmod(hash(col(pkCol)), lit(numBuckets))
-
-  /** Bucket assignment, driver side, for a CATALYST-INTERNAL pk value (what
-    * [[org.apache.spark.sql.graft.PlanShim.smallLocalRelation]] yields).
-    * Evaluates the same `Murmur3Hash` expression `hash()` plans, so driver
-    * and executors can never disagree on a key's cell.
-    */
-  private lazy val driverHashExpr =
-    new org.apache.spark.sql.catalyst.expressions.Murmur3Hash(
-      Seq(org.apache.spark.sql.catalyst.expressions.BoundReference(
-        0, schema(pkCol).dataType, nullable = true)), 42)
-  private val driverHashRow =
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-  private def driverBucketOf(pkInternal: Any): Int = driverHashRow.synchronized {
-    driverHashRow.update(0, pkInternal)
-    val h = driverHashExpr.eval(driverHashRow).asInstanceOf[Int]
-    ((h % numBuckets) + numBuckets) % numBuckets
-  }
-
-  private def bucketPrefix(b: Int): String = f"b$b%03d-"
-  private val BucketedFileName = """b(\d{3})-.*""".r
-
-  /** The bucket a data file holds, read off its name; `None` for a
-    * bucketless file (bulk loads, coarse partitions, clustered
-    * compaction), which may hold rows of EVERY bucket.
-    */
-  private def fileBucketOf(relPath: String): Option[Int] =
-    relPath.substring(relPath.lastIndexOf('/') + 1) match {
-      case BucketedFileName(b) => Some(b.toInt)
-      case _ => None
-    }
-
-  /** Whether manifest-relative file `f` can hold rows of `cell`. Bucketless
-    * files belong to every cell of their partition.
-    */
-  private def fileInCell(f: String, cell: FileCell): Boolean =
-    f.startsWith(partDir(cell.part) + "/") &&
-      (cell.bucket < 0 || fileBucketOf(f).forall(_ == cell.bucket))
+  // and legacy files written before bucketing — see [[DataFiles.inCell]]).
 
   private def cellsOverlap(a: FileCell, b: FileCell): Boolean =
     a.part == b.part && (a.bucket < 0 || b.bucket < 0 || a.bucket == b.bucket)
 
   /** Rows belonging to any of `cells` — the redo-path restriction filter.
-    * Bucket cells compare [[bucketExpr]]; whole-partition cells need only
+    * Bucket cells compare [[DataFiles.bucketExpr]]; whole-partition cells need only
     * the partition value.
     */
   private def cellFilter(cells: Seq[FileCell]): Column = {
@@ -3992,7 +3813,7 @@ final class AcidTable private (
     val conds =
       (if (parts.isEmpty) Nil else Seq(col(partitionCol).isin(parts: _*))) ++
         byPart.map { case (p, cs) =>
-          col(partitionCol) === p && bucketExpr.isin(cs.map(_.bucket): _*)
+          col(partitionCol) === p && dataFiles.bucketExpr.isin(cs.map(_.bucket): _*)
         }
     conds.reduceOption(_ || _).getOrElse(lit(false))
   }
@@ -4013,38 +3834,39 @@ final class AcidTable private (
     * legacy-escalated, so it still folds partitions INTO bucketed layout.
     */
   private def expandForLegacy(
-      cells: Seq[FileCell], files: Seq[String]): (Seq[FileCell], Set[String]) = {
+      cells: Seq[FileCell], files: Seq[(String, Long)]): (Seq[FileCell], Set[String]) = {
     val grouped = cells.groupBy(_.part).map { case (p, pc) =>
-      val fromFiles =
-        files.exists(f => f.startsWith(partDir(p) + "/") && fileBucketOf(f).isEmpty)
+      val fromFiles = files.exists { case (f, _) =>
+        f.startsWith(dataFiles.partDir(p) + "/") && dataFiles.bucketOf(f).isEmpty
+      }
       val legacy = fromFiles || pc.exists(_.bucket < 0)
       (p, if (legacy) Seq(FileCell(p, -1)) else pc.distinct, fromFiles)
     }
     (grouped.flatMap(_._2).toSeq, grouped.collect { case (p, _, true) => p }.toSet)
   }
 
-  /** Write the touched partitions' rows as new parquet files and move them
-    * into the stable per-partition directories (invisible until the
-    * manifest references them). Returns manifest-relative paths.
-    *
-    * The caller guarantees `result` holds rows of touched partitions only
-    * (the commit-loop contract); the leftover-directory check below turns a
-    * violation into a loud failure instead of silent row loss.
-    */
-  /** Sum of sizes of manifest-relative files — the scan volume a commit's
+  /** Sum of the recorded sizes of `files` — the scan volume a commit's
     * rewrite will read. Sizes come from the manifest's segments (recorded
     * at publish), so commit sizing costs ZERO filesystem calls, which is
     * what makes it free on an object store.
     */
-  private def inputBytes(files: Seq[String], known: Map[String, Long]): Long = {
+  private def inputBytes(files: Seq[(String, Long)]): Long = {
     var sum = 0L
-    files.foreach { f =>
-      sum += known(f)
+    files.foreach { case (_, len) =>
+      sum += len
       if (sum < 0) return Long.MaxValue // overflow guard
     }
     sum
   }
 
+  /** Write the touched cells' rows (`result`) as new data files through
+    * one distributed job ([[DataFiles.writeStaged]]): invisible until the
+    * manifest references them. Returns their entries.
+    *
+    * The caller guarantees `result` holds rows of touched cells only (the
+    * commit-loop contract); the staging write turns a violation into a
+    * loud failure instead of silent row loss.
+    */
   private def writeTouched(
       result: DataFrame,
       touched: Seq[FileCell],
@@ -4052,36 +3874,6 @@ final class AcidTable private (
       coarseParts: Set[String] = Set.empty,
       sortCols: Seq[Column] = Nil): Seq[(String, Long)] = {
     if (touched.isEmpty) return Nil
-    val commitId = UUID.randomUUID().toString
-    val tmp = Paths.get(path, s"_tmp-$commitId")
-    // size-targeted output: ONE file per partition value per task (tiny
-    // files are the enemy of a 100 TB table) UNLESS the partition exceeds
-    // targetFileBytes — then maxRecordsPerFile rolls to a new file, so a
-    // compacted hot partition can never fuse into one giant file. The
-    // record cap derives from the schema's estimated (uncompressed) row
-    // width; parquet compression only makes files smaller than target.
-    // Task count = touched partitions, not the session shuffle default —
-    // a commit's write parallelism should track what it rewrites (hash
-    // collisions co-locating two values in one task are fine: partitionBy
-    // still splits the output files per value)
-    val recordsPerFile = math.max(1L, targetFileBytes / math.max(1, schema.defaultSize))
-    // Write parallelism tracks rewritten BYTES, not partition count: below
-    // one target file's worth of input the whole rewrite is a single write
-    // task reached by a narrow coalesce — no shuffle stage at all (the
-    // dynamic-partition writer still splits output files per partition
-    // value). Above it, hash-repartition by partition value so tasks scale
-    // with what the commit rewrites. Small transactional commits take the
-    // first path; compaction and bulk loads the second.
-    // every output row is routed to its cell: the dynamic-partition writer
-    // splits files per (partition value, bucket), and the move below bakes
-    // the bucket into the FILE NAME (not a directory level, so the reader's
-    // basePath partition recovery sees only the partition column)
-    val BucketDir = "__graft_bucket"
-    // `coarseParts` partitions write partition-scope (bucketless) files —
-    // their rows all route to the sentinel -1 directory and come out as
-    // size-rolled files with no bucket prefix. Everything else keeps the
-    // per-bucket file-group layout. (Comparison is on the STRING partition
-    // value, the same rendering FileCell.part carries.)
     // CHECK enforcement, distributed path: the constraint predicates ride
     // the write projection itself — wrapped around the PK column, whose
     // value they leave untouched when satisfied — so a violating row
@@ -4099,80 +3891,38 @@ final class AcidTable private (
         }
         result.withColumn(pkCol, guard)
       }
+    // every output row is routed to its cell. `coarseParts` partitions
+    // write partition-scope (bucketless) files — their rows all route to
+    // the sentinel -1 — and everything else keeps the per-bucket
+    // file-group layout. (Comparison is on the STRING partition value, the
+    // same rendering FileCell.part carries.)
     val bucketCol =
-      if (coarseParts.isEmpty) bucketExpr
+      if (coarseParts.isEmpty) dataFiles.bucketExpr
       else when(col(partitionCol).cast("string").isin(coarseParts.toSeq: _*), lit(-1))
-        .otherwise(bucketExpr)
-    val withBucket = checked.withColumn(BucketDir, bucketCol)
+        .otherwise(dataFiles.bucketExpr)
+    val withBucket = checked.withColumn(DataFiles.BucketCol, bucketCol)
+    // Write parallelism tracks rewritten BYTES, not partition count: below
+    // one target file's worth of input the whole rewrite is a single write
+    // task reached by a narrow coalesce — no shuffle stage at all (the
+    // dynamic-partition writer still splits output files per cell). Above
+    // it, hash-repartition by cell so tasks scale with what the commit
+    // rewrites. Small transactional commits take the first path;
+    // compaction and bulk loads the second.
     val shaped =
       if (inBytes < targetFileBytes) withBucket.coalesce(1)
       else withBucket.repartition(math.max(touched.size, 1),
-        col(partitionCol), col(BucketDir))
+        col(partitionCol), col(DataFiles.BucketCol))
     // clustered rewrite: order each write task's rows by (partition,
-    // bucket-dir, cluster key). The prefix matches the dynamic-partition
+    // bucket, cluster key). The prefix matches the dynamic-partition
     // writer's required ordering, so FileFormatWriter inserts no extra
-    // sort and maxRecordsPerFile rolling yields files covering
-    // CONSECUTIVE cluster-key ranges — the property the per-file min/max
-    // stats turn into pruning.
+    // sort and the record-cap rolling yields files covering CONSECUTIVE
+    // cluster-key ranges — the property the per-file min/max stats turn
+    // into pruning.
     val ordered =
       if (sortCols.isEmpty) shaped
       else shaped.sortWithinPartitions(
-        (col(partitionCol) +: col(BucketDir) +: sortCols): _*)
-    val t0 = System.nanoTime()
-    ordered
-      .write.option("maxRecordsPerFile", recordsPerFile)
-      // The tmp dir is private to this commit and the MANIFEST is the
-      // atomic publish point, so the two-phase job commit (v1: task dir →
-      // job staging → destination renames, plus a _SUCCESS marker) buys
-      // nothing here. Algorithm 2 renames once at task commit; on an
-      // object store that removes the O(files) job-commit copy storm.
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .partitionBy(partitionCol, BucketDir).mode("overwrite").parquet(tmp.toString)
-    AcidTable.writeCallNanos.addAndGet(System.nanoTime() - t0)
-    val t1 = System.nanoTime()
-    val moved = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val matchedDirs = scala.collection.mutable.Set.empty[String]
-    val BucketDirName = s"$BucketDir=(-?\\d+)".r
-    touched.foreach { cell =>
-      val pdir = tmp.resolve(partDir(cell.part)).toFile
-      val bucketDirs: Seq[(Int, File)] = Option(pdir.listFiles()).getOrElse(Array.empty)
-        .toSeq.flatMap(d => d.getName match {
-          case BucketDirName(b) if cell.bucket < 0 || cell.bucket == b.toInt =>
-            Seq(b.toInt -> d)
-          case _ => Nil
-        })
-      val destDir = dataRoot.resolve(partDir(cell.part))
-      Files.createDirectories(destDir)
-      bucketDirs.sortBy(_._1).foreach { case (b, srcDir) =>
-        matchedDirs += s"${pdir.getName}/${srcDir.getName}"
-        val parts = Option(srcDir.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.endsWith(".parquet"))
-          .sortBy(_.getName)
-        parts.zipWithIndex.foreach { case (f, i) =>
-          val prefix = if (b < 0) "" else bucketPrefix(b)
-          val rel = s"${partDir(cell.part)}/${prefix}c-$commitId-$i.parquet"
-          val bytes = f.length()
-          Files.move(f.toPath, dataRoot.resolve(rel))
-          moved += (rel -> bytes)
-        }
-      }
-    }
-    // loud-failure guard: any (partition, bucket) directory no touched
-    // cell claimed means the caller's result strayed outside `touched`
-    // and rows would vanish (the checksum filesystem leaves .crc sidecars
-    // behind, so claimed-dir tracking — not dir emptiness — is the test)
-    val stray = Option(tmp.toFile.listFiles()).getOrElse(Array.empty).toSeq.flatMap { pd =>
-      if (!pd.isDirectory) Nil
-      else Option(pd.listFiles()).getOrElse(Array.empty).toSeq.filter(_.isDirectory)
-        .map(bd => s"${pd.getName}/${bd.getName}")
-        .filterNot(matchedDirs.contains)
-    }
-    require(stray.isEmpty,
-      s"commit produced rows outside its touched cells: ${stray.mkString(", ")}")
-    deleteRecursively(tmp.toFile)
-    AcidTable.moveNanos.addAndGet(System.nanoTime() - t1)
-    moved.toSeq
+        (col(partitionCol) +: col(DataFiles.BucketCol) +: sortCols): _*)
+    dataFiles.writeStaged(ordered, touched)
   }
 
   // ------------------------------------------ driver-side commit fast path --
@@ -4182,8 +3932,8 @@ final class AcidTable private (
   // tools/ProfilePlanning: ~25 ms Catalyst + ~100 ms job scheduling +
   // ~100+ ms FileFormatWriter/committer machinery for a 3-row batch). When
   // a commit is METADATA-SCALE — driver-local batch, touched input under
-  // FastPathMaxBytes, schema inside LocalParquetIO's no-conf-variant type
-  // set — the same read-merge-write runs entirely on the driver: touched
+  // FastPathMaxBytes, schema inside the driver parquet IO's
+  // no-conf-variant type set — the same read-merge-write runs entirely on the driver: touched
   // files are read through Spark's own parquet converters, the op's row
   // kernel (the driver image of its DataFrame formulation) produces the
   // replacement rows, and one file per cell is written back. No job, no
@@ -4198,20 +3948,6 @@ final class AcidTable private (
   // pinned by CommitFastPathSpec (randomized op streams, snapshot compare
   // after every op) and end-to-end by the harness's expectation oracle.
 
-  /** What data files physically store: the table schema minus the
-    * partition column (which lives in the directory name). ALL-NULLABLE on
-    * purpose: the distributed writer's plans (unions, windows) erase
-    * non-null guarantees, so its files carry `optional` fields — and a
-    * `required` parquet field fed a null (e.g. a null-PK row in a table
-    * declared non-null) writes a silently CORRUPT page. Spark reads
-    * parquet as nullable regardless, so the two writers stay
-    * indistinguishable.
-    */
-  private lazy val dataFileSchema =
-    StructType(schema.fields.filterNot(_.name == partitionCol)
-      .map(_.copy(nullable = true)))
-  private lazy val dataFieldIdx: Array[Int] =
-    dataFileSchema.fieldNames.map(schema.fieldIndex)
   private[lake] lazy val partFieldIdx: Int = schema.fieldIndex(partitionCol)
   private[lake] lazy val pkFieldIdx: Int = schema.fieldIndex(pkCol)
 
@@ -4222,7 +3958,7 @@ final class AcidTable private (
     * [[cellsBy]] already bakes into FileCell).
     */
   private[lake] lazy val fastSchemaOk =
-    org.apache.spark.sql.graft.LocalParquetIO.supportedSchema(schema) &&
+    dataFiles.driverIoSupported &&
       schema(partitionCol).dataType == StringType &&
       // outstanding renames: old files carry prior column names the
       // driver's name-based parquet reader would silently surface as NULL
@@ -4239,7 +3975,7 @@ final class AcidTable private (
     String.valueOf(r.get(partFieldIdx, schema(partFieldIdx).dataType))
 
   private def rowBucket(r: org.apache.spark.sql.catalyst.InternalRow): Int =
-    driverBucketOf(r.get(pkFieldIdx, schema(pkFieldIdx).dataType))
+    dataFiles.driverBucketOf(r.get(pkFieldIdx, schema(pkFieldIdx).dataType))
 
   /** Driver image of [[cellFilter]]: rows belonging to any of `cells`. */
   private def rowInCells(cells: Seq[FileCell])
@@ -4253,59 +3989,11 @@ final class AcidTable private (
     }
   }
 
-  /** Driver-side scan of manifest-relative files: per-file parquet read
-    * with the data-file schema (absent evolved columns surface as NULL,
-    * like the distributed scan) plus partition-value injection from the
-    * directory name — the row-level image of [[snapshotFromFiles]].
-    */
-  private[lake] def readFileRowsLocal(f: String)
-      : Seq[org.apache.spark.sql.catalyst.InternalRow] = {
-    val pv = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .unescapePathName(f.takeWhile(_ != '/').stripPrefix(s"$partitionCol="))
-    val pvInternal = org.apache.spark.unsafe.types.UTF8String.fromString(pv)
-    val abs = dataRoot.resolve(f).toString
-    val src = AcidTable.cachedFileRows(abs, dataFileSchema).getOrElse {
-      val file = new File(abs)
-      val rs = org.apache.spark.sql.graft.LocalParquetIO
-        .read(file, dataFileSchema, spark)
-      AcidTable.cacheFileRows(abs, dataFileSchema, rs, file.length())
-      rs
-    }
-    src.map { dr =>
-      val full = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        schema.length)
-      var i = 0
-      while (i < dataFieldIdx.length) {
-        full.update(dataFieldIdx(i), dr.get(i, dataFileSchema(i).dataType))
-        i += 1
-      }
-      full.update(partFieldIdx, pvInternal)
-      full: org.apache.spark.sql.catalyst.InternalRow
-    }
-  }
-
-  /** Driver-local rows of `files`, in file order. More than four files
-    * read CONCURRENTLY (8-way; independent parquet opens — the same
-    * pool shape as bulk publish), joined in submission order so output
-    * order stays deterministic. The matview fold's widened byte budget
-    * (round 15) made multi-megabyte multi-file reads reachable here;
-    * DML fast-path commits stay 1-2 tiny files and read inline. */
-  private def readRowsLocal(files: Seq[String])
-      : Seq[org.apache.spark.sql.catalyst.InternalRow] =
-    perFileLocal(files)(identity).flatten
-
-  /** `f` over each file's rows, in file order, read as [[readRowsLocal]]
-    * reads them: inline up to 4 files, concurrently above. */
-  private[lake] def perFileLocal[B](files: Seq[String])(
-      f: Seq[org.apache.spark.sql.catalyst.InternalRow] => B): Seq[B] =
-    if (files.size <= 4) files.map(x => f(readFileRowsLocal(x)))
-    else Par.map(files)(x => f(readFileRowsLocal(x)))
-
   /** Driver image of [[writeTouched]]: route rows to (partition, bucket)
     * cells exactly as the dynamic-partition writer would (coarse
-    * partitions bucketless, same loud stray-cell guard), one file per
-    * non-empty cell, written straight to its final invisible-until-
-    * published name — no tmp dir, no move pass.
+    * partitions bucketless, same loud stray-cell guard) and write each
+    * non-empty cell's files straight to their final invisible-until-
+    * published names ([[DataFiles.writeRows]]).
     */
   private def fastWriteTouched(
       rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
@@ -4325,56 +4013,16 @@ final class AcidTable private (
             String.valueOf(r.get(pkFieldIdx, schema(pkFieldIdx).dataType)))
       }
     }
-    val t0 = System.nanoTime()
-    val commitId = UUID.randomUUID().toString
-    val groups = scala.collection.mutable.LinkedHashMap
-      .empty[(String, Int), scala.collection.mutable.ArrayBuffer[
-        org.apache.spark.sql.catalyst.InternalRow]]
-    rows.foreach { r =>
+    val groups = rows.groupBy { r =>
       val p = rowPart(r)
-      val b = if (coarseParts.contains(p)) -1 else rowBucket(r)
-      groups.getOrElseUpdate((p, b),
-        scala.collection.mutable.ArrayBuffer.empty) += r
+      (p, if (coarseParts.contains(p)) -1 else rowBucket(r))
     }
     val stray = groups.keys.filterNot { case (p, b) =>
       touched.exists(c => c.part == p && (c.bucket < 0 || c.bucket == b))
     }
     require(stray.isEmpty,
       s"commit produced rows outside its touched cells: ${stray.mkString(", ")}")
-    val moved = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    // same size-rolling contract as the distributed writer: roll a file
-    // group at the estimated-record cap derived from targetFileBytes.
-    // Production fast-path commits (≤4 MiB input vs a 128 MiB target)
-    // never roll; this keeps a lowered target honest for COARSE
-    // (bin-packed) partitions, which round 18 made fast-path-common.
-    val recordsPerFile =
-      math.max(1L, targetFileBytes / math.max(1, schema.defaultSize)).toInt
-    groups.toSeq.sortBy(_._1).foreach { case ((p, b), rs) =>
-      Files.createDirectories(dataRoot.resolve(partDir(p)))
-      val prefix = if (b < 0) "" else bucketPrefix(b)
-      rs.grouped(recordsPerFile).zipWithIndex.foreach { case (chunk, k) =>
-        val rel = s"${partDir(p)}/${prefix}c-$commitId-$k.parquet"
-        val dataRows = chunk.map { r =>
-          val dr = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            dataFileSchema.length)
-          var i = 0
-          while (i < dataFieldIdx.length) {
-            dr.update(i, r.get(dataFieldIdx(i), dataFileSchema(i).dataType))
-            i += 1
-          }
-          dr
-        }
-        val bytes = org.apache.spark.sql.graft.LocalParquetIO
-          .write(dataRoot.resolve(rel).toFile, dataFileSchema, dataRows, spark)
-        // the rows just written ARE the file's contents — cache them so the
-        // next commit touching this file group skips the parquet read
-        AcidTable.cacheFileRows(dataRoot.resolve(rel).toString, dataFileSchema,
-          dataRows.toSeq, bytes)
-        moved += (rel -> bytes)
-      }
-    }
-    AcidTable.writeCallNanos.addAndGet(System.nanoTime() - t0)
-    moved.toSeq
+    dataFiles.writeRows(groups.toSeq.sortBy(_._1))
   }
 
   /** Rows of a driver-local batch in exact table-schema order and types,
@@ -4470,19 +4118,12 @@ final class AcidTable private (
 
   /** The live files of `parts` (partition VALUES) at version `v`. */
   private[graft] def filesForPartitions(v: Long, parts: Seq[String]): Seq[String] =
-    filesForPartitions(timeline.rootView(v), parts)
+    filesForPartitions(timeline.rootView(v), parts).map(_._1)
 
-  private def filesForPartitions(view: RootView, parts: Seq[String]): Seq[String] =
-    view.entriesFor(parts.map(partDir).toSet).map(_._1)
-
-  /** Recorded byte sizes of `parts`' live files. */
-  private def sizesForPartitions(view: RootView, parts: Seq[String]): Map[String, Long] =
-    view.entriesFor(parts.map(partDir).toSet).toMap
-
-  /** Recorded byte sizes for exactly `files`, resolving only the
-    * segments of the partitions those files live in. */
-  private def sizesForFiles(view: RootView, files: Seq[String]): Map[String, Long] =
-    view.entriesFor(files.map(_.takeWhile(_ != '/')).toSet).toMap
+  /** The live (file, recorded size) entries of `parts` in `view`: only
+    * their segments resolve. */
+  private def filesForPartitions(view: RootView, parts: Seq[String]): Seq[(String, Long)] =
+    view.entriesFor(parts.map(dataFiles.partDir).toSet)
 
   /** Cells the commit that produced version `v` rewrote. `None` when the
     * manifest was archived by a concurrent vacuum between our conflict
@@ -4556,7 +4197,7 @@ final class AcidTable private (
     val fileStats: Indexes.Stats =
       if (statsCols.isEmpty || files.isEmpty) Map.empty // no fresh segments → no envelopes to build
       else indexes.readStats() ++ newStats
-    val segs = files.groupBy(f => f.takeWhile(_ != '/')).toSeq.sortBy(_._1)
+    val segs = files.groupBy(dataFiles.dirOf).toSeq.sortBy(_._1)
       .map { case (pd, fs) =>
         val entries = fs.sorted.map(f => f -> sizes(f))
         val (name, segBody) = Timeline.segmentBody(pd, entries)
@@ -4625,7 +4266,7 @@ final class AcidTable private (
           val dirty: Set[Int] =
             (segs.map(s => RootView.encodedDir(s._1)) ++
               touched.map(c => java.net.URLEncoder.encode(
-                partDir(c.part), "UTF-8"))).map(bucketOf).toSet
+                dataFiles.partDir(c.part), "UTF-8"))).map(bucketOf).toSet
           val dirtyLines = scala.collection.mutable.Map.empty[Int, Vector[String]]
             .withDefaultValue(Vector.empty)
           (segs.map(_._1) ++ reuseRootLines).foreach { l =>
@@ -4830,53 +4471,6 @@ object AcidTable {
   @volatile var localCommitEnabled: Boolean =
     !sys.props.get("graft.acid.localCommit").contains("false")
 
-  /** Row cache for the driver fast path, keyed by (absolute file path,
-    * data-file schema). SOUND because data files are immutable and
-    * uniquely named (UUID per commit): an entry can go stale only by the
-    * file being vacuumed, after which no manifest references it. The
-    * schema in the key isolates pre-/post-evolution reads of the same
-    * file. Writers populate it with the rows they just wrote (zero extra
-    * IO), so a steady-state transactional commit re-reading its own file
-    * group skips parquet reader init entirely. LRU-bounded by total rows.
-    */
-  // LRU bound is CHARGED BYTES, not rows: wide rows (KB-scale strings are
-  // inside the supported type set) would blow a row-count bound's implied
-  // memory budget by orders of magnitude. Each entry is charged its
-  // source-file bytes × an in-memory inflation factor (decoded
-  // InternalRows vs encoded+compressed parquet, conservatively 8×), so
-  // the 256 MiB charge cap bounds the heap at roughly that figure.
-  private val FileRowCacheMaxChargedBytes = 256L * 1024 * 1024
-  private val FileRowCacheInflation = 8L
-  private object fileRowCache {
-    private final case class Entry(
-      rows: Seq[org.apache.spark.sql.catalyst.InternalRow], charged: Long)
-    private val map =
-      new java.util.LinkedHashMap[(String, StructType), Entry](64, 0.75f, true)
-    private var totalCharged = 0L
-    def get(key: (String, StructType))
-        : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
-      synchronized(Option(map.get(key)).map(_.rows))
-    def put(key: (String, StructType),
-        rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
-        fileBytes: Long): Unit = synchronized {
-      val charged = math.max(1L, fileBytes) * FileRowCacheInflation
-      if (charged > FileRowCacheMaxChargedBytes) return // never cache a monster
-      val prev = map.put(key, Entry(rows, charged))
-      totalCharged += charged - (if (prev == null) 0L else prev.charged)
-      val it = map.entrySet().iterator()
-      while (totalCharged > FileRowCacheMaxChargedBytes && it.hasNext) {
-        val e = it.next()
-        if (e.getKey != key) { totalCharged -= e.getValue.charged; it.remove() }
-      }
-    }
-  }
-  private[lake] def cachedFileRows(path: String, schema: StructType)
-      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
-    fileRowCache.get((path, schema))
-  private[lake] def cacheFileRows(path: String, schema: StructType,
-      rows: Seq[org.apache.spark.sql.catalyst.InternalRow], fileBytes: Long): Unit =
-    fileRowCache.put((path, schema), rows, fileBytes)
-
   /** Rewrite-volume gate for the driver commit path: compressed input
     * bytes above this always take the distributed plan. Compressed parquet
     * inflates ~5-10× in memory, so 4 MiB bounds the driver working set to
@@ -4935,7 +4529,6 @@ object AcidTable {
     */
   val MorMaxKeys: Int = 4096
 
-  private val DataDir = "data"
   private val MetaFile = "_meta.properties"
 
   /** [[AcidTable.detail]]'s one-row schema — shared with the catalog
@@ -4987,8 +4580,7 @@ object AcidTable {
       "partition column must be STRING (Hive-style directory value)")
     require(numBuckets > 0 && numBuckets <= 1000,
       "numBuckets must be in [1, 1000] (bucket file-name prefix is 3 digits)")
-    val root = new File(path)
-    if (overwrite && root.exists()) deleteRecursively(root)
+    if (overwrite) DataFiles.deleteTree(Paths.get(path))
     // a fresh table at a reused path must not inherit a previous table's
     // root views — purge unconditionally (the old directory may have been
     // deleted externally, in which case root.exists() was already false
@@ -4998,7 +4590,7 @@ object AcidTable {
     // file could in principle collide on both.
     Lru.forget(path)
     new Timeline(path).init()
-    Files.createDirectories(Paths.get(path, DataDir))
+    DataFiles.init(path)
     writeMeta(path, schema, pkCol, partitionCol, precombineCol, stablePartitions, numBuckets)
     new AcidTable(spark, path, schema, pkCol, partitionCol, precombineCol, stablePartitions,
       numBuckets)
@@ -5168,10 +4760,4 @@ object AcidTable {
     * rather than handle-scoped. */
   private[lake] def readConstraints(path: String): Seq[(String, String)] =
     parseConstraints(loadMeta(path))
-
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-    ()
-  }
 }

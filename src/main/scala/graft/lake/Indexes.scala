@@ -114,7 +114,7 @@ private[lake] final class Indexes(t: AcidTable) {
       else if (!c.rli) RliAuto
       else if (newFiles.isEmpty) RliInherit
       else if (!driver || (!fastPathRan && accs.map(_._2.rows).sum > AcidTable.RliLocalWriteMaxRows))
-        writeRliDeltaDistributed(keyFrame(t.snapshotFromFiles(newFiles.map(_._1), newFiles.toMap)))
+        writeRliDeltaDistributed(keyFrame(t.snapshotFromFiles(newFiles)))
           .map(RliAppend(_)).getOrElse(RliAuto)
       else if (accs.exists(_._2.keyNull)) RliAuto
       else RliAppend(writeRliDelta(accs.flatMap(_._2.keys)).toSeq)
@@ -139,7 +139,7 @@ private[lake] final class Indexes(t: AcidTable) {
     if (files.isEmpty) Nil
     else if (driver) {
       val ords = layout.ordinals(schema.fieldIndex, t.pkFieldIdx, t.partFieldIdx)
-      files.map(_._1).zip(t.perFileLocal(files.map(_._1)) { rows =>
+      files.map(_._1).zip(t.dataFiles.perFile(files) { rows =>
         val acc = new FileAcc(layout, ords, schema)
         rows.foreach(acc.add)
         acc
@@ -155,7 +155,7 @@ private[lake] final class Indexes(t: AcidTable) {
       val rels = files.map(_._1).toSet
       def relOf(uri: String): String =
         new java.net.URI(uri).getPath.split('/').takeRight(2).mkString("/")
-      val partials = t.snapshotFromFiles(files.map(_._1), files.toMap)
+      val partials = t.snapshotFromFiles(files)
         .select(input_file_name() +: cols.map(col): _*)
         .queryExecution.toRdd
         .mapPartitions { it =>
@@ -301,9 +301,11 @@ private[lake] final class Indexes(t: AcidTable) {
     * skipped; files without stats are kept. */
   def rangePrunedFiles(bounds: Map[String, (Long, Long)], version: Long = -1L): Seq[String] =
     rangePrunedIn(t.timeline.rootView(if (version >= 0) version else t.latestVersion()), bounds)
+      .map(_._1)
 
-  def rangePrunedIn(view: RootView, bounds: Map[String, (Long, Long)]): Seq[String] = {
-    if (bounds.isEmpty) return view.files
+  /** [[rangePrunedFiles]] on one view, as (file, recorded size) entries. */
+  def rangePrunedIn(view: RootView, bounds: Map[String, (Long, Long)]): Seq[(String, Long)] = {
+    if (bounds.isEmpty) return view.entries
     // partition envelopes first: a partition whose [min, max] misses a
     // bound drops WHOLE — its segment never resolves, and when the root
     // refutes every partition the sidecar is never loaded
@@ -312,9 +314,9 @@ private[lake] final class Indexes(t: AcidTable) {
       r.pstats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
     })
     if (keep.isEmpty) return Nil
-    val candidates = keep.flatMap(r => t.timeline.readSegment(r.name).entries.map(_._1))
+    val candidates = keep.flatMap(r => t.timeline.readSegment(r.name).entries)
     val stats = readStats()
-    candidates.filter { f =>
+    candidates.filter { case (f, _) =>
       stats.get(f).forall(cols => bounds.forall { case (c, (lo, hi)) =>
         cols.get(c).forall { case (fmin, fmax) => fmax >= lo && fmin <= hi }
       })
@@ -324,10 +326,11 @@ private[lake] final class Indexes(t: AcidTable) {
   /** Drop candidates whose `column#n` (nulls, rows) proves they cannot
     * match IS NULL (`wantNull`: zero-null files skip) or IS NOT NULL
     * (all-null files skip) — the Delta nullCount analog. */
-  def nullPrunedFiles(candidates: Seq[String], column: String, wantNull: Boolean): Seq[String] = {
+  def nullPrunedFiles(
+      candidates: Seq[(String, Long)], column: String, wantNull: Boolean): Seq[(String, Long)] = {
     if (candidates.isEmpty) return candidates
     val stats = readStats()
-    candidates.filter { f =>
+    candidates.filter { case (f, _) =>
       stats.get(f).flatMap(_.get(s"$column#n")) match {
         case Some((nulls, rows)) => if (wantNull) nulls > 0 else nulls < rows
         case None => true
@@ -346,19 +349,20 @@ private[lake] final class Indexes(t: AcidTable) {
       partitions: Option[Seq[String]] = None,
       nullChecks: Seq[(String, Boolean)] = Nil): Seq[String] =
     prunedFilesIn(t.timeline.rootView(if (version >= 0) version else t.latestVersion()),
-      bounds, equals, partitions, nullChecks)
+      bounds, equals, partitions, nullChecks).map(_._1)
 
+  /** [[prunedFiles]] on one view, as (file, recorded size) entries. */
   def prunedFilesIn(
       view: RootView,
       bounds: Map[String, (Long, Long)],
       equals: Seq[(String, Seq[Any])],
       partitions: Option[Seq[String]],
-      nullChecks: Seq[(String, Boolean)]): Seq[String] = {
+      nullChecks: Seq[(String, Boolean)]): Seq[(String, Long)] = {
     val base = rangePrunedIn(view, bounds)
     val byPart = partitions match {
       case Some(ps) =>
-        val dirs = ps.map(p => t.partDir(p) + "/")
-        base.filter(f => dirs.exists(f.startsWith))
+        val dirs = ps.map(p => t.dataFiles.partDir(p) + "/")
+        base.filter(f => dirs.exists(f._1.startsWith))
       case None => base
     }
     val byNull = nullChecks.foldLeft(byPart) { case (fs, (c, want)) => nullPrunedFiles(fs, c, want) }
@@ -517,7 +521,8 @@ private[lake] final class Indexes(t: AcidTable) {
     * files without a filter. NULL probes drop out first: SQL equality
     * never matches NULL. */
   def bloomPrunedFilesFor(
-      candidates: Seq[String], column: String, values: Seq[Any], bloomCols: Seq[String]): Seq[String] = {
+      candidates: Seq[(String, Long)], column: String, values: Seq[Any],
+      bloomCols: Seq[String]): Seq[(String, Long)] = {
     if (candidates.isEmpty || !bloomCols.contains(column)) return candidates
     val dt = schema(column).dataType
     val nonNull = values.filter(_ != null)
@@ -528,7 +533,7 @@ private[lake] final class Indexes(t: AcidTable) {
       case _ => nonNull.flatMap(v => statsEncode(dt, v)).map(Right(_))
     }
     if (probes.size != nonNull.size) return candidates // some value unencodable
-    candidates.filter { f =>
+    candidates.filter { case (f, _) =>
       readBlooms(f).get(column) match {
         case None => true
         case Some(bf) => probes.exists {
@@ -542,7 +547,7 @@ private[lake] final class Indexes(t: AcidTable) {
   /** A pruner of candidate files for string-rendered PK lookup `keys` —
     * the bloom tail of a lookup's pruning chain. Reads the property once,
     * however many segment refs the lookup then prunes. */
-  def keyPruner(keys: Seq[String]): Seq[String] => Seq[String] =
+  def keyPruner(keys: Seq[String]): Seq[(String, Long)] => Seq[(String, Long)] =
     if (!t.keyCastSupported || !bloomColumnsRead.contains(t.pkCol)) identity
     else {
       val typed: Seq[Any] = if (schema(t.pkCol).dataType == StringType) keys else t.typedKeys(keys)
@@ -560,7 +565,7 @@ private[lake] final class Indexes(t: AcidTable) {
         f.delete(); ()
       } else if (n.endsWith(".bloomseg") && f.lastModified() < cutoff) {
         val anyLive = scala.util.Try(readBloomSegDirectory(f.toPath)
-          .exists { case (rel, _, _) => Files.exists(t.dataRoot.resolve(rel)) })
+          .exists { case (rel, _, _) => t.dataFiles.exists(rel) })
           .getOrElse(true)
         if (!anyLive) { f.delete(); () }
       }
@@ -571,20 +576,9 @@ private[lake] final class Indexes(t: AcidTable) {
     * rel), the sidecar copied. Entries for files outside the cloned
     * snapshot ride along as dead weight the clone's vacuum sweeps. */
   def copyTo(destPath: String): Unit = {
-    if (Files.exists(bloomRoot)) {
-      val dest = Paths.get(destPath, BloomDir)
-      Files.createDirectories(dest)
-      Option(bloomRoot.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && !f.getName.startsWith(".tmp-")).foreach { f =>
-          val dst = dest.resolve(f.getName)
-          try Files.createLink(dst, f.toPath)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException => ()
-            case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-              Files.copy(f.toPath, dst); ()
-          }
-        }
-    }
+    Option(bloomRoot.toFile.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isFile && !f.getName.startsWith(".tmp-"))
+      .foreach(f => DataFiles.linkOrCopy(f.toPath, Paths.get(destPath, BloomDir, f.getName)))
     if (Files.exists(statsPath)) { Files.copy(statsPath, Paths.get(destPath, StatsFile)); () }
   }
 
@@ -871,7 +865,7 @@ private[lake] final class Indexes(t: AcidTable) {
       val refs =
         if (base < 0) Nil
         else writeRliDeltaDistributed(keyFrame(
-          t.applyDvs(t.snapshotFromFiles(baseView.files, baseView.sizes), baseView.dvs)))
+          t.applyDvs(t.snapshotFromFiles(baseView.entries), baseView.dvs)))
           .getOrElse(throw new IllegalStateException(
             "record index unsupported: table holds NULL pk or partition values"))
       // an empty base (-1) publishes version 0 with no refs

@@ -94,7 +94,7 @@ object MetaScale {
     // placeholder — exactly the metadata a real bulk load stamps, so
     // unhinted point probes prune placeholders through blooms instead of
     // scanning them. Published through the REAL commit protocol.
-    val dataRoot = java.nio.file.Paths.get(dir, "data")
+    val dataRoot = t.dataFiles.root
     val fileSchema = spark.read
       .parquet(dataRoot.resolve(realFiles.head).toString).schema
     val sentinel = "\u0000-metascale-sentinel"

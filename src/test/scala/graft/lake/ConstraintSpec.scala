@@ -65,6 +65,10 @@ class ConstraintSpec extends AnyFunSuite {
         Option(e2.getCause).exists(c => Option(c.getMessage).exists(_.contains("v_pos"))) ||
         e2.toString.contains("v_pos"),
       s"distributed violation lost the constraint name: $e2")
+    // the failed write leaves no staging directory behind
+    val staged = Option(new java.io.File(t.path).list()).getOrElse(Array.empty[String])
+      .filter(_.startsWith("_tmp-"))
+    assert(staged.isEmpty, s"failed distributed write left ${staged.mkString(", ")}")
     val okBig = spark.range(0, 500)
       .selectExpr("concat('k', id) AS pk", "concat('p', id % 2) AS part",
         "CAST(id + 1 AS DOUBLE) AS v")

@@ -122,8 +122,14 @@ class ManifestSegmentSpec extends AnyFunSuite {
     AcidTable.resetMetaIoCounters()
     val rows = t.lookup(Seq("k3"), Some(Seq("P3"))).collect()
     assert(rows.map(_.getString(0)).toSeq == Seq("k3"))
-    assert(AcidTable.segmentResolves.get() <= 2, // lookupFiles + sizesForFiles
+    assert(AcidTable.segmentResolves.get() == 1,
       s"hinted lookup read resolved ${AcidTable.segmentResolves.get()} segments")
+    // and the driver-side lookup the fast paths use
+    AcidTable.resetMetaIoCounters()
+    val local = t.localLookupRows(Seq("k3"), partitionsHint = Some(Seq("P3")))
+    assert(local.map(_.size).contains(1))
+    assert(AcidTable.segmentResolves.get() == 1,
+      s"hinted driver lookup resolved ${AcidTable.segmentResolves.get()} segments")
   }
 
   test("root-level partition envelopes refute range probes with zero per-file stat reads") {
