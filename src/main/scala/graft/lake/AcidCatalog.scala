@@ -222,12 +222,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   }
 
   override def dropTable(ident: Identifier): Boolean = {
-    val dir = new java.io.File(tablePath(ident))
-    if (!dir.exists()) return false
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-    }
-    rm(dir)
+    val dir = java.nio.file.Paths.get(tablePath(ident))
+    if (!java.nio.file.Files.exists(dir)) return false
+    DataFiles.deleteTree(dir)
     true
   }
 
@@ -268,10 +265,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     if (!dir.exists()) return false
     if (!cascade && Option(dir.listFiles()).exists(_.nonEmpty))
       throw new IllegalStateException(s"namespace ${namespace.mkString(".")} is not empty")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-    }
-    rm(dir)
+    DataFiles.deleteTree(dir.toPath)
     true
   }
 }

@@ -480,10 +480,7 @@ final class AcidSqlSession(spark: SparkSession, warehouseDir: String) {
       val nameParts = vn.split('.').toSeq
       val mv = view(vn)
       Seq(nameParts.mkString("."), nameParts.last).foreach(views.remove)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(mv.viewPath))
+      DataFiles.deleteTree(java.nio.file.Paths.get(mv.viewPath))
       0L
     case _ => executeParsed(sql)
   }
@@ -527,12 +524,8 @@ final class AcidSqlSession(spark: SparkSession, warehouseDir: String) {
       val nameParts = identParts(dt.child)
       Seq(nameParts.mkString("."), nameParts.last).foreach(tables.remove)
       val dir = new java.io.File((warehouseDir +: nameParts).mkString("/"))
-      if (dir.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-        }
-        rm(dir)
-      } else if (!dt.ifExists) {
+      if (dir.exists()) DataFiles.deleteTree(dir.toPath)
+      else if (!dt.ifExists) {
         throw new IllegalArgumentException(s"table ${nameParts.mkString(".")} does not exist")
       }
       0L

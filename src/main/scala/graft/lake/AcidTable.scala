@@ -172,7 +172,7 @@ final class AcidTable private (
   }
 
   /** Point-lookup read: the pinned (default latest) snapshot restricted to
-    * `keys`, scanning ONLY the data files that can hold them. Because the
+    * `keys`, reading ONLY the data files that can hold them. Because the
     * bucket is a pure function of the PK (`Murmur3(pk) % numBuckets`, the
     * file-group layout every commit writes), a key's rows can live only in
     * files whose name carries its bucket — so the scan list prunes to
@@ -185,9 +185,18 @@ final class AcidTable private (
     * files. Bucketless legacy files prune by partition only (they can hold
     * any bucket — same conservatism as [[DataFiles.inCell]]); a non-string or
     * non-hash-safe PK type skips bucket pruning and scans the (partition-
-    * pruned) snapshot. The row filter itself is an `isInCollection` set
-    * test pushed into the scan. Point lookups are read-only: no commit, no
-    * OCC interaction, snapshot isolation from the pinned manifest.
+    * pruned) snapshot.
+    *
+    * Two routes read the pruned files. When they fit the fast-path budget
+    * and the schema passes the fast path's gate (no outstanding rename, no
+    * column DEFAULT, keys renderable in the PK's type), the rows are read
+    * on the driver through the file-row cache before this returns, and
+    * the result is a `LocalRelation`: collecting it runs no Spark job,
+    * and the read is pinned, since a vacuum that runs before the collect
+    * cannot remove files already read. Otherwise the result is a lazy
+    * scan of the files with the key set as an `isInCollection` filter
+    * pushed into it. Point lookups are read-only: no commit, no OCC
+    * interaction, snapshot isolation from the pinned manifest.
     */
   def lookup(
       keys: Seq[String],
@@ -198,20 +207,28 @@ final class AcidTable private (
     // from the same root even if a commit lands mid-call. A hinted point
     // lookup resolves only the hinted partitions' segments.
     val view = timeline.rootView(if (version >= 0) version else latestVersion())
-    if (!keyCastSupported) {
-      // PK type outside castKeyTo's set (DATE/TIMESTAMP/DECIMAL/…): the
-      // string keys can't be rendered as typed literals, so skip bucket
-      // pruning and filter the (partition-pruned) snapshot by the PK's
-      // string rendering — never return empty for a type we can't parse
-      return applyDvs(snapshotFromFiles(lookupFilesIn(view, keys, partitionsHint)), view.dvs)
-        .filter(col(pkCol).cast(StringType).isInCollection(keys))
+    val files = lookupFilesIn(view, keys, partitionsHint)
+    val local = if (driverLookupOk) localRowsOf(view, keys, files) else None
+    local match {
+      case Some(rows) =>
+        // nullable like the scan's file-source schema
+        val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils
+          .toAttributes(StructType(schema.fields.map(_.copy(nullable = true))))
+        org.apache.spark.sql.graft.PlanShim.localRelationDf(spark, attrs, rows)
+      case None if !keyCastSupported =>
+        // PK type outside castKeyTo's set (DATE/TIMESTAMP/DECIMAL/…): the
+        // string keys can't be rendered as typed literals, so skip bucket
+        // pruning and filter the (partition-pruned) snapshot by the PK's
+        // string rendering — never return empty for a type we can't parse
+        applyDvs(snapshotFromFiles(files), view.dvs)
+          .filter(col(pkCol).cast(StringType).isInCollection(keys))
+      case None =>
+        val typed = typedKeys(keys)
+        // keys cast to the PK's type (not the column to string) so the In
+        // set test stays on the bare scan column and pushes into the read
+        if (typed.isEmpty) snapshotFromFiles(Nil)
+        else applyDvs(snapshotFromFiles(files), view.dvs).filter(col(pkCol).isInCollection(typed))
     }
-    val typed = typedKeys(keys)
-    if (typed.isEmpty) return snapshotFromFiles(Nil)
-    // keys cast to the PK's type (not the column to string) so the In set
-    // test stays on the bare scan column and pushes into the parquet read
-    applyDvs(snapshotFromFiles(lookupFilesIn(view, keys, partitionsHint)), view.dvs)
-      .filter(col(pkCol).isInCollection(typed))
   }
 
   /** Whether [[castKeyTo]] can render string keys in the PK's type — the
@@ -394,12 +411,17 @@ final class AcidTable private (
 
   /** Driver image of [[applyDvs]] for the local fast-path row reads. */
   private def dvRowFilter(dvs: Seq[DvEntry])
-      : org.apache.spark.sql.catalyst.InternalRow => Boolean =
-    if (dvs.isEmpty) _ => true
+      : org.apache.spark.sql.catalyst.InternalRow => Boolean = {
+    val visible = dvVisible(dvs)
+    r => visible(rowPart(r), r.get(pkFieldIdx, schema(pkFieldIdx).dataType))
+  }
+
+  /** [[dvRowFilter]] on a row's (partition value, Catalyst PK value). */
+  private def dvVisible(dvs: Seq[DvEntry]): (String, Any) => Boolean =
+    if (dvs.isEmpty) (_, _) => true
     else {
       val byPart = dvs.groupBy(_.part).map { case (p, es) => p -> es.map(_.key).toSet }
-      r => !byPart.get(rowPart(r)).exists(_.contains(
-        String.valueOf(r.get(pkFieldIdx, schema(pkFieldIdx).dataType))))
+      (part, pk) => !byPart.get(part).exists(_.contains(String.valueOf(pk)))
     }
 
   // --------------------------------------------------------------- writes --
@@ -1974,6 +1996,10 @@ final class AcidTable private (
         pkCol, partitionCol, numBuckets.toLong, props)), detailSchema)
   }
 
+  /** The timeline's content store (segments, pages, index runs), for
+    * fault-injection checks of [[fsck]] and [[fsckRepair]]. */
+  private[graft] def contentStoreDir: Path = Paths.get(timeline.storeDir)
+
   /** Metadata integrity check (the `FSCK TABLE` surface, round-14 verdict
     * #6): READ-ONLY walk of every retained root, reporting
     *
@@ -2321,9 +2347,8 @@ final class AcidTable private (
     Some(net.values.asScala.toSeq.filter(_._2 != 0))
   }
 
-  /** Driver image of [[lookup]]: the pinned snapshot's rows for `keys`
-    * (rendered with the same `String.valueOf` the DV/row kernels use),
-    * in full table-schema order. None outside the fast-path budget. */
+  /** Driver image of [[lookup]]: the pinned snapshot's rows for `keys`,
+    * in full table-schema order. None where [[lookup]] scans. */
   private[lake] def localLookupRows(
       keys: Seq[String], version: Long = -1L,
       partitionsHint: Option[Seq[String]] = None)
@@ -2333,16 +2358,31 @@ final class AcidTable private (
 
   private def localLookupRowsIn(
       view: RootView, keys: Seq[String], partitionsHint: Option[Seq[String]])
-      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
-    if (!fastSchemaOk || !AcidTable.localCommitEnabled) return None
-    val files = lookupFilesIn(view, keys, partitionsHint)
-    if (!driverScaleFiles(files)) return None
-    // the `#dvs=` entries are a header of the same view: listing them
-    // never expands every partition's segment
-    val ks = keys.toSet
-    Some(dataFiles.readRows(files).filter(dvRowFilter(view.dvs)).filter(r =>
-      ks.contains(String.valueOf(r.get(pkFieldIdx, schema(pkFieldIdx).dataType)))))
-  }
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+    if (!driverLookupOk) None
+    else localRowsOf(view, keys, lookupFilesIn(view, keys, partitionsHint))
+
+  /** The driver lookup route's schema gate: the fast path's, plus keys
+    * renderable in the PK's type. */
+  private def driverLookupOk: Boolean =
+    fastSchemaOk && AcidTable.localCommitEnabled && keyCastSupported
+
+  /** `view`'s rows for `keys` in `files` (that view's [[lookupFilesIn]]),
+    * read on the driver; None when the files exceed the fast-path budget.
+    * A row matches by the same rule as [[lookup]]'s scan: its PK equals
+    * one of the [[typedKeys]], so unparseable keys match nothing. */
+  private def localRowsOf(view: RootView, keys: Seq[String], files: Seq[(String, Long)])
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+    if (!driverScaleFiles(files)) None
+    else {
+      val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(schema(pkCol).dataType)
+      val ks: Set[Any] = typedKeys(keys).map(toInternal).toSet
+      // the `#dvs=` entries are a header of the same view: listing them
+      // never expands every partition's segment
+      val visible = dvVisible(view.dvs)
+      Some(dataFiles.readRowsWhere(files)((part, pk) => ks.contains(pk) && visible(part, pk)))
+    }
 
   /** Compaction: rewrite partitions that have accumulated more than
     * `maxFilesPerPartition` small files into one file each — same content,

@@ -209,28 +209,50 @@ private[lake] final class DataFiles(t: AcidTable) {
     r
   }
 
-  /** One file's table rows, the row-level image of [[scan]]: absent
-    * evolved columns surface as NULL and the partition value comes off
-    * the directory name. A row-cache miss charges the recorded size. */
-  private def fileRows(rel: String, size: Long): Seq[InternalRow] = {
+  /** One file's rows as stored (file schema, no partition column), through
+    * the row cache: absent evolved columns surface as NULL. A cache miss
+    * charges the recorded size. */
+  private def storedRows(rel: String, size: Long): Seq[InternalRow] = {
     val key = abs(rel).toString
-    val part = UTF8String.fromString(partValue(rel))
-    val rows = rowCache.get(key, fileSchema).getOrElse {
+    rowCache.get(key, fileSchema).getOrElse {
       val rs = LocalParquetIO.read(abs(rel).toFile, fileSchema, t.spark)
       rowCache.put(key, fileSchema, rs, size)
       rs
     }
-    rows.map(tableRow(_, part))
+  }
+
+  /** One file's table rows, the row-level image of [[scan]]: the partition
+    * value comes off the directory name. */
+  private def fileRows(rel: String, size: Long): Seq[InternalRow] = {
+    val part = UTF8String.fromString(partValue(rel))
+    storedRows(rel, size).map(tableRow(_, part))
   }
 
   /** Table rows of `files`, in file order. */
   def readRows(files: Seq[(String, Long)]): Seq[InternalRow] = perFile(files)(identity).flatten
 
-  /** `f` over each file's rows, in file order: inline up to four files,
-    * concurrently above (independent parquet opens). */
+  /** Table rows of `files` whose (partition value, Catalyst PK value) pass
+    * `keep`, in file order. The test runs on the stored row, so only the
+    * kept rows are copied into table rows. */
+  def readRowsWhere(files: Seq[(String, Long)])(keep: (String, Any) => Boolean): Seq[InternalRow] = {
+    val pkIdx = fileFieldIdx.indexOf(t.pkFieldIdx) // -1: the PK is the partition column
+    eachFile(files) { case (rel, size) =>
+      val partStr = partValue(rel)
+      val part = UTF8String.fromString(partStr)
+      val pkOf: InternalRow => Any =
+        if (pkIdx < 0) _ => part else r => r.get(pkIdx, fileSchema(pkIdx).dataType)
+      storedRows(rel, size).filter(r => keep(partStr, pkOf(r))).map(tableRow(_, part))
+    }.flatten
+  }
+
+  /** `f` over each file's rows, in file order (see [[eachFile]]). */
   def perFile[B](files: Seq[(String, Long)])(f: Seq[InternalRow] => B): Seq[B] =
-    if (files.size <= 4) files.map { case (rel, size) => f(fileRows(rel, size)) }
-    else Par.map(files) { case (rel, size) => f(fileRows(rel, size)) }
+    eachFile(files) { case (rel, size) => f(fileRows(rel, size)) }
+
+  /** `f` over each file, in file order: inline up to four files,
+    * concurrently above (independent parquet opens). */
+  private def eachFile[B](files: Seq[(String, Long)])(f: ((String, Long)) => B): Seq[B] =
+    if (files.size <= 4) files.map(f) else Par.map(files)(f)
 
   /** Write each (partition, bucket) group of table rows as new files
     * (bucket -1 = bucketless), rolled at [[recordsPerFile]], straight to
@@ -321,8 +343,8 @@ private[lake] object DataFiles {
     }
   }
 
-  /** Delete `p` and everything under it. Entries that vanish mid-walk
-    * count as deleted. */
+  /** Delete `p` and everything under it, if it exists. Entries that vanish
+    * mid-walk count as deleted; any other I/O error fails the call. */
   def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {
       Files.walkFileTree(p, new SimpleFileVisitor[Path] {

@@ -1182,9 +1182,9 @@ object MatView {
         }
       }
     }
-    val root = new File(viewPath)
-    if (root.exists()) deleteRecursively(root)
-    Files.createDirectories(root.toPath)
+    val root = Paths.get(viewPath)
+    DataFiles.deleteTree(root)
+    Files.createDirectories(root)
 
     val v0 = source.latestVersion()
     val v0Ds = dimTs.map(_.latestVersion())
@@ -1229,7 +1229,7 @@ object MatView {
         pmod(xxhash64(col("__mv_key")), lit(chosenParts.toLong)).cast(StringType)))
       mv.state.upsertOp(init, None, mv.markerFor(v0, v0Ds))
     }
-    deleteRecursively(stageDir.toFile)
+    DataFiles.deleteTree(stageDir)
     mv
   }
 
@@ -1299,10 +1299,5 @@ object MatView {
     try props.store(out, "graft MatView definition") finally out.close()
     Files.move(tmp, propsPath(viewPath),
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
   }
 }

@@ -184,10 +184,7 @@ case class DropMatViewCommand(nameParts: Seq[String]) extends LeafRunnableComman
     val dir = new java.io.File(MatViewSql.pathOf(nameParts))
     require(new java.io.File(dir, "_mv.properties").exists(),
       s"${nameParts.mkString(".")} is not a materialized view")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-    }
-    rm(dir)
+    DataFiles.deleteTree(dir.toPath)
     Nil
   }
 }

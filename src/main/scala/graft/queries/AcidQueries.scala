@@ -2292,7 +2292,7 @@ object AcidQueries {
         // then knock one live segment and one live index run off disk
         (0L to t.latestVersion()).foreach(v => t.snapshot(v).count())
         t.lookupFiles(Seq("3"))
-        val segsDir = java.nio.file.Paths.get(t.path, "_commits", "_segments")
+        val segsDir = t.contentStoreDir
         val names = Option(segsDir.toFile.listFiles()).getOrElse(Array.empty)
           .map(_.getName)
         val segVictim = names.find(_.startsWith("seg-")).getOrElse(

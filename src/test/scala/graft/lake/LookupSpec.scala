@@ -1,7 +1,11 @@
 package graft.lake
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,17 +13,20 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.core.Record
 
-/** The point-lookup read path's two contracts:
+/** The point-lookup read path's contracts:
   *
   *  1. EQUIVALENCE — `lookup(keys)` returns exactly what filtering the full
   *     snapshot would, on every table shape (bucketed, legacy/bucketless,
-  *     multi-partition, typed PKs, after updates and deletes).
+  *     multi-partition, typed PKs, after updates and deletes), and the
+  *     driver route returns the same rows as the distributed scan.
   *  2. SKIPPING — the scanned file list prunes to the keys' buckets (and,
   *     with a partition hint, to the named partitions' bucket files). This
   *     is the property that makes a point read on a 100 TB table touch
   *     O(#keys) file groups; it is asserted on `lookupFiles` directly so a
   *     refactor that silently falls back to full scans fails here, not in a
   *     cluster profile.
+  *  3. ZERO JOBS — an in-budget lookup reads on the driver, so its collect
+  *     runs no Spark job, and its rows are read before `lookup` returns.
   */
 class LookupSpec extends AnyFunSuite {
 
@@ -36,6 +43,46 @@ class LookupSpec extends AnyFunSuite {
 
   private def df(rs: Record*) = spark.createDataset(rs).toDF()
 
+  private def isDriverRead(df: DataFrame): Boolean =
+    df.queryExecution.logical.isInstanceOf[LocalRelation]
+
+  /** The rows of `read`, ordered by `t`'s PK, asserted equal on both
+    * routes: as the table gates it (`driver` says whether that is the
+    * driver read) and with the fast path switched off (the scan). */
+  private def bothRoutes(t: AcidTable, driver: Boolean = true)(read: => DataFrame): Seq[Row] = {
+    def run(local: Boolean): (Boolean, Seq[Row]) = {
+      AcidTable.localCommitEnabled = local
+      try {
+        val df = read
+        (isDriverRead(df), df.orderBy(t.pkCol).collect().toSeq)
+      } finally AcidTable.localCommitEnabled = true
+    }
+    val (onDriver, rows) = run(local = true)
+    val (scanOnDriver, scanRows) = run(local = false)
+    assert(onDriver == driver, s"driver route taken: $onDriver, expected $driver")
+    assert(!scanOnDriver, "the switched-off fast path still read on the driver")
+    assert(rows == scanRows, s"driver route $rows, scan $scanRows")
+    rows
+  }
+
+  /** Spark jobs started by `body`. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // listener events are async: let earlier jobs' events drain before
+      // counting, and this body's arrive before reading the counter
+      Thread.sleep(500)
+      jobs.set(0)
+      body
+      Thread.sleep(500)
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   private def mkTable(buckets: Int): AcidTable = {
     val t = AcidTable.create(spark, tmp(), schema, "primaryKeyValue",
       "partitionKeyValue", stablePartitions = true, numBuckets = buckets)
@@ -50,8 +97,7 @@ class LookupSpec extends AnyFunSuite {
   test("lookup equals the snapshot filter, across updates and deletes") {
     val t = mkTable(buckets = 8)
     val keys = Seq("k0", "k5", "k13", "k40", "kNOPE")
-    val got = t.lookup(keys).orderBy("primaryKeyValue")
-      .collect().map(_.toSeq).toSeq
+    val got = bothRoutes(t)(t.lookup(keys)).map(_.toSeq)
     val want = t.snapshot()
       .filter(col("primaryKeyValue").isin(keys: _*))
       .orderBy("primaryKeyValue").collect().map(_.toSeq).toSeq
@@ -84,17 +130,17 @@ class LookupSpec extends AnyFunSuite {
     assert(hinted.forall(_.startsWith("partitionKeyValue=P0/")),
       s"hint leaked other partitions: $hinted")
     // the hinted read still returns the row
-    val r = t.lookup(Seq("k8"), partitionsHint = Some(Seq("P0"))).collect()
-    assert(r.map(_.getString(0)).toSeq == Seq("k8"))
+    val r = bothRoutes(t)(t.lookup(Seq("k8"), partitionsHint = Some(Seq("P0"))))
+    assert(r.map(_.getString(0)) == Seq("k8"))
   }
 
   test("single-bucket tables cannot skip but stay correct") {
     val t = mkTable(buckets = 1)
-    assert(t.lookup(Seq("k1", "k2")).count() == 2)
+    assert(bothRoutes(t)(t.lookup(Seq("k1", "k2"))).size == 2)
     assert(t.lookupFiles(Seq("k1")).nonEmpty)
   }
 
-  test("typed (long) PK lookups parse keys and prune; garbage keys match nothing") {
+  private def longTable(): AcidTable = {
     val ls = StructType(Seq(
       StructField("id", LongType),
       StructField("part", StringType),
@@ -102,12 +148,58 @@ class LookupSpec extends AnyFunSuite {
     val t = AcidTable.create(spark, tmp(), ls, "id", "part",
       stablePartitions = true, numBuckets = 8)
     t.upsert((0L until 40L).map(i => (i, s"P${i % 2}", i * 1.5)).toDF("id", "part", "v"))
-    val got = t.lookup(Seq("7", "21", "garbage")).orderBy("id")
-      .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+    t
+  }
+
+  test("typed (long) PK lookups parse keys and prune; garbage keys match nothing") {
+    val t = longTable()
+    val got = bothRoutes(t)(t.lookup(Seq("7", "21", "garbage")))
+      .map(r => (r.getLong(0), r.getDouble(2)))
     assert(got == Seq((7L, 10.5), (21L, 31.5)))
     val all = t.snapshot().inputFiles.length
     assert(t.lookupFiles(Seq("7")).size < all)
-    assert(t.lookup(Seq("garbage")).count() == 0)
+    assert(bothRoutes(t)(t.lookup(Seq("garbage"))).isEmpty)
+  }
+
+  test("a long PK matches \"007\" by value on both routes and in localLookupRows") {
+    val t = longTable()
+    val rows = t.localLookupRows(Seq("007", "garbage")).getOrElse(fail("not in the driver budget"))
+    assert(rows.map(_.getLong(0)) == Seq(7L))
+    assert(bothRoutes(t)(t.lookup(Seq("007", "garbage"))).map(_.getLong(0)) == Seq(7L))
+  }
+
+  test("keys hidden by deletion vectors stay hidden on both routes") {
+    val t = mkTable(buckets = 8)
+    assert(t.deleteVectored(Seq("k6", "k40")) == t.latestVersion())
+    assert(t.snapshot().filter(col("primaryKeyValue") === "k6").isEmpty)
+    val got = bothRoutes(t)(t.lookup(Seq("k5", "k6", "k40", "k41")))
+    assert(got.map(_.getString(0)) == Seq("k41", "k5"))
+    val hinted = bothRoutes(t)(t.lookup(Seq("k6", "k7"), partitionsHint = Some(Seq("P2", "P3"))))
+    assert(hinted.map(_.getString(0)) == Seq("k7"))
+  }
+
+  test("a PK-derived hidden partition reads on the driver like the scan") {
+    val s2 = StructType(Seq(
+      StructField("pk", StringType), StructField("part", StringType),
+      StructField("n", LongType)))
+    val t = AcidTable.create(spark, tmp(), s2, "pk", "part",
+      stablePartitions = true, numBuckets = 1)
+    t.setTableProperty("partitionTransform", Some("bucket(16, pk)"))
+    val rows = (0 until 200).map(i => Row(s"k$i", i.toLong))
+    t.upsert(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(s2.filterNot(_.name == "part"))))
+    assert(bothRoutes(t)(t.lookup(Seq("k7", "k9999"))).map(_.getLong(2)) == Seq(7L))
+  }
+
+  test("a table with an outstanding rename stays on the scan") {
+    var t = AcidTable.create(spark, tmp(), StructType(Seq(
+      StructField("pk", StringType), StructField("part", StringType),
+      StructField("v", LongType))), "pk", "part", stablePartitions = true)
+    t.upsert(Seq(("a", "p0", 1L), ("b", "p1", 2L)).toDF("pk", "part", "v"))
+    t = t.renameColumn("v", "score")
+    t.upsert(Seq(("c", "p0", 3L)).toDF("pk", "part", "score"))
+    val got = bothRoutes(t, driver = false)(t.lookup(Seq("a", "c")))
+    assert(got.map(r => r.getString(0) -> r.getLong(2)) == Seq("a" -> 1L, "c" -> 3L))
   }
 
   test("unsupported PK types (DATE) fall back to a filtered snapshot, never empty") {
@@ -123,13 +215,14 @@ class LookupSpec extends AnyFunSuite {
     assert(!t.keyCastSupported)
     // lookup by the date's canonical string rendering returns the row (the
     // pre-fix behavior silently returned an EMPTY DataFrame here)
-    val got = t.lookup(Seq("2024-01-07")).collect()
-    assert(got.map(_.getLong(2)).toSeq == Seq(7L))
+    val got = bothRoutes(t, driver = false)(t.lookup(Seq("2024-01-07")))
+    assert(got.map(_.getLong(2)) == Seq(7L))
     // pruning degrades to the conservative partition-level list, not to
     // an empty (rows-losing) bucket intersection
     assert(t.lookupFiles(Seq("2024-01-07")).size == t.snapshot().inputFiles.length)
-    val hinted = t.lookup(Seq("2024-01-07"), partitionsHint = Some(Seq("P1"))).collect()
-    assert(hinted.map(_.getLong(2)).toSeq == Seq(7L))
+    val hinted = bothRoutes(t, driver = false)(
+      t.lookup(Seq("2024-01-07"), partitionsHint = Some(Seq("P1"))))
+    assert(hinted.map(_.getLong(2)) == Seq(7L))
   }
 
   test("SQL pk-equality on an unsupported PK type returns rows (no lookup routing)") {
@@ -168,9 +261,37 @@ class LookupSpec extends AnyFunSuite {
     val t = mkTable(buckets = 8)
     val v = t.latestVersion()
     t.upsert(df(Record("k0", "P0", "overwritten")))
-    val pinned = t.lookup(Seq("k0"), version = v).collect()
-    assert(pinned.map(_.getString(2)).toSeq == Seq("u0")) // pre-commit value
-    val latest = t.lookup(Seq("k0")).collect()
-    assert(latest.map(_.getString(2)).toSeq == Seq("overwritten"))
+    val pinned = bothRoutes(t)(t.lookup(Seq("k0"), version = v))
+    assert(pinned.map(_.getString(2)) == Seq("u0")) // pre-commit value
+    val latest = bothRoutes(t)(t.lookup(Seq("k0")))
+    assert(latest.map(_.getString(2)) == Seq("overwritten"))
+  }
+
+  test("an in-budget lookup runs no Spark job; the scan route runs at least one") {
+    val t = mkTable(buckets = 8)
+    def read(): Unit = { t.lookup(Seq("k1", "k6"), partitionsHint = Some(Seq("P1", "P2"))).collect(); () }
+    read() // warm
+    assert(jobsOf(read()) == 0)
+    AcidTable.localCommitEnabled = false
+    try assert(jobsOf(read()) >= 1)
+    finally AcidTable.localCommitEnabled = true
+    val renamed = t.renameColumn("dataValue", "payload")
+    assert(!renamed.fastSchemaOk)
+    assert(jobsOf {
+      renamed.lookup(Seq("k1", "k6"), partitionsHint = Some(Seq("P1", "P2"))).collect(); ()
+    } >= 1)
+  }
+
+  test("a driver lookup is pinned: a vacuum before the collect cannot remove its files") {
+    val t = mkTable(buckets = 8)
+    val keys = Seq("k1", "k2")
+    val read = t.lookup(keys)
+    val readFiles = t.lookupFiles(keys)
+    // rewrite the same cells, then archive every older version and delete its files
+    t.upsert(df(Record("k1", "P1", "new1"), Record("k2", "P2", "new2")))
+    assert(t.vacuum(keepVersions = 1, graceMillis = 0L) > 0)
+    assert(readFiles.exists(f => !t.dataFiles.exists(f)), "vacuum removed none of the read's files")
+    val got = read.collect().map(r => r.getString(0) -> r.getString(2)).sorted.toSeq
+    assert(got == Seq("k1" -> "v1", "k2" -> "v2"))
   }
 }
