@@ -83,9 +83,9 @@ object AcidScanProfile {
     // third route: the GRAFT table's own data files through the STOCK
     // reader — separates file-layout effects (sizes, row groups,
     // encodings) from the batch-scan machinery itself
-    val graftFiles = t.snapshot().inputFiles
+    val graftFiles = t.liveFilePaths()
     println(s"graft files=${graftFiles.length} " +
-      s"bytes=${graftFiles.map(f => new java.io.File(f.stripPrefix("file:")).length()).sum}")
+      s"bytes=${graftFiles.map(f => new java.io.File(f).length()).sum}")
     val stockFiles = spark.read.parquet(stockDir).inputFiles
     println(s"stock files=${stockFiles.length} " +
       s"bytes=${stockFiles.map(f => new java.io.File(f.stripPrefix("file:")).length()).sum}")

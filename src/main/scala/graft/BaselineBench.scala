@@ -499,7 +499,7 @@ object BaselineBench {
         }
       }
       val filesKept = t.lookupFiles(Seq(key)).size
-      val filesLive = t.snapshot().inputFiles.length
+      val filesLive = t.liveFilePaths().length
       val filesStock = spark.read.parquet(stockDir).inputFiles.length
       println(s"  ($label files: graft scans $filesKept of $filesLive live; " +
         s"stock plans all $filesStock)")

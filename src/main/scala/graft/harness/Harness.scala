@@ -86,8 +86,10 @@ object TransactionManager {
   * `reader/ReaderThread.java`; SURVEY §7 M4).
   *
   * Driver-side orchestration is plain JVM threads over cloned sessions
-  * (`TransactionManager.java:95-101` shape); the data path is fully
-  * distributed through Spark.
+  * (`TransactionManager.java:95-101` shape). The data path is the
+  * table's: a table within the fast-path budget commits and snapshot-reads
+  * on the driver with no Spark job, and a larger one commits and scans
+  * through distributed Spark jobs.
   */
 final class TransactionManager(spark: SparkSession, config: HarnessConfig) {
 

@@ -146,9 +146,6 @@ final class AcidTable private (
     * ([[Timeline.versionAt]]). */
   def versionAt(epochMillis: Long): Long = timeline.versionAt(epochMillis)
 
-  /** Snapshot of the given (default latest) committed version. The file
-    * list is pinned before the scan → snapshot isolation for the whole read.
-    */
   /** Map the read layer's retriable archived-version conflict to a
     * TERMINAL error for reads that name their version EXPLICITLY: the
     * caller asked for v, v is gone forever — no retry can succeed (the
@@ -164,11 +161,38 @@ final class AcidTable private (
             s"oldest retained: ${timeline.oldestRetainedVersion(latestVersion())}) ($path)", e)
     }
 
+  /** Snapshot of the given (default latest) committed version: its rows
+    * minus those its deletion vectors hide. One root view pins the file
+    * list, the sizes and the deletion vectors, so the whole read sees one
+    * version.
+    *
+    * Two routes read it. When the table passes the fast path's schema
+    * gate (no outstanding rename, no column DEFAULT) and the view's files
+    * fit the fast-path budget ([[driverScaleFiles]]), the rows are read on
+    * the driver through the file-row cache before this returns, and the
+    * result is a `LocalRelation`: collecting it runs no Spark job, and the
+    * read is pinned, since a vacuum that runs before the collect cannot
+    * remove files already read. Otherwise the result is a lazy scan of the
+    * view's files ([[scanOf]]), which reads them when it runs.
+    */
   def snapshot(version: Long = -1L): DataFrame = explicitVersionRead(version) {
-    // one view: the file list, the sizes and the deletion vectors all
-    // come from the same root read
     val view = timeline.rootView(if (version >= 0) version else latestVersion())
+    val files = view.entries
+    if (fastSchemaOk && AcidTable.localCommitEnabled && driverScaleFiles(files))
+      localDf(dataFiles.readRowsWhere(files)(dvVisible(view.dvs)))
+    else scanOf(view)
+  }
+
+  /** The lazy scan of `view`: its files, deletion vectors applied. */
+  private[lake] def scanOf(view: RootView): DataFrame =
     applyDvs(snapshotFromFiles(view.entries), view.dvs)
+
+  /** Table rows read on the driver as a `LocalRelation`, its attributes
+    * nullable like the scan's file-source schema. */
+  private def localDf(rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): DataFrame = {
+    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils
+      .toAttributes(StructType(schema.fields.map(_.copy(nullable = true))))
+    org.apache.spark.sql.graft.PlanShim.localRelationDf(spark, attrs, rows)
   }
 
   /** Point-lookup read: the pinned (default latest) snapshot restricted to
@@ -210,11 +234,7 @@ final class AcidTable private (
     val files = lookupFilesIn(view, keys, partitionsHint)
     val local = if (driverLookupOk) localRowsOf(view, keys, files) else None
     local match {
-      case Some(rows) =>
-        // nullable like the scan's file-source schema
-        val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils
-          .toAttributes(StructType(schema.fields.map(_.copy(nullable = true))))
-        org.apache.spark.sql.graft.PlanShim.localRelationDf(spark, attrs, rows)
+      case Some(rows) => localDf(rows)
       case None if !keyCastSupported =>
         // PK type outside castKeyTo's set (DATE/TIMESTAMP/DECIMAL/…): the
         // string keys can't be rendered as typed literals, so skip bucket
@@ -259,6 +279,12 @@ final class AcidTable private (
       version: Long = -1L): Seq[String] =
     lookupFilesIn(timeline.rootView(if (version >= 0) version else latestVersion()), keys, partitionsHint)
       .map(_._1)
+
+  /** Absolute paths of the data files the (default latest) version lists:
+    * what its snapshot reads, on either route. */
+  private[graft] def liveFilePaths(version: Long = -1L): Seq[String] =
+    timeline.rootView(if (version >= 0) version else latestVersion()).files
+      .map(dataFiles.abs(_).toString)
 
   /** [[lookupFiles]] on one view, as the (file, recorded size) entries
     * the pruned segments resolved. */
@@ -1614,7 +1640,10 @@ final class AcidTable private (
     }
   }
 
-  /** Register the CURRENT snapshot as a temp view (reference A13 surface). */
+  /** Register the CURRENT snapshot as a temp view (reference A13 surface).
+    * An in-budget snapshot is read on the driver here (see [[snapshot]]):
+    * the view is pinned at registration, holding that version's rows, and
+    * a later vacuum cannot remove them from under it. */
   def registerView(name: String): Unit = snapshot().createOrReplaceTempView(name)
 
   /** Schema evolution: append new nullable columns. No data rewrite —

@@ -161,9 +161,11 @@ object MetaScale {
       println(f"$nFiles,$nParts,$op,$cold%.1f,${median(warm)}%.1f,$detail")
 
     // 1. snapshot planning: build the scan DataFrame + physical plan
-    //    (file-list resolution + pruning machinery, no execution)
+    //    (file-list resolution + pruning machinery, no execution). The
+    //    scan route explicitly: at 1k files the table fits the driver
+    //    budget, where snapshot() would read the rows instead of planning
     def planOnce(): Unit = {
-      t.snapshot().queryExecution.executedPlan
+      t.scanOf(t.timeline.rootView(t.latestVersion())).queryExecution.executedPlan
       ()
     }
     val planCold = timedMs(planOnce())

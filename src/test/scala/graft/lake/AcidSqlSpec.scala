@@ -191,13 +191,13 @@ class AcidSqlSpec extends AnyFunSuite {
       sess.execute(s"INSERT INTO db.m SELECT * FROM m_rows_$k")
     }
     val t = sess.table("db.m")
-    val filesBefore = t.snapshot().inputFiles.length
+    val filesBefore = t.liveFilePaths().length
 
     // OPTIMIZE dispatches to compact: file count never grows, rows exact
     // (COW cells are already one file each here — true folding of
     // fragmented cells is pinned in AcidTableMaintenanceSpec)
     sess.execute("OPTIMIZE db.m")
-    assert(sess.table("db.m").snapshot().inputFiles.length <= filesBefore)
+    assert(sess.table("db.m").liveFilePaths().length <= filesBefore)
     assert(sess.query("SELECT count(*) AS n FROM db.m").head().getLong(0) == 64L)
 
     // OPTIMIZE WHERE scopes to a partition list (Delta's restriction:

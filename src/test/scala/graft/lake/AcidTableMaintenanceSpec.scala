@@ -52,7 +52,7 @@ class AcidTableMaintenanceSpec extends AnyFunSuite {
     (1 to 5).foreach(i => t.upsert(df(Record(s"A$i", "P0", s"v$i"))))
     (1 to 5).foreach(i => t.upsert(df(Record(s"B$i", "P1", s"v$i"))))
     def live(p: String) =
-      t.snapshot().inputFiles.filter(_.contains(s"partitionKeyValue=$p")).sorted.toSeq
+      t.liveFilePaths().filter(_.contains(s"partitionKeyValue=$p")).sorted.toSeq
     val p0Before = live("P0")
     val p1Before = live("P1")
     // scope = P0 only, rewritten UNCONDITIONALLY (threshold is for the
@@ -65,9 +65,9 @@ class AcidTableMaintenanceSpec extends AnyFunSuite {
     // the rewrite folded P0 to one file per non-empty bucket
     assert(live("P0").size <= p0Before.size)
     // scoping to an absent partition never rewrites anything
-    val before = t.snapshot().inputFiles.sorted.toSeq
+    val before = t.liveFilePaths().sorted.toSeq
     t.compact(partitions = Some(Seq("NOPE")))
-    assert(t.snapshot().inputFiles.sorted.toSeq == before)
+    assert(t.liveFilePaths().sorted.toSeq == before)
   }
 
   test("size-targeted writes split an oversized partition into multiple files") {

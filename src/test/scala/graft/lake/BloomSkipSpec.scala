@@ -60,7 +60,7 @@ class BloomSkipSpec extends AnyFunSuite {
     val t = newTable(tmp())
     seed(t, parts = 6, keysPerPart = 20)
     // bucket pruning alone keeps one file per partition (single bucket)
-    assert(t.snapshot().inputFiles.length == 6)
+    assert(t.liveFilePaths().length == 6)
     val pruned = t.lookupFiles(Seq("k3007")) // lives in P3 only
     assert(pruned.size == 1, s"bloom should isolate one file, kept: $pruned")
     assert(pruned.head.startsWith("part=P3/"))
@@ -99,7 +99,7 @@ class BloomSkipSpec extends AnyFunSuite {
     // file's bloom would hold all 60 keys and nothing would ever skip —
     // the whole-table-compact shape that motivated per-cell routing
     t.upsert(batch((0 until 60).map(i => (s"k$i", s"P${i % 6}", i.toDouble)): _*))
-    assert(t.snapshot().inputFiles.length == 6)
+    assert(t.liveFilePaths().length == 6)
     val pruned = t.lookupFiles(Seq("k7")) // lives in P1 only
     assert(pruned.size == 1 && pruned.head.startsWith("part=P1/"), pruned.toString)
   }
@@ -179,7 +179,7 @@ class BloomSkipSpec extends AnyFunSuite {
     val t = newTable(dir)
     // one commit spanning 6 partitions = 6 data files but ONE segment
     t.upsert(batch((0 until 60).map(i => (s"k$i", s"P${i % 6}", i.toDouble)): _*))
-    assert(t.snapshot().inputFiles.length == 6)
+    assert(t.liveFilePaths().length == 6)
     assert(bloomSegs(dir).size == 1, bloomSegs(dir).toString)
     // and each file still resolves ITS per-cell filter through the index
     val pruned = t.lookupFiles(Seq("k7"))

@@ -30,7 +30,7 @@ class DropColumnSpec extends AnyFunSuite {
     StructField("secret", StringType, nullable = true)))
 
   private def liveFileSchemas(t: AcidTable): Seq[StructType] =
-    t.snapshot().inputFiles.toSeq.map(f => spark.read.parquet(f).schema)
+    t.liveFilePaths().toSeq.map(f => spark.read.parquet(f).schema)
 
   test("drop is logical first, physical after compact; key columns protected") {
     val dir = Files.createTempDirectory("drop-col-").resolve("t").toString
@@ -90,7 +90,7 @@ class DropColumnSpec extends AnyFunSuite {
     assert(t3.droppedCols === Seq("secret"))
     val purged = t3.purgeDroppedColumns()
     assert(purged.droppedCols.isEmpty)
-    assert(purged.snapshot().inputFiles.toSeq
+    assert(purged.liveFilePaths().toSeq
       .forall(f => !spark.read.parquet(f).schema.fieldNames.contains("secret")),
       "purge left a live file carrying the dropped column")
     val readded = purged.addColumns(Seq(StructField("secret", StringType)))

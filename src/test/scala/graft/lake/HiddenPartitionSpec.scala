@@ -62,7 +62,7 @@ class HiddenPartitionSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1))).toMap
     assert(got == Map("a" -> "2024-01", "b" -> "2024-02", "c" -> "2024-02"))
     // the layout is real: directories carry the derived values
-    assert(t.snapshot().inputFiles.exists(_.contains("part=2024-01")))
+    assert(t.liveFilePaths().exists(_.contains("part=2024-01")))
   }
 
   test("NULL partition values fill in (the SQL partial-insert shape)") {
@@ -207,7 +207,7 @@ class HiddenPartitionSpec extends AnyFunSuite {
     // one bulk commit spread across the 16 hash partitions
     val rows = (0 until 200).map(i => Row(s"k$i", i.toLong))
     t.upsert(spark.createDataFrame(java.util.Arrays.asList(rows: _*), noP))
-    val live = t.snapshot().inputFiles.length
+    val live = t.liveFilePaths().length
     assert(live > 4, s"expected a spread layout, got $live files")
     // no hint passed: the keys determine their partitions via the transform
     val pruned = t.lookupFiles(Seq("k7"))

@@ -1,11 +1,8 @@
 package graft.lake
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,6 +26,7 @@ import graft.core.Record
   *     runs no Spark job, and its rows are read before `lookup` returns.
   */
 class LookupSpec extends AnyFunSuite {
+  import Routes._
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -42,46 +40,6 @@ class LookupSpec extends AnyFunSuite {
     Files.createTempDirectory("acid-lookup-").resolve("t").toString
 
   private def df(rs: Record*) = spark.createDataset(rs).toDF()
-
-  private def isDriverRead(df: DataFrame): Boolean =
-    df.queryExecution.logical.isInstanceOf[LocalRelation]
-
-  /** The rows of `read`, ordered by `t`'s PK, asserted equal on both
-    * routes: as the table gates it (`driver` says whether that is the
-    * driver read) and with the fast path switched off (the scan). */
-  private def bothRoutes(t: AcidTable, driver: Boolean = true)(read: => DataFrame): Seq[Row] = {
-    def run(local: Boolean): (Boolean, Seq[Row]) = {
-      AcidTable.localCommitEnabled = local
-      try {
-        val df = read
-        (isDriverRead(df), df.orderBy(t.pkCol).collect().toSeq)
-      } finally AcidTable.localCommitEnabled = true
-    }
-    val (onDriver, rows) = run(local = true)
-    val (scanOnDriver, scanRows) = run(local = false)
-    assert(onDriver == driver, s"driver route taken: $onDriver, expected $driver")
-    assert(!scanOnDriver, "the switched-off fast path still read on the driver")
-    assert(rows == scanRows, s"driver route $rows, scan $scanRows")
-    rows
-  }
-
-  /** Spark jobs started by `body`. */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // listener events are async: let earlier jobs' events drain before
-      // counting, and this body's arrive before reading the counter
-      Thread.sleep(500)
-      jobs.set(0)
-      body
-      Thread.sleep(500)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   private def mkTable(buckets: Int): AcidTable = {
     val t = AcidTable.create(spark, tmp(), schema, "primaryKeyValue",
@@ -107,7 +65,7 @@ class LookupSpec extends AnyFunSuite {
 
   test("the scan list prunes to the keys' buckets") {
     val t = mkTable(buckets = 8)
-    val all = t.snapshot().inputFiles.length
+    val all = t.liveFilePaths().length
     val one = t.lookupFiles(Seq("k3"))
     assert(one.nonEmpty && one.size < all,
       s"no skipping: scanned ${one.size} of $all files")
@@ -156,7 +114,7 @@ class LookupSpec extends AnyFunSuite {
     val got = bothRoutes(t)(t.lookup(Seq("7", "21", "garbage")))
       .map(r => (r.getLong(0), r.getDouble(2)))
     assert(got == Seq((7L, 10.5), (21L, 31.5)))
-    val all = t.snapshot().inputFiles.length
+    val all = t.liveFilePaths().length
     assert(t.lookupFiles(Seq("7")).size < all)
     assert(bothRoutes(t)(t.lookup(Seq("garbage"))).isEmpty)
   }
@@ -219,7 +177,7 @@ class LookupSpec extends AnyFunSuite {
     assert(got.map(_.getLong(2)) == Seq(7L))
     // pruning degrades to the conservative partition-level list, not to
     // an empty (rows-losing) bucket intersection
-    assert(t.lookupFiles(Seq("2024-01-07")).size == t.snapshot().inputFiles.length)
+    assert(t.lookupFiles(Seq("2024-01-07")).size == t.liveFilePaths().length)
     val hinted = bothRoutes(t, driver = false)(
       t.lookup(Seq("2024-01-07"), partitionsHint = Some(Seq("P1"))))
     assert(hinted.map(_.getLong(2)) == Seq(7L))
