@@ -61,6 +61,10 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
   */
 private[lake] final case class FileCell(part: String, bucket: Int)
 
+/** The cells one commit touches and, where a discovery job counted them,
+  * the batch's rows per partition (what sizes a dense commit's layout). */
+private[lake] final case class Touched(cells: Seq[FileCell], rows: Map[String, Long] = Map.empty)
+
 /** One inline deletion-vector entry (merge-on-read delete): the row whose
   * primary key renders as `key` is deleted from file-group cell (`part`,
   * `bucket`) WITHOUT rewriting the cell's data files. Entries ride the
@@ -638,7 +642,7 @@ final class AcidTable private (
           case None => b.select(partitionCol).distinct().collect()
             .map(r => String.valueOf(r.get(0))).toSeq
         }
-        (existing ++ incoming).distinct.map(FileCell(_, -1))
+        Touched((existing ++ incoming).distinct.map(FileCell(_, -1)))
       },
       resultOf = _ => b,
       outputBounded = isMetadataScale(b),
@@ -909,7 +913,7 @@ final class AcidTable private (
             img.select(col(partitionCol).cast("string").as("__p"), dataFiles.bucketExpr.as("__b"))
               .distinct().collect().map(r => FileCell(r.getString(0), r.getInt(1))).toSeq
           }.getOrElse(Nil)
-        (srcCells ++ nmbsCells ++ imageCells).distinct
+        srcCells.copy(cells = (srcCells.cells ++ nmbsCells ++ imageCells).distinct)
       },
       resultOf = snapT => clauseMerge(snapT, src, matched, notMatched, notMatchedBySource),
       outputBounded = srcLocal.isDefined || isMetadataScale(src),
@@ -1182,11 +1186,11 @@ final class AcidTable private (
               .map(r => FileCell(rowPart(r), rowBucket(r))).distinct
           }.toOption // an interpreted-eval surprise falls back, never fails
         }
-        local.getOrElse {
+        Touched(local.getOrElse {
           snap().filter(condition)
             .select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b"))
             .distinct().collect().map(r => FileCell(r.getString(0), r.getInt(1))).toSeq
-        }
+        })
       },
       resultOf = snapT => snapT.select(projCols: _*),
       // an UPDATE preserves row count — output volume tracks the touched
@@ -1251,11 +1255,11 @@ final class AcidTable private (
               .map(r => FileCell(rowPart(r), rowBucket(r))).distinct
           }.toOption
         }
-        local.getOrElse {
+        Touched(local.getOrElse {
           snap().filter(condition)
             .select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b"))
             .distinct().collect().map(r => FileCell(r.getString(0), r.getInt(1))).toSeq
-        }
+        })
       },
       resultOf = snapT => snapT.filter(!coalesce(condition, lit(false))),
       outputBounded = true,
@@ -1481,19 +1485,19 @@ final class AcidTable private (
       else None
     commitLoop(
       touchedOf = (snap, _) =>
-        localCells.getOrElse {
+        localCells.map(Touched(_)).getOrElse {
           if (stablePartitions && hasPart)
             // the caller's (pk, partition) rows are the batch: same job-free
-            // plan-read (or single distinct job) as an upsert's own rows
+            // plan-read (or single discovery job) as an upsert's own rows
             cellsBy(snap(), keysWithPartitions.select(col(partitionCol), col(pkCol)),
               keysDf, hint)
-          else hint.map(_.map(FileCell(_, -1))).getOrElse {
+          else Touched(hint.map(_.map(FileCell(_, -1))).getOrElse {
             // matched rows can live in any partition, but always in their
             // pk's bucket (a pure function of the key)
             snap().join(keysDf, Seq(pkCol), "left_semi")
               .select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b")).distinct()
               .collect().map(r => FileCell(r.getString(0), r.getInt(1))).toSeq
-          }
+          })
         },
       resultOf = snapT => antiByKeys(snapT, keysDf),
       localResultOf = localKeys.map(ks =>
@@ -2414,9 +2418,13 @@ final class AcidTable private (
     }
 
   /** Compaction: rewrite partitions that have accumulated more than
-    * `maxFilesPerPartition` small files into one file each — same content,
-    * new version. The COW write path emits one file per touched partition
-    * per commit, so long-running tables need this (at 100 TB this is the
+    * `maxFilesPerPartition` small files, or hold deletion-vector entries,
+    * into compaction's layout — same content, new version: one file per
+    * non-empty bucket above the layout floor, one bucketless file stream
+    * below it (`keyedLayout`). A partition already in that layout — no DV
+    * entry, only bucketed files, at most one per bucket, above the floor,
+    * which is how a keyed bulk load and trickle commits leave it — is
+    * carried, so compacting it rewrites nothing (at 100 TB this is the
     * background optimize job every lakehouse runs).
     *
     * With `clusterBy` (round 10 — the Delta `OPTIMIZE ZORDER BY` / Hudi
@@ -2439,12 +2447,12 @@ final class AcidTable private (
     * than 2^16.
     */
   /** Optional `partitions` scope (the Delta `OPTIMIZE … WHERE` analog):
-    * only the named partition values are rewritten — folded
-    * unconditionally (asking is the signal; the fragmentation threshold
-    * is for the unscoped sweep), or cluster-rewritten when `clusterBy`
-    * is set. At 100 TB maintenance runs partition-scoped by definition:
-    * the hot ingest partitions compact daily while the cold ones are
-    * never touched. */
+    * only the named partition values are rewritten — folded whatever
+    * their file count (asking is the signal; the fragmentation threshold
+    * is for the unscoped sweep) unless already in compaction's layout, or
+    * cluster-rewritten when `clusterBy` is set. At 100 TB maintenance runs
+    * partition-scoped by definition: the hot ingest partitions compact
+    * daily while the cold ones are never touched. */
   def compact(
       maxFilesPerPartition: Int = 4,
       clusterBy: Seq[String] = Nil,
@@ -2465,26 +2473,22 @@ final class AcidTable private (
     val dvParts = timeline.rootView(latestVersion()).dvs.map(e => dataFiles.partDir(e.part)).toSet
     val v = commitLoop(
       touchedOf = (_, files) => {
-        val byPartition = files().groupBy(e => dataFiles.dirOf(e._1))
-        val inScope: String => Boolean = partitions match {
-          case Some(ps) => ps.map(dataFiles.partDir).toSet.contains _
-          case None => _ => true
+        val scope = partitions.map(_.map(dataFiles.partDir).toSet)
+        // already in compaction's layout: nothing to fold
+        def laidOut(dir: String, fs: Seq[(String, Long)]): Boolean = {
+          val buckets = fs.map(f => dataFiles.bucketOf(f._1))
+          !dvParts(dir) && buckets.forall(_.isDefined) &&
+            buckets.distinct.size == buckets.size && keyedLayout(inputBytes(fs))
         }
-        val selected =
-          if (clusterBy.nonEmpty) byPartition.keys.filter(inScope) // layout op
-          else if (partitions.isDefined) byPartition.keys.filter(inScope)
-          else byPartition.filter(kv =>
-            kv._2.size > maxFilesPerPartition || dvParts.contains(kv._1)).keys
-        selected
-          .map(dataFiles.partValue)
-          // whole-partition scope: compaction's point is folding the
-          // partition's accumulated per-commit files; the plain rewrite
-          // emits one file per NON-EMPTY BUCKET (the file-group layout
-          // keyed commits rely on), so post-compaction a partition holds
-          // at most numBuckets files, each still subject to
-          // targetFileBytes; the clustered rewrite instead range-rolls
-          // bucketless files in cluster-key order
-          .map(FileCell(_, -1)).toSeq
+        // whole-partition scope, every partition in scope when clustering
+        // (a layout op); the plain rewrite emits one file per NON-EMPTY
+        // BUCKET above the floor, each still subject to targetFileBytes;
+        // the clustered one range-rolls bucketless files in key order
+        Touched(files().groupBy(e => dataFiles.dirOf(e._1)).collect {
+          case (d, fs) if scope.forall(_(d)) && (clusterBy.nonEmpty || !laidOut(d, fs) &&
+            (scope.isDefined || fs.size > maxFilesPerPartition || dvParts(d))) =>
+            FileCell(dataFiles.partValue(d), -1)
+        }.toSeq)
       },
       // identity rewrite: same rows, re-laid-out.
       // The driver kernel is identity too — when the partitions being
@@ -3440,31 +3444,31 @@ final class AcidTable private (
       snap: DataFrame,
       batch: DataFrame,
       keys: DataFrame,
-      hint: Option[Seq[String]]): Seq[FileCell] = {
+      hint: Option[Seq[String]]): Touched = {
     if (stablePartitions) {
       org.apache.spark.sql.graft.PlanShim
         .smallLocalRelation(batch.select(col(partitionCol), col(pkCol)), maxRows = 10000)
         .foreach { case (attrs, rows) =>
           val pdt = attrs.head.dataType
-          return rows.map(r => FileCell(
+          return Touched(rows.map(r => FileCell(
             String.valueOf(r.get(0, pdt)),
-            dataFiles.driverBucketOf(r.get(1, attrs(1).dataType)))).distinct
+            dataFiles.driverBucketOf(r.get(1, attrs(1).dataType)))).distinct)
         }
     }
     hint match {
-      case Some(parts) => parts.map(FileCell(_, -1))
+      case Some(parts) => Touched(parts.map(FileCell(_, -1)))
       case None =>
         val own = batch.select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b"))
-        if (stablePartitions)
-          own.distinct().collect().map(r => FileCell(r.getString(0), r.getInt(1))).toSeq
-        else {
-          // matched keys may live in any PARTITION, but always in their
-          // pk's bucket
-          val matched = snap.join(keys, Seq(pkCol), "left_semi")
-            .select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b"))
-          own.union(matched).distinct().collect()
-            .map(r => FileCell(r.getString(0), r.getInt(1))).toSeq
-        }
+        // matched keys may live in any PARTITION, but always in their
+        // pk's bucket
+        val found =
+          if (stablePartitions) own
+          else own.union(snap.join(keys, Seq(pkCol), "left_semi")
+            .select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b")))
+        // the discovery job counts each cell's rows: the dense-commit size
+        val counted = found.groupBy("__p", "__b").count().collect()
+        Touched(counted.map(r => FileCell(r.getString(0), r.getInt(1))).toSeq,
+          counted.groupMapReduce(_.getString(0))(_.getLong(2))(_ + _))
     }
   }
 
@@ -3489,7 +3493,7 @@ final class AcidTable private (
 
   private def commitLoop(
       // (DV-applied base snapshot, the base's (file, recorded size) entries)
-      touchedOf: (() => DataFrame, () => Seq[(String, Long)]) => Seq[FileCell],
+      touchedOf: (() => DataFrame, () => Seq[(String, Long)]) => Touched,
       resultOf: DataFrame => DataFrame,
       globalScope: Boolean = false,
       outputBounded: Boolean = true,
@@ -3558,7 +3562,7 @@ final class AcidTable private (
       // touched cells' entries (the rewrite materialized them). DV entries
       // are a root header — never a reason to expand the manifest.
       val baseDvs = baseView.dvs
-      val rawCells = touchedOf(
+      val Touched(rawCells, batchRows) = touchedOf(
         () => applyDvs(snapshotFromFiles(baseView.entries), baseDvs),
         () => baseView.entries)
       // cell-scoped metadata (round 14): resolve ONLY the touched
@@ -3567,22 +3571,17 @@ final class AcidTable private (
       // fast-path pre-image. Commit metadata cost is then O(touched), not
       // O(live files).
       val scopedFiles = filesForPartitions(baseView, rawCells.map(_.part).distinct)
-      // Dense distributed batches defeat the point of fine-grained cells:
-      // a commit touching most of a partition's buckets conflicts with any
-      // concurrent writer in that partition regardless of scope, yet pays
-      // numBuckets× the output files (and every reader pays it again). So
-      // a NON-metadata-scale commit covering ≥ half a partition's buckets
-      // collapses that partition to whole-partition scope and writes ONE
-      // sized file stream per partition (bucketless layout). Small
-      // transactional commits — the concurrency case the cells exist
-      // for — are outputBounded and never coarsen; an escalated-legacy
-      // rewrite of a small commit re-buckets as before (self-healing), and
-      // compaction's whole-partition cells stay out of `coarseParts`, so
-      // it still folds partitions back INTO per-bucket file groups.
+      // A NON-metadata-scale commit covering ≥ half a partition's buckets
+      // writes it whole, laid out by [[keyedLayout]] of the discovery
+      // job's row counts: below the floor the partition collapses to ONE
+      // bucketless file stream, above it keeps its per-bucket cells (a
+      // keyed bulk load lands in compaction's layout in one pass). Small
+      // transactional commits are outputBounded and never coarsen.
       val denseParts: Set[String] =
         if (outputBounded) Set.empty
         else rawCells.groupBy(_.part).collect {
-          case (p, cs) if cs.count(_.bucket >= 0) >= math.max(2, (numBuckets + 1) / 2) => p
+          case (p, cs) if cs.count(_.bucket >= 0) >= math.max(2, (numBuckets + 1) / 2) &&
+              !keyedLayout(batchRows.getOrElse(p, 0L) * schema.defaultSize) => p
         }.toSet
       val (touched0, legacyParts) = expandForLegacy(
         rawCells.map(c => if (denseParts(c.part)) FileCell(c.part, -1) else c).distinct,
@@ -3592,27 +3591,14 @@ final class AcidTable private (
       val coarseParts =
         if (clusterBy.nonEmpty) touched.map(_.part).toSet
         else if (rebucket) {
-          // compaction BIN-PACKS small partitions (round 18, the
-          // acid_scan_identity 2× fix): folding a tiny partition into
-          // numBuckets file groups writes numBuckets near-empty parquet
-          // files, and every subsequent scan pays numBuckets× the
-          // open/footer cost — measured as the whole 0.26 s identity-pair
-          // gap (512 × ~5 KB files vs stock's 16). A partition keeps the
-          // keyed per-bucket layout only when its live bytes give each
-          // bucket file at least [[AcidTable.CompactMinBucketFileBytes]];
-          // below that it compacts to partition scope — one size-rolled
-          // file stream, the Delta-OPTIMIZE bin-packing behavior. Keyed
-          // commits on such a partition stay correct (a bucketless file
-          // belongs to every bucket — the standing conservatism), and the
-          // next compaction past the threshold re-buckets it.
-          // one pass over touchedFiles (a 20 k-partition compact must not
-          // pay O(partitions × files) membership filters)
+          // compaction sizes a partition by its live bytes; below the floor
+          // it BIN-PACKS into one size-rolled bucketless stream (the
+          // Delta-OPTIMIZE behavior). One pass over touchedFiles (a 20 k-
+          // partition compact must not pay O(partitions × files) filters)
           val bytesByDir = touchedFiles.groupBy(f => dataFiles.dirOf(f._1))
             .map { case (d, fs) => d -> inputBytes(fs) }
-          touched.iterator.map(_.part).filter { p =>
-            bytesByDir.getOrElse(dataFiles.partDir(p), 0L) <
-              numBuckets.toLong * AcidTable.CompactMinBucketFileBytes
-          }.toSet
+          touched.iterator.map(_.part)
+            .filterNot(p => keyedLayout(bytesByDir.getOrElse(dataFiles.partDir(p), 0L))).toSet
         }
         else denseParts ++ legacyParts
       val inB = if (outputBounded) inputBytes(touchedFiles) else Long.MaxValue
@@ -3914,6 +3900,14 @@ final class AcidTable private (
     (grouped.flatMap(_._2).toSeq, grouped.collect { case (p, _, true) => p }.toSet)
   }
 
+  /** The one layout rule of a partition written whole: keyed per-bucket
+    * files when its `bytes` give each bucket at least
+    * [[AcidTable.CompactMinBucketFileBytes]], bucketless below. A dense
+    * commit sizes a partition as batch rows × `schema.defaultSize` (the
+    * [[DataFiles.recordsPerFile]] estimate), compaction by live bytes. */
+  private def keyedLayout(bytes: Long): Boolean =
+    bytes >= numBuckets.toLong * AcidTable.CompactMinBucketFileBytes
+
   /** Sum of the recorded sizes of `files` — the scan volume a commit's
     * rewrite will read. Sizes come from the manifest's segments (recorded
     * at publish), so commit sizing costs ZERO filesystem calls, which is
@@ -3970,17 +3964,19 @@ final class AcidTable private (
       else when(col(partitionCol).cast("string").isin(coarseParts.toSeq: _*), lit(-1))
         .otherwise(dataFiles.bucketExpr)
     val withBucket = checked.withColumn(DataFiles.BucketCol, bucketCol)
-    // Write parallelism tracks rewritten BYTES, not partition count: below
-    // one target file's worth of input the whole rewrite is a single write
-    // task reached by a narrow coalesce — no shuffle stage at all (the
-    // dynamic-partition writer still splits output files per cell). Above
-    // it, hash-repartition by cell so tasks scale with what the commit
-    // rewrites. Small transactional commits take the first path;
-    // compaction and bulk loads the second.
+    // Write parallelism tracks rewritten BYTES: up to the driver budget
+    // the rewrite is one write task reached by a narrow coalesce — no
+    // shuffle stage (the dynamic-partition writer still splits files per
+    // cell). Above it, hash-repartition by cell into one task per
+    // partition or core, never more than output cells: every core works,
+    // and a keyed bulk load's 256 cells write in 8 tasks, not 256.
     val shaped =
-      if (inBytes < targetFileBytes) withBucket.coalesce(1)
-      else withBucket.repartition(math.max(touched.size, 1),
-        col(partitionCol), col(DataFiles.BucketCol))
+      if (inBytes <= AcidTable.FastPathMaxBytes) withBucket.coalesce(1)
+      else {
+        val cells = touched.map(c => if (c.bucket >= 0 || coarseParts(c.part)) 1 else numBuckets)
+        val tasks = math.max(touched.map(_.part).distinct.size, spark.sparkContext.defaultParallelism)
+        withBucket.repartition(math.min(cells.sum, tasks), col(partitionCol), col(DataFiles.BucketCol))
+      }
     // clustered rewrite: order each write task's rows by (partition,
     // bucket, cluster key). The prefix matches the dynamic-partition
     // writer's required ordering, so FileFormatWriter inserts no extra
@@ -4131,9 +4127,9 @@ final class AcidTable private (
     * placement is not a pure key function.
     */
   private def localCellsOf(
-      rows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]]): Option[Seq[FileCell]] =
+      rows: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]]): Option[Touched] =
     if (!stablePartitions) None
-    else rows.map(_.map(r => FileCell(rowPart(r), rowBucket(r))).distinct)
+    else rows.map(rs => Touched(rs.map(r => FileCell(rowPart(r), rowBucket(r))).distinct))
 
   /** Driver image of [[windowMerge]] over an already-deduped source:
     * matched targets take `updateCols` from their source row, unmatched
@@ -4548,22 +4544,19 @@ object AcidTable {
     */
   val FastPathMaxBytes: Long = 4L * 1024 * 1024
 
-  /** Compaction bin-packing floor (round 18): a partition keeps the
-    * per-bucket file-group layout through compact() only when its live
-    * bytes give each bucket file at least this much; below it the
-    * partition compacts to ONE size-rolled bucketless stream. A bucket
-    * file under 64 KiB is pure overhead — parquet footer/dictionary
-    * bytes rival the data, and a full scan pays numBuckets× the
-    * open/footer cost (the acid_scan_identity 2× drift: 512 × ~5 KB
-    * files). 64 KiB keeps the floor LOW on purpose: any partition whose
-    * cells carry real data (≥ numBuckets × 64 KiB ≈ 2 MiB at 32
-    * buckets) keeps the keyed file-group layout that makes trickle DML
-    * and CDC diffs cell-scoped; at 100 TB every partition is far above
-    * it. Tunable: `-Dgraft.compact.minBucketFileBytes=N`. */
-  val CompactMinBucketFileBytes: Long =
-    sys.props.get("graft.compact.minBucketFileBytes")
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .getOrElse(64L * 1024)
+  /** The layout floor (round 18): a partition written whole — by
+    * compact() or by a dense distributed commit — keeps the per-bucket
+    * file-group layout only when its bytes give each bucket file at least
+    * this much; below it, ONE size-rolled bucketless stream
+    * (`keyedLayout`). A bucket file under 64 KiB is pure overhead —
+    * parquet footer/dictionary bytes rival the data, and a full scan pays
+    * numBuckets× the open/footer cost (the acid_scan_identity 2× drift:
+    * 512 × ~5 KB files). 64 KiB keeps the floor LOW on purpose: any
+    * partition whose cells carry real data (≥ numBuckets × 64 KiB ≈ 2 MiB
+    * at 32 buckets) keeps the keyed file-group layout that makes trickle
+    * DML and CDC diffs cell-scoped; at 100 TB every partition is far
+    * above it. */
+  val CompactMinBucketFileBytes: Long = 64L * 1024
 
   /** Row cap for the RLI small-commit driver run (round 18): at or under
     * it, a distributed commit's index delta is read back and written on

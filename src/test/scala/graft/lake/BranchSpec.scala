@@ -167,19 +167,8 @@ class BranchSpec extends AnyFunSuite {
     val t = mkTable((0 until 40).map(i => (s"k$i", s"p${i % 4}", i.toDouble)))
     val br = t.createBranch("b")
     br.upsert(Seq(("k2", "p2", 123.0)).toDF("pk", "part", "v"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      t.publishBranch("b")
-      Thread.sleep(500) // listener events are async; settle before reading
-      assert(jobs.get() === 0,
-        s"publish must be metadata + hard links only (saw ${jobs.get()} jobs)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = Routes.jobsOf(t.publishBranch("b"))
+    assert(jobs === 0, s"publish must be metadata + hard links only (saw $jobs jobs)")
     assert(contents(t).contains(("k2", "p2", 123.0)))
   }
 

@@ -1,11 +1,9 @@
 package graft.lake
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Random
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -236,50 +234,36 @@ class CommitFastPathSpec extends AnyFunSuite {
     t.merge(b(("a", "p0", "3")), updateCols = Seq("v"), Some(Seq("p0")))
     t.delete(b(("b", "p1", "2")).select("pk", "part"), Some(Seq("p1")))
 
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    assert(Routes.jobsOf(t.upsert(b(("c", "p2", "9")), Some(Seq("p2")))) === 0, "upsert")
+    assert(Routes.jobsOf(t.merge(b(("c", "p2", "10")), updateCols = Seq("v"), Some(Seq("p2")))) === 0,
+      "merge")
+    assert(Routes.jobsOf(t.delete(b(("c", "p2", "")).select("pk", "part"), Some(Seq("p2")))) === 0,
+      "delete")
+    locally {
+      import org.apache.spark.sql.functions.{col, concat, lit}
+      t.upsert(b(("e", "p2", "5")), Some(Seq("p2")))
+      // warm the UPDATE path (kernel build + first write), then count:
+      // discovery AND rewrite must both stay on the driver
+      t.update(Seq("v" -> concat(lit("w"), col("v"))), col("pk") === "e")
+      assert(Routes.jobsOf(
+        t.update(Seq("v" -> concat(lit("u"), col("v"))), col("pk") === "e")) === 0,
+        "update")
     }
-    spark.sparkContext.addSparkListener(listener)
+    AcidTable.localCommitEnabled = false
     try {
-      def counted(body: => Unit): Int = {
-        jobs.set(0)
-        body
-        // listener events are async; settle before reading the counter
-        Thread.sleep(500)
-        jobs.get()
-      }
-      assert(counted(t.upsert(b(("c", "p2", "9")), Some(Seq("p2")))) === 0, "upsert")
-      assert(counted(t.merge(b(("c", "p2", "10")), updateCols = Seq("v"), Some(Seq("p2")))) === 0,
-        "merge")
-      assert(counted(t.delete(b(("c", "p2", "")).select("pk", "part"), Some(Seq("p2")))) === 0,
-        "delete")
-      locally {
-        import org.apache.spark.sql.functions.{col, concat, lit}
-        t.upsert(b(("e", "p2", "5")), Some(Seq("p2")))
-        // warm the UPDATE path (kernel build + first write), then count:
-        // discovery AND rewrite must both stay on the driver
-        t.update(Seq("v" -> concat(lit("w"), col("v"))), col("pk") === "e")
-        assert(counted(
-          t.update(Seq("v" -> concat(lit("u"), col("v"))), col("pk") === "e")) === 0,
-          "update")
-      }
-      AcidTable.localCommitEnabled = false
-      try {
-        // distributed warm reps for this session state, then count — the
-        // one-job budget must hold for ALL THREE commit kinds whenever the
-        // fast path is ineligible (big input, unsupported schema, kill
-        // switch), because that budget is what bounds txn/s there
-        t.upsert(b(("d", "p3", "1")), Some(Seq("p3")))
-        t.merge(b(("d", "p3", "2")), updateCols = Seq("v"), Some(Seq("p3")))
-        t.delete(b(("x", "p3", "")).select("pk", "part"), Some(Seq("p3")))
-        assert(counted(t.upsert(b(("d", "p3", "3")), Some(Seq("p3")))) === 1,
-          "upsert (fast path disabled)")
-        assert(counted(t.merge(b(("d", "p3", "4")), updateCols = Seq("v"), Some(Seq("p3")))) === 1,
-          "merge (fast path disabled)")
-        assert(counted(t.delete(b(("d", "p3", "")).select("pk", "part"), Some(Seq("p3")))) === 1,
-          "delete (fast path disabled)")
-      } finally AcidTable.localCommitEnabled = true
-    } finally spark.sparkContext.removeSparkListener(listener)
+      // distributed warm reps for this session state, then count — the
+      // one-job budget must hold for ALL THREE commit kinds whenever the
+      // fast path is ineligible (big input, unsupported schema, kill
+      // switch), because that budget is what bounds txn/s there
+      t.upsert(b(("d", "p3", "1")), Some(Seq("p3")))
+      t.merge(b(("d", "p3", "2")), updateCols = Seq("v"), Some(Seq("p3")))
+      t.delete(b(("x", "p3", "")).select("pk", "part"), Some(Seq("p3")))
+      assert(Routes.jobsOf(t.upsert(b(("d", "p3", "3")), Some(Seq("p3")))) === 1,
+        "upsert (fast path disabled)")
+      assert(Routes.jobsOf(t.merge(b(("d", "p3", "4")), updateCols = Seq("v"), Some(Seq("p3")))) === 1,
+        "merge (fast path disabled)")
+      assert(Routes.jobsOf(t.delete(b(("d", "p3", "")).select("pk", "part"), Some(Seq("p3")))) === 1,
+        "delete (fast path disabled)")
+    } finally AcidTable.localCommitEnabled = true
   }
 }

@@ -1,9 +1,7 @@
 package graft.lake
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -39,18 +37,7 @@ class IndexesSpec extends AnyFunSuite {
   }
 
   /** Spark jobs one upsert of [[bulk]] runs. */
-  private def jobsOf(t: AcidTable): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      t.upsert(bulk)
-      Thread.sleep(500) // listener events are delivered asynchronously
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsOf(t: AcidTable): Int = Routes.jobsOf { t.upsert(bulk); () }
 
   test("distributed route: one job builds per-file stats and blooms equal to the driver route's") {
     val plain = newTable(indexed = false)

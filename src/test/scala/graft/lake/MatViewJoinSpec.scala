@@ -275,19 +275,8 @@ class MatViewJoinSpec extends AnyFunSuite {
     val f = seededFact("zj"); val d = seededDim("zj")
     val mv = mkView("zj", f, d)
     f.upsert(factRows(("k1", "p0", "d2", 12L, "2.00"))) // fk migration too
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      mv.refresh()
-      Thread.sleep(500) // listener events are async; settle before reading
-      assert(jobs.get() === 0,
-        s"fact-only join trickle must fold on the driver (saw ${jobs.get()} jobs)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = Routes.jobsOf { mv.refresh(); () }
+    assert(jobs === 0, s"fact-only join trickle must fold on the driver (saw $jobs jobs)")
     assert(got(mv) === expect(f, d))
     // and a DIM change still folds exactly (distributed path)
     d.upsert(dimRows(("d2", "q1", "E", 2L)))
@@ -393,19 +382,8 @@ class MatViewJoinSpec extends AnyFunSuite {
   test("two-dim star view: fact-only trickle is driver-only, zero Spark jobs") {
     val (f, d1, d2, mv) = seededStar("starz")
     f.upsert(fact2Rows(("k1", "p0", "d2", "g2", 11L))) // both-fk migration
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      mv.refresh()
-      Thread.sleep(500)
-      assert(jobs.get() === 0,
-        s"fact-only two-dim trickle must fold on the driver (saw ${jobs.get()} jobs)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = Routes.jobsOf { mv.refresh(); () }
+    assert(jobs === 0, s"fact-only two-dim trickle must fold on the driver (saw $jobs jobs)")
     assert(gotStar(mv) === expectStar(f, d1, d2))
   }
 

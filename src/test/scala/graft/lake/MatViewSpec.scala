@@ -457,19 +457,8 @@ class MatViewSpec extends AnyFunSuite {
     val t = seeded("zj")
     val mv = MatView.create(spark, t, tmp("zj-v"), Seq("grp"), aggsCSD)
     t.upsert(rows(("k1", "p0", "a", 12L, "2.00")))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      mv.refresh()
-      Thread.sleep(500) // listener events are async; settle before reading
-      assert(jobs.get() === 0,
-        s"trickle refresh must run on the driver kernels (saw ${jobs.get()} jobs)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = Routes.jobsOf { mv.refresh(); () }
+    assert(jobs === 0, s"trickle refresh must run on the driver kernels (saw $jobs jobs)")
     assert(got(mv) === expect(t))
   }
 }

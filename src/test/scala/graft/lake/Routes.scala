@@ -1,8 +1,12 @@
 package graft.lake
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.BusShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.Assertions._
@@ -10,7 +14,7 @@ import org.scalatest.Assertions._
 import graft.TestSpark
 
 /** The two read routes of a table, for specs that hold the driver route
-  * to the distributed scan's answer. */
+  * to the distributed scan's answer, and the Spark work a body runs. */
 object Routes {
 
   def isDriverRead(df: DataFrame): Boolean =
@@ -37,20 +41,31 @@ object Routes {
 
   /** Spark jobs started by `body`. */
   def jobsOf(body: => Unit): Int = {
-    val sc = TestSpark.spark.sparkContext
     val jobs = new AtomicInteger
-    val listener = new SparkListener {
+    during(new SparkListener {
       override def onJobStart(s: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
+    })(body)
+    jobs.get()
+  }
+
+  /** The output bytes of each Spark task `body` ran, one entry per task:
+    * its size is the task count, its non-zero entries the writing tasks. */
+  def tasksOf(body: => Unit): Seq[Long] = {
+    val written = new ConcurrentLinkedQueue[Long]
+    during(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        written.add(Option(e.taskMetrics).fold(0L)(_.outputMetrics.bytesWritten))
+    })(body)
+    written.asScala.toSeq
+  }
+
+  /** Runs `body` with `listener` registered and hears exactly its events:
+    * the bus is drained before the listener is added, so no earlier event
+    * reaches it, and again after `body`, so every event it posted has. */
+  private def during(listener: SparkListener)(body: => Unit): Unit = {
+    val sc = TestSpark.spark.sparkContext
+    BusShim.drain(sc)
     sc.addSparkListener(listener)
-    try {
-      // listener events are async: let earlier jobs' events drain before
-      // counting, and this body's arrive before reading the counter
-      Thread.sleep(500)
-      jobs.set(0)
-      body
-      Thread.sleep(500)
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
+    try { body; BusShim.drain(sc) } finally sc.removeSparkListener(listener)
   }
 }

@@ -73,22 +73,12 @@ class WidenColumnSpec extends AnyFunSuite {
     val t = mk().widenColumn("cnt", LongType)
     // a metadata-scale keyed commit takes the local (zero-job) path and
     // must read the pre-widen int32 file as long without corruption
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     val batch = Seq(("k2", "p0", 7000000000L, 0.5f, BigDecimal("7.00")))
       .toDF("pk", "part", "cnt", "ratio", "amt")
       .select(col("pk"), col("part"), col("cnt"), col("ratio"),
         col("amt").cast("decimal(10,2)"))
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      t.upsert(batch)
-      Thread.sleep(500)
-      assert(jobs.get() == 0, s"expected the driver fast path (saw ${jobs.get()} jobs)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = Routes.jobsOf { t.upsert(batch); () }
+    assert(jobs == 0, s"expected the driver fast path (saw $jobs jobs)")
     val rows = t.snapshot().orderBy("pk").collect()
     assert(rows.find(_.getString(0) == "k2").get.getLong(2) == 7000000000L)
     assert(rows.find(_.getString(0) == "k4").get.getLong(2) == 4L,

@@ -1,9 +1,7 @@
 package graft.lake
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -72,22 +70,16 @@ class WriteStatsSpec extends AnyFunSuite {
     val t = newTable()
     // warm codegen/writer init outside the counted window
     t.upsert(batch(("w1", "P0", 1L)), Some(Seq("P0")))
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    var v = -1L
+    val jobs = Routes.jobsOf {
+      v = t.upsert(batch(("k1", "P1", 500L), ("k2", "P1", 600L)), Some(Seq("P1")))
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      jobs.set(0)
-      val v = t.upsert(batch(("k1", "P1", 500L), ("k2", "P1", 600L)), Some(Seq("P1")))
-      Thread.sleep(500)
-      assert(jobs.get() === 0, "stats recording broke the fast path's 0-job property")
-      // and the stats genuinely landed: the new commit's files prune
-      val newFiles = t.indexes.rangePrunedFiles(Map("x" -> (500L, 600L)), v)
-      val none = t.indexes.rangePrunedFiles(Map("x" -> (10000L, 10001L)), v)
-      assert(!none.exists(newFiles.contains),
-        "fast-path files missing stats entries: nothing pruned")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs === 0, "stats recording broke the fast path's 0-job property")
+    // and the stats genuinely landed: the new commit's files prune
+    val newFiles = t.indexes.rangePrunedFiles(Map("x" -> (500L, 600L)), v)
+    val none = t.indexes.rangePrunedFiles(Map("x" -> (10000L, 10001L)), v)
+    assert(!none.exists(newFiles.contains),
+      "fast-path files missing stats entries: nothing pruned")
   }
 
   test("a fast-path commit over two partitions records each file's own range") {
