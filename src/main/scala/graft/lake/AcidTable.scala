@@ -3973,9 +3973,9 @@ final class AcidTable private (
     val shaped =
       if (inBytes <= AcidTable.FastPathMaxBytes) withBucket.coalesce(1)
       else {
-        val cells = touched.map(c => if (c.bucket >= 0 || coarseParts(c.part)) 1 else numBuckets)
+        val cells = touched.map(c => if (c.bucket >= 0 || coarseParts(c.part)) 1 else numBuckets).sum
         val tasks = math.max(touched.map(_.part).distinct.size, spark.sparkContext.defaultParallelism)
-        withBucket.repartition(math.min(cells.sum, tasks), col(partitionCol), col(DataFiles.BucketCol))
+        withBucket.repartition(math.min(cells, tasks), col(partitionCol), col(DataFiles.BucketCol))
       }
     // clustered rewrite: order each write task's rows by (partition,
     // bucket, cluster key). The prefix matches the dynamic-partition
