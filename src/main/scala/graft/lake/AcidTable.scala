@@ -7,7 +7,7 @@ import java.util.UUID
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 /** Transactional (ACID) keyed, partitioned table over plain parquet — the
   * Spark-native replacement for the reference's Hudi COW + OCC layer
@@ -61,9 +61,9 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
   */
 private[lake] final case class FileCell(part: String, bucket: Int)
 
-/** The cells one commit touches and, where a discovery job counted them,
-  * the batch's rows per partition (what sizes a dense commit's layout). */
-private[lake] final case class Touched(cells: Seq[FileCell], rows: Map[String, Long] = Map.empty)
+/** The cells one commit touches and, where a discovery job summed them,
+  * the batch's value bytes per partition (a dense commit's size). */
+private[lake] final case class Touched(cells: Seq[FileCell], bytes: Map[String, Long] = Map.empty)
 
 /** One inline deletion-vector entry (merge-on-read delete): the row whose
   * primary key renders as `key` is deleted from file-group cell (`part`,
@@ -2474,10 +2474,13 @@ final class AcidTable private (
     val v = commitLoop(
       touchedOf = (_, files) => {
         val scope = partitions.map(_.map(dataFiles.partDir).toSet)
-        // already in compaction's layout: nothing to fold
+        // already in compaction's layout: nothing to fold — never with a
+        // schema ledger outstanding (purgeDroppedColumns' compact(0) must
+        // rewrite every file without dropped, renamed or defaulted columns)
+        val ledger = droppedCols.nonEmpty || renamedCols.nonEmpty || columnDefaults.nonEmpty
         def laidOut(dir: String, fs: Seq[(String, Long)]): Boolean = {
           val buckets = fs.map(f => dataFiles.bucketOf(f._1))
-          !dvParts(dir) && buckets.forall(_.isDefined) &&
+          !ledger && !dvParts(dir) && buckets.forall(_.isDefined) &&
             buckets.distinct.size == buckets.size && keyedLayout(inputBytes(fs))
         }
         // whole-partition scope, every partition in scope when clustering
@@ -3458,17 +3461,22 @@ final class AcidTable private (
     hint match {
       case Some(parts) => Touched(parts.map(FileCell(_, -1)))
       case None =>
-        val own = batch.select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b"))
+        // the discovery job also sums each cell's value bytes (strings at
+        // their length): the dense-commit size, near what parquet stores
+        val width = batch.schema.fields.map(f => f.dataType match {
+          case StringType | BinaryType => coalesce(octet_length(col(f.name)), lit(0))
+          case dt => lit(dt.defaultSize)
+        }).reduce(_ + _).cast("long")
+        val own = batch.select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b"), width.as("__w"))
         // matched keys may live in any PARTITION, but always in their
         // pk's bucket
         val found =
           if (stablePartitions) own
           else own.union(snap.join(keys, Seq(pkCol), "left_semi")
-            .select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b")))
-        // the discovery job counts each cell's rows: the dense-commit size
-        val counted = found.groupBy("__p", "__b").count().collect()
-        Touched(counted.map(r => FileCell(r.getString(0), r.getInt(1))).toSeq,
-          counted.groupMapReduce(_.getString(0))(_.getLong(2))(_ + _))
+            .select(col(partitionCol).as("__p"), dataFiles.bucketExpr.as("__b"), lit(0L)))
+        val sized = found.groupBy("__p", "__b").agg(sum("__w")).collect()
+        Touched(sized.map(r => FileCell(r.getString(0), r.getInt(1))).toSeq,
+          sized.groupMapReduce(_.getString(0))(_.getLong(2))(_ + _))
     }
   }
 
@@ -3562,7 +3570,7 @@ final class AcidTable private (
       // touched cells' entries (the rewrite materialized them). DV entries
       // are a root header — never a reason to expand the manifest.
       val baseDvs = baseView.dvs
-      val Touched(rawCells, batchRows) = touchedOf(
+      val Touched(rawCells, batchBytes) = touchedOf(
         () => applyDvs(snapshotFromFiles(baseView.entries), baseDvs),
         () => baseView.entries)
       // cell-scoped metadata (round 14): resolve ONLY the touched
@@ -3571,9 +3579,12 @@ final class AcidTable private (
       // fast-path pre-image. Commit metadata cost is then O(touched), not
       // O(live files).
       val scopedFiles = filesForPartitions(baseView, rawCells.map(_.part).distinct)
+      // recorded live bytes per touched partition: one pass, no fs call
+      val liveBytes = scopedFiles.groupMapReduce(f => dataFiles.dirOf(f._1))(_._2)(_ + _)
+      def partBytes(p: String): Long = liveBytes.getOrElse(dataFiles.partDir(p), 0L)
       // A NON-metadata-scale commit covering ≥ half a partition's buckets
-      // writes it whole, laid out by [[keyedLayout]] of the discovery
-      // job's row counts: below the floor the partition collapses to ONE
+      // writes it whole, laid out by [[keyedLayout]] of its live plus its
+      // batch bytes: below the floor the partition collapses to ONE
       // bucketless file stream, above it keeps its per-bucket cells (a
       // keyed bulk load lands in compaction's layout in one pass). Small
       // transactional commits are outputBounded and never coarsen.
@@ -3581,7 +3592,7 @@ final class AcidTable private (
         if (outputBounded) Set.empty
         else rawCells.groupBy(_.part).collect {
           case (p, cs) if cs.count(_.bucket >= 0) >= math.max(2, (numBuckets + 1) / 2) &&
-              !keyedLayout(batchRows.getOrElse(p, 0L) * schema.defaultSize) => p
+              !keyedLayout(batchBytes.getOrElse(p, 0L) + partBytes(p)) => p
         }.toSet
       val (touched0, legacyParts) = expandForLegacy(
         rawCells.map(c => if (denseParts(c.part)) FileCell(c.part, -1) else c).distinct,
@@ -3590,18 +3601,15 @@ final class AcidTable private (
       val touchedFiles = scopedFiles.filter(f => touched.exists(c => dataFiles.inCell(f._1, c)))
       val coarseParts =
         if (clusterBy.nonEmpty) touched.map(_.part).toSet
-        else if (rebucket) {
-          // compaction sizes a partition by its live bytes; below the floor
-          // it BIN-PACKS into one size-rolled bucketless stream (the
-          // Delta-OPTIMIZE behavior). One pass over touchedFiles (a 20 k-
-          // partition compact must not pay O(partitions × files) filters)
-          val bytesByDir = touchedFiles.groupBy(f => dataFiles.dirOf(f._1))
-            .map { case (d, fs) => d -> inputBytes(fs) }
-          touched.iterator.map(_.part)
-            .filterNot(p => keyedLayout(bytesByDir.getOrElse(dataFiles.partDir(p), 0L))).toSet
-        }
+        // compaction rewrites whole partitions, sized by their live bytes;
+        // below the floor one BIN-PACKS into one size-rolled bucketless
+        // stream (the Delta-OPTIMIZE behavior)
+        else if (rebucket) touched.map(_.part).filterNot(p => keyedLayout(partBytes(p))).toSet
         else denseParts ++ legacyParts
       val inB = if (outputBounded) inputBytes(touchedFiles) else Long.MaxValue
+      // a distributed rewrite below this input is one write task;
+      // compaction's spreads over the cores past the driver budget
+      val narrowBelow = if (rebucket) AcidTable.FastPathMaxBytes else targetFileBytes
       // whether the driver fast path wrote every new file: its files sit in
       // the row cache, so the index pass reads them with zero Spark jobs
       var fastPathRan = fastEligible(inB)
@@ -3617,7 +3625,7 @@ final class AcidTable private (
             touched, coarseParts)
         else writeTouched(
           resultOf(applyDvs(snapshotFromFiles(touchedFiles), baseDvs)),
-          touched, inB, coarseParts, sortCols)
+          touched, inB < narrowBelow, coarseParts, sortCols)
       beforePublishHook()
       // inner publish loop: losing the version race does NOT force a full
       // recompute under `stablePartitions` (partition placement a pure
@@ -3811,7 +3819,7 @@ final class AcidTable private (
                     resultOf(applyDvs(
                       snapshotFromFiles(newSnapFiles), redoDvs))
                       .filter(cellFilter(overlap)),
-                    overlap, redoInB, redoCoarse, sortCols)
+                    overlap, redoInB < narrowBelow, redoCoarse, sortCols)
                 newFiles = keptFiles ++ redoneFiles
                 fastPathRan &&= redoFast
                 pending = null
@@ -3902,9 +3910,9 @@ final class AcidTable private (
 
   /** The one layout rule of a partition written whole: keyed per-bucket
     * files when its `bytes` give each bucket at least
-    * [[AcidTable.CompactMinBucketFileBytes]], bucketless below. A dense
-    * commit sizes a partition as batch rows × `schema.defaultSize` (the
-    * [[DataFiles.recordsPerFile]] estimate), compaction by live bytes. */
+    * [[AcidTable.CompactMinBucketFileBytes]], bucketless below. `bytes` are
+    * recorded live bytes, plus a dense commit's batch value bytes (which
+    * parquet stores near that size unless the values compress). */
   private def keyedLayout(bytes: Long): Boolean =
     bytes >= numBuckets.toLong * AcidTable.CompactMinBucketFileBytes
 
@@ -3933,7 +3941,7 @@ final class AcidTable private (
   private def writeTouched(
       result: DataFrame,
       touched: Seq[FileCell],
-      inBytes: Long = Long.MaxValue,
+      narrow: Boolean = false,
       coarseParts: Set[String] = Set.empty,
       sortCols: Seq[Column] = Nil): Seq[(String, Long)] = {
     if (touched.isEmpty) return Nil
@@ -3964,14 +3972,13 @@ final class AcidTable private (
       else when(col(partitionCol).cast("string").isin(coarseParts.toSeq: _*), lit(-1))
         .otherwise(dataFiles.bucketExpr)
     val withBucket = checked.withColumn(DataFiles.BucketCol, bucketCol)
-    // Write parallelism tracks rewritten BYTES: up to the driver budget
-    // the rewrite is one write task reached by a narrow coalesce — no
-    // shuffle stage (the dynamic-partition writer still splits files per
-    // cell). Above it, hash-repartition by cell into one task per
-    // partition or core, never more than output cells: every core works,
-    // and a keyed bulk load's 256 cells write in 8 tasks, not 256.
+    // Write parallelism tracks rewritten BYTES: a `narrow` (small) rewrite
+    // is one write task reached by a coalesce — no shuffle stage (the
+    // dynamic-partition writer still splits files per cell). Otherwise
+    // hash-repartition by cell into one task per partition or core, never
+    // more than output cells: a keyed bulk load's 256 cells take 8 tasks.
     val shaped =
-      if (inBytes <= AcidTable.FastPathMaxBytes) withBucket.coalesce(1)
+      if (narrow) withBucket.coalesce(1)
       else {
         val cells = touched.map(c => if (c.bucket >= 0 || coarseParts(c.part)) 1 else numBuckets).sum
         val tasks = math.max(touched.map(_.part).distinct.size, spark.sparkContext.defaultParallelism)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -45,13 +46,25 @@ class LayoutSpec extends AnyFunSuite {
 
   private def floorBytes(t: AcidTable): Long = t.numBuckets * AcidTable.CompactMinBucketFileBytes
 
-  /** 8 partitions of 40 000 rows with 64 hex characters each: 2.7 MB per
-    * partition by the row-size estimate, and above the floor on disk. The
-    * output bytes of each task of its load ride along. */
+  /** `parts` partitions of 40 000 rows with 64 hex characters each: 3.2 MB
+    * per partition by the batch's value bytes, and above the floor on disk. */
+  private def keyedData(parts: Int): DataFrame = rows(parts, 40000)(sha2(_, 256))
+
+  /** 8 such partitions, with the output bytes of each task of their load. */
   private lazy val (keyed, keyedLoadTasks) = {
-    val data = rows(Parts, 40000)(sha2(_, 256))
+    val data = keyedData(Parts)
     val t = newTable(data)
     (t, Routes.tasksOf { t.upsert(data); () })
+  }
+
+  /** A fresh table of 2 keyed partitions above the floor: every file
+    * bucketed, so only a forced rewrite touches them. */
+  private def keyedPair(): AcidTable = {
+    val data = keyedData(2)
+    val t = newTable(data)
+    t.upsert(data)
+    assert(byPart(t).values.forall(fs => bucketsOf(t, fs).forall(_.isDefined)))
+    t
   }
 
   test("a distributed upsert of above-floor partitions writes one file per non-empty bucket") {
@@ -87,7 +100,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("a below-floor load of bulk_ingest's shape stays one bucketless file per partition") {
-    // 20 000 rows of five columns per partition: 1.3 MB by the estimate
+    // 20 000 rows of five columns per partition: 1.2 MB of values
     val data = spark.range(2L * 20000).select(
       col("id"),
       concat(lit("d"), (col("id") / 20000).cast("long").cast("string")).as("day"),
@@ -106,12 +119,13 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("a compaction of a bucketless partition over 4 MiB runs more than one write task") {
-    // 1 536 hex characters per row: 4 000 rows estimate 270 KB, so the
-    // load is bucketless, but take about 6 MB on disk
+    // 1 536 hex characters per row: 4 000 rows take about 6 MB on disk,
+    // and a clustered compaction lays them out bucketless
     val data = rows(1, 4000)(id =>
       concat((0 until 12).map(i => sha2(concat(id, lit(s"-$i")), 512)): _*))
     val t = newTable(data)
     t.upsert(data)
+    t.compact(clusterBy = Seq("v"))
     val Seq(loaded) = byPart(t).values.toSeq
     assert(bucketsOf(t, loaded).forall(_.isEmpty))
     assert(loaded.map(_._2).sum > AcidTable.FastPathMaxBytes)
@@ -122,5 +136,51 @@ class LayoutSpec extends AnyFunSuite {
     val Seq(compacted) = byPart(t).values.toSeq
     assert(bucketsOf(t, compacted).flatten.sorted == (0 until t.numBuckets))
     assert(content(t) == before)
+  }
+
+  test("a narrow load between the default row size and its parquet size stays bucketless") {
+    // (pk, part, v) is 48 B a row by the schema's default sizes, so 50 000
+    // rows would pass the floor; their values take 16 B a row, and parquet
+    // stores about as much: no sub-floor bucket files, nothing to re-fold
+    val data = spark.range(2L * 50000).select(
+      concat(lit("k"), col("id").cast("string")).as("pk"),
+      concat(lit("p"), (col("id") % 2).cast("string")).as("part"),
+      col("id").as("v"))
+    val t = newTable(data)
+    assert(50000L * data.schema.defaultSize >= floorBytes(t))
+    t.upsert(data)
+    byPart(t).foreach { case (dir, files) =>
+      assert(files.map(_._2).sum < floorBytes(t), s"$dir is above the floor on disk")
+      assert(bucketsOf(t, files) == Seq(None), s"$dir: ${files.map(_._1)}")
+    }
+    val files = t.liveFilePaths().sorted
+    t.compact()
+    assert(t.liveFilePaths().sorted == files, "compact() re-folded the load")
+  }
+
+  test("purgeDroppedColumns rewrites keyed partitions: a renamed column keeps its values") {
+    val t = keyedPair()
+    val before = t.snapshot().agg(count(col("payload")), sum(crc32(col("payload")))).head()
+    val purged = t.renameColumn("payload", "body").purgeDroppedColumns()
+    assert(purged.renamedCols.isEmpty)
+    assert(purged.snapshot().agg(count(col("body")), sum(crc32(col("body")))).head() == before)
+  }
+
+  test("purgeDroppedColumns rewrites keyed partitions: a DEFAULT lands in every row") {
+    val t = keyedPair()
+    val purged = t.addColumns(Seq(StructField("tier", StringType)), Map("tier" -> "'gold'"))
+      .purgeDroppedColumns()
+    assert(purged.columnDefaults.isEmpty)
+    assert(purged.snapshot().filter(col("tier") === "gold").count() == 2 * 40000L)
+  }
+
+  test("purgeDroppedColumns rewrites keyed partitions: no file keeps a dropped column") {
+    val t = keyedPair()
+    val purged = t.dropColumns(Seq("payload")).purgeDroppedColumns()
+    assert(purged.droppedCols.isEmpty)
+    val onDisk = spark.read.option("mergeSchema", "true").parquet(purged.liveFilePaths(): _*)
+    assert(!onDisk.schema.fieldNames.contains("payload"), "a live file keeps the dropped bytes")
+    val readded = purged.addColumns(Seq(StructField("payload", StringType)))
+    assert(readded.snapshot().filter(col("payload").isNotNull).count() == 0)
   }
 }
