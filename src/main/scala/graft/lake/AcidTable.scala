@@ -2423,9 +2423,9 @@ final class AcidTable private (
     * non-empty bucket above the layout floor, one bucketless file stream
     * below it (`keyedLayout`). A partition already in that layout — no DV
     * entry, only bucketed files, at most one per bucket, above the floor,
-    * which is how a keyed bulk load and trickle commits leave it — is
-    * carried, so compacting it rewrites nothing (at 100 TB this is the
-    * background optimize job every lakehouse runs).
+    * as a keyed bulk load leaves it — is carried, rewriting nothing, unless
+    * a dropped, renamed or defaulted column awaits [[purgeDroppedColumns]]
+    * (at 100 TB this is the background optimize job every lakehouse runs).
     *
     * With `clusterBy` (round 10 — the Delta `OPTIMIZE ZORDER BY` / Hudi
     * clustering analog), EVERY partition holding a file is rewritten with
